@@ -1220,23 +1220,14 @@ def pipeline_corpus_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def run_corpus_pipeline(
-    spark: SparkSession,
-    sf_dir: str,
-    work: str,
-    stage_walls_out: dict | None = None,
+    spark: SparkSession, sf_dir: str, work: str
 ) -> DataFrame:
     """pipeline_corpus_e2e's body against a caller-owned workspace —
     the e2e test drives this directly so it can inspect the stage
-    sinks and tar shards after the run. Pass ``stage_walls_out`` to
-    receive per-stage wall seconds ("p1:intake" → s) plus the
-    setup/audit phases — tools/pipeline_stage_bench.py publishes the
-    breakdown the bench line's cost attributes to."""
+    sinks and tar shards after the run."""
     import os
-    import time as _time
 
     from dasladen_spark.runner.taskrun import Runner, TaskRunner
-
-    t_setup = _time.time()
 
     inp = os.path.join(work, "input")
     out = os.path.join(work, "output")
@@ -1328,9 +1319,7 @@ def run_corpus_pipeline(
         module_path=inp,
         log=lambda m: None,
     )
-    t_tasks = _time.time()
     tr.run()
-    t_audit = _time.time()
     # ONE aggregation job audits all five funnel sinks: union the
     # SCANS (stage-labelled (stage, nt, real=1) rows), not five
     # independent one-row aggregates — under AQE the
@@ -1382,12 +1371,6 @@ def run_corpus_pipeline(
         .collect()
     ]
     rows.sort()
-    if stage_walls_out is not None:
-        stage_walls_out["setup:write_inputs"] = round(t_tasks - t_setup, 3)
-        stage_walls_out.update(tr.stage_walls)
-        stage_walls_out["audit:funnel_counts"] = round(
-            _time.time() - t_audit, 3
-        )
     return spark.createDataFrame(
         rows, "stage int, stage_name string, n_docs bigint,"
         " n_tokens bigint"

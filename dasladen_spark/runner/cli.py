@@ -49,6 +49,14 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.task:
         watcher.process_file(args.task)
+        try:
+            # a recurring task file was enqueued, not run: keep firing
+            # it until its job cancels (one_shot) or Ctrl-C
+            while watcher.scheduler.jobs:
+                watcher.scheduler.run_pending()
+                time.sleep(args.watch_time)
+        except KeyboardInterrupt:
+            pass
         return 0
 
     # startup autorun (base.py:65-66)

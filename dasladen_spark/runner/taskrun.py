@@ -65,12 +65,6 @@ class TaskRunner:
         self.spark = spark
         self.runner = runner
         self.log = log
-        # per-stage wall clock of the LAST run() — pipeline benches
-        # read this for stage attribution (tools/pipeline_stage_bench);
-        # initialized here so reading it before run() (or after
-        # run_with_schedule, which never populates it) sees {} rather
-        # than AttributeError
-        self.stage_walls: dict[str, float] = {}
         self.ctx = TaskContext(
             spark=spark,
             connections=ConnectionRegistry(runner.config.get("connections")),
@@ -81,7 +75,6 @@ class TaskRunner:
         )
 
     def run(self) -> None:
-        self.stage_walls = {}
         for item in self.runner.config.get("tasks", []):
             task_type = "nop" if item.get("disabled") else item.get("type")
             fn = TASK_TYPES.get(task_type)
@@ -97,13 +90,9 @@ class TaskRunner:
             t0 = time.time()
             self.log(f"task {item.get('name')} ({task_type}): start")
             fn(self.ctx, item)
-            wall = time.time() - t0
-            self.stage_walls[f"{item.get('name')}:{task_type}"] = round(
-                wall, 3
-            )
             self.log(
                 f"task {item.get('name')} ({task_type}):"
-                f" done in {wall:.2f}s"
+                f" done in {time.time() - t0:.2f}s"
             )
 
     def run_with_schedule(self) -> None:

@@ -4,7 +4,9 @@ Driver-side control plane (the reference's watcher is a task-file
 queue, not a data stream — SURVEY §1.4). Snapshot-diff the capture
 folder; process additions in the reference's fixed order:
 zip packages → copy rules → task files; task files are deleted after
-processing (processor.py:186).
+processing (processor.py:186). A task file with a recurring schedule
+is enqueued instead of run (taskrun.py:41-47 → processor.py:64-136)
+and fires from later polls.
 
 For *data* ingestion at scale, the idiomatic upgrade is the
 Structured Streaming file source in streaming/ingest.py.
@@ -16,6 +18,7 @@ import os
 import shutil
 import zipfile
 
+from dasladen_spark.runner.scheduler import Scheduler
 from dasladen_spark.runner.taskrun import Runner, TaskRunner
 
 
@@ -42,12 +45,13 @@ class Watcher:
         for d in (capture_path, input_path, output_path, module_path):
             os.makedirs(d, exist_ok=True)
         self._snapshot = set(os.listdir(self.capture))
+        self.scheduler = Scheduler()
 
     # ------------------------------------------------------------ diff
 
     def check(self) -> list[str]:
         """One poll: diff filenames, process additions in order
-        (processor.py:330-338)."""
+        (processor.py:330-338), then fire due recurring task files."""
         current = set(os.listdir(self.capture))
         added = sorted(current - self._snapshot)
         self._snapshot = current
@@ -57,6 +61,7 @@ class Watcher:
                 self._process(os.path.join(self.capture, name))
             except Exception as ex:  # noqa: BLE001
                 self.log(f"error processing {name}: {type(ex).__name__}: {ex}")
+        self.scheduler.run_pending()
         return added
 
     def process_file(self, path: str) -> None:
@@ -115,25 +120,48 @@ class Watcher:
             os.remove(path)
 
     def _run_task_file(self, path: str) -> None:
-        from dasladen_spark.runner.tasklog import TaskLog
-
         key = os.path.splitext(os.path.basename(path))[0]
         try:
             runner = Runner(path)
-            # per-task-file log (ref log.py:16-27, base.py:43-48):
-            # one timestamped file per task key, console mirrored
-            with TaskLog(
-                key, self.log_dir, to_file=self.file_log, console=self.log
-            ) as tlog:
-                TaskRunner(
-                    self.spark,
-                    runner,
-                    input_path=self.input_path,
-                    output_path=self.output_path,
-                    module_path=self.module_path,
-                    log=tlog,
-                ).run_with_schedule()
+            if runner.has_schedule():
+                self.scheduler.enqueue(
+                    runner.schedule, lambda: self._fire(key, runner)
+                )
+                self.log(f"{key}: scheduled {runner.schedule}")
+            else:
+                self._execute(key, runner)
         finally:
-            # task files are consumed (processor.py:186)
+            # task files are consumed (processor.py:186); a recurring
+            # one lives on as its parsed Runner in the scheduler
             if os.path.exists(path):
                 os.remove(path)
+
+    def _execute(self, key: str, runner: Runner, once: bool = False) -> None:
+        from dasladen_spark.runner.tasklog import TaskLog
+
+        # per-task-file log (ref log.py:16-27, base.py:43-48):
+        # one timestamped file per task key, console mirrored
+        with TaskLog(
+            key, self.log_dir, to_file=self.file_log, console=self.log
+        ) as tlog:
+            tr = TaskRunner(
+                self.spark,
+                runner,
+                input_path=self.input_path,
+                output_path=self.output_path,
+                module_path=self.module_path,
+                log=tlog,
+            )
+            if once:
+                tr.run()
+            else:
+                tr.run_with_schedule()
+
+    def _fire(self, key: str, runner: Runner) -> None:
+        """One scheduled run (processor.py:40-51). A failure is logged,
+        not raised: the job keeps its schedule and the poll loop
+        lives."""
+        try:
+            self._execute(key, runner, once=True)
+        except Exception as ex:  # noqa: BLE001
+            self.log(f"error running {key}: {type(ex).__name__}: {ex}")

@@ -40,9 +40,10 @@ DEFAULT_CONF: dict[str, str] = {
     # 0.69→0.47 s, rrf 0.57→0.39 s. Driver plan time is a fixed cost
     # that parallelizes on nothing (guide §7.3), so it is turned off
     # here; errors still raise with the full JVM analysis message,
-    # only the "user code line" enrichment is lost. Static conf —
-    # effective only when THIS builder launches the JVM (same caveat
-    # as ReservedCodeCacheSize above).
+    # only the "user code line" enrichment is lost. PySpark reads it
+    # once per process, at the first DataFrame API call, and caches
+    # it: it takes effect when set before that call (a reused JVM
+    # too) and cannot be changed after it.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
     # output codec: zstd reads back as fast as snappy and writes
     # markedly smaller files (guide §6) — at 100 TB the sink bytes

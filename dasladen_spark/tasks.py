@@ -81,10 +81,9 @@ def _transformed(ctx: TaskContext, task: dict, df: DataFrame) -> DataFrame:
     )
 
 
-def _read_source(ctx: TaskContext, task: dict) -> DataFrame | None:
-    """Dispatch the task type's source; None for non-table sources."""
+def _read_source(ctx: TaskContext, task: dict, kind: str) -> DataFrame:
+    """Read ``task["source"]`` as format ``kind``."""
     src = task["source"]
-    kind = task["type"].split("-")[0]
     if kind == "csv":
         return read_csv(
             ctx.spark,
@@ -127,16 +126,18 @@ def _read_source(ctx: TaskContext, task: dict) -> DataFrame | None:
     raise ValueError(f"unknown source kind {kind!r}")
 
 
-def _write_sink(ctx: TaskContext, task: dict, df: DataFrame) -> None:
+def _write_sink(ctx: TaskContext, task: dict, df: DataFrame, kind: str) -> None:
+    """Write ``df`` to ``task["target"]`` as format ``kind``."""
     tgt = task["target"]
-    kind = task["type"].split("-")[-1]
+    truncate = bool(tgt.get("truncate", False))
+    mode = "overwrite" if truncate else "append"
     if kind == "csv":
         write_csv(
             df,
             _tgt_path(ctx, tgt),
             delimiter=tgt.get("delimiter", ";"),
             encoding=tgt.get("encoding", "utf-8"),
-            truncate=bool(tgt.get("truncate", False)),
+            truncate=truncate,
             single_file=bool(tgt.get("single_file", True)),
         )
     elif kind == "db":
@@ -145,45 +146,36 @@ def _write_sink(ctx: TaskContext, task: dict, df: DataFrame) -> None:
             df,
             ctx.spark,
             tgt["table"],
-            truncate=bool(tgt.get("truncate", False)),
+            truncate=truncate,
             schema=tgt.get("schema"),
         )
     elif kind == "json":
-        (
-            df.write.mode("overwrite" if tgt.get("truncate") else "append")
-            .json(_tgt_path(ctx, tgt))
-        )
-    elif kind == "parquet":
-        if tgt.get("zorder"):
-            # two-column Morton-clustered layout (sinks/zorder) —
-            # file-level min/max skipping on BOTH columns
-            if tgt.get("partition_by"):
-                raise ValueError(
-                    "parquet sink: 'zorder' and 'partition_by' are"
-                    " mutually exclusive — a z-ordered layout is one"
-                    " directory of curve-clustered files; partition"
-                    " the table instead if directory pruning is the"
-                    " goal"
-                )
-            from dasladen_spark.sinks.zorder import write_zordered
-
-            write_zordered(
-                df,
-                _tgt_path(ctx, tgt),
-                tuple(tgt["zorder"]),
-                n_files=int(tgt.get("n_files", 8)),
-                mode="overwrite" if tgt.get("truncate") else "append",
+        df.write.mode(mode).json(_tgt_path(ctx, tgt))
+    elif kind == "parquet" and tgt.get("zorder"):
+        # two-column Morton-clustered layout (sinks/zorder) — file-level
+        # min/max skipping on BOTH columns
+        if tgt.get("partition_by"):
+            raise ValueError(
+                "parquet sink: 'zorder' and 'partition_by' are"
+                " mutually exclusive — a z-ordered layout is one"
+                " directory of curve-clustered files; partition"
+                " the table instead if directory pruning is the"
+                " goal"
             )
-        else:
-            w = df.write.mode("overwrite" if tgt.get("truncate") else "append")
-            if tgt.get("partition_by"):
-                w = w.partitionBy(*tgt["partition_by"])
-            w.parquet(_tgt_path(ctx, tgt))
-    elif kind == "orc":
-        w = df.write.mode("overwrite" if tgt.get("truncate") else "append")
+        from dasladen_spark.sinks.zorder import write_zordered
+
+        write_zordered(
+            df,
+            _tgt_path(ctx, tgt),
+            tuple(tgt["zorder"]),
+            n_files=int(tgt.get("n_files", 8)),
+            mode=mode,
+        )
+    elif kind in ("parquet", "orc"):
+        w = df.write.mode(mode)
         if tgt.get("partition_by"):
             w = w.partitionBy(*tgt["partition_by"])
-        w.orc(_tgt_path(ctx, tgt))
+        w.format(kind).save(_tgt_path(ctx, tgt))
     elif kind == "tar":
         # WebDataset-style shard export (sinks/tarshards) — the
         # training-loader layout, reachable from task files
@@ -202,23 +194,78 @@ def _write_sink(ctx: TaskContext, task: dict, df: DataFrame) -> None:
         raise ValueError(f"unknown sink kind {kind!r}")
 
 
-def _observed_write(ctx: TaskContext, task_like: dict, df: DataFrame) -> int:
-    """Write ``df`` through ``_write_sink`` and return the number of
-    rows written, counted by a CollectMetrics observation ON the
-    write itself. The previous spelling persisted the frame, wrote
-    it, then ran a second ``count()`` job against the cache purely to
-    feed the task log — one extra job per stage plus executor cache
-    pressure (guide §1.4/§5: the write is already the action that
-    computes every row; observe rides it for free). Used by every
-    task runner whose frame has no second consumer."""
+# Every runner but run_etl names the spec key it reads (source, train,
+# bench, queries) or writes (target, quarantine, report) and that
+# key's default kind; the spec's own ``kind`` overrides the default.
+# The spec always reaches _read_source / _write_sink as the task's
+# ``source`` / ``target``.
+
+
+def _read(
+    ctx: TaskContext, task: dict, key: str = "source", default: str = "parquet"
+) -> DataFrame:
+    spec = task[key]
+    return _read_source(ctx, {**task, "source": spec}, spec.get("kind", default))
+
+
+def _read_transformed(ctx: TaskContext, task: dict) -> DataFrame:
+    """The task's ``source`` run through its transform chain."""
+    return _transformed(ctx, task, _read(ctx, task))
+
+
+def _write(
+    ctx: TaskContext,
+    task: dict,
+    df: DataFrame,
+    key: str = "target",
+    default: str = "parquet",
+) -> None:
+    spec = task[key]
+    _write_sink(ctx, {**task, "target": spec}, df, spec.get("kind", default))
+
+
+def _observed_write(ctx: TaskContext, task: dict, df: DataFrame) -> int:
+    """Write ``df`` to the task's parquet-default ``target`` and return
+    the number of rows written, counted by a CollectMetrics observation
+    ON the write itself: the write already computes every row, so the
+    count costs no extra job and no cache (guide §1.4/§5)."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     obs = Observation()
-    _write_sink(
-        ctx, task_like, df.observe(obs, F.count(F.lit(1)).alias("n"))
-    )
+    _write(ctx, task, df.observe(obs, F.count(F.lit(1)).alias("n")))
     return int(obs.get["n"])
+
+
+def _reject_reserved(df: DataFrame, names, what: str, role: str) -> None:
+    """Fail when a source column would collide with a column the task
+    adds (``role`` says which kind)."""
+    for name in names:
+        if name in df.columns:
+            raise ValueError(
+                f"{what}: source column {name!r} collides with {role}"
+                " — rename it upstream"
+            )
+
+
+def _require_unique_ids(
+    df: DataFrame, id_field: str, what: str, why: str = ""
+) -> None:
+    """Fail unless ``id_field`` is non-null and unique over ``df`` (one
+    aggregate job)."""
+    from pyspark.sql import functions as F
+
+    stats = df.agg(
+        F.count(id_field).alias("n_ids"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_distinct(id_field).alias("n_distinct"),
+    ).collect()[0]
+    if stats.n_ids != stats.n_rows or stats.n_distinct != stats.n_rows:
+        raise ValueError(
+            f"{what}: id_field {id_field!r} must be non-null and unique"
+            f" ({stats.n_rows} rows, {stats.n_ids} non-null,"
+            f" {stats.n_distinct} distinct){why}"
+        )
 
 
 def _progress_counted(df: DataFrame, acc) -> DataFrame:
@@ -258,7 +305,8 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     — the distributed analogue of a row counter, costing one Arrow
     passthrough and no extra pass. ``"progress": 0`` in the task
     disables it (and the passthrough) entirely."""
-    df = _read_source(ctx, task)
+    src_kind, sink_kind = task["type"].split("-")
+    df = _read_source(ctx, task, src_kind)
     # Empty-source short-circuit (fix of §4.8) ONLY for the
     # reference-parity terminal sinks (csv/db — ref task.py:181
     # skips the write so no header-only file / no-op DB round trip
@@ -268,14 +316,13 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     # upstream filter legitimately empties the stream — round-11's
     # sf1 gate died with PATH_NOT_FOUND when span-dedup emptied a
     # mid-pipeline stage and the skip swallowed s5's input.
-    sink_kind = task["type"].split("-")[-1]
     if sink_kind in ("csv", "db") and df.isEmpty():
         ctx.log(f"task {task.get('name')}: empty source, skipping write")
         return
     out = _transformed(ctx, task, df)
     every = int(task.get("progress", 10000))
     if not every:
-        _write_sink(ctx, task, out)
+        _write_sink(ctx, task, out, sink_kind)
         return
     acc = ctx.spark.sparkContext.accumulator(0)
     out = _progress_counted(out, acc)
@@ -297,7 +344,7 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()
     try:
-        _write_sink(ctx, task, out)
+        _write_sink(ctx, task, out, sink_kind)
     finally:
         stop.set()
         poller.join(timeout=2)
@@ -448,9 +495,7 @@ def run_profile(ctx: TaskContext, task: dict) -> None:
     is scanned exactly once however many columns are profiled."""
     from pyspark.sql import functions as F
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     aggs = [F.count(F.lit(1)).alias("__n")]
     for c in df.columns:
         aggs += [
@@ -475,12 +520,10 @@ def run_profile(ctx: TaskContext, task: dict) -> None:
         "column STRING, n_rows BIGINT, n_nulls BIGINT, n_distinct BIGINT, "
         "min_value STRING, max_value STRING",
     )
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "csv")}, report)
+    _write(ctx, task, report, default="csv")
     ctx.log(f"task {task.get('name')}: profiled {len(df.columns)} columns")
 
 
-#: type → runner (TaskFactory parity, task.py:577-599)
 def run_validate(ctx: TaskContext, task: dict) -> None:
     """Validate task (beyond the reference): read any supported source
     (``source.kind``), evaluate the contract in ``rules`` (name → SQL
@@ -499,9 +542,7 @@ def run_validate(ctx: TaskContext, task: dict) -> None:
         split_valid,
     )
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     rules = task.get("rules", {})
     counts = check_rules(df, rules) if rules else {}
     dup_count = 0
@@ -511,13 +552,10 @@ def run_validate(ctx: TaskContext, task: dict) -> None:
     ctx.log(f"task {task.get('name')}: violations {counts}")
     clean, bad = split_valid(df, rules) if rules else (df, None)
     if task.get("quarantine") and bad is not None:
-        qt = task["quarantine"]
         bad = bad.withColumn("violated", F.concat_ws(",", "violated"))
-        _write_sink(ctx, {**task, "type": "x-" + qt.get("kind", "csv"),
-                          "target": qt}, bad)
+        _write(ctx, task, bad, "quarantine", "csv")
     if task.get("target"):
-        tgt = task["target"]
-        _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "csv")}, clean)
+        _write(ctx, task, clean, default="csv")
     if task.get("fail_on_violation") and (any(counts.values()) or dup_count):
         raise ValueError(f"contract violations: {counts}")
 
@@ -550,13 +588,10 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
     from dasladen_spark.operators.dedup import exact_dedup
     from dasladen_spark.operators.fingerprint_index import (
         append_to_index,
-        build_fingerprint_index,
         novel_against_index,
     )
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     text_field = task.get("text_field", "text")
     id_field = task.get("id_field", df.columns[0])
     method = task.get("method", "exact")
@@ -573,20 +608,8 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
     b = df.withColumn("fp", fingerprint(F.col(text_field)))
     b = exact_dedup(b, ["fp"], id_field)
     index = task.get("index")
-    tgt = task["target"]
     if index:
-        # meta too: a build that crashed between the postings write
-        # and the meta write must rebuild, or append_to_index dies
-        # after the sink already ran
-        if not (
-            ctx.spark.catalog.tableExists(index)
-            and ctx.spark.catalog.tableExists(f"{index}_meta")
-        ):
-            empty = ctx.spark.createDataFrame([], f"{text_field} STRING")
-            build_fingerprint_index(
-                empty, index, text_col=text_field,
-                n_buckets=int(task.get("n_buckets", 16)), tag="cold-start",
-            )
+        _ensure_fingerprint_index(ctx, task, index, text_field)
         # persist + sink BEFORE the index append: the anti-join is
         # lazy, and appending first would put this batch's own
         # fingerprints into the index it is still being filtered
@@ -596,22 +619,36 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
             # persist stays (two consumers: the sink and the index
             # append); the row count rides the write via observe
             # instead of a third job
-            n_out = _observed_write(
-                ctx,
-                {**task, "type": "x-" + tgt.get("kind", "parquet")},
-                novel.drop("fp"),
-            )
+            n_out = _observed_write(ctx, task, novel.drop("fp"))
             if task.get("update_index", True):
                 append_to_index(ctx.spark, index, novel)
         finally:
             novel.unpersist()
     else:
-        n_out = _observed_write(
-            ctx,
-            {**task, "type": "x-" + tgt.get("kind", "parquet")},
-            b.drop("fp"),
-        )
+        n_out = _observed_write(ctx, task, b.drop("fp"))
     ctx.log(f"task {task.get('name')}: {n_out} novel rows out")
+
+
+def _ensure_fingerprint_index(
+    ctx: TaskContext, task: dict, index: str, text_field: str
+) -> None:
+    """Cold-start a missing fingerprint index table empty. The meta
+    table is checked too: a build that crashed between the postings
+    write and the meta write must rebuild, or append_to_index dies
+    after the sink already ran."""
+    from dasladen_spark.operators.fingerprint_index import (
+        build_fingerprint_index,
+    )
+
+    if not (
+        ctx.spark.catalog.tableExists(index)
+        and ctx.spark.catalog.tableExists(f"{index}_meta")
+    ):
+        empty = ctx.spark.createDataFrame([], f"{text_field} STRING")
+        build_fingerprint_index(
+            empty, index, text_col=text_field,
+            n_buckets=int(task.get("n_buckets", 16)), tag="cold-start",
+        )
 
 
 def _run_dedup_winnowing(
@@ -628,7 +665,6 @@ def _run_dedup_winnowing(
     )
     from dasladen_spark.operators.fingerprint_index import (
         append_to_index,
-        build_fingerprint_index,
         winnowed_novel_against_index,
     )
     from dasladen_spark.operators.graph import dedup_clusters
@@ -644,19 +680,8 @@ def _run_dedup_winnowing(
     )
     surv = df.join(drop, id_field, "left_anti")
     index = task.get("index")
-    tgt = task["target"]
     if index:
-        # meta too: a build that crashed between the postings write
-        # and the meta write must rebuild (same guard as the exact arm)
-        if not (
-            ctx.spark.catalog.tableExists(index)
-            and ctx.spark.catalog.tableExists(f"{index}_meta")
-        ):
-            empty = ctx.spark.createDataFrame([], f"{text_field} STRING")
-            build_fingerprint_index(
-                empty, index, text_col=text_field,
-                n_buckets=int(task.get("n_buckets", 16)), tag="cold-start",
-            )
+        _ensure_fingerprint_index(ctx, task, index, text_field)
         novel, novel_fps = winnowed_novel_against_index(
             ctx.spark, index, surv,
             id_col=id_field, text_col=text_field, min_shared=min_shared,
@@ -669,20 +694,14 @@ def _run_dedup_winnowing(
         try:
             # persist stays (sink + index append both read novel/fps);
             # the row count rides the write via observe
-            n_out = _observed_write(
-                ctx,
-                {**task, "type": "x-" + tgt.get("kind", "parquet")},
-                novel,
-            )
+            n_out = _observed_write(ctx, task, novel)
             if task.get("update_index", True):
                 append_to_index(ctx.spark, index, novel_fps)
         finally:
             novel.unpersist()
             novel_fps.unpersist()
     else:
-        n_out = _observed_write(
-            ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, surv
-        )
+        n_out = _observed_write(ctx, task, surv)
     ctx.log(f"task {task.get('name')}: {n_out} novel rows out (winnowing)")
 
 
@@ -735,7 +754,6 @@ def _run_dedup_semantic(
     # row), replacing the two count() jobs the old spelling ran
     if q:
         marked = marked.persist()
-    tgt = task["target"]
     try:
         obs = Observation()
         observed = marked.observe(
@@ -744,22 +762,12 @@ def _run_dedup_semantic(
             F.sum("kept").alias("n_kept"),
         )
         kept = observed.filter(F.col("kept") == 1).drop("survivor", "kept")
-        _write_sink(
-            ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, kept
-        )
+        _write(ctx, task, kept)
         n_in = int(obs.get["n_in"])
         n_kept = int(obs.get["n_kept"] or 0)
         if q:
             dropped = marked.filter(F.col("kept") == 0).drop("kept")
-            _write_sink(
-                ctx,
-                {
-                    **task,
-                    "type": "x-" + q.get("kind", "parquet"),
-                    "target": q,
-                },
-                dropped,
-            )
+            _write(ctx, task, dropped, "quarantine")
     finally:
         if q:
             marked.unpersist()
@@ -836,10 +844,7 @@ def _run_dedup_spans(
         )
     else:
         raise ValueError(f"unknown dedup spans mode {mode!r}")
-    tgt = task["target"]
-    n_out = _observed_write(
-        ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out
-    )
+    n_out = _observed_write(ctx, task, out)
     ctx.log(f"task {task.get('name')}: {n_out} rows out (spans/{mode})")
 
 
@@ -864,9 +869,7 @@ def run_er(ctx: TaskContext, task: dict) -> None:
 
     from dasladen_spark.operators.graph import partitioned_components
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     name_field = task.get("name_field", "name")
     key_field = task.get("key_field") or task.get("id_field", df.columns[0])
     max_distance = int(task.get("max_distance", 1))
@@ -918,8 +921,7 @@ def run_er(ctx: TaskContext, task: dict) -> None:
     out = mapping.join(reps, "cluster_id", "left").select(
         "member", "member_name", "cluster_id", "rep_name"
     )
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out)
+    _write(ctx, task, out)
     ctx.log(f"task {task.get('name')}: er merge map written")
 
 
@@ -938,14 +940,8 @@ def run_classify(ctx: TaskContext, task: dict) -> None:
 
     text_field = task.get("text_field", "text")
     label_field = task.get("label_field", "label")
-    train_src = task["train"]
-    train = _read_source(
-        ctx, {**task, "source": train_src,
-              "type": train_src.get("kind", "parquet") + "-x"}
-    )
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    train = _read(ctx, task, "train")
+    df = _read_transformed(ctx, task)
     id_field = task.get("id_field", df.columns[0])
     counts, stats = nb_train(
         train, id_col=task.get("train_id_field", id_field),
@@ -969,10 +965,7 @@ def run_classify(ctx: TaskContext, task: dict) -> None:
     )
     if "min_score" in task:
         pred = pred.filter(F.col("score") >= float(task["min_score"]))
-    tgt = task["target"]
-    n_out = _observed_write(
-        ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, pred
-    )
+    n_out = _observed_write(ctx, task, pred)
     ctx.log(f"task {task.get('name')}: {n_out} rows classified")
 
 
@@ -1006,20 +999,14 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
         stratified_sample,
     )
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     id_field = task.get("id_field", df.columns[0])
     method = task.get("method", "deterministic")
     if method == "dsir":
         from pyspark.sql import functions as F
 
         text_field = task.get("text_field", "text")
-        train_src = task["train"]
-        train = _read_source(
-            ctx, {**task, "source": train_src,
-                  "type": train_src.get("kind", "parquet") + "-x"}
-        )
+        train = _read(ctx, task, "train")
         tagged = df.select(
             F.col(id_field).alias("_did"),
             F.col(text_field).alias("_txt"),
@@ -1048,11 +1035,7 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
                 .filter(F.col("weight_per_token") >= F.col("thr"))
                 .select(F.col("_did").alias(id_field), "weight_per_token")
             )
-            out = df.join(keep, id_field)
-            tgt = task["target"]
-            _write_sink(
-                ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out
-            )
+            _write(ctx, task, df.join(keep, id_field))
         finally:
             w.unpersist()
         ctx.log(f"task {task.get('name')}: sample written (dsir)")
@@ -1062,27 +1045,13 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
 
         from dasladen_spark.operators.sampling import kcenter_coreset
 
-        for reserved in ("pick_order", "d2"):
-            if reserved in df.columns:
-                raise ValueError(
-                    f"sample task (coreset): source column {reserved!r}"
-                    " collides with an audit column — rename it upstream"
-                )
+        what = "sample task (coreset)"
+        _reject_reserved(df, ("pick_order", "d2"), what, "an audit column")
         # loud id guard (the decontaminate task's invariant): a NULL
         # id seeds the greedy pick then vanishes from the equi-join;
         # duplicate ids fan the broadcast join out into >k rows with
         # d2 stamped on rows it was never computed for
-        stats = df.agg(
-            F.count(id_field).alias("n_ids"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(id_field).alias("n_distinct"),
-        ).collect()[0]
-        if stats.n_ids != stats.n_rows or stats.n_distinct != stats.n_rows:
-            raise ValueError(
-                f"sample task (coreset): id_field {id_field!r} must be"
-                f" non-null and unique ({stats.n_rows} rows,"
-                f" {stats.n_ids} non-null, {stats.n_distinct} distinct)"
-            )
+        _require_unique_ids(df, id_field, what)
         # the greedy loop scans the source k times — persist so those
         # scans hit memory, not the source parser (the operator's
         # at-scale contract)
@@ -1100,10 +1069,7 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
             out = df.join(F.broadcast(picks), id_field).orderBy(
                 "pick_order"
             )
-            tgt = task["target"]
-            _write_sink(
-                ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out
-            )
+            _write(ctx, task, out)
         finally:
             df.unpersist()
         ctx.log(f"task {task.get('name')}: sample written (coreset)")
@@ -1124,8 +1090,7 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
         )
     else:
         raise ValueError(f"unknown sample method {method!r}")
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out)
+    _write(ctx, task, out)
     ctx.log(f"task {task.get('name')}: sample written ({method})")
 
 
@@ -1158,18 +1123,13 @@ def run_pack(ctx: TaskContext, task: dict) -> None:
     from dasladen_spark.functions.text import token_count
     from dasladen_spark.operators.ranking import global_prefix_sum
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     text_field = task.get("text_field", "text")
     id_field = task.get("id_field", df.columns[0])
     seq_tokens = int(task.get("seq_tokens", 2048))
-    for reserved in ("n_tokens", "pack_id", "__prior"):
-        if reserved in df.columns:
-            raise ValueError(
-                f"pack task: source column {reserved!r} collides with an"
-                " output name — rename it upstream"
-            )
+    _reject_reserved(
+        df, ("n_tokens", "pack_id", "__prior"), "pack task", "an output name"
+    )
     toks = df.withColumn(
         "n_tokens", token_count(F.col(text_field)).cast("long")
     )
@@ -1181,8 +1141,7 @@ def run_pack(ctx: TaskContext, task: dict) -> None:
         "pack_id",
         F.floor(F.col("__prior") / F.lit(seq_tokens)).cast("bigint"),
     ).drop("__prior")
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out)
+    _write(ctx, task, out)
     ctx.log(
         f"task {task.get('name')}: packed into {seq_tokens}-token"
         " sequences"
@@ -1224,14 +1183,8 @@ def run_decontaminate(ctx: TaskContext, task: dict) -> None:
         semantic_hits,
     )
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
-    bench_src = task["bench"]
-    bench_df = _read_source(
-        ctx, {**task, "source": bench_src,
-              "type": bench_src.get("kind", "parquet") + "-x"}
-    )
+    df = _read_transformed(ctx, task)
+    bench_df = _read(ctx, task, "bench")
     method = task.get("method", "ngrams")
     if method not in ("ngrams", "semantic"):
         raise ValueError(
@@ -1243,26 +1196,19 @@ def run_decontaminate(ctx: TaskContext, task: dict) -> None:
     id_field = task.get("id_field", df.columns[0])
     n = int(task.get("ngram", 8))
     min_hits = int(task.get("min_hits", 1))
-    reserved_cols = ("_did", "n_contaminated_grams") if method == "ngrams" \
-        else ("_did", "nearest_bench_id", "max_cosine")
-    for reserved in reserved_cols:
-        if reserved in df.columns:
-            raise ValueError(
-                f"decontaminate task: source column {reserved!r} collides"
-                " with an internal name — rename it upstream"
-            )
-    stats = df.agg(
-        F.count(id_field).alias("n_ids"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct(id_field).alias("n_distinct"),
-    ).collect()[0]
-    if stats.n_ids != stats.n_rows or stats.n_distinct != stats.n_rows:
-        raise ValueError(
-            f"decontaminate task: id_field {id_field!r} must be non-null"
-            f" and unique ({stats.n_rows} rows, {stats.n_ids} non-null,"
-            f" {stats.n_distinct} distinct) — a NULL or duplicated id"
-            " would silently leak or over-drop documents"
-        )
+    what = "decontaminate task"
+    _reject_reserved(
+        df,
+        ("_did", "n_contaminated_grams") if method == "ngrams"
+        else ("_did", "nearest_bench_id", "max_cosine"),
+        what,
+        "an internal name",
+    )
+    _require_unique_ids(
+        df, id_field, what,
+        " — a NULL or duplicated id would silently leak or over-drop"
+        " documents",
+    )
     if method == "semantic":
         # paraphrase-robust variant: both sides carry an embedding
         # column; a doc drops when its vector sits within `threshold`
@@ -1306,17 +1252,12 @@ def run_decontaminate(ctx: TaskContext, task: dict) -> None:
     clean = df.join(
         hits, df[id_field] == hits["_did"], "left_anti"
     )
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, clean)
+    _write(ctx, task, clean)
     if task.get("quarantine"):
         dropped = df.join(
             hits, df[id_field] == hits["_did"]
         ).drop("_did")
-        q = task["quarantine"]
-        _write_sink(
-            ctx, {**task, "type": "x-" + q.get("kind", "parquet"),
-                  "target": q}, dropped
-        )
+        _write(ctx, task, dropped, "quarantine")
         hits.unpersist()
     knobs = (
         f"method=semantic, threshold={float(task.get('threshold', 0.35))}"
@@ -1388,15 +1329,9 @@ def run_intake(ctx: TaskContext, task: dict) -> None:
             text_col=task.get("text_field", "text"),
         )
     elif gate == "decontaminate":
-        bench_src = task["bench"]
-        bench_df = _read_source(
-            ctx,
-            {**task, "source": bench_src,
-             "type": bench_src.get("kind", "parquet") + "-x"},
-        )
         query = run_decontaminate_gate(
             docs,
-            bench_df,
+            _read(ctx, task, "bench"),
             accept,
             quarantine,
             checkpoint,
@@ -1443,9 +1378,7 @@ def run_cluster(ctx: TaskContext, task: dict) -> None:
 
     from dasladen_spark.operators.clustering import kmeans_fit
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     id_field = task.get("id_field", "vec_id")
     vec_field = task.get("vector_field", "embedding")
     k = int(task.get("k", 8))
@@ -1460,23 +1393,14 @@ def run_cluster(ctx: TaskContext, task: dict) -> None:
             float(fit_fraction) if fit_fraction is not None else None
         ),
     ).withColumnRenamed("id", id_field)
-    tgt = task["target"]
-    _write_sink(
-        ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, assigned
-    )
-    report = task.get("report")
-    if report:
+    _write(ctx, task, assigned)
+    if task.get("report"):
         sizes = (
             assigned.groupBy("cluster")
             .agg(F.count(F.lit(1)).alias("n_members"))
             .orderBy("cluster")
         )
-        _write_sink(
-            ctx,
-            {**task, "target": report,
-             "type": "x-" + report.get("kind", "csv")},
-            sizes,
-        )
+        _write(ctx, task, sizes, "report", "csv")
     ctx.log(f"task {task.get('name')}: clustered into {k} cells")
 
 
@@ -1501,9 +1425,7 @@ def run_score(ctx: TaskContext, task: dict) -> None:
 
     from dasladen_spark.functions.text import quality_score
 
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     text_field = task.get("text_field", "text")
     scored = df.withColumn("quality", quality_score(F.col(text_field)))
     grp = task.get("normalize_by")
@@ -1528,8 +1450,7 @@ def run_score(ctx: TaskContext, task: dict) -> None:
             [grp, "quality"],
             "left",
         )
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, scored)
+    _write(ctx, task, scored)
     ctx.log(
         f"task {task.get('name')}: scores written"
         f" ({'normalized by ' + grp if grp else 'raw'})"
@@ -1561,12 +1482,9 @@ def run_ann_index(ctx: TaskContext, task: dict) -> None:
     vec_field = task.get("vector_field", "embedding")
     action = task.get("action", "build")
     if action == "append":
-        src = task["source"]
-        df = _read_source(
-            ctx, {**task, "type": src.get("kind", "parquet") + "-x"}
-        )
         append_to_ann_index(
-            ctx.spark, index, df, id_col=id_field, vec_col=vec_field
+            ctx.spark, index, _read(ctx, task), id_col=id_field,
+            vec_col=vec_field,
         )
         ctx.log(f"task {task.get('name')}: appended to index {index}")
         return
@@ -1575,16 +1493,12 @@ def run_ann_index(ctx: TaskContext, task: dict) -> None:
         ctx.log(f"task {task.get('name')}: compacted index {index}")
         return
     if action == "build":
-        src = task["source"]
-        df = _read_source(
-            ctx, {**task, "type": src.get("kind", "parquet") + "-x"}
-        )
         ensure_ann_index(
-            df,
+            _read(ctx, task),
             index,
             # default tag = the resolved source FILE path, so pointing
             # the same index at a different corpus file rebuilds it
-            tag=str(task.get("tag", _src_path(ctx, src))),
+            tag=str(task.get("tag", _src_path(ctx, task["source"]))),
             method=task.get("method", "lsh"),
             id_col=id_field,
             vec_col=vec_field,
@@ -1607,30 +1521,18 @@ def run_ann_index(ctx: TaskContext, task: dict) -> None:
         return
     if action != "search":
         raise ValueError(f"unknown ann-index action {action!r}")
-    q_src = task["queries"]
-    queries = _read_source(
-        ctx, {**task, "source": q_src,
-              "type": q_src.get("kind", "parquet") + "-x"}
-    )
-    corpus = None
-    if "source" in task:
-        src = task["source"]
-        corpus = _read_source(
-            ctx, {**task, "type": src.get("kind", "parquet") + "-x"}
-        )
     res = search_ann_index(
         ctx.spark,
         index,
-        queries,
+        _read(ctx, task, "queries"),
         k=int(task.get("k", 5)),
         query_id=id_field,
         query_vec=vec_field,
         n_probe=int(task.get("n_probe", 4)),
         rerank_mult=int(task.get("rerank_mult", 8)),
-        corpus=corpus,
+        corpus=_read(ctx, task) if "source" in task else None,
     )
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, res)
+    _write(ctx, task, res)
     ctx.log(f"task {task.get('name')}: search results written")
 
 
@@ -1658,9 +1560,7 @@ def run_sketch(ctx: TaskContext, task: dict) -> None:
     method = task.get("method", "hll")
     action = task.get("action", "build")
     keys = list(task.get("keys", []))
-    src = task["source"]
-    df = _read_source(ctx, {**task, "type": src.get("kind", "parquet") + "-x"})
-    df = _transformed(ctx, task, df)
+    df = _read_transformed(ctx, task)
     if method == "hll":
         m = int(task.get("m", 16))
         if action == "build":
@@ -1693,12 +1593,7 @@ def run_sketch(ctx: TaskContext, task: dict) -> None:
                 out = sk.kmv_overlap_pair(
                     cached, keys[0], pair[0], pair[1], k=k
                 )
-                tgt = task["target"]
-                _write_sink(
-                    ctx,
-                    {**task, "type": "x-" + tgt.get("kind", "parquet")},
-                    out,
-                )
+                _write(ctx, task, out)
             finally:
                 cached.unpersist()
             ctx.log(f"task {task.get('name')}: kmv overlap written")
@@ -1707,13 +1602,13 @@ def run_sketch(ctx: TaskContext, task: dict) -> None:
             raise ValueError(f"unknown kmv sketch action {action!r}")
     else:
         raise ValueError(f"unknown sketch method {method!r}")
-    tgt = task["target"]
-    _write_sink(ctx, {**task, "type": "x-" + tgt.get("kind", "parquet")}, out)
+    _write(ctx, task, out)
     ctx.log(
         f"task {task.get('name')}: sketch {method}/{action} written"
     )
 
 
+#: type → runner (TaskFactory parity, task.py:577-599)
 TASK_TYPES: dict[str, Callable[[TaskContext, dict], None]] = {
     "csv-db": run_etl,
     "db-csv": run_etl,

@@ -1387,12 +1387,12 @@ def test_zorder_layout_prunes_on_both_dimensions(spark, sf_dir, tmp_path):
     import pyarrow.parquet as pq
 
     from dasladen_spark.session import load_table
-    from dasladen_spark.sinks.partitioned import write_zordered
+    from dasladen_spark.sinks.zorder import write_zordered
 
     e = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
     zpath, spath = str(tmp_path / "zorder"), str(tmp_path / "tsorted")
-    # exercises the timestamp dimension (TIMESTAMP_NTZ -> epoch view)
-    write_zordered(e, zpath, ["user_id", "ts"], num_files=16)
+    # exercises the timestamp dimension (TIMESTAMP_NTZ -> epoch-day buckets)
+    write_zordered(e, zpath, ("user_id", "ts"), n_files=16)
     # control: same file count, classic time-sorted layout
     (
         e.repartitionByRange(16, "ts")

@@ -215,6 +215,47 @@ def test_weekly_multi_weekday_strides_per_day():
     assert len(fired) == 4
 
 
+def test_watcher_fires_recurring_task_file_on_schedule(watch_env):
+    """A recurring task file is enqueued, not run on arrival, and then
+    runs on every due tick of the watcher's scheduler."""
+    w, tmp = watch_env
+    (tmp / "input" / "src.csv").write_text("id;v\n1;a\n")
+    task_file = tmp / "capture" / "every_minute.json"
+    task_file.write_text(
+        json.dumps(
+            {
+                "schedule": {"recurring": True, "frequency": "minutes",
+                             "minutes": 1},
+                "tasks": [
+                    {
+                        "name": "t",
+                        "type": "csv-csv",
+                        "source": {"file": "src.csv"},
+                        "target": {"file": "out.csv", "truncate": True},
+                    }
+                ],
+            }
+        )
+    )
+    w.check()
+    assert not task_file.exists()  # consumed into the schedule
+    assert not (tmp / "output" / "out.csv").exists()  # not run yet
+    log_file = tmp / "log" / "every_minute.log"
+
+    def runs():
+        if not log_file.exists():
+            return 0
+        return log_file.read_text().count("task t (csv-csv): done")
+
+    now = dt.datetime.now()
+    assert w.scheduler.run_pending(now + dt.timedelta(minutes=2)) == 1
+    assert runs() == 1
+    assert (tmp / "output" / "out.csv").exists()
+    assert w.scheduler.run_pending(now + dt.timedelta(minutes=2, seconds=30)) == 0
+    assert w.scheduler.run_pending(now + dt.timedelta(minutes=4)) == 1
+    assert runs() == 2
+
+
 def test_per_task_log_file_written(watch_env):
     w, tmp = watch_env
     (tmp / "input" / "src.csv").write_text("id;v\n1;a\n")

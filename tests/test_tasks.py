@@ -2020,3 +2020,83 @@ def test_unknown_task_type_raises(spark, workdir):
             workdir,
             {"tasks": [{"name": "typo", "type": "csv-dbb", "source": {}}]},
         )
+
+
+def _docs_json(workdir):
+    with open(workdir / "input" / "docs.json", "w", encoding="utf-8") as f:
+        for i, text in enumerate(["alpha beta gamma", "delta epsilon zeta"]):
+            f.write(json.dumps({"doc_id": i, "text": text, "label": "x"}) + "\n")
+
+
+_DOCS = {"kind": "json", "file": "docs.json"}
+
+
+@pytest.mark.parametrize(
+    "key, task",
+    [
+        ("source", {"type": "score", "source": {"kind": "parqet", "file": "docs.json"}}),
+        ("bench", {"type": "decontaminate", "id_field": "doc_id", "source": _DOCS,
+                   "bench": {"kind": "jsn", "file": "docs.json"}}),
+        ("train", {"type": "classify", "source": _DOCS,
+                   "train": {"kind": "jsnol", "file": "docs.json"}}),
+        ("quarantine", {"type": "validate", "source": _DOCS,
+                        "rules": {"short": "length(text) > 100"},
+                        "quarantine": {"kind": "cvs", "file": "bad.csv"}}),
+        ("report", {"type": "cluster", "k": 2, "iterations": 1,
+                    "source": {"kind": "parquet", "file": "emb.parquet"},
+                    "report": {"kind": "cssv", "file": "sizes.csv"}}),
+    ],
+)
+def test_misspelt_spec_kind_names_the_kind(spark, workdir, key, task):
+    """Every spec a runner reads or writes goes through the one
+    format dispatch, so a misspelt ``kind`` fails loudly with that
+    kind in the message instead of falling back to a default."""
+    import shutil
+
+    _docs_json(workdir)
+    shutil.copy(
+        "/root/testdata/sf0.001/embeddings.parquet",
+        workdir / "input" / "emb.parquet",
+    )
+    task = {"name": key, "target": {"file": "out", "truncate": True}, **task}
+    side = "source" if key in ("source", "bench", "train") else "sink"
+    kind = task[key]["kind"]
+    with pytest.raises(ValueError, match=f"unknown {side} kind '{kind}'"):
+        run_tasks(spark, workdir, {"tasks": [task]})
+
+
+def test_every_spec_passes_the_read_and_write_seam(spark, workdir, monkeypatch):
+    """Each spec a task names reaches the module-global _read_source /
+    _write_sink as the task's ``source`` / ``target``, in the order
+    the runner uses them — the seam callers wrap to trace reads and
+    writes per spec."""
+    from dasladen_spark import tasks
+
+    seen = []
+    read, write = tasks._read_source, tasks._write_sink
+
+    def recording_read(ctx, t, *args):
+        seen.append(t["source"])
+        return read(ctx, t, *args)
+
+    def recording_write(ctx, t, df, *args):
+        seen.append(t["target"])
+        return write(ctx, t, df, *args)
+
+    monkeypatch.setattr(tasks, "_read_source", recording_read)
+    monkeypatch.setattr(tasks, "_write_sink", recording_write)
+    _docs_json(workdir)
+    task = {
+        "name": "decon",
+        "type": "decontaminate",
+        "id_field": "doc_id",
+        "ngram": 2,
+        "source": dict(_DOCS),
+        "bench": {"kind": "json", "file": "docs.json"},
+        "target": {"file": "clean.parquet", "truncate": True},
+        "quarantine": {"file": "dropped.parquet", "truncate": True},
+    }
+    run_tasks(spark, workdir, {"tasks": [task]})
+    assert seen == [
+        task["source"], task["bench"], task["target"], task["quarantine"]
+    ]

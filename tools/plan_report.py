@@ -93,8 +93,8 @@ def main() -> None:
     # the chained task-file composite EXECUTES its pipeline eagerly
     # and returns a LocalRelation of stage counts — nothing to audit
     # here (its stage plans are the individual task kinds, audited
-    # above and in test_plan_shapes; its COST attribution lives in
-    # PIPESTAGE_r11.json via tools/pipeline_stage_bench.py)
+    # above and in test_plan_shapes; its per-stage cost is the
+    # perfbench curation_chain workload's tasks.<kind>_s)
     SKIP = {"pipeline_corpus_e2e"}
     for name in [
         q for q in HEADLINE + [q for q in SHOWCASE if q in QUERIES]

@@ -2,10 +2,12 @@
 
 ONE implementation backs both the batch ``decontaminate`` task
 (tasks.run_decontaminate) and the streaming intake gate
-(streaming/intake.run_decontaminate_gate), so a document is
-quarantined at ingestion IFF the batch pipeline would have dropped it
-in a backfill — the same no-skew contract the quality gate keeps
-(streaming/intake.score_documents).
+(streaming/intake.run_decontaminate_gate): both build the benchmark
+side with ``decontamination_bench``, find a batch's hits with
+``decontamination_hits`` and write the split with ``route_on_hits``,
+so a document is quarantined at ingestion IFF the batch pipeline
+would have dropped it in a backfill — the same no-skew contract the
+quality gate keeps (streaming/intake.score_documents).
 
 Scale shape (the decontaminate_ngrams query family's): the
 benchmark's distinct gram set is MBs even when the corpus is TBs, so
@@ -18,6 +20,8 @@ gram position.
 """
 
 from __future__ import annotations
+
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -95,7 +99,7 @@ def semantic_contamination(
     num_tables/bits_per_table and the threshold's cosine angle
     (tests/test_sketches verify the fixture geometry loses nothing;
     decontamination at production τ ≥ 0.8 is the easy LSH regime)."""
-    from dasladen_spark.functions.vectors import dot, l2_norm
+    from dasladen_spark.functions.vectors import l2_norm
 
     if method == "ann":
         return _semantic_contamination_ann(
@@ -123,20 +127,13 @@ def semantic_contamination(
         F.col(vec_col).cast("array<double>").alias("_tv"),
         l2_norm(F.col(vec_col)).alias("_tn"),
     )
-    denom = F.col("_tn") * F.col("_bn")
-    scored = t.crossJoin(b).select(
-        "_tid",
-        "_bid",
-        F.when(denom == 0.0, F.lit(0.0))
-        .otherwise(dot(F.col("_tv"), F.col("_bv")) / denom)
-        .alias("_cos"),
-    )
-    return _best_hit(scored, threshold, id_col)
+    return _best_hit(t.crossJoin(b), threshold, id_col)
 
 
-def _best_hit(scored: DataFrame, threshold: float, id_col: str) -> DataFrame:
-    """Shared (exact + ann) reduction of a (_tid, _bid, _cos) pair
-    stream to (id, nearest_bench_id, max_cosine).
+def _best_hit(pairs: DataFrame, threshold: float, id_col: str) -> DataFrame:
+    """Shared (exact + ann) reduction of a (_tid, _tv, _tn, _bid, _bv,
+    _bn) pair stream to (id, nearest_bench_id, max_cosine), scoring
+    each pair with the zero-norm-guarded cosine.
 
     Threshold BEFORE the aggregate: max(struct) is not
     hash-aggregable (SortAggregate → a sort of the full pair
@@ -146,6 +143,16 @@ def _best_hit(scored: DataFrame, threshold: float, id_col: str) -> DataFrame:
     surviving pair at all. The expensive stage is then a pure
     codegen'd scan (chain dot + one compare), and the sort-agg
     runs on |contaminated pairs|, not the pair stream."""
+    from dasladen_spark.functions.vectors import dot
+
+    denom = F.col("_tn") * F.col("_bn")
+    scored = pairs.select(
+        "_tid",
+        "_bid",
+        F.when(denom == 0.0, F.lit(0.0))
+        .otherwise(dot(F.col("_tv"), F.col("_bv")) / denom)
+        .alias("_cos"),
+    )
     best = (
         scored.filter(F.col("_cos") >= F.lit(float(threshold)))
         .groupBy("_tid")
@@ -181,7 +188,7 @@ def _semantic_contamination_ann(
     then the same threshold-before-argmax reduction as the exact
     path — output schema and semantics identical, pair stream
     bucket-bounded."""
-    from dasladen_spark.functions.vectors import dot, l2_norm
+    from dasladen_spark.functions.vectors import l2_norm
     from dasladen_spark.operators.dedup import hyperplane_table_buckets
 
     # norms fold ONCE per input row and ride through the kernel as
@@ -225,15 +232,7 @@ def _semantic_contamination_ann(
         "bkt",
     )
     cand = tb.join(bb, on=["t", "bkt"]).dropDuplicates(["_tid", "_bid"])
-    denom = F.col("_tn") * F.col("_bn")
-    scored = cand.select(
-        "_tid",
-        "_bid",
-        F.when(denom == 0.0, F.lit(0.0))
-        .otherwise(dot(F.col("_tv"), F.col("_bv")) / denom)
-        .alias("_cos"),
-    )
-    return _best_hit(scored, threshold, id_col)
+    return _best_hit(cand, threshold, id_col)
 
 
 def semantic_hits(
@@ -295,3 +294,91 @@ def contamination_hits(
         .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
         .filter(F.col("n_contaminated_grams") >= min_hits)
     )
+
+
+def decontamination_bench(
+    bench_df: DataFrame,
+    method: str,
+    what: str,
+    text_col: str = "text",
+    n: int = 8,
+    id_col: str = "doc_id",
+    vec_col: str = "embedding",
+    bench_id_col: str | None = None,
+    bench_vec_col: str | None = None,
+) -> DataFrame:
+    """The benchmark side of a decontamination ``method``: ``ngrams``
+    → the distinct word ``n``-gram set of ``text_col``; ``semantic`` →
+    (``id_col``, ``vec_col``) vectors, aliased from
+    ``bench_id_col``/``bench_vec_col`` when the benchmark names them
+    differently. Any other method fails, naming ``what``."""
+    if method == "ngrams":
+        return bench_gram_set(bench_df, text_col=text_col, n=n)
+    if method == "semantic":
+        return bench_df.select(
+            F.col(bench_id_col or id_col).alias(id_col),
+            F.col(bench_vec_col or vec_col).alias(vec_col),
+        )
+    raise ValueError(
+        f"{what}: unknown method {method!r}"
+        " (expected 'ngrams' or 'semantic')"
+    )
+
+
+def decontamination_hits(
+    df: DataFrame,
+    bench: DataFrame,
+    method: str,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 8,
+    min_hits: int = 1,
+    vec_col: str = "embedding",
+    threshold: float = 0.35,
+    prefilter: str = "exact",
+    num_tables: int = 16,
+    bits_per_table: int = 4,
+    dim: int = 64,
+) -> DataFrame:
+    """``df``'s hits against a ``decontamination_bench`` side, keyed
+    ``_did``: ``contamination_hits`` for ``ngrams``, ``semantic_hits``
+    (``prefilter`` is its ``method``) for ``semantic``."""
+    if method == "semantic":
+        return semantic_hits(
+            df,
+            bench,
+            vec_col=vec_col,
+            id_col=id_col,
+            threshold=threshold,
+            method=prefilter,
+            num_tables=num_tables,
+            bits_per_table=bits_per_table,
+            dim=dim,
+        )
+    return contamination_hits(
+        df, bench, text_col=text_col, id_col=id_col, n=n, min_hits=min_hits
+    )
+
+
+def route_on_hits(
+    df: DataFrame,
+    hits: DataFrame,
+    id_col: str,
+    write_clean: Callable[[DataFrame], None],
+    write_dropped: Callable[[DataFrame], None] | None = None,
+) -> None:
+    """Write ``df`` minus its ``hits`` through ``write_clean`` and, if
+    given, the hit docs with their audit columns through
+    ``write_dropped``. ``hits`` is doc-id-sized and persisted only when
+    it has both consumers, so the gram or vector pipeline runs once."""
+    if write_dropped is not None:
+        hits = hits.persist()
+    try:
+        write_clean(df.join(hits, df[id_col] == hits["_did"], "left_anti"))
+        if write_dropped is not None:
+            write_dropped(
+                df.join(hits, df[id_col] == hits["_did"]).drop("_did")
+            )
+    finally:
+        if write_dropped is not None:
+            hits.unpersist()

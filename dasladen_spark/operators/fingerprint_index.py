@@ -25,6 +25,8 @@ an RDBMS, /root/reference/dasladen/task.py:94-107).
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -46,11 +48,22 @@ def build_fingerprint_index(
     use thousands; the spec is append-stable so it must be chosen for
     the final size up front). ``tag`` names the history snapshot for
     ``ensure_fingerprint_index``."""
-    spark = history.sparkSession
+    _write_index(
+        history.select(fingerprint(F.col(text_col)).alias("fp")),
+        table,
+        n_buckets,
+        tag,
+    )
+
+
+def _write_index(fps: DataFrame, table: str, n_buckets: int, tag: str) -> None:
+    """Write the distinct ``fp`` values of ``fps`` as a fresh index
+    table, plus its ``{table}_meta`` row."""
+    spark = fps.sparkSession
     for suffix in ("", "_meta"):
         _drop_orphan_location(spark, table + suffix)
     fps = (
-        history.select(fingerprint(F.col(text_col)).alias("fp"))
+        fps.select("fp")
         .distinct()
         # batch_id -1 = "history baseline"; streaming appends tag
         # their rows so a replayed micro-batch can reconstruct the
@@ -112,17 +125,23 @@ def novel_against_index(
     of history is exactly the plan this operator exists to avoid, and
     the SMJ reads the bucketed index in place: no history-side
     Exchange, the batch alone shuffles into the bucket layout."""
-    from dasladen_spark.operators.snapshot import resolve_snapshot
-
-    table = resolve_snapshot(spark, table)
-    hist = spark.table(table)
-    if before_batch is not None:
-        hist = hist.filter(F.col("batch_id") < before_batch)
-    hist = hist.select("fp").hint("merge")
     b = batch
     if "fp" not in b.columns:
         b = b.withColumn("fp", fingerprint(F.col(text_col)))
-    return b.join(hist, "fp", "left_anti")
+    return b.join(_index_fps(spark, table, before_batch), "fp", "left_anti")
+
+
+def _index_fps(
+    spark: SparkSession, table: str, before_batch: int | None
+) -> DataFrame:
+    """The index's ``fp`` column, as of ``before_batch`` if given,
+    hinted to the sort-merge join that reads the buckets in place."""
+    from dasladen_spark.operators.snapshot import resolve_snapshot
+
+    hist = spark.table(resolve_snapshot(spark, table))
+    if before_batch is not None:
+        hist = hist.filter(F.col("batch_id") < before_batch)
+    return hist.select("fp").hint("merge")
 
 
 def append_to_index(
@@ -165,19 +184,12 @@ def build_winnowed_fingerprint_index(
     tables — the fp semantics differ."""
     from dasladen_spark.operators.dedup import winnow_fingerprints
 
-    spark = history.sparkSession
-    for suffix in ("", "_meta"):
-        _drop_orphan_location(spark, table + suffix)
-    fps = (
-        winnow_fingerprints(history, id_col=id_col, text_col=text_col)
-        .select("fp")
-        .distinct()
-        .withColumn("batch_id", F.lit(-1).cast("long"))
+    _write_index(
+        winnow_fingerprints(history, id_col=id_col, text_col=text_col),
+        table,
+        n_buckets,
+        tag,
     )
-    write_bucketed(fps, table, "fp", n_buckets, sort_cols="fp")
-    spark.createDataFrame(
-        [(tag, n_buckets)], "tag STRING, n_buckets INT"
-    ).write.mode("overwrite").saveAsTable(f"{table}_meta")
 
 
 def winnowed_novel_against_index(
@@ -211,16 +223,10 @@ def winnowed_novel_against_index(
     bucket layout — the invariant test_plan_shapes pins for the exact
     path); the hit count then aggregates batch-sized rows only."""
     from dasladen_spark.operators.dedup import winnow_fingerprints
-    from dasladen_spark.operators.snapshot import resolve_snapshot
 
-    table = resolve_snapshot(spark, table)
     fps = winnow_fingerprints(batch, id_col=id_col, text_col=text_col)
-    hist = spark.table(table)
-    if before_batch is not None:
-        hist = hist.filter(F.col("batch_id") < before_batch)
-    hist = hist.select("fp").hint("merge")
     hits = (
-        fps.join(hist, "fp", "left_semi")
+        fps.join(_index_fps(spark, table, before_batch), "fp", "left_semi")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_n_hits"))
         .filter(F.col("_n_hits") >= min_shared)
@@ -229,6 +235,80 @@ def winnowed_novel_against_index(
     novel = batch.join(hits, id_col, "left_anti")
     novel_fps = fps.join(hits, id_col, "left_anti")
     return novel, novel_fps
+
+
+def dedup_against_index(
+    batch: DataFrame,
+    index: str | None,
+    write: Callable[[DataFrame], Any],
+    method: str = "exact",
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    min_shared: int = 3,
+    before_batch: int | None = None,
+    update_index: bool = True,
+) -> Any:
+    """Dedup one batch within itself and, when ``index`` names a table,
+    against that index; pass the survivors to ``write`` and return its
+    result. The `dedup` task's exact/winnowing arms and the streaming
+    dedup intake's sink are both this function.
+
+    ``exact`` keeps the lowest ``id_col`` per whole-document
+    fingerprint; ``winnowing`` keeps each winnowed-fingerprint
+    cluster's min id and drops docs sharing ``min_shared``+
+    fingerprints with the index. ``before_batch`` (the stream's batch
+    id) is the replay filter and the append tag (else 0). Survivors
+    are persisted across the write and the append: the anti-join is
+    lazy, and appending first would filter this batch against its own
+    fingerprints. Every frame cached here is unpersisted on exit."""
+    from dasladen_spark.operators.dedup import exact_dedup, winnowing_pairs
+    from dasladen_spark.operators.graph import dedup_clusters
+
+    spark = batch.sparkSession
+    scratch: list = []
+    try:
+        if method == "winnowing":
+            pairs = winnowing_pairs(
+                batch, id_col=id_col, text_col=text_col,
+                min_shared=min_shared, scratch=scratch,
+            )
+            drop = (
+                dedup_clusters(pairs, "doc_a", "doc_b")
+                .filter(F.col("member") != F.col("survivor"))
+                .select(F.col("member").alias(id_col))
+            )
+            surv = batch.join(drop, id_col, "left_anti")
+            if not index:
+                return write(surv)
+            novel, fps = winnowed_novel_against_index(
+                spark, index, surv, id_col=id_col, text_col=text_col,
+                min_shared=min_shared, before_batch=before_batch,
+            )
+            scratch += [novel.persist(), fps.persist()]
+            out = novel
+        else:
+            keyed = exact_dedup(
+                batch.withColumn("fp", fingerprint(F.col(text_col))),
+                ["fp"],
+                id_col,
+            )
+            if not index:
+                return write(keyed.drop("fp"))
+            fps = novel_against_index(
+                spark, index, keyed, before_batch=before_batch
+            )
+            scratch.append(fps.persist())
+            out = fps.drop("fp")
+        result = write(out)
+        if update_index:
+            append_to_index(
+                spark, index, fps,
+                batch_id=0 if before_batch is None else before_batch,
+            )
+        return result
+    finally:
+        for c in scratch:
+            c.unpersist()
 
 
 def compact_fingerprint_index(spark: SparkSession, table: str) -> None:

@@ -53,3 +53,22 @@ def check_unique(df: DataFrame, key_cols: list[str] | str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
     )
+
+
+def require_unique_ids(
+    df: DataFrame, id_col: str, what: str, why: str = ""
+) -> None:
+    """Fail unless ``id_col`` is non-null and unique over ``df`` (one
+    aggregate job). ``what`` names the caller in the error and ``why``
+    is appended to it."""
+    stats = df.agg(
+        F.count(id_col).alias("n_ids"),
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count_distinct(id_col).alias("n_distinct"),
+    ).collect()[0]
+    if stats.n_ids != stats.n_rows or stats.n_distinct != stats.n_rows:
+        raise ValueError(
+            f"{what}: id_field {id_col!r} must be non-null and unique"
+            f" ({stats.n_rows} rows, {stats.n_ids} non-null,"
+            f" {stats.n_distinct} distinct){why}"
+        )

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from dasladen_spark.plans.registry import query
 from dasladen_spark.session import load_table as _t
+from dasladen_spark.sinks.zorder import _Z_BITS, zvalue
 
 # ------------------------------------------- Kaplan–Meier survival
 
@@ -141,29 +142,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------- z-order curve locality
 
-_Z_BITS = 8  # 8 bits per dimension → 16-bit z values
 _Z_CELL_SHIFT = 6  # cells of 64 consecutive z values
-
-
-def zvalue(xb, yb) -> F.Column:
-    """Interleave two 8-bit (_Z_BITS) bucket Columns into a Morton
-    (z-order) value — pure JVM integer arithmetic (shifts and masks),
-    no UDF. Consecutive z values are spatially adjacent in (x, y), so
-    range-partitioning and sorting by z co-locates rows that a
-    two-column predicate selects together: the layout behind
-    file-level min/max data skipping (sinks.zorder writes it)."""
-    bits = []
-    for k in range(_Z_BITS):
-        bits.append(
-            F.shiftright(xb, k).bitwiseAND(F.lit(1)) * (1 << (2 * k + 1))
-        )
-        bits.append(
-            F.shiftright(yb, k).bitwiseAND(F.lit(1)) * (1 << (2 * k))
-        )
-    z = bits[0]
-    for b in bits[1:]:
-        z = z + b
-    return z
 
 
 def _z_sql(xb: str, yb: str) -> str:

@@ -6,13 +6,18 @@ time). Here a tuned SparkSession is the execution substrate; every
 default below is chosen so the same code runs on local[N] for tests and
 on a 1000-executor cluster against ~100 TB:
 
-- AQE on (runtime coalescing, skew-join splitting, dynamic join
-  strategy switch) so plans self-correct at scale.
 - Arrow on, so any unavoidable Python stage is vectorized.
 - shuffle.partitions is a *starting* number; AQE coalesces down on
   small data and the advisory partition size governs the large end.
 - session timezone pinned to UTC so timestamp semantics are identical
   across driver, executors, and the DuckDB correctness oracle.
+
+Spark's own defaults already give what the scale path needs, so they
+are not repeated here: AQE with partition coalescing and skew-join
+splitting (64 MiB advisory partitions), parquet filter pushdown, the
+vectorized parquet reader, and 128 MiB input splits (a 1 GiB
+row-group-dense file still splits). tests/test_session.py pins those
+effective values.
 """
 
 from __future__ import annotations
@@ -24,10 +29,6 @@ from pyspark.sql import SparkSession
 
 #: configs applied to every session; callers may override via extra_conf
 DEFAULT_CONF: dict[str, str] = {
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     # PySpark 4 wraps EVERY DataFrame/Column API call in a call-site
@@ -50,13 +51,7 @@ DEFAULT_CONF: dict[str, str] = {
     # are the cost; locally A/B-measured a wash (pipeline_corpus_e2e
     # interleaved medians 15.18 s snappy vs 14.98 s zstd)
     "spark.sql.parquet.compression.codec": "zstd",
-    "spark.sql.parquet.filterPushdown": "true",
     "spark.sql.parquet.aggregatePushdown": "true",
-    # columnar batch reads for parquet (vectorized reader is default-on,
-    # keep it explicit — it is the 100 TB scan path)
-    "spark.sql.parquet.enableVectorizedReader": "true",
-    # at 100 TB a single 1 GiB row-group-dense file must still split
-    "spark.sql.files.maxPartitionBytes": "128m",
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     # signature aggregates (MinHash min-folds, hyperplane quantized
     # dots) carry 128-260 buffer fields; the default maxFields=100

@@ -111,94 +111,3 @@ def write_sorted(
         .write.mode(mode)
         .parquet(path)
     )
-
-
-def _numeric_view(df: DataFrame, col: str) -> "F.Column":
-    """Numeric-ordered view of any sortable column: timestamps/dates
-    (incl. TIMESTAMP_NTZ, which cannot cast to double directly) go
-    through epoch micros; numerics cast straight."""
-    dtype = dict(df.dtypes)[col]
-    v = F.col(col)
-    if "timestamp" in dtype or dtype == "date":
-        return F.unix_micros(v.cast("timestamp")).cast("double")
-    return v.cast("double")
-
-
-def zorder_key(
-    bounds: dict[str, tuple[float, float]],
-    bits: int = 12,
-    exprs: "dict[str, F.Column] | None" = None,
-):
-    """Z-value Column interleaving ``bits`` bits per clustering column
-    (bit b of column i lands at position ``b*ncols + i``).
-
-    Buckets come from min/max linear scaling against the supplied
-    bounds (the one-row stats pass a catalog would provide) — the
-    same range-based interleave lakehouse OPTIMIZE ZORDER uses. The
-    whole key is a pure bitwise expression tree (shiftleft/OR over
-    ints), so it stays inside whole-stage codegen; total bit width
-    ``bits*ncols`` must fit a bigint.
-    """
-    cols = list(bounds)
-    if bits * len(cols) > 62:
-        raise ValueError("bits * ncols must be <= 62")
-    top = (1 << bits) - 1
-    z = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        lo, hi = (float(x) for x in bounds[c])
-        span = (hi - lo) or 1.0
-        v = exprs[c] if exprs else F.col(c).cast("double")
-        frac = (v - F.lit(lo)) / F.lit(span)
-        bucket = F.least(
-            F.greatest(
-                (frac * F.lit(float(top))).cast("long"), F.lit(0).cast("long")
-            ),
-            F.lit(top).cast("long"),
-        )
-        bucket = F.coalesce(bucket, F.lit(0).cast("long"))
-        for b in range(bits):
-            bit = F.shiftright(bucket, b).bitwiseAND(F.lit(1).cast("long"))
-            z = z.bitwiseOR(F.shiftleft(bit, b * len(cols) + i))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cluster_cols: list[str],
-    bits: int = 12,
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Z-order-clustered parquet export — the multi-column data-
-    skipping layout. A single-column sort gives file-level min/max
-    pruning on ONE column and none on the others (every file spans
-    the full range of a non-sort column); interleaving the bit
-    representations makes every file a small hyper-rectangle of the
-    clustering space, so min/max footer stats prune files for
-    predicates on ANY clustered column (or any combination).
-
-    Cost shape at 100 TB: one column-stats agg (driver-side bounds),
-    one range shuffle on the z-value, a within-partition sort — the
-    same bill as a plain sorted export; no extra pass."""
-    exprs = {c: _numeric_view(df, c) for c in cluster_cols}
-    stats = df.agg(
-        *[
-            f(exprs[c]).alias(f"{c}__{n}")
-            for c in cluster_cols
-            for n, f in (("min", F.min), ("max", F.max))
-        ]
-    ).collect()[0]
-    bounds = {
-        c: (stats[f"{c}__min"], stats[f"{c}__max"]) for c in cluster_cols
-    }
-    z = zorder_key(bounds, bits=bits, exprs=exprs)
-    n = num_files or df.sparkSession.sparkContext.defaultParallelism
-    (
-        df.withColumn("__z", z)
-        .repartitionByRange(n, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-        .write.mode(mode)
-        .parquet(path)
-    )

@@ -9,7 +9,7 @@ the full domain; interleaving the bits of TWO columns' rank buckets
 ZORDER) keeps BOTH per-file ranges small, so selective predicates on
 either column — or both — skip most files. ``write_zordered`` is the
 writer; ``plans.relational8.q_zorder_locality`` is the oracle-checked
-audit of the same interleave arithmetic; the pyarrow-footer test in
+audit of the same interleave (``zvalue``) and bucket arithmetic; the pyarrow-footer test in
 ``tests/test_zorder.py`` proves the bbox shrink against a
 single-column sort.
 
@@ -23,7 +23,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dasladen_spark.plans.relational8 import _Z_BITS, zvalue
+_Z_BITS = 8  # 8 bits per dimension → 16-bit z values
+
+
+def zvalue(xb, yb) -> F.Column:
+    """Interleave two 8-bit (_Z_BITS) bucket Columns into a Morton
+    (z-order) value — pure JVM integer arithmetic (shifts and masks),
+    no UDF. Consecutive z values are spatially adjacent in (x, y), so
+    range-partitioning and sorting by z co-locates rows that a
+    two-column predicate selects together: the layout behind
+    file-level min/max data skipping."""
+    bits = []
+    for k in range(_Z_BITS):
+        bits.append(
+            F.shiftright(xb, k).bitwiseAND(F.lit(1)) * (1 << (2 * k + 1))
+        )
+        bits.append(
+            F.shiftright(yb, k).bitwiseAND(F.lit(1)) * (1 << (2 * k))
+        )
+    z = bits[0]
+    for b in bits[1:]:
+        z = z + b
+    return z
 
 
 def write_zordered(
@@ -62,31 +83,27 @@ def write_zordered(
         F.min("__zy").alias("__miny"),
         F.max("__zy").alias("__maxy"),
     )
-    # bucket = (v - min) DIV width with width = span DIV 2^bits + 1:
-    # divide-first, so a full-width 64-bit domain (hash / snowflake
-    # ids, span ~2^63) can never overflow the way the query-side
-    # multiply-then-divide form would — (v - min) * 255 wraps bigint
-    # silently past 2^55 and would z-order garbage with no error.
-    # LEAST caps the last (ragged) bucket at 2^bits - 1.
+    # every span fills all 2^bits buckets: multiply-then-divide, the
+    # q_zorder_locality form, while (v - min) * (2^bits - 1) fits a
+    # bigint (span < 2^55); divide-first past that, so a full-width
+    # 64-bit domain (hash / snowflake ids) never wraps bigint and
+    # z-orders garbage with no error. LEAST caps the last (ragged)
+    # divide-first bucket at 2^bits - 1.
     mask = (1 << _Z_BITS) - 1
+
+    def bucket(v: str, lo: str, hi: str) -> F.Column:
+        return F.expr(
+            f"CAST(CASE WHEN {hi} <= {lo} THEN 0"
+            f" WHEN {hi} - {lo} < {1 << 55}"
+            f" THEN (({v} - {lo}) * {mask}) DIV ({hi} - {lo})"
+            f" ELSE LEAST(({v} - {lo}) DIV (({hi} - {lo}) DIV {mask + 1} + 1),"
+            f" {mask}) END AS INT)"
+        )
+
     bucketed = (
         tagged.crossJoin(F.broadcast(bounds))
-        .withColumn(
-            "__zxb",
-            F.expr(
-                f"CAST(CASE WHEN __maxx <= __minx THEN 0 ELSE LEAST("
-                f" (__zx - __minx) DIV ((__maxx - __minx) DIV {mask + 1} + 1),"
-                f" {mask}) END AS INT)"
-            ),
-        )
-        .withColumn(
-            "__zyb",
-            F.expr(
-                f"CAST(CASE WHEN __maxy <= __miny THEN 0 ELSE LEAST("
-                f" (__zy - __miny) DIV ((__maxy - __miny) DIV {mask + 1} + 1),"
-                f" {mask}) END AS INT)"
-            ),
-        )
+        .withColumn("__zxb", bucket("__zx", "__minx", "__maxx"))
+        .withColumn("__zyb", bucket("__zy", "__miny", "__maxy"))
         .withColumn("__z", zvalue(F.col("__zxb"), F.col("__zyb")))
     )
     out_cols = df.columns

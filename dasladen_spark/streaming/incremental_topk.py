@@ -20,6 +20,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dasladen_spark.operators.similarity import cosine_topk
+from dasladen_spark.streaming.ingest import drain_foreach_batch
+from dasladen_spark.streaming.matview import (
+    _commit_snapshot,
+    _last_applied,
+    _recover_snapshot,
+)
 
 
 def merge_topk(
@@ -54,16 +60,16 @@ def run_incremental_topk(
     vec_col: str = "embedding",
 ) -> None:
     """Maintain per-query top-k cosine neighbors over a stream of
-    corpus vectors, parquet-snapshotted per batch (exactly-once via
-    the same marker-file pattern as the incremental matview)."""
+    corpus vectors, parquet-snapshotted per batch (exactly-once and
+    crash-safe via the incremental matview's write-aside swap and
+    applied-batch marker)."""
     spark = stream.sparkSession
     marker = snapshot_path + ".last_batch"
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                if batch_id <= int(fh.read().strip()):
-                    return
+        _recover_snapshot(snapshot_path)
+        if batch_id <= _last_applied(marker):
+            return
         scores = cosine_topk(
             queries,
             batch_df,
@@ -81,17 +87,6 @@ def run_incremental_topk(
         )
         merged = merge_topk(prev, scores, k)
         merged.write.mode("overwrite").parquet(snapshot_path + ".tmp")
-        spark.read.parquet(snapshot_path + ".tmp").write.mode(
-            "overwrite"
-        ).parquet(snapshot_path)
-        with open(marker, "w") as fh:
-            fh.write(str(batch_id))
+        _commit_snapshot(snapshot_path, marker, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()

@@ -31,14 +31,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from dasladen_spark.functions.text import fingerprint
-from dasladen_spark.operators.dedup import exact_dedup
-from dasladen_spark.operators.fingerprint_index import (
-    append_to_index,
-    novel_against_index,
-)
+from dasladen_spark.operators.fingerprint_index import dedup_against_index
+from dasladen_spark.streaming.ingest import drain_foreach_batch
 from dasladen_spark.streaming.matview import _last_applied
 
 
@@ -49,7 +44,6 @@ def run_streaming_dedup_intake(
     checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    available_now: bool = True,
     method: str = "exact",
     min_shared: int = 3,
 ):
@@ -64,87 +58,32 @@ def run_streaming_dedup_intake(
     index are dropped and the admitted docs' fingerprints appended —
     the streaming sibling of the `dedup` task's winnowing method
     (same index layout, same batch-id replay discipline; an index
-    table holds either whole-doc or winnowed fps, never both)."""
+    table holds either whole-doc or winnowed fps, never both).
+
+    Each micro-batch runs operators/fingerprint_index
+    .dedup_against_index — the function the `dedup` task calls —
+    with its batch id as ``before_batch``; only the replay marker
+    and the table refresh live here."""
     os.makedirs(accept_path, exist_ok=True)
-    marker = os.path.join(accept_path, "_last_batch")
-    # foreachBatch runs in a CLONED session whose writes don't refresh
-    # the originating session's cached file listing for the table — a
-    # reader that touched the index before the stream would otherwise
-    # keep seeing the pre-append snapshot
-    orig = docs.sparkSession
 
-    def sink_exact(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        b = batch_df.withColumn("fp", fingerprint(F.col(text_col)))
-        # a crawler batch can contain its own duplicates: keep the
-        # lowest-id representative before consulting the index
-        b = exact_dedup(b, ["fp"], id_col)
-        novel = novel_against_index(
-            spark, index_table, b, before_batch=batch_id
-        ).persist()
-        try:
-            novel.drop("fp").write.mode("overwrite").parquet(
+    def apply(batch_df: DataFrame, batch_id: int) -> None:
+        dedup_against_index(
+            batch_df,
+            index_table,
+            lambda novel: novel.write.mode("overwrite").parquet(
                 f"{accept_path}/batch={batch_id}"
-            )
-            append_to_index(spark, index_table, novel, batch_id=batch_id)
-        finally:
-            novel.unpersist()
-
-    def sink_winnowing(batch_df: DataFrame, batch_id: int) -> None:
-        from dasladen_spark.operators.dedup import winnowing_pairs
-        from dasladen_spark.operators.fingerprint_index import (
-            winnowed_novel_against_index,
+            ),
+            method=method,
+            id_col=id_col,
+            text_col=text_col,
+            min_shared=min_shared,
+            before_batch=batch_id,
         )
-        from dasladen_spark.operators.graph import dedup_clusters
 
-        spark = batch_df.sparkSession
-        scratch: list = []
-        pairs = winnowing_pairs(
-            batch_df, id_col=id_col, text_col=text_col,
-            min_shared=min_shared, scratch=scratch,
-        )
-        drop = (
-            dedup_clusters(pairs, "doc_a", "doc_b")
-            .filter(F.col("member") != F.col("survivor"))
-            .select(F.col("member").alias(id_col))
-        )
-        surv = batch_df.join(drop, id_col, "left_anti")
-        novel, novel_fps = winnowed_novel_against_index(
-            spark, index_table, surv,
-            id_col=id_col, text_col=text_col,
-            min_shared=min_shared, before_batch=batch_id,
-        )
-        novel = novel.persist()
-        novel_fps = novel_fps.persist()
-        try:
-            novel.write.mode("overwrite").parquet(
-                f"{accept_path}/batch={batch_id}"
-            )
-            append_to_index(
-                spark, index_table, novel_fps, batch_id=batch_id
-            )
-        finally:
-            novel.unpersist()
-            novel_fps.unpersist()
-            for c in scratch:
-                c.unpersist()
-
-    inner = sink_winnowing if method == "winnowing" else sink_exact
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _last_applied(marker):
-            return
-        inner(batch_df, batch_id)
-        orig.catalog.refreshTable(index_table)
-        with open(marker, "w") as fh:
-            fh.write(str(batch_id))
-
-    writer = docs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
+    return _sync_index(
+        docs, index_table, checkpoint,
+        os.path.join(accept_path, "_last_batch"), apply,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def run_streaming_ann_sync(
@@ -154,7 +93,6 @@ def run_streaming_ann_sync(
     marker_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    available_now: bool = True,
 ):
     """Keep a materialized ANN index (operators/ann_index) current as
     new embeddings stream in: each micro-batch's vectors are hashed
@@ -169,27 +107,34 @@ def run_streaming_ann_sync(
     from dasladen_spark.operators.ann_index import append_to_ann_index
 
     os.makedirs(os.path.dirname(marker_path) or ".", exist_ok=True)
-    # see run_streaming_dedup_intake: refresh the originating
-    # session's table cache after each cloned-session append
-    orig = vecs.sparkSession
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_id <= _last_applied(marker_path):
-            return
-        append_to_ann_index(
+    return _sync_index(
+        vecs, index_table, checkpoint, marker_path,
+        lambda batch_df, _: append_to_ann_index(
             batch_df.sparkSession,
             index_table,
             batch_df,
             id_col=id_col,
             vec_col=vec_col,
-        )
+        ),
+    )
+
+
+def _sync_index(
+    stream: DataFrame, index_table: str, checkpoint: str, marker: str, apply
+):
+    """Drain ``stream`` through ``apply(batch_df, batch_id)``, an
+    append to ``index_table``, once per batch (the applied-batch
+    ``marker`` skips replays), then refresh the originating session's
+    cached listing of the table: foreachBatch runs in a CLONED session
+    whose writes don't refresh it."""
+    orig = stream.sparkSession
+
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        if batch_id <= _last_applied(marker):
+            return
+        apply(batch_df, batch_id)
         orig.catalog.refreshTable(index_table)
-        with open(marker_path, "w") as fh:
+        with open(marker, "w") as fh:
             fh.write(str(batch_id))
 
-    writer = vecs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(stream, sink, checkpoint)

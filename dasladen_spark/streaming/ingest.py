@@ -75,3 +75,18 @@ def run_available_now(stream_df: DataFrame, out_path: str, checkpoint: str) -> N
         .start()
     )
     q.awaitTermination()
+
+
+def drain_foreach_batch(stream: DataFrame, sink, checkpoint: str):
+    """The one micro-batch driver behind every foreachBatch sink in
+    streaming/: start ``stream`` through ``sink(batch_df, batch_id)``
+    under ``checkpoint``, draining what is available now, and return
+    the started query. Update mode is what a streaming aggregate
+    needs; on a stream without one it is the same as append."""
+    return (
+        stream.writeStream.foreachBatch(sink)
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )

@@ -3,12 +3,14 @@
 The batch corpus-cleanup pipeline (plans/llm.py text_corpus_cleanup)
 assumes the corpus already landed. This is the front door: documents
 arrive continuously (crawler drops, vendor deliveries), each batch is
-scored with the SAME JVM-expression quality/fingerprint functions the
-batch pipeline uses, and rows are routed exactly-once to an accept
-area or a quarantine area with a reject reason. Because scoring is
-pure Column code, accept/reject decisions are identical whether a
-document arrives in a stream batch or a backfill — no train-time /
-ingest-time skew.
+scored with functions/text's quality_score, token_count and
+fingerprint — the Column functions the batch pipeline uses — and
+rows are routed exactly-once to an accept area or a quarantine area
+with a reject reason. Because scoring is pure Column code,
+accept/reject decisions are identical whether a document arrives in
+a stream batch or a backfill — no train-time / ingest-time skew. The
+decontaminate gate likewise runs the `decontaminate` task's
+operators/decontaminate functions per micro-batch.
 
 Scale notes: the scorer is stateless per-row (no watermark, no state
 store); exactly-once comes from the file-sink + checkpoint contract
@@ -23,10 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dasladen_spark.functions.text import (
-    normalize_text,
+    fingerprint,
     quality_score,
     token_count,
 )
+from dasladen_spark.streaming.ingest import drain_foreach_batch
 
 
 def score_documents(
@@ -50,7 +53,7 @@ def score_documents(
     return (
         df.withColumn("quality", q)
         .withColumn("n_tokens", nt)
-        .withColumn("fingerprint", F.md5(normalize_text(F.col(text_col))))
+        .withColumn("fingerprint", fingerprint(F.col(text_col)))
         .withColumn("reject_reason", reason)
         .withColumn("accept", F.col("reject_reason").isNull())
     )
@@ -73,7 +76,6 @@ def run_quality_gate(
     checkpoint: str,
     min_quality: float = 0.3,
     min_tokens: int = 5,
-    available_now: bool = True,
     text_col: str = "text",
 ):
     """Route a document stream through the quality gate exactly once:
@@ -99,12 +101,7 @@ def run_quality_gate(
         finally:
             scored.unpersist()
 
-    writer = docs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(docs, sink, checkpoint)
 
 
 def run_decontaminate_gate(
@@ -117,7 +114,6 @@ def run_decontaminate_gate(
     id_col: str = "doc_id",
     ngram: int = 8,
     min_hits: int = 1,
-    available_now: bool = True,
     scratch: list | None = None,
     method: str = "ngrams",
     vec_col: str = "embedding",
@@ -128,122 +124,81 @@ def run_decontaminate_gate(
     """Benchmark decontamination at INGESTION: documents sharing at
     least ``min_hits`` distinct word n-grams with the (static)
     benchmark corpus quarantine immediately — eval-set leakage never
-    reaches the accept area, instead of waiting for the next batch
-    `decontaminate` run over the landed corpus.
+    reaches the accept area. ``method="semantic"`` matches embedding
+    vectors within ``threshold`` cosine instead (the batch task's
+    method: semantic). Writes are batch-id partitioned overwrites,
+    the exactly-once contract of run_quality_gate.
 
-    Batch parity by construction: the gram pipeline is the SAME
-    operators/decontaminate functions the batch task calls, so a doc
-    is quarantined here IFF tasks.run_decontaminate would have
-    dropped it. The benchmark gram set is computed once, persisted
-    (benchmark-sized), and broadcast into every micro-batch join;
-    per-batch cost is the batch's own grams filtered by that
-    broadcast — benchmark-bounded, the at-scale shape. Quarantined
-    rows carry ``n_contaminated_grams`` (the audit trail).
-    ``method="semantic"`` switches both sides to embedding vectors
-    (``vec_col``/``threshold`` — the batch task's method: semantic),
-    quarantining docs within ``threshold`` cosine of some benchmark
-    vector, with (nearest_bench_id, max_cosine) as the audit columns.
-    Writes are batch-id partitioned overwrites (idempotent restart), same
-    exactly-once contract as run_quality_gate. Long-lived callers
-    should pass a ``scratch`` list and unpersist its entries after
-    the query stops (the winnowing_pairs convention) — the persisted
-    bench gram set otherwise outlives the stream."""
+    Batch parity by construction: the bench side, each micro-batch's
+    hits and the accept/quarantine split are operators/decontaminate's
+    decontamination_bench, decontamination_hits and route_on_hits, and
+    the id guard is operators/quality.require_unique_ids — what
+    tasks.run_decontaminate calls — so a doc is quarantined here IFF
+    the batch task would have dropped it. The bench side is persisted
+    once and broadcast into every micro-batch: pass a ``scratch`` list
+    and unpersist its entries after the query stops, or it outlives
+    the stream."""
     from dasladen_spark.operators.decontaminate import (
-        bench_gram_set,
-        contamination_hits,
-        semantic_hits,
+        decontamination_bench,
+        decontamination_hits,
+        route_on_hits,
     )
+    from dasladen_spark.operators.quality import require_unique_ids
 
-    if method not in ("ngrams", "semantic"):
-        raise ValueError(
-            f"decontaminate gate: unknown method {method!r}"
-            " (expected 'ngrams' or 'semantic')"
-        )
-    if method == "semantic":
-        # benchmark VECTORS are the broadcast side (method: semantic
-        # of the batch task — paraphrase-robust embedding matching);
-        # bench_id_col/bench_vec_col alias a differently-named bench
-        # layout onto the doc-side names, the batch task's
-        # bench_id_field/bench_vec_field parity
-        bench_side = bench_df.select(
-            F.col(bench_id_col or id_col).alias(id_col),
-            F.col(bench_vec_col or vec_col).alias(vec_col),
-        ).persist()
-    else:
-        bench_side = bench_gram_set(
-            bench_df, text_col=text_col, n=ngram
-        ).persist()
+    bench = decontamination_bench(
+        bench_df,
+        method,
+        "decontaminate gate",
+        text_col=text_col,
+        n=ngram,
+        id_col=id_col,
+        vec_col=vec_col,
+        bench_id_col=bench_id_col,
+        bench_vec_col=bench_vec_col,
+    ).persist()
     if scratch is not None:
-        scratch.append(bench_side)
-    bench_side.count()  # materialize once, before the stream starts
+        scratch.append(bench)
+    bench.count()  # materialize once, before the stream starts
 
     def sink(raw_batch: DataFrame, batch_id: int) -> None:
-        # one materialization per micro-batch: the id guard, the gram
+        # one materialization per micro-batch: the id guard, the hit
         # join, and both routed writes would otherwise each re-read
         # and re-parse the batch's input files (4 scans instead of 1
         # — run_quality_gate's persist discipline)
         batch_df = raw_batch.persist()
         try:
-            _decon_batch(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _decon_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the batch task's loud id guard, per micro-batch: a NULL id
-        # would slip a contaminated doc past the anti-join into the
-        # accept area (NULL never equals _did), and duplicate ids
-        # merge gram counts across docs before min_hits — both must
-        # kill the query, not silently leak (tasks.run_decontaminate
-        # parity; the gate's IFF contract depends on it)
-        stats = batch_df.agg(
-            F.count(id_col).alias("n_ids"),
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count_distinct(id_col).alias("n_distinct"),
-        ).collect()[0]
-        if stats.n_ids != stats.n_rows or stats.n_distinct != stats.n_rows:
-            raise ValueError(
-                f"decontaminate gate: id column {id_col!r} must be"
-                f" non-null and unique within a micro-batch"
-                f" ({stats.n_rows} rows, {stats.n_ids} non-null,"
-                f" {stats.n_distinct} distinct) — a NULL or duplicated"
-                " id would silently leak or over-drop documents"
+            # a NULL id would slip a contaminated doc past the
+            # anti-join into the accept area, and duplicate ids merge
+            # gram counts across docs before min_hits — both must kill
+            # the query, not silently leak
+            require_unique_ids(
+                batch_df, id_col, "decontaminate gate (one micro-batch)",
+                " — a NULL or duplicated id would silently leak or"
+                " over-drop documents",
             )
-        if method == "semantic":
-            hits = semantic_hits(
+            hits = decontamination_hits(
                 batch_df,
-                bench_side,
-                vec_col=vec_col,
-                id_col=id_col,
-                threshold=threshold,
-            ).persist()
-        else:
-            hits = contamination_hits(
-                batch_df,
-                bench_side,
+                bench,
+                method,
                 text_col=text_col,
                 id_col=id_col,
                 n=ngram,
                 min_hits=min_hits,
-            ).persist()
-        try:
-            clean = batch_df.join(
-                hits, batch_df[id_col] == hits["_did"], "left_anti"
+                vec_col=vec_col,
+                threshold=threshold,
             )
-            clean.write.mode("overwrite").parquet(
-                f"{accept_path}/batch={batch_id}"
-            )
-            dropped = batch_df.join(
-                hits, batch_df[id_col] == hits["_did"]
-            ).drop("_did")
-            dropped.write.mode("overwrite").parquet(
-                f"{quarantine_path}/batch={batch_id}"
+            route_on_hits(
+                batch_df,
+                hits,
+                id_col,
+                lambda clean: clean.write.mode("overwrite").parquet(
+                    f"{accept_path}/batch={batch_id}"
+                ),
+                lambda dropped: dropped.write.mode("overwrite").parquet(
+                    f"{quarantine_path}/batch={batch_id}"
+                ),
             )
         finally:
-            hits.unpersist()
+            batch_df.unpersist()
 
-    writer = docs.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return drain_foreach_batch(docs, sink, checkpoint)

@@ -26,6 +26,8 @@ import shutil
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dasladen_spark.streaming.ingest import drain_foreach_batch
+
 
 def _last_applied(marker: str) -> int:
     if os.path.exists(marker):
@@ -154,14 +156,7 @@ def run_incremental_matview(
         combined.write.mode("overwrite").parquet(snapshot_path + ".tmp")
         _commit_snapshot(snapshot_path, marker, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()
 
 
 def run_streaming_upsert(
@@ -212,11 +207,4 @@ def run_streaming_upsert(
         latest.write.mode("overwrite").parquet(snapshot_path + ".tmp")
         _commit_snapshot(snapshot_path, marker, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()

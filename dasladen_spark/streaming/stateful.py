@@ -59,12 +59,30 @@ RUNNING_STATS_SCHEMA = (
 _STATE_SCHEMA = "n bigint, total double, mx double"
 
 
-def _make_running_stats_fn(timeout_ms: int | None):
-    """Build the per-key fold. A closure (not a module-level fn) so
-    the timeout duration travels to the executors with the function:
-    the timeout must be re-armed via ``state.setTimeoutDuration`` on
-    EVERY invocation for the key — selecting ProcessingTimeTimeout on
-    the query alone never expires anything."""
+def _fold_by_key(
+    events: DataFrame,
+    init: tuple,
+    fold,
+    emit,
+    output_schema: str,
+    state_schema: str,
+    timeout_ms: int | None,
+    ordered: bool = True,
+) -> DataFrame:
+    """The one ``applyInPandasWithState`` driver of every per-user fold
+    here: ``fold(state, rows)`` gets the key's state (``init`` if new)
+    and its new rows as one frame — sorted by (ts, event_id) when
+    ``ordered``, so the fold is a pure function of the event sequence
+    — and returns the new state; ``emit(state)`` gives the output
+    columns after ``user_id`` as a dict. With ``timeout_ms`` an idle
+    key emits its final row once and its state is removed (bounded
+    state); the timeout is re-armed on EVERY invocation, because
+    selecting ProcessingTimeTimeout on the query alone expires
+    nothing."""
+
+    def row(key: tuple[Any, ...], st: tuple) -> pd.DataFrame:
+        out = {"user_id": key[0], **emit(st)}
+        return pd.DataFrame({c: [v] for c, v in out.items()})
 
     def fn(
         key: tuple[Any, ...],
@@ -72,39 +90,33 @@ def _make_running_stats_fn(timeout_ms: int | None):
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
-            # idle key: emit its final totals once, then drop the
-            # state row — the bounded-state guarantee
-            n, total, mx = state.get
+            st = tuple(state.get)
             state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "max_value": [mx],
-                }
-            )
+            yield row(key, st)
             return
-        n, total, mx = state.get if state.exists else (0, 0.0, float("-inf"))
-        for pdf in pdfs:
-            vals = pdf["value"].astype("float64")
-            n += int(len(vals))
-            total += float(vals.sum())
-            if len(vals):
-                mx = max(mx, float(vals.max()))
-        state.update((n, total, mx))
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        if ordered:
+            rows = rows.sort_values(["ts", "event_id"])
+        st = fold(tuple(state.get) if state.exists else init, rows)
+        state.update(st)
         if timeout_ms:
             state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "total_value": [total],
-                "max_value": [mx],
-            }
-        )
+        yield row(key, st)
 
-    return fn
+    cols = ("ts", "event_id", "value") if ordered else ("value",)
+    return (
+        events.select("user_id", *cols)
+        .groupBy("user_id")
+        .applyInPandasWithState(
+            fn,
+            outputStructType=output_schema,
+            stateStructType=state_schema,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout
+            if timeout_ms
+            else GroupStateTimeout.NoTimeout,
+        )
+    )
 
 
 def running_user_stats(events: DataFrame, timeout_ms: int | None = None) -> DataFrame:
@@ -115,21 +127,25 @@ def running_user_stats(events: DataFrame, timeout_ms: int | None = None) -> Data
     processing-time timeout expires idle keys (final row emitted,
     state removed) so a 100 TB keyspace can't pin state forever.
     Input needs (user_id, value) columns."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_running_stats_fn(timeout_ms),
-            outputStructType=RUNNING_STATS_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+
+    def fold(st: tuple, rows: pd.DataFrame) -> tuple:
+        n, total, mx = st
+        vals = rows["value"].astype("float64")
+        if len(vals):
+            mx = max(mx, float(vals.max()))
+        return n + int(len(vals)), total + float(vals.sum()), mx
+
+    return _fold_by_key(
+        events,
+        (0, 0.0, float("-inf")),
+        fold,
+        lambda st: {
+            "n_events": st[0], "total_value": st[1], "max_value": st[2]
+        },
+        RUNNING_STATS_SCHEMA,
+        _STATE_SCHEMA,
+        timeout_ms,
+        ordered=False,
     )
 
 
@@ -156,39 +172,6 @@ EWMA_SCHEMA = "user_id bigint, n_events bigint, ewma double"
 _EWMA_STATE_SCHEMA = "n bigint, s double"
 
 
-def _make_ewma_fn(alpha: float, timeout_ms: int | None):
-    """Per-key exponential smoothing fold. Rows are sorted by
-    (ts, event_id) inside each invocation, so given ordered
-    micro-batches the recursion s ← α·x + (1−α)·s is a pure function
-    of the event sequence — the differential test replays it in
-    pandas and matches exactly."""
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            n, s = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "ewma": [s]}
-            )
-            return
-        n, s = state.get if state.exists else (0, 0.0)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for x in rows["value"].astype("float64"):
-            s = float(x) if n == 0 else alpha * float(x) + (1.0 - alpha) * s
-            n += 1
-        state.update((n, s))
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame({"user_id": [key[0]], "n_events": [n], "ewma": [s]})
-
-    return fn
-
-
 def ewma_by_key(
     events: DataFrame,
     alpha: float = 0.2,
@@ -197,27 +180,28 @@ def ewma_by_key(
     """Per-user exponentially-weighted running mean across
     micro-batches — the streaming sibling of q_ewma_weekly_revenue
     (there the decay is over a bounded window for oracle parity;
-    here it is the true unbounded recursion, which only a stateful
-    operator can maintain). State per key is TWO numbers regardless
-    of history length — the textbook case for
+    here it is the true unbounded recursion s ← α·x + (1−α)·s, which
+    only a stateful operator can maintain). State per key is TWO
+    numbers regardless of history length — the textbook case for
     ``applyInPandasWithState`` over a raw-event replay, which would
     re-read the full history every trigger. Input needs
     (user_id, ts, event_id, value) columns."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_ewma_fn(alpha, timeout_ms),
-            outputStructType=EWMA_SCHEMA,
-            stateStructType=_EWMA_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+
+    def fold(st: tuple, rows: pd.DataFrame) -> tuple:
+        n, s = st
+        for x in rows["value"].astype("float64"):
+            s = float(x) if n == 0 else alpha * float(x) + (1.0 - alpha) * s
+            n += 1
+        return n, s
+
+    return _fold_by_key(
+        events,
+        (0, 0.0),
+        fold,
+        lambda st: {"n_events": st[0], "ewma": st[1]},
+        EWMA_SCHEMA,
+        _EWMA_STATE_SCHEMA,
+        timeout_ms,
     )
 
 
@@ -225,54 +209,6 @@ CUSUM_SCHEMA = (
     "user_id bigint, n_events bigint, cusum double, drift boolean"
 )
 _CUSUM_STATE_SCHEMA = "n bigint, s double"
-
-
-def _make_cusum_fn(slack: float, threshold: float, timeout_ms: int | None):
-    """Per-key one-sided CUSUM fold S ← max(0, S + (x − slack)).
-    Rows sort by (ts, event_id) per invocation, so given ordered
-    micro-batches the statistic is a pure function of the event
-    sequence — the differential test replays it sequentially. Unlike
-    the batch q_cusum_drift (whole-history closed form with
-    data-derived slack), the streaming detector takes slack/threshold
-    as parameters: a live monitor alarms against an agreed baseline,
-    not one it re-estimates per batch."""
-
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            n, s = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "cusum": [s],
-                    "drift": [s > threshold],
-                }
-            )
-            return
-        n, s = state.get if state.exists else (0, 0.0)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for x in rows["value"].astype("float64"):
-            s = max(0.0, s + (float(x) - slack))
-            n += 1
-        state.update((n, s))
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "cusum": [s],
-                "drift": [s > threshold],
-            }
-        )
-
-    return fn
 
 
 def cusum_by_key(
@@ -287,23 +223,29 @@ def cusum_by_key(
     recursion S ← max(0, S + x − slack) runs live, which only a
     stateful operator can maintain). Emits the running statistic and
     a drift flag once S crosses ``threshold``; state per key is TWO
-    numbers regardless of history length. Input needs
+    numbers regardless of history length. Unlike the batch
+    q_cusum_drift (data-derived slack), slack/threshold are
+    parameters: a live monitor alarms against an agreed baseline,
+    not one it re-estimates per batch. Input needs
     (user_id, ts, event_id, value) columns."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_cusum_fn(slack, threshold, timeout_ms),
-            outputStructType=CUSUM_SCHEMA,
-            stateStructType=_CUSUM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+
+    def fold(st: tuple, rows: pd.DataFrame) -> tuple:
+        n, s = st
+        for x in rows["value"].astype("float64"):
+            s = max(0.0, s + (float(x) - slack))
+            n += 1
+        return n, s
+
+    return _fold_by_key(
+        events,
+        (0, 0.0),
+        fold,
+        lambda st: {
+            "n_events": st[0], "cusum": st[1], "drift": st[1] > threshold
+        },
+        CUSUM_SCHEMA,
+        _CUSUM_STATE_SCHEMA,
+        timeout_ms,
     )
 
 
@@ -373,56 +315,6 @@ def _p2_estimate(cnt: int, q: list, p: float) -> float:
     return q[2]
 
 
-def _make_p2_fn(p: float, timeout_ms: int | None):
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            cnt, q, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [cnt],
-                    "quantile": [_p2_estimate(cnt, list(q), p)],
-                }
-            )
-            return
-        cnt, q, n = (
-            state.get if state.exists else (0, [0.0] * 5, [0] * 5)
-        )
-        q, n = list(q), list(n)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        for x in rows["value"].astype("float64"):
-            x = float(x)
-            if cnt < 5:
-                q[cnt] = x
-                cnt += 1
-                if cnt == 5:
-                    q.sort()
-                    n = [1, 2, 3, 4, 5]
-            else:
-                cnt += 1
-                # _p2_step increments the marker positions itself
-                # (n[4] always advances by 1 per observation)
-                _p2_step(q, n, x, p)
-        state.update((cnt, q, n))
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [cnt],
-                "quantile": [_p2_estimate(cnt, q, p)],
-            }
-        )
-
-    return fn
-
-
 def p2_quantile_by_key(
     events: DataFrame,
     p: float = 0.5,
@@ -436,24 +328,36 @@ def p2_quantile_by_key(
     per key inside a stateful operator). Estimates converge to the
     true quantile as the stream grows; the first five observations
     are exact (nearest-rank on the retained values). Input needs
-    (user_id, ts, event_id, value) columns. Deterministic given
-    micro-batch order: rows sort by (ts, event_id) per invocation,
-    so the differential test replays the identical sequence."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_p2_fn(p, timeout_ms),
-            outputStructType=P2_SCHEMA,
-            stateStructType=_P2_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+    (user_id, ts, event_id, value) columns."""
+
+    def fold(st: tuple, rows: pd.DataFrame) -> tuple:
+        cnt, q, n = st
+        q, n = list(q), list(n)
+        for x in rows["value"].astype("float64"):
+            x = float(x)
+            if cnt < 5:
+                q[cnt] = x
+                cnt += 1
+                if cnt == 5:
+                    q.sort()
+                    n = [1, 2, 3, 4, 5]
+            else:
+                cnt += 1
+                # _p2_step increments the marker positions itself
+                # (n[4] always advances by 1 per observation)
+                _p2_step(q, n, x, p)
+        return cnt, q, n
+
+    return _fold_by_key(
+        events,
+        (0, [0.0] * 5, [0] * 5),
+        fold,
+        lambda st: {
+            "n_events": st[0], "quantile": _p2_estimate(st[0], list(st[1]), p)
+        },
+        P2_SCHEMA,
+        _P2_STATE_SCHEMA,
+        timeout_ms,
     )
 
 
@@ -464,33 +368,24 @@ HOLT_SCHEMA = (
 _HOLT_STATE_SCHEMA = "n bigint, l double, b double"
 
 
-def _make_holt_fn(alpha: float, beta: float, timeout_ms: int | None):
-    """Per-key Holt double-exponential fold:
+def holt_by_key(
+    events: DataFrame,
+    alpha: float = 0.3,
+    beta: float = 0.1,
+    timeout_ms: int | None = None,
+) -> DataFrame:
+    """Per-user Holt double-exponential smoothing across
+    micro-batches — level AND trend where ewma_by_key tracks level
+    only, so the emitted one-step ``forecast`` (level + trend)
+    anticipates drifting series instead of lagging them:
     level ← α·x + (1−α)(level + trend); trend ← β·(level − level₋₁)
-    + (1−β)·trend. Rows sort by (ts, event_id) per invocation, so
-    the recursion is a pure function of the event sequence."""
+    + (1−β)·trend. State per key is THREE numbers regardless of
+    history length. Init follows the standard convention: first value
+    seeds the level, the first difference seeds the trend. Input
+    needs (user_id, ts, event_id, value) columns."""
 
-    def fn(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            n, lvl, b = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "level": [lvl],
-                    "trend": [b],
-                    "forecast": [lvl + b],
-                }
-            )
-            return
-        n, lvl, b = state.get if state.exists else (0, 0.0, 0.0)
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
+    def fold(st: tuple, rows: pd.DataFrame) -> tuple:
+        n, lvl, b = st
         for x in rows["value"].astype("float64"):
             x = float(x)
             if n == 0:
@@ -503,51 +398,19 @@ def _make_holt_fn(alpha: float, beta: float, timeout_ms: int | None):
                 lvl = alpha * x + (1.0 - alpha) * (lvl + b)
                 b = beta * (lvl - prev) + (1.0 - beta) * b
             n += 1
-        state.update((n, lvl, b))
-        if timeout_ms:
-            state.setTimeoutDuration(timeout_ms)
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "level": [lvl],
-                "trend": [b],
-                "forecast": [lvl + b],
-            }
-        )
+        return n, lvl, b
 
-    return fn
-
-
-def holt_by_key(
-    events: DataFrame,
-    alpha: float = 0.3,
-    beta: float = 0.1,
-    timeout_ms: int | None = None,
-) -> DataFrame:
-    """Per-user Holt double-exponential smoothing across
-    micro-batches — level AND trend where ewma_by_key tracks level
-    only, so the emitted one-step ``forecast`` (level + trend)
-    anticipates drifting series instead of lagging them. State per
-    key is THREE numbers regardless of history length. Init follows
-    the standard convention: first value seeds the level, the first
-    difference seeds the trend. Input needs (user_id, ts, event_id,
-    value) columns; deterministic given micro-batch order (rows sort
-    by (ts, event_id) per invocation — the differential test replays
-    the identical sequence)."""
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms
-        else GroupStateTimeout.NoTimeout
-    )
-    return (
-        events.select("user_id", "ts", "event_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _make_holt_fn(alpha, beta, timeout_ms),
-            outputStructType=HOLT_SCHEMA,
-            stateStructType=_HOLT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=timeout,
-        )
+    return _fold_by_key(
+        events,
+        (0, 0.0, 0.0),
+        fold,
+        lambda st: {
+            "n_events": st[0],
+            "level": st[1],
+            "trend": st[2],
+            "forecast": st[1] + st[2],
+        },
+        HOLT_SCHEMA,
+        _HOLT_STATE_SCHEMA,
+        timeout_ms,
     )

@@ -248,26 +248,6 @@ def _reject_reserved(df: DataFrame, names, what: str, role: str) -> None:
             )
 
 
-def _require_unique_ids(
-    df: DataFrame, id_field: str, what: str, why: str = ""
-) -> None:
-    """Fail unless ``id_field`` is non-null and unique over ``df`` (one
-    aggregate job)."""
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        F.count(id_field).alias("n_ids"),
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count_distinct(id_field).alias("n_distinct"),
-    ).collect()[0]
-    if stats.n_ids != stats.n_rows or stats.n_distinct != stats.n_rows:
-        raise ValueError(
-            f"{what}: id_field {id_field!r} must be non-null and unique"
-            f" ({stats.n_rows} rows, {stats.n_ids} non-null,"
-            f" {stats.n_distinct} distinct){why}"
-        )
-
-
 def _progress_counted(df: DataFrame, acc) -> DataFrame:
     """Arrow passthrough that counts rows into a Spark accumulator —
     the distributed stand-in for petl's row-at-a-time ``.progress()``
@@ -573,60 +553,47 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
     incremental intake pipeline with per-run cost O(batch). A missing
     index table cold-starts empty.
 
-    ``method: "winnowing"`` switches from exact (one whole-document
-    hash) to NEAR-dup semantics: winnowed k-gram fingerprints
-    (operators/dedup winnowing_pairs — the MOSS position-local
-    scheme), within-batch clusters collapsed to their min-id
-    survivor, and — with ``index`` — docs sharing ``min_shared`` or
-    more fingerprints with history dropped, admitted docs' winnowed
-    fingerprints appended to the same bucketed index layout. An
-    index table holds either whole-doc or winnowed fingerprints,
-    never both — point each method at its own table."""
-    from pyspark.sql import functions as F
-
-    from dasladen_spark.functions.text import fingerprint
-    from dasladen_spark.operators.dedup import exact_dedup
+    ``method: "winnowing"`` switches to NEAR-dup semantics (winnowed
+    k-gram fingerprints, the MOSS position-local scheme): within-batch
+    clusters collapse to their min-id survivor and, with ``index``,
+    docs sharing ``min_shared`` or more fingerprints with history are
+    dropped. An index table holds either whole-doc or winnowed
+    fingerprints, never both — point each method at its own table.
+    Both arms are operators/fingerprint_index.dedup_against_index,
+    what the streaming dedup intake runs per micro-batch."""
+    from dasladen_spark.operators.dedup import WINNOW_MIN_SHARED
     from dasladen_spark.operators.fingerprint_index import (
-        append_to_index,
-        novel_against_index,
+        dedup_against_index,
     )
 
     df = _read_transformed(ctx, task)
     text_field = task.get("text_field", "text")
     id_field = task.get("id_field", df.columns[0])
     method = task.get("method", "exact")
-    if method == "winnowing":
-        return _run_dedup_winnowing(ctx, task, df, text_field, id_field)
     if method == "spans":
         return _run_dedup_spans(ctx, task, df, text_field, id_field)
     if method == "semantic":
         return _run_dedup_semantic(ctx, task, df, id_field)
-    if method != "exact":
+    if method not in ("exact", "winnowing"):
         # a typo must not silently fall through to whole-document
         # exact dedup — that DROPS documents the user asked to keep
         raise ValueError(f"unknown dedup method {method!r}")
-    b = df.withColumn("fp", fingerprint(F.col(text_field)))
-    b = exact_dedup(b, ["fp"], id_field)
     index = task.get("index")
     if index:
         _ensure_fingerprint_index(ctx, task, index, text_field)
-        # persist + sink BEFORE the index append: the anti-join is
-        # lazy, and appending first would put this batch's own
-        # fingerprints into the index it is still being filtered
-        # against — every row would vanish on the write's re-execution
-        novel = novel_against_index(ctx.spark, index, b).persist()
-        try:
-            # persist stays (two consumers: the sink and the index
-            # append); the row count rides the write via observe
-            # instead of a third job
-            n_out = _observed_write(ctx, task, novel.drop("fp"))
-            if task.get("update_index", True):
-                append_to_index(ctx.spark, index, novel)
-        finally:
-            novel.unpersist()
-    else:
-        n_out = _observed_write(ctx, task, b.drop("fp"))
-    ctx.log(f"task {task.get('name')}: {n_out} novel rows out")
+    n_out = dedup_against_index(
+        df,
+        index,
+        # the row count rides the write via observe, not a third job
+        lambda out: _observed_write(ctx, task, out),
+        method=method,
+        id_col=id_field,
+        text_col=text_field,
+        min_shared=int(task.get("min_shared", WINNOW_MIN_SHARED)),
+        update_index=task.get("update_index", True),
+    )
+    arm = " (winnowing)" if method == "winnowing" else ""
+    ctx.log(f"task {task.get('name')}: {n_out} novel rows out{arm}")
 
 
 def _ensure_fingerprint_index(
@@ -649,60 +616,6 @@ def _ensure_fingerprint_index(
             empty, index, text_col=text_field,
             n_buckets=int(task.get("n_buckets", 16)), tag="cold-start",
         )
-
-
-def _run_dedup_winnowing(
-    ctx: TaskContext, task: dict, df, text_field: str, id_field: str
-) -> None:
-    """The dedup task's near-dup arm: within-batch winnowing pairs →
-    connected components → min-id survivor per cluster, then the
-    optional winnowed-fingerprint history index (see run_dedup)."""
-    from pyspark.sql import functions as F
-
-    from dasladen_spark.operators.dedup import (
-        WINNOW_MIN_SHARED,
-        winnowing_pairs,
-    )
-    from dasladen_spark.operators.fingerprint_index import (
-        append_to_index,
-        winnowed_novel_against_index,
-    )
-    from dasladen_spark.operators.graph import dedup_clusters
-
-    min_shared = int(task.get("min_shared", WINNOW_MIN_SHARED))
-    pairs = winnowing_pairs(
-        df, id_col=id_field, text_col=text_field, min_shared=min_shared
-    )
-    drop = (
-        dedup_clusters(pairs, "doc_a", "doc_b")
-        .filter(F.col("member") != F.col("survivor"))
-        .select(F.col("member").alias(id_field))
-    )
-    surv = df.join(drop, id_field, "left_anti")
-    index = task.get("index")
-    if index:
-        _ensure_fingerprint_index(ctx, task, index, text_field)
-        novel, novel_fps = winnowed_novel_against_index(
-            ctx.spark, index, surv,
-            id_col=id_field, text_col=text_field, min_shared=min_shared,
-        )
-        # persist + sink BEFORE the index append: the join is lazy,
-        # and appending first would put this batch's own fingerprints
-        # into the index it is still being filtered against
-        novel = novel.persist()
-        novel_fps = novel_fps.persist()
-        try:
-            # persist stays (sink + index append both read novel/fps);
-            # the row count rides the write via observe
-            n_out = _observed_write(ctx, task, novel)
-            if task.get("update_index", True):
-                append_to_index(ctx.spark, index, novel_fps)
-        finally:
-            novel.unpersist()
-            novel_fps.unpersist()
-    else:
-        n_out = _observed_write(ctx, task, surv)
-    ctx.log(f"task {task.get('name')}: {n_out} novel rows out (winnowing)")
 
 
 def _run_dedup_semantic(
@@ -801,6 +714,7 @@ def _run_dedup_spans(
         SPAN_MIN_TOKENS,
         SPAN_SEED_N,
         cut_duplicate_spans,
+        duplicated_span_coverage,
         duplicated_spans,
     )
 
@@ -819,12 +733,9 @@ def _run_dedup_spans(
     elif mode == "drop":
         # funnel-parity arm: compute each doc's duplicated-span
         # coverage over THIS batch and keep docs at or under the
-        # ceiling. Imported lazily from the plans layer (the single
-        # spelling corpus_clean_funnel audits) so task runs and the
-        # registered report can never disagree on the metric.
+        # ceiling — the spelling corpus_clean_funnel audits, so task
+        # runs and the registered report never disagree on the metric
         from pyspark.sql import functions as F
-
-        from dasladen_spark.plans.llm4 import duplicated_span_coverage
 
         cov = duplicated_span_coverage(
             df.select(id_field, text_field),
@@ -1043,6 +954,7 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
     if method == "coreset":
         from pyspark.sql import functions as F
 
+        from dasladen_spark.operators.quality import require_unique_ids
         from dasladen_spark.operators.sampling import kcenter_coreset
 
         what = "sample task (coreset)"
@@ -1051,7 +963,7 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
         # id seeds the greedy pick then vanishes from the equi-join;
         # duplicate ids fan the broadcast join out into >k rows with
         # d2 stamped on rows it was never computed for
-        _require_unique_ids(df, id_field, what)
+        require_unique_ids(df, id_field, what)
         # the greedy loop scans the source k times — persist so those
         # scans hit memory, not the source parser (the operator's
         # at-scale contract)
@@ -1169,34 +1081,37 @@ def run_decontaminate(ctx: TaskContext, task: dict) -> None:
     NULL semantics) and duplicate ids would merge gram sets across
     docs before the min_hits threshold, so both fail loudly up front.
 
-    Scale shape: see operators/decontaminate (the gram pipeline is
-    SHARED with the streaming intake gate, so batch and stream drop
-    exactly the same docs): the benchmark's distinct gram set
-    broadcasts; the corpus side joins that broadcast BEFORE any
-    distinct, so the only corpus-keyed exchange is benchmark-bounded,
-    never the full gram stream."""
-    from pyspark.sql import functions as F
-
+    The bench side, the hits and the clean/quarantine split are
+    operators/decontaminate's decontamination_bench,
+    decontamination_hits and route_on_hits (scale shape there) — what
+    the streaming intake gate runs per micro-batch, so batch and
+    stream drop exactly the same docs."""
     from dasladen_spark.operators.decontaminate import (
-        bench_gram_set,
-        contamination_hits,
-        semantic_hits,
+        decontamination_bench,
+        decontamination_hits,
+        route_on_hits,
     )
+    from dasladen_spark.operators.quality import require_unique_ids
 
     df = _read_transformed(ctx, task)
-    bench_df = _read(ctx, task, "bench")
     method = task.get("method", "ngrams")
-    if method not in ("ngrams", "semantic"):
-        raise ValueError(
-            f"decontaminate task: unknown method {method!r}"
-            " (expected 'ngrams' or 'semantic')"
-        )
     text_field = task.get("text_field", "text")
-    bench_text = task.get("bench_text_field", text_field)
     id_field = task.get("id_field", df.columns[0])
+    vec_field = task.get("vec_field", "embedding")
     n = int(task.get("ngram", 8))
     min_hits = int(task.get("min_hits", 1))
     what = "decontaminate task"
+    bench = decontamination_bench(
+        _read(ctx, task, "bench"),
+        method,
+        what,
+        text_col=task.get("bench_text_field", text_field),
+        n=n,
+        id_col=id_field,
+        vec_col=vec_field,
+        bench_id_col=task.get("bench_id_field"),
+        bench_vec_col=task.get("bench_vec_field"),
+    )
     _reject_reserved(
         df,
         ("_did", "n_contaminated_grams") if method == "ngrams"
@@ -1204,61 +1119,42 @@ def run_decontaminate(ctx: TaskContext, task: dict) -> None:
         what,
         "an internal name",
     )
-    _require_unique_ids(
+    require_unique_ids(
         df, id_field, what,
         " — a NULL or duplicated id would silently leak or over-drop"
         " documents",
     )
-    if method == "semantic":
-        # paraphrase-robust variant: both sides carry an embedding
-        # column; a doc drops when its vector sits within `threshold`
-        # cosine of SOME benchmark vector (operators/decontaminate
-        # semantic_hits — bench broadcast, one corpus scan)
-        vec_field = task.get("vec_field", "embedding")
-        bench_vec = task.get("bench_vec_field", vec_field)
-        hits = semantic_hits(
-            df,
-            bench_df.select(
-                F.col(task.get("bench_id_field", id_field)).alias(id_field),
-                F.col(bench_vec).alias(vec_field),
-            ),
-            vec_col=vec_field,
-            id_col=id_field,
-            threshold=float(task.get("threshold", 0.35)),
-            # prefilter: "ann" bounds the rescore to hyperplane-bucket
-            # collisions — the shape for eval suites too large for the
-            # exact |corpus|×|bench| broadcast scan; anything else
-            # (typo, wrong case) fails loudly rather than silently
-            # running the 2000×-slower exact scan
-            method=_semantic_prefilter(task),
-            num_tables=int(task.get("num_tables", 16)),
-            bits_per_table=int(task.get("bits_per_table", 4)),
-            dim=int(task.get("dim", 64)),
-        )
-    else:
-        bench_grams = bench_gram_set(bench_df, text_col=bench_text, n=n)
-        hits = contamination_hits(
-            df,
-            bench_grams,
-            text_col=text_field,
-            id_col=id_field,
-            n=n,
-            min_hits=min_hits,
-        )
-    if task.get("quarantine"):
-        # doc-id-sized; two consumers (anti-join + quarantine join)
-        # must not re-run the gram pipeline
-        hits = hits.persist()
-    clean = df.join(
-        hits, df[id_field] == hits["_did"], "left_anti"
+    hits = decontamination_hits(
+        df,
+        bench,
+        method,
+        text_col=text_field,
+        id_col=id_field,
+        n=n,
+        min_hits=min_hits,
+        vec_col=vec_field,
+        threshold=float(task.get("threshold", 0.35)),
+        # prefilter: "ann" bounds the rescore to hyperplane-bucket
+        # collisions — the shape for eval suites too large for the
+        # exact |corpus|×|bench| broadcast scan; anything else
+        # (typo, wrong case) fails loudly rather than silently
+        # running the 2000×-slower exact scan
+        prefilter=(
+            _semantic_prefilter(task) if method == "semantic" else "exact"
+        ),
+        num_tables=int(task.get("num_tables", 16)),
+        bits_per_table=int(task.get("bits_per_table", 4)),
+        dim=int(task.get("dim", 64)),
     )
-    _write(ctx, task, clean)
-    if task.get("quarantine"):
-        dropped = df.join(
-            hits, df[id_field] == hits["_did"]
-        ).drop("_did")
-        _write(ctx, task, dropped, "quarantine")
-        hits.unpersist()
+    route_on_hits(
+        df,
+        hits,
+        id_field,
+        lambda clean: _write(ctx, task, clean),
+        (lambda dropped: _write(ctx, task, dropped, "quarantine"))
+        if task.get("quarantine")
+        else None,
+    )
     knobs = (
         f"method=semantic, threshold={float(task.get('threshold', 0.35))}"
         if method == "semantic"
@@ -1278,12 +1174,15 @@ def run_intake(ctx: TaskContext, task: dict) -> None:
     folders exactly once; a scheduled task file thereby becomes an
     incremental intake pipeline with per-run cost O(new files).
 
-    ``gate: "quality"`` (default) scores with the batch pipeline's
-    Column scorer (``min_quality`` / ``min_tokens`` knobs); ``gate:
+    ``gate: "quality"`` (default) scores with functions/text's
+    quality_score and token_count, the Column functions the batch
+    pipeline uses (``min_quality`` / ``min_tokens`` knobs); ``gate:
     "decontaminate"`` quarantines docs sharing ≥ ``min_hits`` word
-    ``ngram``-grams with the ``bench`` source — both gates are the
-    SAME code the batch tasks run, so ingestion and backfill can
-    never disagree. ``schema`` defaults to the documents layout."""
+    ``ngram``-grams with the ``bench`` source through
+    operators/decontaminate's decontamination_bench,
+    decontamination_hits and route_on_hits — the functions the
+    `decontaminate` task calls, so ingestion and backfill can never
+    disagree. ``schema`` defaults to the documents layout."""
     from dasladen_spark.streaming.intake import (
         run_decontaminate_gate,
         run_quality_gate,
@@ -1297,13 +1196,10 @@ def run_intake(ctx: TaskContext, task: dict) -> None:
     )
     docs = stream_document_folder(ctx.spark, folder, schema)
     tgt = task["target"]
-    accept = os.path.join(
-        tgt.get("folder", tgt.get("path", ctx.output_path)), tgt["file"]
-    )
-    q = task.get("quarantine", {})
-    quarantine = os.path.join(
-        q.get("folder", q.get("path", ctx.output_path)),
-        q.get("file", tgt["file"] + ".quarantine"),
+    accept = _tgt_path(ctx, tgt)
+    quarantine = _tgt_path(
+        ctx,
+        {"file": tgt["file"] + ".quarantine", **task.get("quarantine", {})},
     )
     gate = task.get("gate", "quality")
     # keyed on (name, gate, target): two intake tasks sharing an

@@ -268,7 +268,8 @@ def test_write_zordered_skips_files_on_any_clustered_column(spark, tmp_path):
     import pyarrow.parquet as pq
 
     from dasladen_spark.session import load_table
-    from dasladen_spark.sinks.partitioned import write_sorted, write_zordered
+    from dasladen_spark.sinks.partitioned import write_sorted
+    from dasladen_spark.sinks.zorder import write_zordered
 
     from pyspark.sql import functions as F
 
@@ -276,7 +277,7 @@ def test_write_zordered_skips_files_on_any_clustered_column(spark, tmp_path):
     n_rows = df.count()
     lin, zo = str(tmp_path / "linear"), str(tmp_path / "zorder")
     write_sorted(df, lin, "l_orderkey", num_files=16)
-    write_zordered(df, zo, ["l_orderkey", "l_partkey"], num_files=16)
+    write_zordered(df, zo, ("l_orderkey", "l_partkey"), n_files=16)
 
     bounds = df.agg(
         F.min("l_partkey").alias("lo"), F.max("l_partkey").alias("hi")

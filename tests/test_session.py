@@ -1,8 +1,11 @@
-"""Session-factory units: driver java-option merging.
+"""Session-factory units: driver java-option merging, and the Spark
+defaults the session relies on without setting them.
 
 The code-cache flags (session.DEFAULT_CONF) must APPEND to — never
 replace — extraJavaOptions from spark-defaults.conf or a caller's
 extra_conf (round-8 verdict "what's wrong" #3)."""
+
+import re
 
 from dasladen_spark.session import (
     DEFAULT_CONF,
@@ -60,3 +63,29 @@ def test_spark_defaults_last_occurrence_wins(tmp_path, monkeypatch):
 def test_spark_defaults_missing_file_is_empty(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     assert _spark_defaults_java_options() == ""
+
+
+def _size_bytes(value: str) -> int:
+    """'64m', '64MB', '67108864b' or '67108864' → bytes."""
+    m = re.fullmatch(r"(\d+)\s*([kmg]?)i?b?", value.strip().lower())
+    assert m, value
+    return int(m[1]) << {"": 0, "k": 10, "m": 20, "g": 30}[m[2]]
+
+
+def test_session_keeps_sparks_own_scale_defaults(spark):
+    """DEFAULT_CONF does not repeat these settings because Spark's
+    defaults already hold them; this pins the effective values on the
+    get_spark() session, so a change in Spark's defaults shows here."""
+    flags = {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.parquet.filterPushdown": "true",
+        "spark.sql.parquet.enableVectorizedReader": "true",
+    }
+    sizes = {
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes": 64 << 20,
+        "spark.sql.files.maxPartitionBytes": 128 << 20,
+    }
+    assert {k: spark.conf.get(k).lower() for k in flags} == flags
+    assert {k: _size_bytes(spark.conf.get(k)) for k in sizes} == sizes

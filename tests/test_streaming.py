@@ -3,6 +3,8 @@ folder with transforms, and watermarked windowed aggregation."""
 
 import datetime as dt
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from dasladen_spark.streaming.ingest import (
@@ -888,6 +890,102 @@ def test_streaming_winnowed_intake_near_dup_across_batches(spark, tmp_path):
     assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {2, 5}
     for t in ("t_stream_winidx", "t_stream_winidx_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+@pytest.mark.parametrize(
+    "method, admitted", [("exact", {2, 4, 5, 6}), ("winnowing", {2, 4})]
+)
+def test_dedup_task_and_stream_intake_agree(spark, tmp_path, method, admitted):
+    """Dedup parity: the same documents through a `dedup` task with an
+    index and through one micro-batch of run_streaming_dedup_intake,
+    each against its own index table seeded with the same history,
+    admit the same ids and leave the same fingerprints (and batch
+    tags) in their index tables."""
+    import json
+
+    from dasladen_spark.connections import ConnectionRegistry
+    from dasladen_spark.operators.fingerprint_index import (
+        build_fingerprint_index,
+        build_winnowed_fingerprint_index,
+    )
+    from dasladen_spark.streaming.indexsync import run_streaming_dedup_intake
+    from dasladen_spark.streaming.intake import stream_document_folder
+    from dasladen_spark.tasks import TaskContext, run_dedup
+
+    tables = [f"t_par_{side}_{method}" for side in ("task", "stream")]
+    for t in tables:
+        for suffix in ("", "_meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{suffix}")
+    hist_run = " ".join(f"hist{i}" for i in range(25))
+    run_a = " ".join(f"alpha{i}" for i in range(25))
+    hist = spark.createDataFrame(
+        [(100, "archive copy " + hist_run)], ["doc_id", "text"]
+    )
+    build = (
+        build_winnowed_fingerprint_index
+        if method == "winnowing"
+        else build_fingerprint_index
+    )
+    for t in tables:
+        build(hist, t, n_buckets=4, tag="h0")
+    docs = [
+        (1, "archive copy " + hist_run),  # whole-doc dup of history
+        (2, "lead one " + run_a),
+        (3, "lead one " + run_a),  # in-batch dup of 2
+        (4, " ".join(f"beta{i}" for i in range(25))),
+        (5, "other framing " + run_a + " tail"),  # near-dup of 2
+        (6, "fresh intro " + hist_run),  # near-dup of history
+    ]
+    inp = tmp_path / "input"
+    inp.mkdir()
+    with open(inp / "docs.jsonl", "w", encoding="utf-8") as f:
+        for i, text in docs:
+            f.write(json.dumps({"doc_id": i, "text": text}) + "\n")
+
+    out = tmp_path / "output"
+    run_dedup(
+        TaskContext(
+            spark,
+            ConnectionRegistry(None),
+            input_path=str(inp),
+            output_path=str(out),
+        ),
+        {
+            "name": "par",
+            "type": "dedup",
+            "method": method,
+            "index": tables[0],
+            "id_field": "doc_id",
+            "source": {"kind": "json", "file": "docs.jsonl",
+                       "schema": "doc_id BIGINT, text STRING"},
+            "target": {"file": "novel.parquet", "truncate": True},
+        },
+    )
+    acc = str(tmp_path / "accept")
+    q = run_streaming_dedup_intake(
+        stream_document_folder(spark, str(inp)), tables[1], acc,
+        str(tmp_path / "ck"), method=method,
+    )
+    q.awaitTermination(120)
+
+    def ids(path):
+        return {r["doc_id"] for r in spark.read.parquet(path).collect()}
+
+    def postings(t):
+        spark.catalog.refreshTable(t)
+        return {
+            (r["fp"], r["batch_id"])
+            for r in spark.table(t).select("fp", "batch_id").collect()
+        }
+
+    assert ids(str(out / "novel.parquet")) == ids(acc) == admitted
+    task_postings = postings(tables[0])
+    assert task_postings == postings(tables[1])
+    # history baseline plus this batch's append
+    assert {b for _, b in task_postings} == {-1, 0}
+    for t in tables:
+        for suffix in ("", "_meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}{suffix}")
 
 
 def test_streaming_ann_sync_new_vectors_searchable(spark, tmp_path, sf_dir):

@@ -1118,6 +1118,53 @@ def test_dedup_task_winnowing_incremental_across_runs(spark, workdir):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+@pytest.mark.parametrize("index", [None, "t_task_leakidx"])
+def test_dedup_task_winnowing_leaves_nothing_cached(spark, workdir, index):
+    """A winnowing 'dedup' task unpersists every frame it caches (the
+    pair stage's fingerprint frame included), with and without an
+    index — a long-lived Watcher runs the same task file on every
+    schedule tick, and a cached frame left per run is a leak."""
+    for t in ("t_task_leakidx", "t_task_leakidx_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+    run = " ".join(f"shared{i}" for i in range(25))
+    with open(workdir / "input" / "l.json", "w", encoding="utf-8") as f:
+        for r in [
+            {"doc_id": 1, "text": "intro one two " + run},
+            {"doc_id": 2, "text": "totally different prefix " + run},
+            {"doc_id": 3, "text": " ".join(f"left{i}" for i in range(25))},
+        ]:
+            f.write(json.dumps(r) + "\n")
+    task = {
+        "name": "leak",
+        "type": "dedup",
+        "method": "winnowing",
+        "id_field": "doc_id",
+        "source": {
+            "kind": "json",
+            "file": "l.json",
+            "schema": "doc_id BIGINT, text STRING",
+        },
+        "target": {"kind": "parquet", "file": "l.parquet", "truncate": True},
+    }
+    if index:
+        task["index"] = index
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    # frames other tests of this session cached are not this task's
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    run_tasks(spark, workdir, {"tasks": [task]})
+    got = {
+        r["doc_id"]
+        for r in spark.read.parquet(
+            str(workdir / "output" / "l.parquet")
+        ).collect()
+    }
+    assert got == {1, 3}
+    assert cache.isEmpty()
+    for t in ("t_task_leakidx", "t_task_leakidx_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_intake_task_incremental_quality_and_decontaminate_gates(
     spark, workdir
 ):

@@ -67,7 +67,7 @@ KEYS = {
 STATIC = ["region", "nation"]
 
 #: mutate every Kth token of a replica document. MUST stay below the
-#: span-dedup shingle length (plans/llm4._SPAN_N = 8): shared runs of
+#: span-dedup shingle length (operators/dedup._SPAN_N = 8): shared runs of
 #: exactly MUTATE_EVERY-1 = 7-1 = 6 tokens contain no duplicated
 #: 8-gram, so replicas never span-annihilate their originals, while
 #: word-3-gram Jaccard vs the original stays ≈ 0.4 (real near-dup

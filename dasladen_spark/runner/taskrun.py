@@ -88,12 +88,19 @@ class TaskRunner:
                     f" {', '.join(sorted(TASK_TYPES))}"
                 )
             t0 = time.time()
-            self.log(f"task {item.get('name')} ({task_type}): start")
-            fn(self.ctx, item)
-            self.log(
-                f"task {item.get('name')} ({task_type}):"
-                f" done in {time.time() - t0:.2f}s"
-            )
+            label = f"task {item.get('name')} ({task_type})"
+            self.log(f"{label}: start")
+            try:
+                fn(self.ctx, item)
+            except Exception as ex:
+                # recorded in the per-task-file log before the caller
+                # (the Watcher's console line) sees it
+                self.log(
+                    f"{label}: failed after {time.time() - t0:.2f}s:"
+                    f" {type(ex).__name__}: {ex}"
+                )
+                raise
+            self.log(f"{label}: done in {time.time() - t0:.2f}s")
 
     def run_with_schedule(self) -> None:
         """times / infinity loop semantics (processor.py:154-169);

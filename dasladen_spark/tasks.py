@@ -21,10 +21,12 @@ import importlib
 import os
 import sys
 import threading
+import uuid
 import zipfile
 from dataclasses import dataclass, field
 from typing import Callable
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from dasladen_spark.connections import ConnectionRegistry
@@ -248,29 +250,42 @@ def _reject_reserved(df: DataFrame, names, what: str, role: str) -> None:
             )
 
 
-def _progress_counted(df: DataFrame, acc) -> DataFrame:
-    """Arrow passthrough that counts rows into a Spark accumulator —
-    the distributed stand-in for petl's row-at-a-time ``.progress()``
-    meter. Batch-level adds only; the frame itself is untouched.
+# The write's jobs share a job group, not a job tag: StatusTracker
+# looks a group's job ids up directly, while finding tagged jobs
+# scans every retained job on every poll.
+_JOB_GROUP = "spark.jobGroup.id"
 
-    ``mapInArrow``, not ``mapInPandas``: the meter only needs each
-    batch's row COUNT, so materializing every column into pandas
-    objects (strings become per-row Python objects) on the way
-    through the worker was pure overhead — raw Arrow record batches
-    are counted and yielded back untouched. Measured on a
-    documents-sized parquet→parquet stage (sf0.1, median of 5): write
-    0.268 s bare, 0.403 s via mapInPandas, 0.320 s via mapInArrow —
-    the meter's added cost drops ~2.6× (0.135 s → 0.052 s), and the
-    per-byte saving is what scales with corpus width."""
 
-    schema = df.schema
+def _rows_written(spark: SparkSession, group: str, sink_kind: str) -> int:
+    """Rows written so far by the jobs of job group ``group``, read
+    from Spark's own per-task metrics (they update once per finished
+    task).
 
-    def passthrough(batches):
-        for b in batches:
-            acc.add(b.num_rows)
-            yield b
+    Every Spark writer records ``outputRecords``. The tar sink writes
+    from Python, so Spark records none for it; its rows are the
+    shuffle-read records of its last job's result stage, which the
+    sink's own repartition alone feeds. A last stage that writes
+    shuffle output belongs to an adaptive map job, not the writer."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
 
-    return df.mapInArrow(passthrough, schema)
+    def stage(sid):
+        try:
+            return store.lastStageAttempt(sid)
+        except Py4JJavaError:  # not in the status store yet
+            return None
+
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    infos = [tracker.getJobInfo(j) for j in jobs]
+    infos = [i for i in infos if i is not None and i.stageIds]
+    if sink_kind == "tar":
+        last = infos and stage(max(infos[-1].stageIds))
+        if not last or last.shuffleWriteRecords():
+            return 0
+        return last.shuffleReadRecords()
+    stages = (stage(sid) for sid in {sid for i in infos for sid in i.stageIds})
+    return sum(s.outputRecords() for s in stages if s is not None)
 
 
 def run_etl(ctx: TaskContext, task: dict) -> None:
@@ -278,13 +293,14 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     (task.py §2.5); one lazy plan end-to-end.
 
     Progress meter parity (ref task.py:197-202: petl logs every
-    10,000 rows into the per-task log): executor tasks count written
-    rows into an accumulator; a driver-side poller narrates each
-    crossed 10k boundary WHILE the write runs. Accumulator updates
-    arrive on task completion, so lines appear per finished partition
-    — the distributed analogue of a row counter, costing one Arrow
-    passthrough and no extra pass. ``"progress": 0`` in the task
-    disables it (and the passthrough) entirely."""
+    10,000 rows into the per-task log): the write runs under its own
+    job group (the caller's is restored after it), and a driver-side
+    poller sums the rows Spark's task metrics say those jobs wrote,
+    narrating each crossed 10k boundary WHILE the write runs. Task
+    metrics arrive on task completion, so lines appear per finished
+    partition — the distributed analogue of a row counter, costing no
+    extra pass and no Python stage. ``"progress": 0`` in the task
+    disables it entirely."""
     src_kind, sink_kind = task["type"].split("-")
     df = _read_source(ctx, task, src_kind)
     # Empty-source short-circuit (fix of §4.8) ONLY for the
@@ -304,35 +320,39 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     if not every:
         _write_sink(ctx, task, out, sink_kind)
         return
-    acc = ctx.spark.sparkContext.accumulator(0)
-    out = _progress_counted(out, acc)
+    sc = ctx.spark.sparkContext
+    group = f"dasladen-etl-{uuid.uuid4().hex}"
     stop = threading.Event()
     name = task.get("name")
-    state = {"reported": 0}
+    reported = 0
 
-    def emit_crossings():
-        n = acc.value // every * every
-        while state["reported"] < n:
-            state["reported"] += every
-            ctx.log(f"task {name}: {state['reported']} rows")
+    def emit_crossings() -> int:
+        nonlocal reported
+        rows = _rows_written(ctx.spark, group, sink_kind)
+        while reported + every <= rows:
+            reported += every
+            ctx.log(f"task {name}: {reported} rows")
+        return rows
 
     def poll():
-        while not stop.is_set():
+        while not stop.wait(0.2):
             emit_crossings()
-            stop.wait(0.2)
 
+    caller_group = sc.getLocalProperty(_JOB_GROUP)
+    sc.setLocalProperty(_JOB_GROUP, group)
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()
     try:
         _write_sink(ctx, task, out, sink_kind)
     finally:
+        sc.setLocalProperty(_JOB_GROUP, caller_group)
         stop.set()
-        poller.join(timeout=2)
-    emit_crossings()  # late accumulator updates land here, always
-    # '~': accumulator adds from transformations are re-applied on
-    # task retries / speculative attempts, so after any executor
-    # failure the counter can exceed the rows actually committed
-    ctx.log(f"task {name}: wrote ~{acc.value} rows")
+        poller.join()
+    # only now, with the poller gone, does this thread advance the
+    # count; '~': a retried or speculative task attempt can record
+    # its rows again, so after an executor failure the total can
+    # exceed the rows actually committed
+    ctx.log(f"task {name}: wrote ~{emit_crossings()} rows")
 
 
 # ------------------------------------------------------ control-plane

@@ -285,6 +285,52 @@ def test_per_task_log_file_written(watch_env):
         assert re.match(r"\d{4}-\d{2}-\d{2} \d{2}:\d{2}:\d{2} ", line), line
 
 
+def test_task_failure_recorded_in_task_log(spark, tmp_path):
+    """A failing task leaves its cause in ``log/<key>.log`` (not only
+    on the console), and the Watcher's console line stays as it was."""
+    import re
+
+    console: list[str] = []
+    w = Watcher(
+        spark,
+        capture_path=str(tmp_path / "capture"),
+        input_path=str(tmp_path / "input"),
+        output_path=str(tmp_path / "output"),
+        module_path=str(tmp_path / "module"),
+        log=console.append,
+        log_dir=str(tmp_path / "log"),
+    )
+    (tmp_path / "input" / "src.csv").write_text("id;v\n1;a\n")
+    (tmp_path / "capture" / "nightly.json").write_text(
+        json.dumps(
+            {
+                "tasks": [
+                    {
+                        "name": "ok",
+                        "type": "csv-csv",
+                        "source": {"file": "src.csv"},
+                        "target": {"file": "out.csv", "truncate": True},
+                    },
+                    {
+                        "name": "bad",
+                        "type": "csv-csv",
+                        "source": {"file": "missing.csv"},
+                        "target": {"file": "out2.csv", "truncate": True},
+                    },
+                ]
+            }
+        )
+    )
+    w.check()
+    content = (tmp_path / "log" / "nightly.log").read_text()
+    assert "task ok (csv-csv): done in" in content
+    assert re.search(
+        r"task bad \(csv-csv\): failed after \d+\.\d\ds: \w+: .*missing\.csv",
+        content,
+    ), content
+    assert any(m.startswith("error processing nightly.json: ") for m in console)
+
+
 def test_no_log_disables_task_log_files(spark, tmp_path):
     w = Watcher(
         spark,

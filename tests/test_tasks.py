@@ -3,6 +3,8 @@ covering the ETL matrix + control-plane tasks (SURVEY §2.5)."""
 
 import json
 import os
+import tarfile
+import uuid
 import zipfile
 
 import pytest
@@ -121,38 +123,158 @@ def test_mysql_ansi_quotes_session_init():
     )
 
 
-def test_progress_meter_logs_10k_increments(spark, workdir):
+#: per sink kind: the task's target and how to count the rows it
+#: holds, given the session, the output folder and the db connection
+PROGRESS_SINKS = {
+    "csv": (
+        {"file": "out.csv", "truncate": True},
+        lambda spark, out, db: len((out / "out.csv").read_text().splitlines()) - 1,
+    ),
+    "parquet": (
+        {"file": "out.parquet", "truncate": True},
+        lambda spark, out, db: spark.read.parquet(str(out / "out.parquet")).count(),
+    ),
+    "json": (
+        {"file": "out.json", "truncate": True},
+        lambda spark, out, db: spark.read.json(str(out / "out.json")).count(),
+    ),
+    "db": (
+        {"connection": "derby", "table": "big", "truncate": True},
+        lambda spark, out, db: db.read_sql(
+            spark, "SELECT COUNT(*) AS n FROM big"
+        ).first()[0],
+    ),
+    "tar": (
+        {"file": "shards", "n_shards": 3, "key_field": "id", "payload_field": "v"},
+        lambda spark, out, db: sum(
+            _tar_members(f) for f in (out / "shards").glob("*.tar")
+        ),
+    ),
+}
+
+
+def _tar_members(path) -> int:
+    with tarfile.open(path) as tf:
+        return len(tf.getnames())
+
+
+@pytest.mark.parametrize("sink", sorted(PROGRESS_SINKS))
+def test_progress_meter_logs_10k_increments(spark, workdir, sink):
     """run_etl narrates every 10k written rows into the task log (ref
-    task.py:197-202: petl .progress(10000)); the final total always
-    lands even when accumulator updates arrive after the write."""
+    task.py:197-202: petl .progress(10000)) on every sink kind; the
+    final total always lands even when task metrics arrive after the
+    write. The tar sink writes from Python, so Spark records no output
+    rows for it: its count comes from the sink's shuffle read."""
     n_rows = 25_000
     lines = "\n".join(f"{i};v{i}" for i in range(n_rows))
     (workdir / "input" / "big.csv").write_text(f"id;v\n{lines}\n")
+    derby = {
+        "name": "derby",
+        "driver": "JDBC",
+        "url": f"jdbc:derby:memory:progress_{uuid.uuid4().hex[:12]};create=true",
+        "jdbc_driver": "org.apache.derby.jdbc.EmbeddedDriver",
+    }
+    target, count = PROGRESS_SINKS[sink]
     logged: list[str] = []
-    TaskRunner(
+    runner = TaskRunner(
         spark,
         Runner(
             {
+                "connections": [derby],
                 "tasks": [
                     {
                         "name": "big",
-                        "type": "csv-csv",
+                        "type": f"csv-{sink}",
                         "source": {"file": "big.csv"},
-                        "target": {"file": "out.csv", "truncate": True},
+                        "target": target,
                     }
-                ]
+                ],
             }
         ),
         input_path=str(workdir / "input"),
         output_path=str(workdir / "output"),
         module_path=str(workdir / "module"),
         log=logged.append,
-    ).run()
+    )
+    runner.run()
     assert "task big: 10000 rows" in logged
     assert "task big: 20000 rows" in logged
     assert "task big: wrote ~25000 rows" in logged
-    out = (workdir / "output" / "out.csv").read_text().strip().splitlines()
-    assert len(out) == n_rows + 1  # the passthrough loses no rows
+    db = runner.ctx.connections.get("derby")
+    assert count(spark, workdir / "output", db) == n_rows  # no row lost
+
+
+def test_etl_write_runs_no_python_stage(spark, workdir, monkeypatch):
+    """The progress meter reads Spark's own write metrics: the frame
+    an ETL task hands its sink plans no Python worker."""
+    import re
+
+    from dasladen_spark import tasks
+
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1), (2, "b", 2)])
+    seen = []
+    real = tasks._write_sink
+
+    def capture(ctx, task, df, kind):
+        seen.append(df)
+        return real(ctx, task, df, kind)
+
+    monkeypatch.setattr(tasks, "_write_sink", capture)
+    for kind in ("parquet", "csv"):
+        run_tasks(
+            spark,
+            workdir,
+            {
+                "tasks": [
+                    {
+                        "name": f"to-{kind}",
+                        "type": f"csv-{kind}",
+                        "source": {"file": "src.csv"},
+                        "target": {"file": f"out.{kind}", "truncate": True},
+                    }
+                ]
+            },
+        )
+    assert len(seen) == 2
+    python_node = re.compile(
+        r"MapInArrow|MapInPandas|ArrowEvalPython|BatchEvalPython"
+    )
+    for df in seen:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert not python_node.search(plan), plan
+
+
+def test_etl_restores_the_callers_job_group(spark, workdir, monkeypatch):
+    """run_etl labels its write's jobs with a job group of its own and
+    hands the caller's group back, also when the sink raises."""
+    from dasladen_spark import tasks
+
+    sc = spark.sparkContext
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1)])
+    cfg = {
+        "tasks": [
+            {
+                "name": "t",
+                "type": "csv-csv",
+                "source": {"file": "src.csv"},
+                "target": {"file": "out.csv", "truncate": True},
+            }
+        ]
+    }
+    sc.setJobGroup("caller-group", "set by the caller")
+    try:
+        run_tasks(spark, workdir, cfg)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+
+        def broken(ctx, task, df, kind):
+            raise RuntimeError("sink down")
+
+        monkeypatch.setattr(tasks, "_write_sink", broken)
+        with pytest.raises(RuntimeError, match="sink down"):
+            run_tasks(spark, workdir, cfg)
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
 
 
 def test_progress_meter_disabled_by_zero(spark, workdir):

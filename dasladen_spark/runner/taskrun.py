@@ -75,18 +75,21 @@ class TaskRunner:
         )
 
     def run(self) -> None:
-        for item in self.runner.config.get("tasks", []):
-            task_type = "nop" if item.get("disabled") else item.get("type")
-            fn = TASK_TYPES.get(task_type)
-            if fn is None:
+        items = self.runner.config.get("tasks", [])
+        kinds = ["nop" if item.get("disabled") else item.get("type") for item in items]
+        for item, task_type in zip(items, kinds):
+            if task_type not in TASK_TYPES:
                 # reference parity: an unknown task type fails loudly
-                # (task.py:599 raises NotImplementedError) — a typo'd
-                # pipeline must not silently skip a stage
+                # (task.py:599 raises NotImplementedError) — and before
+                # the first task runs, so a typo'd pipeline neither
+                # skips a stage nor leaves the stages before it written
                 raise ValueError(
                     f"task {item.get('name')!r}: unknown type"
                     f" {task_type!r}; available:"
                     f" {', '.join(sorted(TASK_TYPES))}"
                 )
+        for item, task_type in zip(items, kinds):
+            fn = TASK_TYPES[task_type]
             t0 = time.time()
             label = f"task {item.get('name')} ({task_type})"
             self.log(f"{label}: start")

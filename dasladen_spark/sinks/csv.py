@@ -17,6 +17,7 @@ import glob
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.sql import DataFrame
 
@@ -37,7 +38,12 @@ def write_csv(
     encoding: str = "utf-8",
     truncate: bool = True,
     single_file: bool = True,
+    keep: Callable[[], bool] | None = None,
 ) -> None:
+    """Write ``df`` to ``path``. In single-file mode ``keep``, when
+    given, is asked after the Spark job and before the file moves into
+    place; if it returns False the output is discarded and ``path``
+    is left untouched."""
     if not single_file:
         (
             df.write.mode("overwrite" if truncate else "append")
@@ -55,6 +61,8 @@ def write_csv(
             .options(**_spark_csv_options(delimiter, encoding, truncate))
             .csv(tmp)
         )
+        if keep is not None and not keep():
+            return
         parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
         os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
         if truncate or not os.path.exists(path):

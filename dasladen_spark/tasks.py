@@ -8,8 +8,10 @@ predicates — something the reference's row-at-a-time petl chain can
 never do.
 
 The emptiness short-circuit keeps the reference's semantics
-(task.py:181 etc.) but reads the source ONCE per job instead of
-twice (fix per SURVEY §4.8): `isEmpty()` peeks at one partition.
+(task.py:181 etc.) without a second read of the source (fix per
+SURVEY §4.8): the default single-file csv sink checks after its
+write, and only when the write wrote nothing does `isEmpty()` peek
+at one partition; db and multi-file csv sinks peek before writing.
 
 Non-data tasks (zip/unzip/download/ftp/py-exec/custom) stay
 driver-side Python, as in the reference — they are control-plane.
@@ -32,6 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dasladen_spark.connections import ConnectionRegistry
 from dasladen_spark.sinks.csv import write_csv
 from dasladen_spark.sources.csv import read_csv
+from dasladen_spark.sources.parquet import read_parquet
 from dasladen_spark.sources.xls import read_xls
 from dasladen_spark.sources.xml import read_xml
 from dasladen_spark.transforms.compiler import apply_transforms
@@ -122,14 +125,21 @@ def _read_source(ctx: TaskContext, task: dict, kind: str) -> DataFrame:
             rd = rd.option("multiLine", "true")
         return rd.json(_src_path(ctx, src))
     if kind == "parquet":
-        return ctx.spark.read.parquet(_src_path(ctx, src))
+        return read_parquet(ctx.spark, _src_path(ctx, src))
     if kind == "orc":
         return ctx.spark.read.orc(_src_path(ctx, src))
     raise ValueError(f"unknown source kind {kind!r}")
 
 
-def _write_sink(ctx: TaskContext, task: dict, df: DataFrame, kind: str) -> None:
-    """Write ``df`` to ``task["target"]`` as format ``kind``."""
+def _write_sink(
+    ctx: TaskContext,
+    task: dict,
+    df: DataFrame,
+    kind: str,
+    keep: Callable[[], bool] | None = None,
+) -> None:
+    """Write ``df`` to ``task["target"]`` as format ``kind``; ``keep``
+    goes to the single-file csv sink (see ``write_csv``)."""
     tgt = task["target"]
     truncate = bool(tgt.get("truncate", False))
     mode = "overwrite" if truncate else "append"
@@ -141,6 +151,7 @@ def _write_sink(ctx: TaskContext, task: dict, df: DataFrame, kind: str) -> None:
             encoding=tgt.get("encoding", "utf-8"),
             truncate=truncate,
             single_file=bool(tgt.get("single_file", True)),
+            keep=keep,
         )
     elif kind == "db":
         conn = ctx.connections.get(tgt["connection"])
@@ -290,41 +301,60 @@ def _rows_written(spark: SparkSession, group: str, sink_kind: str) -> int:
 
 def run_etl(ctx: TaskContext, task: dict) -> None:
     """All seven source×sink ETL shapes share this pipeline
-    (task.py §2.5); one lazy plan end-to-end.
+    (task.py §2.5); one lazy plan end-to-end, written by the task's
+    only Spark job wherever the source's schema is known without
+    reading its rows (csv, parquet, db; xml and json infer theirs).
+
+    The write runs under its own job group (the caller's is restored
+    after it), so Spark's task metrics say how many rows it wrote.
+
+    Empty-source short-circuit (ref task.py:181) ONLY for the
+    reference-parity terminal sinks, csv and db: an empty source
+    writes no header-only file and makes no DB round trip.
+    Engine-internal sinks (parquet/orc/json/tar) ALWAYS write a
+    schema-bearing (possibly empty) output: a chained pipeline's next
+    stage must find its input even when an upstream filter
+    legitimately empties the stream (round-11's sf1 gate died with
+    PATH_NOT_FOUND when the skip swallowed a mid-pipeline stage's
+    input). The default single-file csv sink writes into a temp dir
+    before moving the file into place, so it asks after its job: a
+    write that wrote rows keeps its output at no cost, and only one
+    that wrote none (or ran a module transform) probes the source
+    with ``isEmpty()``. The db and multi-file csv sinks cannot undo a
+    write (a JDBC overwrite truncates before its job starts), so they
+    probe first.
 
     Progress meter parity (ref task.py:197-202: petl logs every
-    10,000 rows into the per-task log): the write runs under its own
-    job group (the caller's is restored after it), and a driver-side
-    poller sums the rows Spark's task metrics say those jobs wrote,
-    narrating each crossed 10k boundary WHILE the write runs. Task
-    metrics arrive on task completion, so lines appear per finished
-    partition — the distributed analogue of a row counter, costing no
-    extra pass and no Python stage. ``"progress": 0`` in the task
-    disables it entirely."""
+    10,000 rows into the per-task log): a driver-side poller sums the
+    rows the write's jobs wrote, narrating each crossed 10k boundary
+    WHILE the write runs. Task metrics arrive on task completion, so
+    lines appear per finished partition — the distributed analogue of
+    a row counter, costing no extra pass and no Python stage.
+    ``"progress": 0`` in the task disables the meter."""
     src_kind, sink_kind = task["type"].split("-")
     df = _read_source(ctx, task, src_kind)
-    # Empty-source short-circuit (fix of §4.8) ONLY for the
-    # reference-parity terminal sinks (csv/db — ref task.py:181
-    # skips the write so no header-only file / no-op DB round trip
-    # appears). Engine-internal sinks (parquet/orc/json/tar) ALWAYS
-    # write a schema-bearing (possibly empty) output: a chained
-    # pipeline's next stage must find its input even when an
-    # upstream filter legitimately empties the stream — round-11's
-    # sf1 gate died with PATH_NOT_FOUND when span-dedup emptied a
-    # mid-pipeline stage and the skip swallowed s5's input.
-    if sink_kind in ("csv", "db") and df.isEmpty():
-        ctx.log(f"task {task.get('name')}: empty source, skipping write")
+    name = task.get("name")
+    deferred = sink_kind == "csv" and bool(task["target"].get("single_file", True))
+    if sink_kind in ("csv", "db") and not deferred and df.isEmpty():
+        ctx.log(f"task {name}: empty source, skipping write")
         return
     out = _transformed(ctx, task, df)
     every = int(task.get("progress", 10000))
-    if not every:
-        _write_sink(ctx, task, out, sink_kind)
-        return
     sc = ctx.spark.sparkContext
     group = f"dasladen-etl-{uuid.uuid4().hex}"
     stop = threading.Event()
-    name = task.get("name")
     reported = 0
+    skipped = False
+
+    # rows written prove the source non-empty unless a user module
+    # transform, which may add rows (a trailer, a global count), ran
+    modules = task.get("transforms") or "module" in (task.get("transform") or {})
+
+    def keep() -> bool:
+        nonlocal skipped
+        wrote = not modules and _rows_written(ctx.spark, group, sink_kind) > 0
+        skipped = not wrote and df.isEmpty()
+        return not skipped
 
     def emit_crossings() -> int:
         nonlocal reported
@@ -335,7 +365,7 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
         return rows
 
     def poll():
-        while not stop.wait(0.2):
+        while every and not stop.wait(0.2):
             emit_crossings()
 
     caller_group = sc.getLocalProperty(_JOB_GROUP)
@@ -343,16 +373,19 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()
     try:
-        _write_sink(ctx, task, out, sink_kind)
+        _write_sink(ctx, task, out, sink_kind, keep=keep if deferred else None)
     finally:
         sc.setLocalProperty(_JOB_GROUP, caller_group)
         stop.set()
         poller.join()
-    # only now, with the poller gone, does this thread advance the
-    # count; '~': a retried or speculative task attempt can record
-    # its rows again, so after an executor failure the total can
-    # exceed the rows actually committed
-    ctx.log(f"task {name}: wrote ~{emit_crossings()} rows")
+    if skipped:
+        ctx.log(f"task {name}: empty source, skipping write")
+    elif every:
+        # only now, with the poller gone, does this thread advance the
+        # count; '~': a retried or speculative task attempt can record
+        # its rows again, so after an executor failure the total can
+        # exceed the rows actually committed
+        ctx.log(f"task {name}: wrote ~{emit_crossings()} rows")
 
 
 # ------------------------------------------------------ control-plane

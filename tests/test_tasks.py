@@ -215,9 +215,9 @@ def test_etl_write_runs_no_python_stage(spark, workdir, monkeypatch):
     seen = []
     real = tasks._write_sink
 
-    def capture(ctx, task, df, kind):
+    def capture(ctx, task, df, kind, **kw):
         seen.append(df)
-        return real(ctx, task, df, kind)
+        return real(ctx, task, df, kind, **kw)
 
     monkeypatch.setattr(tasks, "_write_sink", capture)
     for kind in ("parquet", "csv"):
@@ -266,7 +266,7 @@ def test_etl_restores_the_callers_job_group(spark, workdir, monkeypatch):
         run_tasks(spark, workdir, cfg)
         assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
 
-        def broken(ctx, task, df, kind):
+        def broken(ctx, task, df, kind, **kw):
             raise RuntimeError("sink down")
 
         monkeypatch.setattr(tasks, "_write_sink", broken)
@@ -332,6 +332,158 @@ def test_empty_source_short_circuit(spark, workdir):
         },
     )
     assert not (workdir / "output" / "out.csv").exists()
+
+
+def _derby(name):
+    # Derby memory databases live as long as the JVM: a unique name
+    # per test keeps runs apart
+    return {
+        "name": "derby",
+        "driver": "JDBC",
+        "url": f"jdbc:derby:memory:{name}_{uuid.uuid4().hex[:12]};create=true",
+        "jdbc_driver": "org.apache.derby.jdbc.EmbeddedDriver",
+    }
+
+
+@pytest.mark.parametrize("truncate", [True, False])
+def test_empty_source_leaves_existing_target_byte_identical(spark, workdir, truncate):
+    write_csv_file(workdir / "input" / "src.csv", [])
+    out = workdir / "output" / "out.csv"
+    out.write_bytes(b"id;name;qty\r\n9;old;1\n")
+    logged: list[str] = []
+    TaskRunner(
+        spark,
+        Runner(
+            {
+                "tasks": [
+                    {
+                        "name": "t",
+                        "type": "csv-csv",
+                        "source": {"file": "src.csv"},
+                        "target": {"file": "out.csv", "truncate": truncate},
+                    }
+                ]
+            }
+        ),
+        input_path=str(workdir / "input"),
+        output_path=str(workdir / "output"),
+        log=logged.append,
+    ).run()
+    assert out.read_bytes() == b"id;name;qty\r\n9;old;1\n"
+    assert "task t: empty source, skipping write" in logged
+    assert not any("wrote" in m for m in logged)
+
+
+def test_source_filtered_to_no_rows_still_writes_the_header(spark, workdir):
+    """The skip is for an empty SOURCE (ref task.py:181); a source
+    whose rows the transform filters out writes its header-only file."""
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1), (2, "b", 2)])
+    run_tasks(
+        spark,
+        workdir,
+        {
+            "tasks": [
+                {
+                    "name": "t",
+                    "type": "csv-csv",
+                    "source": {"file": "src.csv"},
+                    "target": {"file": "out.csv", "truncate": True},
+                    "transform": {"convert": [["qty", "int"]], "filter": "{qty} > 100"},
+                }
+            ]
+        },
+    )
+    assert (workdir / "output" / "out.csv").read_text() == "id;name;qty\n"
+
+
+def test_empty_source_skips_even_when_a_module_transform_adds_rows(spark, workdir):
+    """The skip asks whether the SOURCE is empty: a module transform
+    that makes a row out of nothing (a global count) does not turn an
+    empty source into a written file."""
+    (workdir / "module" / "counted.py").write_text(
+        "def transform(df, *fields):\n    return df.groupBy().count()\n"
+    )
+    write_csv_file(workdir / "input" / "src.csv", [])
+    run_tasks(
+        spark,
+        workdir,
+        {
+            "tasks": [
+                {
+                    "name": "t",
+                    "type": "csv-csv",
+                    "source": {"file": "src.csv"},
+                    "target": {"file": "out.csv", "truncate": True},
+                    "transforms": [{"module": "counted"}],
+                }
+            ]
+        },
+    )
+    assert not (workdir / "output" / "out.csv").exists()
+
+
+def test_empty_source_makes_no_db_round_trip(spark, workdir, monkeypatch):
+    from dasladen_spark.connections import Connection
+
+    def no_write(*args, **kwargs):
+        raise AssertionError("write_table called for an empty source")
+
+    monkeypatch.setattr(Connection, "write_table", no_write)
+    write_csv_file(workdir / "input" / "src.csv", [])
+    run_tasks(
+        spark,
+        workdir,
+        {
+            "connections": [_derby("empty")],
+            "tasks": [
+                {
+                    "name": "t",
+                    "type": "csv-db",
+                    "source": {"file": "src.csv"},
+                    "target": {"connection": "derby", "table": "t", "truncate": True},
+                }
+            ],
+        },
+    )
+
+
+def _next_job_id(spark) -> int:
+    """Spark numbers jobs 0, 1, 2, ...: the difference of two readings
+    is the number of jobs launched in between."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+@pytest.mark.parametrize("shape", ["csv-csv", "csv-parquet", "parquet-csv", "db-csv"])
+def test_etl_task_launches_one_spark_job(spark, workdir, shape):
+    """The write is the task's only job: the csv header and the parquet
+    footer are read on the driver, a jdbc schema comes from the
+    database, and the single-file csv sink probes for an empty source
+    only when its write wrote nothing."""
+    from dasladen_spark.connections import Connection
+
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 3), (2, "b", 4)])
+    spark.createDataFrame(
+        [(1, "a", 3)], "id BIGINT, name STRING, qty BIGINT"
+    ).write.parquet(str(workdir / "input" / "src.parquet"))
+    derby = _derby("onejob")
+    Connection(derby).write_table(
+        spark.createDataFrame([(1, "a")], "id INT, nm STRING"), spark, "src", truncate=True
+    )
+    src_kind, sink_kind = shape.split("-")
+    source = {
+        "csv": {"file": "src.csv"},
+        "parquet": {"file": "src.parquet"},
+        "db": {"connection": "derby", "command": 'SELECT "id", "nm" FROM src'},
+    }[src_kind]
+    task = {
+        "name": "t",
+        "type": shape,
+        "source": source,
+        "target": {"file": f"out.{sink_kind}", "truncate": True},
+    }
+    before = _next_job_id(spark)
+    run_tasks(spark, workdir, {"connections": [derby], "tasks": [task]})
+    assert _next_job_id(spark) - before == 1
 
 
 def test_empty_stage_still_feeds_chained_pipeline(spark, workdir):
@@ -2189,6 +2341,24 @@ def test_unknown_task_type_raises(spark, workdir):
             workdir,
             {"tasks": [{"name": "typo", "type": "csv-dbb", "source": {}}]},
         )
+
+
+def test_unknown_task_type_fails_before_the_first_task_runs(spark, workdir):
+    """A typo in the LAST task's type stops the file before any task
+    has written anything."""
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1)])
+    tasks = [
+        {
+            "name": name,
+            "type": kind,
+            "source": {"file": "src.csv"},
+            "target": {"file": f"{name}.csv", "truncate": True},
+        }
+        for name, kind in (("first", "csv-csv"), ("second", "csv-csv"), ("third", "csv-cvs"))
+    ]
+    with pytest.raises(ValueError, match="task 'third': unknown type 'csv-cvs'"):
+        run_tasks(spark, workdir, {"tasks": tasks})
+    assert not (workdir / "output" / "first.csv").exists()
 
 
 def _docs_json(workdir):

@@ -1,6 +1,15 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times registered queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line with per-query wall times.
+ONE JSON line with per-query median wall times.
+
+    python bench.py                      # the HEADLINE set
+    python bench.py q1_pricing_summary dedup_exact
+    python bench.py --ab KEY A B q1_pricing_summary ...
+
+Each query's record (build vs count time, and its Spark jobs'
+stages, tasks, executor time, shuffle and spill) goes to
+BENCH_local.json and stderr. ``--ab`` prints each arm's median, range
+and B/A instead. SPARK_GRAFT_BENCH_REPS: timed reps (pairs with --ab).
 
 The reference's envelope is a single-threaded petl generator pipeline
 (BASELINE.md) — no published numbers exist, so the bench target is
@@ -11,11 +20,14 @@ from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
+import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from dasladen_spark import metrics  # noqa: E402
 from dasladen_spark.session import get_spark  # noqa: E402
 
 #: headline set: one per major plan shape (scan/agg/join/window/asof/
@@ -60,8 +72,8 @@ HEADLINE = [
     # cost); ann_pq_indexed_topk rep 1 builds the PQ index, later reps
     # probe it (same amortization note as ann_indexed_topk).
     # q_triangle_count is deliberately NOT here: triangle counting is
-    # Θ(E^1.5) by nature, so it would trip the scaling probe's
-    # linearity gate while being exactly as fast as it can be.
+    # Θ(E^1.5) by nature, so its time outgrows the data however fast
+    # the plan is.
     "text_nb_quality_score",
     "ann_pq_indexed_topk",
     "decontaminate_containment",
@@ -148,8 +160,9 @@ HEADLINE = [
 #: postings, PQ codes, NB model, history fingerprint index) or ~8s of
 #: whole-stage-codegen compilation for a 64-column signature aggregate
 #: (dedup_minhash_lsh / ann_lsh_topk) — warmed untimed so the timed
-#: reps measure the amortized, corpus-scale cost. Module-level so
-#: tools/time_queries.py applies the identical warm policy.
+#: reps measure the amortized, corpus-scale cost (one build inside a
+#: median of 3 spread ann_indexed_topk over [2.5 s, 13.9 s] in round
+#: 7); the warm times go to stderr instead.
 WARM_FIRST = {
     "ann_indexed_topk",
     "ann_pq_indexed_topk",
@@ -160,7 +173,128 @@ WARM_FIRST = {
 }
 
 
-def main() -> None:
+def _warm(spark, name: str, fn, sf_dir: str) -> None:
+    if name not in WARM_FIRST:
+        # one untimed warm rep for EVERY query: the first execution
+        # pays whole-stage-codegen compilation (and any first-touch
+        # parquet footer reads), which round 8's spread audit showed
+        # landing in the min-max spread of ann_cosine_topk /
+        # text_corpus_cleanup / text_lm_perplexity / dedup_winnowing
+        # (>2×). Medians absorbed it; the spread gate shouldn't have to.
+        fn(spark, sf_dir).count()
+        return
+    # Adaptive warm: one rep pays the index/model build, but JIT
+    # tiering needs several executions of the SAME generated code
+    # before the big codegen units (the 64-column signature
+    # aggregate) run compiled — measured 16.5 → 9.8 → 6.2 → 4.7 →
+    # 2.7 s over five executions in a fresh JVM. Keep warming
+    # (bounded) until the improvement flattens below 20 %, so the
+    # timed reps measure the steady state that actually scales with
+    # data.
+    prev = float("inf")
+    warm_times = []
+    for _ in range(4):
+        t0 = time.time()
+        fn(spark, sf_dir).count()
+        dt = time.time() - t0
+        warm_times.append(round(dt, 3))
+        if dt > prev * 0.8:
+            break
+        prev = dt
+    print(f"# {name}: untimed warm reps {warm_times}", file=sys.stderr)
+
+
+def _rep(spark, fn, sf_dir: str) -> tuple[float, int, dict]:
+    """(wall s of the plan build plus ``.count()``, rows, record) of one
+    rep, run in a job group of its own."""
+    sc = spark.sparkContext
+    group = f"bench-{uuid.uuid4().hex}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        n = df.count()
+        t2 = time.time()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # read at once: the status store keeps only spark.ui.retainedJobs
+    record = {"build_s": t1 - t0, "count_s": t2 - t1, **metrics.record(spark, group)}
+    return round(t2 - t0, 3), n, record
+
+
+def time_query(spark, name: str, sf_dir: str, reps: int, ab=None) -> dict:
+    """Time registered query ``name``: untimed warm reps (adaptive for
+    ``WARM_FIRST``), ``reps`` timed reps, then the cache is cleared.
+
+    With ``ab=(key, a, b)`` each timed rep is a pair of runs with SQL
+    conf ``key`` at ``a`` (arm "A") and at ``b`` (arm "B"), A first in
+    even pairs and B first in odd ones, so machine drift hits both
+    arms alike. Each arm is warmed, the cache is cleared before every
+    run (another run's persisted intermediate would serve it), and
+    ``key`` is restored afterwards.
+
+    Returns each arm's ("A" alone without ``ab``) median_s, samples,
+    rows and record (each field's median over the reps), and under
+    "order" the arm of every timed run in run order."""
+    from dasladen_spark.plans import QUERIES
+
+    fn = QUERIES[name]
+    key, *vals = ab or (None, None)
+    arms = list(zip("AB", vals))
+    prev = key and spark.conf.get(key, None)
+    runs: dict[str, list] = {arm: [] for arm, _ in arms}
+    order = []
+
+    def use(val):
+        if key is not None:
+            spark.conf.set(key, val)
+            spark.catalog.clearCache()
+
+    try:
+        for _, val in arms:
+            use(val)
+            _warm(spark, name, fn, sf_dir)
+        for i in range(reps):
+            for arm, val in arms[:: -1 if i % 2 else 1]:
+                use(val)
+                runs[arm].append(_rep(spark, fn, sf_dir))
+                order.append(arm)
+    finally:
+        if prev is not None:
+            spark.conf.set(key, prev)
+        elif key is not None:
+            spark.conf.unset(key)
+    # Session hygiene: many operators persist() intermediates the
+    # query function cannot unpersist (their lifetime is the
+    # caller's). 55 queries × 4 reps of leaked cache blocks degraded
+    # the tail of the round-8 run ~4× (per-job overhead, GC) —
+    # measured: the late group runs 0.9-3.9 s in a fresh session vs
+    # 4.4-15.7 s at the end of an unhygienic bench. Materialized
+    # INDEX tables live on disk, not in this cache, so WARM_FIRST
+    # amortization is unaffected.
+    spark.catalog.clearCache()
+    out: dict = {"order": order}
+    for arm, rs in runs.items():
+        samples, rows, recs = zip(*rs)
+        out[arm] = {
+            "median_s": round(statistics.median(samples), 3),
+            "samples": list(samples),
+            "rows": rows[-1],
+            "record": {
+                k: round(statistics.median(r[k] for r in recs), 3) for k in recs[0]
+            },
+        }
+    return out
+
+
+def main(argv: list[str]) -> None:
+    ab = None
+    if argv[:1] == ["--ab"]:
+        if len(argv) < 4:
+            raise SystemExit("usage: bench.py --ab KEY A B [query ...]")
+        ab, argv = tuple(argv[1:4]), argv[4:]
+    names = argv or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
     from dasladen_spark.plans import QUERIES
@@ -171,15 +305,36 @@ def main() -> None:
     # warm the JVM + parquet footers + Python UDF workers once so
     # timings measure the query, not session bootstrap
     QUERIES["scan_filter_project"](spark, sf_dir).count()
-    import pandas as pd
     from pyspark.sql import functions as F
 
     def _warm_fn(s):
         return s
 
-    _warm = F.pandas_udf(_warm_fn, "long")
+    _warm_udf = F.pandas_udf(_warm_fn, "long")
 
-    spark.range(1000, numPartitions=32).select(F.sum(_warm("id"))).collect()
+    spark.range(1000, numPartitions=32).select(F.sum(_warm_udf("id"))).collect()
+
+    # median-of-N per query: single-run timings on UDF-heavy queries
+    # showed ±2.9× run-to-run swings (GC / Python-worker reuse), which
+    # is unusable as a regression gate.  The median of 3 in-process
+    # repetitions is stable to a few percent; the spread is reported
+    # so a noisy machine is visible in the output rather than silently
+    # blamed on the code.
+    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
+    if ab is not None:
+        for name in names:
+            res = time_query(spark, name, sf_dir, reps, ab)
+            a, b = res["A"], res["B"]
+            print(
+                f"{name}: A({ab[1]}) median {a['median_s']:.3f}s "
+                f"[{min(a['samples']):.3f}..{max(a['samples']):.3f}]  "
+                f"B({ab[2]}) median {b['median_s']:.3f}s "
+                f"[{min(b['samples']):.3f}..{max(b['samples']):.3f}]  "
+                f"B/A={b['median_s'] / a['median_s']:.2f}",
+                flush=True,
+            )
+        spark.stop()
+        return
 
     # Machine-phase calibration: this box's effective CPU speed swings
     # 2-5× between runs (VM co-tenancy — measured identical code at
@@ -198,82 +353,21 @@ def main() -> None:
     calibration = sorted(_calib() for _ in range(3))[1]
     print(f"# calibration: {calibration:.3f}s", file=sys.stderr)
 
-    # median-of-N per query: single-run timings on UDF-heavy queries
-    # showed ±2.9× run-to-run swings (GC / Python-worker reuse), which
-    # is unusable as a regression gate.  The median of 3 in-process
-    # repetitions is stable to a few percent; the spread is reported
-    # so a noisy machine is visible in the output rather than silently
-    # blamed on the code.
-    reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
-    # Index/model-backed queries pay a one-time materialization on
-    # their first run (ANN postings, PQ codes, the NB model table,
-    # the history fingerprint index). A median of 3 absorbs it, but
-    # the build lands in the spread — [2.5 s, 13.9 s] for
-    # ann_indexed_topk in round 7 — making round-over-round
-    # comparisons of these lines unreliable. One UNTIMED warm rep
-    # ensures every timed rep measures the amortized probe path (the
-    # corpus-scale cost); the build cost is visible in the stderr log
-    # line instead of randomly polluting one sample.
-    warm_first = WARM_FIRST
     times: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
-    for name in HEADLINE:
-        fn = QUERIES[name]
-        samples = []
-        n = 0
-        if name in warm_first:
-            # Adaptive warm: one rep pays the index/model build, but
-            # JIT tiering needs several executions of the SAME
-            # generated code before the big codegen units (the
-            # 64-column signature aggregate) run compiled — measured
-            # 16.5 → 9.8 → 6.2 → 4.7 → 2.7 s over five executions in a
-            # fresh JVM. Keep warming (bounded) until the improvement
-            # flattens below 20 %, so the timed reps measure the
-            # steady state that actually scales with data.
-            prev = float("inf")
-            warm_times = []
-            for _ in range(4):
-                t0 = time.time()
-                fn(spark, sf_dir).count()
-                dt = time.time() - t0
-                warm_times.append(round(dt, 3))
-                if dt > prev * 0.8:
-                    break
-                prev = dt
-            print(
-                f"# {name}: untimed warm reps {warm_times}",
-                file=sys.stderr,
-            )
-        else:
-            # one untimed warm rep for EVERY query: the first
-            # execution pays whole-stage-codegen compilation (and any
-            # first-touch parquet footer reads), which round 8's
-            # spread audit showed landing in the min-max spread of
-            # ann_cosine_topk / text_corpus_cleanup /
-            # text_lm_perplexity / dedup_winnowing (>2×). Medians
-            # absorbed it; the spread gate shouldn't have to.
-            fn(spark, sf_dir).count()
-        for _ in range(reps):
-            t0 = time.time()
-            n = fn(spark, sf_dir).count()
-            samples.append(round(time.time() - t0, 3))
-        samples.sort()
-        times[name] = samples[len(samples) // 2]
-        spread[name] = [samples[0], samples[-1]]
+    records: dict[str, dict] = {}
+    for name in names:
+        res = time_query(spark, name, sf_dir, reps)["A"]
+        samples = res["samples"]
+        times[name] = res["median_s"]
+        spread[name] = [min(samples), max(samples)]
+        records[name] = res["record"]
         print(
-            f"# {name}: {n} rows, median {times[name]}s "
-            f"(min {samples[0]}s max {samples[-1]}s, n={reps})",
+            f"# {name}: {res['rows']} rows, median {times[name]}s "
+            f"(min {min(samples)}s max {max(samples)}s, n={reps})",
             file=sys.stderr,
         )
-        # Session hygiene: many operators persist() intermediates the
-        # query function cannot unpersist (their lifetime is the
-        # caller's). 55 queries × 4 reps of leaked cache blocks
-        # degraded the tail of the round-8 run ~4× (per-job overhead,
-        # GC) — measured: the late group runs 0.9-3.9 s in a fresh
-        # session vs 4.4-15.7 s at the end of an unhygienic bench.
-        # Materialized INDEX tables live on disk, not in this cache,
-        # so warm_first amortization is unaffected.
-        spark.catalog.clearCache()
+        print(f"# {name}: record {json.dumps(res['record'])}", file=sys.stderr)
 
     # re-measure the phase AFTER the run: a start-only anchor missed
     # a mid-run co-tenancy collapse (observed: start calib 0.36 s,
@@ -312,13 +406,14 @@ def main() -> None:
         "queries": times,
         "spread": spread,
         "reps": reps,
-        "warmed_first": sorted(warm_first),
+        "warmed_first": sorted(WARM_FIRST),
         "sf": sf,
         "cpus": cpus,
         "calibration_s": round(calibration, 3),
         "calibration_end_s": round(calibration_end, 3),
         "ceiling_s": ceiling,
         "slow": slow,
+        "records": records,
     }
     # Full payload (spread, reps, config) goes to a file; stdout gets a
     # COMPACT line (medians only) guaranteed to fit the driver's 2 kB
@@ -329,15 +424,8 @@ def main() -> None:
         "w",
     ) as f:
         json.dump(full, f, indent=1)
-    compact = {
-        "metric": "headline_query_wall_time",
-        "value": total,
-        "unit": "sec",
-        "queries": times,
-        "sf": sf,
-        "calibration_s": round(calibration, 3),
-        "calibration_end_s": round(calibration_end, 3),
-    }
+    keys = "metric value unit queries sf calibration_s calibration_end_s".split()
+    compact = {k: full[k] for k in keys}
     line = json.dumps(compact, separators=(",", ":"))
     if len(line) >= 2000:
         # drop per-query detail before ever risking an unparseable tail
@@ -348,4 +436,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

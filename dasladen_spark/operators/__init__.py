@@ -9,8 +9,7 @@
 - graph      — connected components (pairs → dedup clusters) and
                PageRank, one shuffle per iteration
 - intervals  — interval union (cumulative-max grouping, one key
-               shuffle)
-- interval   — interval-overlap join via grid binning
+               shuffle) and interval-overlap join via grid binning
 - merge      — merge-upsert, SCD2, CDC snapshot diff
 - multimodal — opaque binary payload columns with typed metadata and
                mapInPandas decode/feature/segment plumbing (decoder

@@ -61,9 +61,10 @@ def kmeans_fit(
     # (SemDeDup sizes one centroid per ~constant vectors), so the
     # k×dim per-row distance folds are a genuinely heavy kernel — on
     # a small single-file scan every Lloyd pass would otherwise run
-    # on one core (measured at sf1: 117 s → see OPTIMIZATION_r12 §7;
-    # the IVF callers already ride dedup._spread). No-op when the
-    # input is already wide — the 100 TB case.
+    # on one core (measured at sf1: 117 s → see
+    # history/OPTIMIZATION_r12.md §7; the IVF callers already ride
+    # dedup._spread). No-op when the input is already wide — the
+    # 100 TB case.
     full = _spread(
         df.select(
             F.col(id_col).alias("id"), F.col(vec_col).alias("vec")

@@ -235,40 +235,6 @@ def _semantic_contamination_ann(
     return _best_hit(cand, threshold, id_col)
 
 
-def semantic_hits(
-    df: DataFrame,
-    bench_df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    threshold: float = 0.35,
-    method: str = "exact",
-    num_tables: int = 16,
-    bits_per_table: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """``contamination_hits``'s embedding-space sibling, in the same
-    anti-join contract: (_did, nearest_bench_id, max_cosine) for
-    every doc whose vector sits within ``threshold`` cosine of some
-    benchmark vector. Shared by the batch ``decontaminate`` task
-    (method: semantic) and the streaming intake gate so both drop
-    exactly the same docs. ``method="ann"`` routes through the
-    hyperplane prefilter (see semantic_contamination) for
-    realistically-sized eval suites."""
-    return semantic_contamination(
-        df,
-        bench_df,
-        vec_col=vec_col,
-        id_col=id_col,
-        threshold=threshold,
-        method=method,
-        num_tables=num_tables,
-        bits_per_table=bits_per_table,
-        dim=dim,
-    ).select(
-        F.col(id_col).alias("_did"), "nearest_bench_id", "max_cosine"
-    )
-
-
 def contamination_hits(
     df: DataFrame,
     bench_grams: DataFrame,
@@ -341,10 +307,13 @@ def decontamination_hits(
     dim: int = 64,
 ) -> DataFrame:
     """``df``'s hits against a ``decontamination_bench`` side, keyed
-    ``_did``: ``contamination_hits`` for ``ngrams``, ``semantic_hits``
-    (``prefilter`` is its ``method``) for ``semantic``."""
+    ``_did``: ``contamination_hits`` for ``ngrams``; for ``semantic``,
+    (_did, nearest_bench_id, max_cosine) of every doc within
+    ``threshold`` cosine of a benchmark vector (``prefilter="ann"``:
+    ``semantic_contamination``'s hyperplane prefilter). The batch task
+    and the streaming gate share it, so both drop the same docs."""
     if method == "semantic":
-        return semantic_hits(
+        return semantic_contamination(
             df,
             bench,
             vec_col=vec_col,
@@ -354,7 +323,7 @@ def decontamination_hits(
             num_tables=num_tables,
             bits_per_table=bits_per_table,
             dim=dim,
-        )
+        ).select(F.col(id_col).alias("_did"), "nearest_bench_id", "max_cosine")
     return contamination_hits(
         df, bench, text_col=text_col, id_col=id_col, n=n, min_hits=min_hits
     )

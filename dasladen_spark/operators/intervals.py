@@ -7,11 +7,22 @@ it (cumulative-max window); group ids are a running sum of those
 flags. One key shuffle serves the ordering window, the flag window,
 and the rollup — at 100 TB the only wide op is that single hash
 exchange on the key.
+
+interval_join — all pairs of overlapping ranges. The naive
+formulation (join on key + overlap predicate) plans as a nested loop
+over each key group: O(n·m) per key, which dies on keys with many
+intervals. The scalable shape is GRID BINNING: each interval
+registers in every fixed-width bin it touches, the join is an
+equi-join on (key, bin), and the exact overlap predicate filters
+within bins. Cost: shuffle on (key, bin) with fan-out = interval
+width / bin width; dedupe pairs that share multiple bins by
+attributing each pair to the FIRST bin they share (no distinct
+needed — the attribution is computed, not deduped).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -47,4 +58,62 @@ def merge_intervals(
             F.max(end_col).alias(end_col),
         )
         .drop("__g")
+    )
+
+
+def _bins(start: Column, end: Column, bin_width: int) -> Column:
+    return F.sequence(
+        F.floor(start / bin_width).cast("long"),
+        F.floor(end / bin_width).cast("long"),
+    )
+
+
+def interval_join(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_start: str = "start",
+    left_end: str = "end",
+    right_start: str = "start",
+    right_end: str = "end",
+    bin_width: int = 1000,
+    suffixes: tuple[str, str] = ("_a", "_b"),
+) -> DataFrame:
+    """All (left, right) pairs with equal ``key`` and
+    [start, end] ∩ [start, end] ≠ ∅ (closed intervals).
+
+    ``bin_width`` trades fan-out for bin population — set it near the
+    median interval length. Pairs spanning several shared bins are
+    emitted once: only the bin containing max(start_a, start_b) —
+    the first moment both intervals are live — emits the pair."""
+    sa, ea = left_start + suffixes[0], left_end + suffixes[0]
+    sb, eb = right_start + suffixes[1], right_end + suffixes[1]
+    a = left.select(
+        F.col(key),
+        F.col(left_start).alias(sa),
+        F.col(left_end).alias(ea),
+        *[F.col(c).alias(c + suffixes[0]) for c in left.columns
+          if c not in (key, left_start, left_end)],
+        F.explode(_bins(F.col(left_start), F.col(left_end), bin_width)).alias(
+            "__bin"
+        ),
+    )
+    b = right.select(
+        F.col(key).alias("__kb"),
+        F.col(right_start).alias(sb),
+        F.col(right_end).alias(eb),
+        *[F.col(c).alias(c + suffixes[1]) for c in right.columns
+          if c not in (key, right_start, right_end)],
+        F.explode(_bins(F.col(right_start), F.col(right_end), bin_width)).alias(
+            "__bin"
+        ),
+    )
+    overlap = (F.col(sa) <= F.col(eb)) & (F.col(sb) <= F.col(ea))
+    first_shared_bin = F.floor(
+        F.greatest(F.col(sa), F.col(sb)) / bin_width
+    ).cast("long")
+    return (
+        a.join(b, on=[a["__bin"] == b["__bin"], F.col(key) == F.col("__kb")])
+        .filter(overlap & (a["__bin"] == first_shared_bin))
+        .drop("__bin", "__kb")
     )

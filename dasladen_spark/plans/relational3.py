@@ -1083,10 +1083,10 @@ def q_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping interval pairs via grid binning
-    (operators/interval.py): equi-join on (key, bin) + exact filter,
+    (operators/intervals.py): equi-join on (key, bin) + exact filter,
     instead of the per-key nested loop the naive predicate join
     plans. The oracle runs the naive form — identical pairs."""
-    from dasladen_spark.operators.interval import interval_join
+    from dasladen_spark.operators.intervals import interval_join
 
     ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 3 == 0)
     iv = ev.select(

@@ -28,10 +28,10 @@ import zipfile
 from dataclasses import dataclass, field
 from typing import Callable
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 from dasladen_spark.connections import ConnectionRegistry
+from dasladen_spark.metrics import group_stages
 from dasladen_spark.sinks.csv import write_csv
 from dasladen_spark.sources.csv import read_csv
 from dasladen_spark.sources.parquet import read_parquet
@@ -267,36 +267,23 @@ def _reject_reserved(df: DataFrame, names, what: str, role: str) -> None:
 _JOB_GROUP = "spark.jobGroup.id"
 
 
-def _rows_written(spark: SparkSession, group: str, sink_kind: str) -> int:
-    """Rows written so far by the jobs of job group ``group``, read
-    from Spark's own per-task metrics (they update once per finished
-    task).
+def _rows_written(spark: SparkSession, group: str, sink_kind: str, skip=()) -> int:
+    """Rows written so far by the jobs of job group ``group`` not in
+    ``skip``, read from Spark's own per-task metrics (they update once
+    per finished task).
 
     Every Spark writer records ``outputRecords``. The tar sink writes
     from Python, so Spark records none for it; its rows are the
     shuffle-read records of its last job's result stage, which the
     sink's own repartition alone feeds. A last stage that writes
     shuffle output belongs to an adaptive map job, not the writer."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    store = sc._jsc.sc().statusStore()
-
-    def stage(sid):
-        try:
-            return store.lastStageAttempt(sid)
-        except Py4JJavaError:  # not in the status store yet
-            return None
-
-    jobs = sorted(tracker.getJobIdsForGroup(group))
-    infos = [tracker.getJobInfo(j) for j in jobs]
-    infos = [i for i in infos if i is not None and i.stageIds]
-    if sink_kind == "tar":
-        last = infos and stage(max(infos[-1].stageIds))
-        if not last or last.shuffleWriteRecords():
+    tar = sink_kind == "tar"
+    _, stages = group_stages(spark, group, skip, last=tar)
+    if tar:
+        if not stages or stages[0].shuffleWriteRecords():
             return 0
-        return last.shuffleReadRecords()
-    stages = (stage(sid) for sid in {sid for i in infos for sid in i.stageIds})
-    return sum(s.outputRecords() for s in stages if s is not None)
+        return stages[0].shuffleReadRecords()
+    return sum(s.outputRecords() for s in stages)
 
 
 def run_etl(ctx: TaskContext, task: dict) -> None:
@@ -305,8 +292,11 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     only Spark job wherever the source's schema is known without
     reading its rows (csv, parquet, db; xml and json infer theirs).
 
-    The write runs under its own job group (the caller's is restored
-    after it), so Spark's task metrics say how many rows it wrote.
+    The write runs in the caller's job group, so the caller's
+    ``cancelJobGroup`` stops it, and Spark's task metrics of the jobs
+    started in that group after the write began say how many rows it
+    wrote. A caller without a group gets one of the write's own for
+    the time of the write.
 
     Empty-source short-circuit (ref task.py:181) ONLY for the
     reference-parity terminal sinks, csv and db: an empty source
@@ -341,7 +331,10 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     out = _transformed(ctx, task, df)
     every = int(task.get("progress", 10000))
     sc = ctx.spark.sparkContext
-    group = f"dasladen-etl-{uuid.uuid4().hex}"
+    caller_group = sc.getLocalProperty(_JOB_GROUP)
+    group = caller_group or f"dasladen-etl-{uuid.uuid4().hex}"
+    # the caller's jobs so far are not the write's
+    before = set(sc.statusTracker().getJobIdsForGroup(group)) if caller_group else ()
     stop = threading.Event()
     reported = 0
     skipped = False
@@ -350,15 +343,18 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     # transform, which may add rows (a trailer, a global count), ran
     modules = task.get("transforms") or "module" in (task.get("transform") or {})
 
+    def written() -> int:
+        return _rows_written(ctx.spark, group, sink_kind, before)
+
     def keep() -> bool:
         nonlocal skipped
-        wrote = not modules and _rows_written(ctx.spark, group, sink_kind) > 0
+        wrote = not modules and written() > 0
         skipped = not wrote and df.isEmpty()
         return not skipped
 
     def emit_crossings() -> int:
         nonlocal reported
-        rows = _rows_written(ctx.spark, group, sink_kind)
+        rows = written()
         while reported + every <= rows:
             reported += every
             ctx.log(f"task {name}: {reported} rows")
@@ -368,7 +364,6 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
         while every and not stop.wait(0.2):
             emit_crossings()
 
-    caller_group = sc.getLocalProperty(_JOB_GROUP)
     sc.setLocalProperty(_JOB_GROUP, group)
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()

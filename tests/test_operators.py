@@ -899,7 +899,7 @@ def test_interval_join_vs_naive(spark, sf_dir):
     per-user event windows of varying width."""
     from pyspark.sql import functions as F
 
-    from dasladen_spark.operators.interval import interval_join
+    from dasladen_spark.operators.intervals import interval_join
     from dasladen_spark.session import load_table
 
     ev = load_table(spark, sf_dir, "events").limit(400)

@@ -1581,7 +1581,7 @@ def test_decontaminate_gate_semantic_batch_parity(spark, tmp_path):
     cosine of a benchmark vector quarantines at ingestion with
     (nearest_bench_id, max_cosine); the accept set EQUALS the batch
     task's method: semantic clean set over the same corpus (shared
-    operators/decontaminate.semantic_hits pipeline)."""
+    operators/decontaminate.decontamination_hits pipeline)."""
     import json
 
     from dasladen_spark.streaming.intake import (

@@ -277,6 +277,62 @@ def test_etl_restores_the_callers_job_group(spark, workdir, monkeypatch):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def test_callers_cancel_job_group_stops_a_running_etl_write(
+    spark, workdir, monkeypatch
+):
+    """The write runs in the caller's job group, so the caller's
+    cancelJobGroup stops it mid-write."""
+    import threading
+    import time
+
+    from pyspark.sql import functions as F
+
+    from dasladen_spark import tasks
+
+    sc = spark.sparkContext
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1)])
+    # a write that runs until cancelled: one row held 60 s by a UDF
+    slow = F.udf(lambda v: time.sleep(60) or v, "string")
+    real = tasks._transformed
+    monkeypatch.setattr(
+        tasks,
+        "_transformed",
+        lambda ctx, task, df: real(ctx, task, df).withColumn("name", slow("name")),
+    )
+
+    def cancel_once_running():
+        deadline = time.time() + 30
+        while not sc.statusTracker().getActiveJobsIds() and time.time() < deadline:
+            time.sleep(0.1)
+        sc.cancelJobGroup("caller-cancel")
+
+    sc.setJobGroup("caller-cancel", "set by the caller")
+    canceller = threading.Thread(target=cancel_once_running)
+    canceller.start()
+    t0 = time.time()
+    try:
+        with pytest.raises(Exception, match="(?i)cancel"):
+            run_tasks(
+                spark,
+                workdir,
+                {
+                    "tasks": [
+                        {
+                            "name": "t",
+                            "type": "csv-parquet",
+                            "source": {"file": "src.csv"},
+                            "target": {"file": "out.parquet", "truncate": True},
+                        }
+                    ]
+                },
+            )
+    finally:
+        canceller.join(timeout=60)
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert not canceller.is_alive()
+    assert time.time() - t0 < 60
+
+
 def test_progress_meter_disabled_by_zero(spark, workdir):
     write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1)])
     logged: list[str] = []

@@ -17,7 +17,7 @@ per-task executorRunTime quantiles from Spark's status REST API, and
 reports the WORST max/median ratio over substantive stages (>= 8
 tasks, median >= 30 ms — tiny stages are scheduling noise). An
 unsalted copy of the skewed join runs as the control: the probe must
-show salting beating it. Output: PROBE_skew_r10.json.
+show salting beating it. Output: history/PROBE_skew_r10.json.
 
 Usage: python tools/skew_probe.py [out_json]
 """
@@ -182,7 +182,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "PROBE_skew_r10.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else "history/PROBE_skew_r10.json"
     spark = build_session()
     work = tempfile.mkdtemp(prefix="skew_probe_")
     docs_path = os.path.join(work, "docs.parquet")

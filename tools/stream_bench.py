@@ -15,7 +15,7 @@ times are the 100 TB evidence.
 growth_ratio = mean(last two batch walls) / mean(batches 2..3)
 (batch 1 is excluded everywhere — it pays stream/plan bootstrap).
 
-Usage: python tools/stream_bench.py [out_json]   (STREAMBENCH_r10.json)
+Usage: python tools/stream_bench.py [out_json]   (history/STREAMBENCH_r10.json)
 """
 
 from __future__ import annotations
@@ -80,7 +80,7 @@ def bench_maintainer(spark, name: str, run_batch) -> dict:
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "STREAMBENCH_r10.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else "history/STREAMBENCH_r10.json"
     from dasladen_spark.session import get_spark
     from dasladen_spark.streaming.intake import (
         run_quality_gate,

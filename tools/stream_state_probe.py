@@ -118,7 +118,7 @@ def probe(spark, name: str, make_stream, work: str) -> dict:
 
 
 def main() -> None:
-    out_path = sys.argv[1] if len(sys.argv) > 1 else "STREAMSTATE_r11.json"
+    out_path = sys.argv[1] if len(sys.argv) > 1 else "history/STREAMSTATE_r11.json"
     from dasladen_spark.session import get_spark
     from dasladen_spark.streaming.stateful import (
         cusum_by_key,

@@ -22,6 +22,15 @@ LANG_MARKERS: dict[str, str] = {
 }
 
 
+#: the word-token pattern: lower-cased ASCII letter/digit runs
+_TOK_RE = "[a-z0-9]+"
+
+
+def tokens_col(text_col: str = "text") -> Column:
+    """Lower-cased word tokens as an array column (JVM regex, no UDF)."""
+    return F.regexp_extract_all(F.lower(text_col), F.lit(_TOK_RE), F.lit(0))
+
+
 def token_count(text: Column) -> Column:
     """Whitespace token count (empty/blank text → 0)."""
     trimmed = F.trim(text)

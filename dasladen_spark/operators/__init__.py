@@ -17,7 +17,8 @@
 - quality    — single-pass data-quality contracts
 - ranking    — distributed global row_number / NTILE / prefix sums
                (range partition + broadcast offsets, never a
-               single-partition window)
+               single-partition window), and the per-query top-k
+               order every ANN ranker shares
 - sampling   — deterministic / stratified / weighted sampling
 - similarity — brute-force cosine top-k (broadcast queries), LSH- and
                IVF-bucketed approximate variants

@@ -40,12 +40,13 @@ import shutil
 import weakref
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dasladen_spark.functions.vectors import cosine_sim_carried, l2_norm
 from dasladen_spark.operators.dedup import _spread, hyperplane_table_buckets
 from dasladen_spark.operators.pq import PQ_VERSION
+from dasladen_spark.operators.ranking import rank_per_query
 from dasladen_spark.operators.similarity import (
     IVF_VERSION,
     fit_ivf_centroids,
@@ -559,9 +560,6 @@ def search_ann_index(
     )
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
     if compress == "pq":
         from dasladen_spark.operators.pq import (
             adc_score_expr,
@@ -575,19 +573,16 @@ def search_ann_index(
             )
         books = _load_pq_books(spark, table)
         q_ids, lut = query_lut(books, qn_rows)
-        wa = Window.partitionBy("query_id").orderBy(
-            F.col("adc").desc(), F.col("neighbor_id").asc()
-        )
-        short = (
+        short = rank_per_query(
             cand.select(
                 "query_id",
                 "neighbor_id",
                 adc_score_expr(q_ids, lut, "query_id", "codes").alias("adc"),
-            )
-            .withColumn("arank", F.row_number().over(wa))
-            .filter(F.col("arank") <= k * rerank_mult)
-            .select("query_id", "neighbor_id")
-        )
+            ),
+            "adc",
+            k * rerank_mult,
+            rank_col="arank",
+        ).select("query_id", "neighbor_id")
         return exact_rerank(
             short,
             queries,
@@ -605,10 +600,8 @@ def search_ann_index(
             F.col("qv"), F.col("cv"), F.col("_qn"), F.col("cnorm")
         ).alias("cosine"),
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return rank_per_query(scored, "cosine", k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dasladen_spark.functions.text import tokens_col
+
 
 def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over lowercased [a-z0-9]+ tokens — the corpus
@@ -38,11 +40,7 @@ def word_freq_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     count; everything after this touches only distinct words."""
     return (
         docs.select(
-            F.explode(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
-                )
-            ).alias("word")
+            F.explode(tokens_col(text_col)).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))

@@ -29,17 +29,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TOKEN_RE = "[a-z0-9]+"
+from dasladen_spark.functions.text import tokens_col
 
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return docs.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit(_TOKEN_RE), F.lit(0)
-            )
-        ).alias("tok"),
+        F.explode(tokens_col(text_col)).alias("tok"),
     )
 
 

@@ -29,20 +29,6 @@ from pyspark.sql import functions as F
 from dasladen_spark.functions.text import word_ngrams
 
 
-def bench_gram_set(
-    bench_df: DataFrame, text_col: str = "text", n: int = 8
-) -> DataFrame:
-    """The benchmark corpus's distinct word ``n``-gram set — the
-    (small) broadcast side of every decontamination join. Callers
-    that probe it repeatedly (streaming micro-batches) should persist
-    the returned frame: it is benchmark-sized by construction."""
-    return (
-        bench_df.select(F.split(F.col(text_col), " ").alias("_w"))
-        .select(F.explode(word_ngrams(F.col("_w"), n)).alias("ng"))
-        .distinct()
-    )
-
-
 def semantic_contamination(
     train: DataFrame,
     bench: DataFrame,
@@ -235,33 +221,6 @@ def _semantic_contamination_ann(
     return _best_hit(cand, threshold, id_col)
 
 
-def contamination_hits(
-    df: DataFrame,
-    bench_grams: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 8,
-    min_hits: int = 1,
-) -> DataFrame:
-    """(_did, n_contaminated_grams) for every doc sharing at least
-    ``min_hits`` DISTINCT word n-grams with the benchmark set.
-    Broadcast-filter FIRST, distinct after — the corpus-keyed
-    exchange is bounded by |matching grams|, not the corpus gram
-    stream."""
-    return (
-        df.select(
-            F.col(id_col).alias("_did"),
-            F.split(F.col(text_col), " ").alias("_w"),
-        )
-        .select("_did", F.explode(word_ngrams(F.col("_w"), n)).alias("ng"))
-        .join(F.broadcast(bench_grams), "ng")
-        .distinct()
-        .groupBy("_did")
-        .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
-        .filter(F.col("n_contaminated_grams") >= min_hits)
-    )
-
-
 def decontamination_bench(
     bench_df: DataFrame,
     method: str,
@@ -274,12 +233,18 @@ def decontamination_bench(
     bench_vec_col: str | None = None,
 ) -> DataFrame:
     """The benchmark side of a decontamination ``method``: ``ngrams``
-    → the distinct word ``n``-gram set of ``text_col``; ``semantic`` →
-    (``id_col``, ``vec_col``) vectors, aliased from
-    ``bench_id_col``/``bench_vec_col`` when the benchmark names them
-    differently. Any other method fails, naming ``what``."""
+    → the distinct word ``n``-gram set of ``text_col`` (the small
+    broadcast side of every gram join; callers probing it per
+    micro-batch persist it); ``semantic`` → (``id_col``, ``vec_col``)
+    vectors, aliased from ``bench_id_col``/``bench_vec_col`` when the
+    benchmark names them differently. Any other method fails, naming
+    ``what``."""
     if method == "ngrams":
-        return bench_gram_set(bench_df, text_col=text_col, n=n)
+        return (
+            bench_df.select(F.split(F.col(text_col), " ").alias("_w"))
+            .select(F.explode(word_ngrams(F.col("_w"), n)).alias("ng"))
+            .distinct()
+        )
     if method == "semantic":
         return bench_df.select(
             F.col(bench_id_col or id_col).alias(id_col),
@@ -307,8 +272,11 @@ def decontamination_hits(
     dim: int = 64,
 ) -> DataFrame:
     """``df``'s hits against a ``decontamination_bench`` side, keyed
-    ``_did``: ``contamination_hits`` for ``ngrams``; for ``semantic``,
-    (_did, nearest_bench_id, max_cosine) of every doc within
+    ``_did``: for ``ngrams``, (_did, n_contaminated_grams) of every doc
+    sharing at least ``min_hits`` DISTINCT word n-grams with the
+    benchmark set (broadcast-filter first, distinct after, so the
+    corpus-keyed exchange is bounded by the matching grams); for
+    ``semantic``, (_did, nearest_bench_id, max_cosine) of every doc within
     ``threshold`` cosine of a benchmark vector (``prefilter="ann"``:
     ``semantic_contamination``'s hyperplane prefilter). The batch task
     and the streaming gate share it, so both drop the same docs."""
@@ -324,8 +292,17 @@ def decontamination_hits(
             bits_per_table=bits_per_table,
             dim=dim,
         ).select(F.col(id_col).alias("_did"), "nearest_bench_id", "max_cosine")
-    return contamination_hits(
-        df, bench, text_col=text_col, id_col=id_col, n=n, min_hits=min_hits
+    return (
+        df.select(
+            F.col(id_col).alias("_did"),
+            F.split(F.col(text_col), " ").alias("_w"),
+        )
+        .select("_did", F.explode(word_ngrams(F.col("_w"), n)).alias("ng"))
+        .join(F.broadcast(bench), "ng")
+        .distinct()
+        .groupBy("_did")
+        .agg(F.count(F.lit(1)).alias("n_contaminated_grams"))
+        .filter(F.col("n_contaminated_grams") >= min_hits)
     )
 
 

@@ -34,6 +34,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dasladen_spark.functions.text import tokens_col
 from dasladen_spark.operators.intervals import merge_intervals
 
 _MERSENNE31 = 2147483647  # 2^31 - 1
@@ -704,14 +705,6 @@ def winnowing_pairs(
 
 
 # ------------------------------------- exact duplicated-span coverage
-
-_TOK_RE = "[a-z0-9]+"
-
-
-def tokens_col(text_col: str = "text"):
-    """Lower-cased word tokens as an array column (JVM regex, no UDF)."""
-    return F.regexp_extract_all(F.lower(text_col), F.lit(_TOK_RE), F.lit(0))
-
 
 _SPAN_N = 8  # tokens per shingle
 

@@ -179,8 +179,8 @@ def build_winnowed_fingerprint_index(
     document contributes its winnowed k-gram fingerprints (many per
     doc — operators/dedup winnow_fingerprints), distinct, persisted
     in the same bucketed+sorted layout as the exact index so
-    ``winnowed_novel_against_index`` / ``append_to_index`` work
-    unchanged. Keep winnowed and whole-doc indexes in separate
+    ``dedup_against_index``'s winnowing arm and ``append_to_index``
+    work unchanged. Keep winnowed and whole-doc indexes in separate
     tables — the fp semantics differ."""
     from dasladen_spark.operators.dedup import winnow_fingerprints
 
@@ -190,51 +190,6 @@ def build_winnowed_fingerprint_index(
         n_buckets,
         tag,
     )
-
-
-def winnowed_novel_against_index(
-    spark: SparkSession,
-    table: str,
-    batch: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_shared: int = 3,
-    before_batch: int | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """NEAR-dup incremental intake: the same bucketed index
-    machinery, holding WINNOWED k-gram fingerprints (plans/llm8,
-    the MOSS position-local scheme) instead of one whole-document
-    hash — so a batch doc sharing any ≥ k+w-1-token run with history
-    can be caught, not just byte-identical ones.
-
-    A doc is dropped when ``min_shared`` or more of its winnowed
-    fingerprints already sit in the index (the dedup_winnowing pair
-    floor, applied batch-vs-history). Returns ``(novel_rows,
-    novel_fps)``: the admitted batch rows, and their (id, fp)
-    fingerprints — pass the latter to ``append_to_index`` so the next
-    batch dedups against everything this run admitted. The index
-    table must be dedicated to winnowed fps (one fp per DOC and many
-    fps per doc don't mix semantics).
-
-    Scale shape: fingerprinting is the staged JVM-only projection
-    (winnow_fingerprints); the history probe is a left-semi
-    sort-merge join reading the bucketed index IN PLACE (zero
-    history-side Exchange, only the batch's fps shuffle into the
-    bucket layout — the invariant test_plan_shapes pins for the exact
-    path); the hit count then aggregates batch-sized rows only."""
-    from dasladen_spark.operators.dedup import winnow_fingerprints
-
-    fps = winnow_fingerprints(batch, id_col=id_col, text_col=text_col)
-    hits = (
-        fps.join(_index_fps(spark, table, before_batch), "fp", "left_semi")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_n_hits"))
-        .filter(F.col("_n_hits") >= min_shared)
-        .select(id_col)
-    )
-    novel = batch.join(hits, id_col, "left_anti")
-    novel_fps = fps.join(hits, id_col, "left_anti")
-    return novel, novel_fps
 
 
 def dedup_against_index(
@@ -256,12 +211,19 @@ def dedup_against_index(
     ``exact`` keeps the lowest ``id_col`` per whole-document
     fingerprint; ``winnowing`` keeps each winnowed-fingerprint
     cluster's min id and drops docs sharing ``min_shared``+
-    fingerprints with the index. ``before_batch`` (the stream's batch
+    fingerprints with the index (a table dedicated to winnowed fps:
+    the history probe is a left-semi sort-merge join reading the
+    bucketed index in place, and the hit count aggregates batch-sized
+    rows only). ``before_batch`` (the stream's batch
     id) is the replay filter and the append tag (else 0). Survivors
     are persisted across the write and the append: the anti-join is
     lazy, and appending first would filter this batch against its own
     fingerprints. Every frame cached here is unpersisted on exit."""
-    from dasladen_spark.operators.dedup import exact_dedup, winnowing_pairs
+    from dasladen_spark.operators.dedup import (
+        exact_dedup,
+        winnow_fingerprints,
+        winnowing_pairs,
+    )
     from dasladen_spark.operators.graph import dedup_clusters
 
     spark = batch.sparkSession
@@ -280,12 +242,17 @@ def dedup_against_index(
             surv = batch.join(drop, id_col, "left_anti")
             if not index:
                 return write(surv)
-            novel, fps = winnowed_novel_against_index(
-                spark, index, surv, id_col=id_col, text_col=text_col,
-                min_shared=min_shared, before_batch=before_batch,
+            fps = winnow_fingerprints(surv, id_col=id_col, text_col=text_col)
+            hits = (
+                fps.join(_index_fps(spark, index, before_batch), "fp", "left_semi")
+                .groupBy(id_col)
+                .agg(F.count(F.lit(1)).alias("_n_hits"))
+                .filter(F.col("_n_hits") >= min_shared)
+                .select(id_col)
             )
-            scratch += [novel.persist(), fps.persist()]
-            out = novel
+            out = surv.join(hits, id_col, "left_anti")
+            fps = fps.join(hits, id_col, "left_anti")
+            scratch += [out.persist(), fps.persist()]
         else:
             keyed = exact_dedup(
                 batch.withColumn("fp", fingerprint(F.col(text_col))),

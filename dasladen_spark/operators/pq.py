@@ -72,10 +72,13 @@ to an RDBMS, /root/reference/dasladen/task.py:94-107).
 from __future__ import annotations
 
 import math
+from typing import Callable
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from dasladen_spark.operators.ranking import rank_per_query
 
 #: The shared lattice quantum. 1e6 keeps every quantized term exact
 #: in BIGINT (|xn| ≤ 1 → |zq| ≤ 1e6; squared distances ≤ 4e6·dsub;
@@ -345,6 +348,76 @@ def with_codes(
     return encode_codes(df, books, vec_col, out_col)
 
 
+def lattice_lloyd_fit(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    iters: int,
+    salt: str,
+    fit_fraction: float | None,
+    normalize: bool,
+    lloyd_round: Callable[[DataFrame, list], list],
+    fit_name: str,
+    k_name: str = "k",
+) -> list[list[float]]:
+    """The k × dim centroids of the seeded lattice Lloyd fit — the one
+    driver behind k-means (clustering.kmeans_fit), IVF centroids
+    (similarity.fit_ivf_centroids) and PQ codebooks
+    (:func:`fit_pq_codebooks`), all pure functions of the corpus that
+    the SQL oracles re-derive bit-for-bit.
+
+    ``df``'s ``id_col``/``vec_col`` become the cached ``(_id, _v)``
+    frame (``fit_fraction``: first kept to a deterministic md5-threshold
+    sample salted ``{salt}-fit`` — the 100 TB shape: the fit converges
+    long before the full corpus). Seeds are the ``k`` rows with the
+    smallest md5(salt || id), a hash-spread sample even when ids
+    correlate with content, taken raw or lattice-normalized
+    (``normalize``); fewer than ``k`` rows raise, naming ``fit_name``
+    and ``k_name``. Each of the ``iters`` rounds is
+    ``lloyd_round(base, cent)``: one corpus pass returning
+    ``(cell, pos, Σ zx, n)`` lattice sums, so every updated coordinate
+    is ``Σ zx / (n·Q)`` — one float division from exact integers. An
+    empty cell keeps its previous centroid. Only k × dim floats ever
+    reach the driver."""
+    from dasladen_spark.operators.sampling import (
+        portable_sample_filter,
+        validate_fit_fraction,
+    )
+
+    base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+    if validate_fit_fraction(fit_fraction):
+        # md5-threshold membership (not the xxhash fast path): the
+        # SAME predicate spells in ANSI SQL, so the sampled fit is
+        # replayable bit-for-bit by the DuckDB oracle
+        # (plans/llm6._pq_oracle fit_fraction)
+        base = base.filter(
+            portable_sample_filter(F.col("_id"), fit_fraction, salt=f"{salt}-fit")
+        )
+    # one narrow projection consumed iters+1 times — cache it so the
+    # Lloyd rounds hit memory, not the parquet (the kcenter pattern)
+    base = base.persist()
+    try:
+        seeds = base.orderBy(
+            F.md5(F.concat(F.lit(salt), F.col("_id").cast("string")))
+        ).limit(k)
+        if normalize:
+            cent = [xn for _sid, xn in collect_normalized(seeds, "_id", "_v")]
+        else:
+            cent = [[float(x) for x in r["_v"]] for r in seeds.collect()]
+        if len(cent) < k:
+            raise ValueError(
+                f"{fit_name}: corpus has {len(cent)} rows,"
+                f" needs at least {k_name}={k}"
+            )
+        for _ in range(iters):
+            for cell, pos, total, n in lloyd_round(base, cent):
+                cent[cell][pos] = total / (n * PQ_QUANT)
+        return cent
+    finally:
+        base.unpersist()
+
+
 def fit_pq_codebooks(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -357,95 +430,44 @@ def fit_pq_codebooks(
     fit_fraction: float | None = None,
 ) -> np.ndarray:
     """Fit an (m, ksub, dim/m) codebook tensor over lattice-normalized
-    vectors — a pure function of the corpus (see module doctrine).
-
-    Seeds: the ``ksub`` corpus vectors with the smallest
-    md5('pq-seed' || id) — a deterministic hash-spread sample (the
-    same discipline as similarity.fit_ivf_centroids), sliced per
-    subspace. Each Lloyd round is ONE corpus pass (the encode
-    expression assigns all m subspaces at once) plus a
+    vectors — :func:`lattice_lloyd_fit` with ``ksub`` seeds (salt
+    ``seed_salt``) sliced per subspace. Each Lloyd round is ONE corpus
+    pass (the encode expression assigns all m subspaces at once) plus a
     (subspace, code, dim)-keyed BIGINT mean — m·ksub·dsub ≈ a few
-    thousand shuffle rows regardless of corpus size. Centroid
-    coordinates are ``Σ floor(xn·Q + 0.5) / (n·Q)`` — one float
-    division from exact integers, so the books the driver returns
-    are the books the SQL oracle derives.
-
-    ``fit_fraction``: fit on a deterministic id-hash sample of the
-    corpus (operators/sampling.deterministic_sample) — the 100 TB
-    shape: codebook quality converges long before the full corpus,
-    so the Lloyd passes read a fraction of the bytes while encode
-    still covers every row. The books stay a pure function of
-    (corpus, fraction)."""
+    thousand shuffle rows regardless of corpus size. ``fit_fraction``
+    fits on a deterministic id-hash sample while encode still covers
+    every row; the books stay a pure function of (corpus, fraction)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
-    base = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
-    )
-    from dasladen_spark.operators.sampling import (
-        portable_sample_filter,
-        validate_fit_fraction,
-    )
 
-    if validate_fit_fraction(fit_fraction):
-        # md5-threshold membership (not the xxhash fast path): the
-        # SAME predicate spells in ANSI SQL, so the sampled fit is
-        # replayable bit-for-bit by the DuckDB oracle
-        # (plans/llm6._pq_oracle fit_fraction)
-        base = base.filter(
-            portable_sample_filter(F.col("_id"), fit_fraction, salt=f"{seed_salt}-fit")
+    def books_of(cent: list) -> list:
+        # codeword c of subspace j is seed/centroid c's j-th dsub slice
+        return [[row[j * dsub:(j + 1) * dsub] for row in cent] for j in range(m)]
+
+    def lloyd_round(base: DataFrame, cent: list) -> list:
+        # the mean pass consumes the LONG (row, subspace, code) form
+        # directly — the numerators are exactly the Σ of the lattice
+        # points the encode already computed (_zsl), so no second
+        # normalization pass exists
+        stats = (
+            encode_codes_long(base.drop("_id"), books_of(cent), "_v")
+            .select("_j", "_code", F.posexplode("_zsl").alias("_rel", "_zx"))
+            .groupBy("_j", "_code", "_rel")
+            .agg(F.sum("_zx").alias("_s"), F.count(F.lit(1)).alias("_n"))
+            .collect()
         )
-    # one narrow projection consumed iters+1 times — cache it so the
-    # Lloyd rounds hit memory, not the parquet (the kcenter pattern)
-    base = base.persist()
-    try:
-        seeds = collect_normalized(
-            base.orderBy(
-                F.md5(
-                    F.concat(F.lit(seed_salt), F.col("_id").cast("string"))
-                )
-            ).limit(ksub),
-            "_id",
-            "_v",
-        )
-        if len(seeds) < ksub:
-            raise ValueError(
-                f"fit_pq_codebooks: corpus has {len(seeds)} rows,"
-                f" needs at least ksub={ksub}"
-            )
-        books = [
-            [
-                [float(xn[j * dsub + i]) for i in range(dsub)]
-                for _sid, xn in seeds
-            ]
-            for j in range(m)
+        return [
+            (r["_code"], r["_j"] * dsub + r["_rel"], r["_s"], r["_n"])
+            for r in stats
         ]
-        for _ in range(iters):
-            stats = (
-                # the mean pass consumes the LONG (row, subspace,
-                # code) form directly; the numerators are exactly the
-                # Σ of the lattice points the encode already computed
-                # (_zsl), so no second normalization pass exists
-                encode_codes_long(base.drop("_id"), books, "_v")
-                .select(
-                    "_j",
-                    "_code",
-                    F.posexplode("_zsl").alias("_rel", "_zx"),
-                )
-                .groupBy("_j", "_code", "_rel")
-                .agg(
-                    F.sum("_zx").alias("_s"),
-                    F.count(F.lit(1)).alias("_n"),
-                )
-                .collect()
-            )
-            for r in stats:
-                books[r["_j"]][r["_code"]][r["_rel"]] = r["_s"] / (
-                    r["_n"] * PQ_QUANT
-                )
-    finally:
-        base.unpersist()
-    return np.array(books, np.float64)
+
+    cent = lattice_lloyd_fit(
+        corpus, id_col, vec_col, ksub, iters, seed_salt, fit_fraction,
+        normalize=True, lloyd_round=lloyd_round,
+        fit_name="fit_pq_codebooks", k_name="ksub",
+    )
+    return np.array(books_of(cent), np.float64)
 
 
 def pq_encode(
@@ -608,18 +630,11 @@ def pq_adc_topk(
     ).select("query_id", "neighbor_id", "adc_score")
     if exclude_self:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round("adc_score", 6).alias("adc_score"),
-        )
+    return rank_per_query(cand, "adc_score", k).select(
+        "query_id",
+        "rank",
+        "neighbor_id",
+        F.round("adc_score", 6).alias("adc_score"),
     )
 
 
@@ -657,18 +672,11 @@ def exact_rerank(
             cosine_sim(F.col("qv"), F.col("cv")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "rank",
-            "neighbor_id",
-            F.round("cosine", 6).alias("cosine"),
-        )
+    return rank_per_query(scored, "cosine", k).select(
+        "query_id",
+        "rank",
+        "neighbor_id",
+        F.round("cosine", 6).alias("cosine"),
     )
 
 

@@ -141,6 +141,22 @@ def global_prefix_sum(
     )
 
 
+def rank_per_query(
+    df: DataFrame, score_col: str, k: int, rank_col: str = "rank"
+) -> DataFrame:
+    """Each query's ``k`` best rows, numbered 1..k in ``rank_col``:
+    ``row_number() OVER (PARTITION BY query_id ORDER BY score_col
+    DESC, neighbor_id ASC) <= k``. Ties go to the lowest neighbor id,
+    so the ranking is deterministic — the one order every ANN ranker
+    and its DuckDB oracle share."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return df.withColumn(rank_col, F.row_number().over(w)).filter(
+        F.col(rank_col) <= k
+    )
+
+
 def topk_per_group(
     df: DataFrame,
     group_cols: list[str],

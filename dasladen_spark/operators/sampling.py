@@ -15,6 +15,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dasladen_spark.functions.text import tokens_col
+
 _BUCKETS = 1_000_000
 
 
@@ -191,11 +193,7 @@ def dsir_weights(
         docs.select(
             F.col(id_col).alias("_id"),
             F.col(target_col).alias("_t"),
-            F.explode_outer(
-                F.regexp_extract_all(
-                    F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), F.lit(0)
-                )
-            ).alias("tok"),
+            F.explode_outer(tokens_col(text_col)).alias("tok"),
         )
         .filter(F.col("tok").isNotNull())
         .groupBy("_id", "_t", "tok")

@@ -11,15 +11,12 @@
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from dasladen_spark.functions.vectors import (
-    cosine_sim,
-    cosine_sim_carried,
-    l2_norm,
-)
+from dasladen_spark.functions.vectors import cosine_sim_carried, l2_norm
 from dasladen_spark.operators.dedup import _spread, hyperplane_table_buckets
+from dasladen_spark.operators.ranking import rank_per_query
 
 
 def cosine_topk(
@@ -64,13 +61,8 @@ def cosine_topk(
             F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return rank_per_query(scored, "cosine", k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 
@@ -216,13 +208,8 @@ def lsh_cosine_topk(
             F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return rank_per_query(scored, "cosine", k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 
@@ -334,13 +321,8 @@ def _lsh_topk_broadcast(
             F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return rank_per_query(scored, "cosine", k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )
 
 
@@ -531,95 +513,55 @@ def probe_cells_driver(
     return out
 
 
+def nearest_cell_sums(
+    base: DataFrame, cent: list, normalize: bool = True
+) -> list[tuple]:
+    """One Lloyd round of nearest-centroid cells for
+    :func:`pq.lattice_lloyd_fit` — the round k-means (raw coordinates,
+    ``normalize=False``) and IVF share: ONE pass over the cached
+    ``(_id, _v)`` frame derives each row's lattice points and argmin
+    cell (the :func:`assign_cells` HOF kernel — full-dim flat chains
+    break janino, see there), then position-explodes them into
+    (cell, dim)-keyed lattice sums. Map-side partial aggregation puts
+    k × dim partials per task on the wire, and no task ever
+    materializes a whole cell (collect_list would — quadratic when one
+    cell owns most of the corpus). Returns ``[(cell, pos, Σ zx, n)]``."""
+    from dasladen_spark.operators.pq import _lat
+
+    zc = [[_lat(v) for v in row] for row in cent]
+    stats = (
+        lattice_zx_frame(base, [], "_v", normalize=normalize)
+        .select("_azx", cell_dist_array(zc).alias("_adarr"))
+        .select(
+            _argmin_cell().alias("cell"),
+            F.posexplode("_azx").alias("_pos", "_zx"),
+        )
+        .groupBy("cell", "_pos")
+        .agg(F.sum("_zx").alias("_s"), F.count(F.lit(1)).alias("_n"))
+        .collect()
+    )
+    return [(r["cell"], r["_pos"], r["_s"], r["_n"]) for r in stats]
+
+
 def fit_ivf_centroids(
     c: DataFrame,
     n_centroids: int,
     lloyd_iters: int,
     fit_fraction: float | None = None,
 ) -> np.ndarray:
-    """Fit the IVF centroid matrix over a (neighbor_id, cv) frame —
-    since round 9 this IS pq.fit_pq_codebooks with one subspace
-    spanning the whole vector (same seed discipline with the
-    'ivf-seed' salt, same quantized-integer Lloyd rounds), so the
+    """Fit the IVF centroid matrix over a (neighbor_id, cv) frame:
+    :func:`pq.lattice_lloyd_fit` on lattice-normalized vectors with the
+    'ivf-seed' salt and :func:`nearest_cell_sums` rounds, so the
     centroids — like the PQ codebooks — are a pure function of the
-    corpus that the SQL oracle re-derives bit-for-bit.
+    corpus that the SQL oracle re-derives bit-for-bit. Only
+    n_centroids × dim floats ever reach the driver."""
+    from dasladen_spark.operators.pq import lattice_lloyd_fit
 
-    Seeds are the ``n_centroids`` vectors with the smallest
-    md5('ivf-seed' || id) — a deterministic hash-ordered sample, so
-    the seed set is spread uniformly over the corpus even when ids
-    correlate with content. Only n_centroids × dim floats ever reach
-    the driver. Assignment uses the :func:`assign_cells` HOF kernel
-    (full-dim flat chains break janino, see there), fused with the
-    recompute into one corpus pass per round; the
-    Lloyd means are ``Σ floor(xn·Q + 0.5) / (n·Q)`` — the same
-    exact-integer construction as the PQ codebook means.
-    ``fit_fraction`` fits on a deterministic id-hash sample (the
-    100 TB shape — see pq.fit_pq_codebooks)."""
-    from dasladen_spark.operators.pq import (
-        PQ_QUANT,
-        _lat,
-        collect_normalized,
+    cent = lattice_lloyd_fit(
+        c, "neighbor_id", "cv", n_centroids, lloyd_iters, "ivf-seed",
+        fit_fraction, normalize=True, lloyd_round=nearest_cell_sums,
+        fit_name="fit_ivf_centroids", k_name="n_centroids",
     )
-
-    base = c.select(
-        F.col("neighbor_id").alias("_id"), F.col("cv").alias("_v")
-    )
-    from dasladen_spark.operators.sampling import (
-        portable_sample_filter,
-        validate_fit_fraction,
-    )
-
-    if validate_fit_fraction(fit_fraction):
-        # md5-threshold membership (not the xxhash fast path): the
-        # SAME predicate spells in ANSI SQL, so the sampled fit is
-        # replayable bit-for-bit by the DuckDB oracle
-        # (plans/llm6._pq_oracle fit_fraction)
-        base = base.filter(
-            portable_sample_filter(F.col("_id"), fit_fraction, salt="ivf-seed-fit")
-        )
-    base = base.persist()
-    try:
-        seeds = collect_normalized(
-            base.orderBy(
-                F.md5(
-                    F.concat(F.lit("ivf-seed"), F.col("_id").cast("string"))
-                )
-            ).limit(n_centroids),
-            "_id",
-            "_v",
-        )
-        if len(seeds) < n_centroids:
-            raise ValueError(
-                f"fit_ivf_centroids: corpus has {len(seeds)} rows,"
-                f" needs at least n_centroids={n_centroids}"
-            )
-        cent = [[float(v) for v in xn] for _sid, xn in seeds]
-        for _ in range(lloyd_iters):
-            # fused round (r12, the fit_pq_codebooks shape): one pass
-            # over the cache derives lattice points + assignment per
-            # row, position-explodes into the (cell, dim)-keyed sums
-            # — map-side partial aggregation, n_centroids × dim
-            # partials per task on the wire. The previous spelling
-            # shuffled the corpus twice per round (assignment groupBy
-            # + an id-keyed join of dim rows per vector)
-            zc = [[_lat(v) for v in row] for row in np.asarray(cent)]
-            stats = (
-                lattice_zx_frame(base, [], "_v", normalize=True)
-                .select("_azx", cell_dist_array(zc).alias("_adarr"))
-                .select(
-                    _argmin_cell().alias("cell"),
-                    F.posexplode("_azx").alias("_pos", "_zx"),
-                )
-                .groupBy("cell", "_pos")
-                .agg(
-                    F.sum("_zx").alias("_s"), F.count(F.lit(1)).alias("_n")
-                )
-                .collect()
-            )
-            for r in stats:
-                cent[r["cell"]][r["_pos"]] = r["_s"] / (r["_n"] * PQ_QUANT)
-    finally:
-        base.unpersist()
     return np.array(cent, np.float64)
 
 
@@ -692,11 +634,6 @@ def ivf_cosine_topk(
             F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
+    return rank_per_query(scored, "cosine", k).select(
+        "query_id", "rank", "neighbor_id", "cosine"
     )

@@ -13,12 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from dasladen_spark.operators.dedup import (
-    _SPAN_N,
-    _TOK_RE,
-    duplicated_span_coverage,
-    tokens_col,
-)
+from dasladen_spark.functions.text import _TOK_RE, tokens_col
+from dasladen_spark.operators.dedup import _SPAN_N, duplicated_span_coverage
 from dasladen_spark.plans.llm3 import _FP_SQL
 from dasladen_spark.plans.registry import query
 from dasladen_spark.session import load_table as _t

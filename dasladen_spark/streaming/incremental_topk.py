@@ -16,9 +16,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from dasladen_spark.operators.ranking import rank_per_query
 from dasladen_spark.operators.similarity import cosine_topk
 from dasladen_spark.streaming.ingest import drain_foreach_batch
 from dasladen_spark.streaming.matview import (
@@ -40,13 +40,8 @@ def merge_topk(
         if snapshot is not None
         else batch_scores.select("query_id", "neighbor_id", "cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        combined.dropDuplicates(["query_id", "neighbor_id"])
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+    return rank_per_query(
+        combined.dropDuplicates(["query_id", "neighbor_id"]), "cosine", k
     )
 
 

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dasladen_spark.operators.classify import _TOKEN_RE
+from dasladen_spark.functions.text import tokens_col
 from dasladen_spark.streaming.matview import run_incremental_matview
 
 
@@ -46,11 +46,7 @@ def run_streaming_nb_counts(
     labeled document stream. One explode per batch; the merge
     shuffles only the batch's (token, label) keys."""
     toks = docs.select(
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col(text_col)), F.lit(_TOKEN_RE), F.lit(0)
-            )
-        ).alias("tok"),
+        F.explode(tokens_col(text_col)).alias("tok"),
         F.col(label_col).alias("label"),
     )
     run_incremental_matview(

@@ -19,7 +19,6 @@ driver-side Python, as in the reference — they are control-plane.
 
 from __future__ import annotations
 
-import importlib
 import os
 import sys
 import threading
@@ -37,7 +36,7 @@ from dasladen_spark.sources.csv import read_csv
 from dasladen_spark.sources.parquet import read_parquet
 from dasladen_spark.sources.xls import read_xls
 from dasladen_spark.sources.xml import read_xml
-from dasladen_spark.transforms.compiler import apply_transforms
+from dasladen_spark.transforms.compiler import apply_transforms, load_user_transform
 
 
 @dataclass
@@ -468,16 +467,10 @@ def run_py_exec(ctx: TaskContext, task: dict) -> None:
     """Run a user module's main() (task.py:510-524); the module can
     import the active SparkSession for Spark-aware steps."""
     src = task["source"]
-    if ctx.module_path not in sys.path:
-        sys.path.append(ctx.module_path)
-    name = (
-        f"{src['package']}.{src['module']}" if src.get("package") else src["module"]
-    )
-    mod = importlib.import_module(name)
-    mod = importlib.reload(mod)
+    mod = load_user_transform(src["module"], src.get("package"), ctx.module_path)
     argv_backup = sys.argv
     try:
-        sys.argv = [name] + list(src.get("args", []))
+        sys.argv = [mod.__name__] + list(src.get("args", []))
         mod.main()
     finally:
         sys.argv = argv_backup
@@ -494,14 +487,7 @@ class BaseTask:
 
 def run_custom(ctx: TaskContext, task: dict) -> None:
     """User-defined task class (task.py:545-555)."""
-    if ctx.module_path not in sys.path:
-        sys.path.append(ctx.module_path)
-    name = (
-        f"{task['package']}.{task['module']}"
-        if task.get("package")
-        else task["module"]
-    )
-    mod = importlib.reload(importlib.import_module(name))
+    mod = load_user_transform(task["module"], task.get("package"), ctx.module_path)
     inst = getattr(mod, task["class"])()
     inst.run(ctx, task)
 

@@ -2197,6 +2197,44 @@ def test_fit_fraction_out_of_range_raises(spark, sf_dir):
     assert np.array_equal(full, fit_pq_codebooks(emb, m=8, ksub=8, iters=1))
 
 
+
+@pytest.mark.parametrize(
+    "fitter", ["kmeans_fit", "fit_ivf_centroids", "fit_pq_codebooks"]
+)
+def test_lattice_fit_too_few_rows_raises_and_uncaches(spark, fitter):
+    """Every seeded lattice fit raises its own ValueError naming k when
+    the corpus has fewer rows than k, and leaves nothing cached: the
+    fit's persisted sample is unpersisted on the error path too."""
+    from dasladen_spark.operators.clustering import kmeans_fit
+    from dasladen_spark.operators.pq import fit_pq_codebooks
+    from dasladen_spark.operators.similarity import fit_ivf_centroids
+
+    emb = spark.createDataFrame(
+        [(i, [float(i + j) for j in range(8)]) for i in range(3)],
+        "vec_id bigint, embedding array<double>",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    if fitter == "kmeans_fit":
+        with pytest.raises(ValueError, match=r"kmeans_fit: .*3 rows.*k=4"):
+            kmeans_fit(emb, "embedding", "vec_id", k=4, iterations=1)
+    elif fitter == "fit_ivf_centroids":
+        cv = emb.select(
+            F.col("vec_id").alias("neighbor_id"),
+            F.col("embedding").alias("cv"),
+        )
+        with pytest.raises(
+            ValueError, match=r"fit_ivf_centroids: .*3 rows.*n_centroids=4"
+        ):
+            fit_ivf_centroids(cv, 4, 1)
+    else:
+        with pytest.raises(
+            ValueError, match=r"fit_pq_codebooks: .*3 rows.*ksub=4"
+        ):
+            fit_pq_codebooks(emb, dim=8, m=2, ksub=4, iters=1)
+    assert cache.isEmpty()
+
 def test_probe_schema_preserves_query_id_type(spark):
     """The broadcast probe frame types query_id from the caller's
     query frame — string ids survive where a hard-coded LONG raised."""

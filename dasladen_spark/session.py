@@ -18,6 +18,26 @@ splitting (64 MiB advisory partitions), parquet filter pushdown, the
 vectorized parquet reader, and 128 MiB input splits (a 1 GiB
 row-group-dense file still splits). tests/test_session.py pins those
 effective values.
+
+Local file system: the pip PySpark build has no libhadoop, and without
+it Hadoop's ``RawLocalFileSystem.setPermission`` starts a ``chmod``
+process for every file, ``.crc`` file and directory a write or a commit
+creates, and ``FileContext``'s link lookups (streaming checkpoints) start
+``readlink``. ``dasladen_spark/jvm`` holds a checksummed
+``LocalFileSystem`` (``dasladen.fs.NioLocalFileSystem``) and a
+``LocalFs`` (``dasladen.fs.NioLocalFs``) whose raw layer sets the same
+mode bits through ``java.nio`` and tests links with
+``Files.isSymbolicLink``; a mode outside 0777, or a setuid/setgid
+directory, still goes to ``chmod``. Outputs, ``.crc`` files, modes and
+``_SUCCESS`` markers are unchanged. ``get_spark`` selects them
+(``spark.hadoop.fs.file.impl``, ``spark.hadoop.fs.AbstractFileSystem.
+file.impl``, the jar merged into ``spark.driver.extraClassPath``) only
+on a POSIX host, when tasks run in the driver JVM (a ``local``
+master) and that JVM loads the class: this call launches it, like the
+code-cache flags below, or an existing one already has the jar.
+Otherwise the stock file system stays. A deployment with libhadoop
+does not need it (``setPermission`` is then a native ``chmod`` call),
+and ``extra_conf`` can override either class.
 """
 
 from __future__ import annotations
@@ -25,6 +45,7 @@ from __future__ import annotations
 import os
 import re
 
+from py4j.protocol import Py4JError
 from pyspark.sql import SparkSession
 
 #: configs applied to every session; callers may override via extra_conf
@@ -101,14 +122,24 @@ def default_parallelism() -> int:
 
 
 _JAVA_OPTS_KEY = "spark.driver.extraJavaOptions"
+_CLASS_PATH_KEY = "spark.driver.extraClassPath"
+_FS_IMPL_KEY = "spark.hadoop.fs.file.impl"
+
+#: the fork-free local file system (dasladen_spark/jvm, rebuilt by
+#: tools/build_localfs_jar.py) and the configs that select it
+LOCALFS_JAR = os.path.join(os.path.dirname(__file__), "jvm", "dasladen-localfs.jar")
+LOCALFS_CONF: dict[str, str] = {
+    _FS_IMPL_KEY: "dasladen.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "dasladen.fs.NioLocalFs",
+}
 
 
-def _spark_defaults_java_options() -> str:
-    """``spark.driver.extraJavaOptions`` from spark-defaults.conf, if
-    a conf dir exists ($SPARK_CONF_DIR, else $SPARK_HOME/conf) — the
-    local-launch path never reads that file through SparkConf (the
-    JVM doesn't exist yet), so a deployment's GC/agent flags would
-    otherwise be silently dropped by our code-cache default."""
+def _spark_defaults(key: str) -> str:
+    """``key``'s value in spark-defaults.conf, if a conf dir exists
+    ($SPARK_CONF_DIR, else $SPARK_HOME/conf) — the local-launch path
+    never reads that file through SparkConf (the JVM doesn't exist
+    yet), so a deployment's GC/agent flags or class path would
+    otherwise be silently dropped by our own value for the key."""
     conf_dir = os.environ.get("SPARK_CONF_DIR") or (
         os.path.join(os.environ["SPARK_HOME"], "conf")
         if "SPARK_HOME" in os.environ
@@ -130,7 +161,7 @@ def _spark_defaults_java_options() -> str:
                 # -XX:ReservedCodeCacheSize=512m — belong to the
                 # value). Exact-key match, LAST occurrence wins.
                 m = re.match(r"^([^\s=]+)[\s=]+(.*)$", line)
-                if m and m.group(1) == _JAVA_OPTS_KEY:
+                if m and m.group(1) == key:
                     found = m.group(2).strip()
     except OSError:
         return ""
@@ -157,6 +188,40 @@ def _merge_java_options(*values: str | None) -> str:
     return " ".join(out)
 
 
+def _merge_class_path(*values: str | None) -> str:
+    """Join class-path strings left to right, dropping repeated entries
+    and skipping empty / None values."""
+    entries = (e for v in values for e in (v or "").split(os.pathsep) if e)
+    return os.pathsep.join(dict.fromkeys(entries))
+
+
+def _localfs_loadable(master: str | None) -> bool:
+    """Whether the session's JVM will load the fork-free local file
+    system: a POSIX host (the raw layer reads ``unix:mode``), a master
+    that runs tasks in the driver JVM (``local``, ``local[N]``,
+    ``local[N,F]``, never ``local-cluster``), and either this call
+    launches that JVM with the jar on its class path or an existing
+    JVM already loads the class. A JVM started without the jar keeps
+    the stock file system."""
+    if not (
+        os.name == "posix"
+        and master and re.fullmatch(r"local(\[[^\]]*\])?", master)
+        and os.path.exists(LOCALFS_JAR)
+    ):
+        return False
+    from pyspark import SparkContext
+
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        return True
+    # a gateway exists, or spark-submit started the JVM and left its port
+    SparkContext._ensure_initialized()
+    try:
+        SparkContext._jvm.java.lang.Class.forName(LOCALFS_CONF[_FS_IMPL_KEY])
+    except Py4JError:
+        return False
+    return True
+
+
 def get_spark(
     app_name: str = "dasladen-spark",
     master: str | None = None,
@@ -172,22 +237,31 @@ def get_spark(
     cpus = default_parallelism()
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_MASTER" not in os.environ:
-        builder = builder.master(f"local[{cpus}]")
-    elif master is not None:
+        master = f"local[{cpus}]"
+    if master is not None:
         builder = builder.master(master)
 
-    conf = dict(DEFAULT_CONF)
+    localfs = _localfs_loadable(master or os.environ.get("SPARK_MASTER"))
+    conf = {**DEFAULT_CONF, **(LOCALFS_CONF if localfs else {})}
     conf["spark.sql.shuffle.partitions"] = str(
         shuffle_partitions if shuffle_partitions is not None else max(cpus, 32)
     )
     if extra_conf:
         conf.update(extra_conf)
+    if localfs:
+        # merged like the java options below: a deployment's and a
+        # caller's class path survive alongside the jar
+        conf[_CLASS_PATH_KEY] = _merge_class_path(
+            _spark_defaults(_CLASS_PATH_KEY),
+            LOCALFS_JAR,
+            (extra_conf or {}).get(_CLASS_PATH_KEY),
+        )
     # merge, never replace, driver java options: a deployment's flags
     # (spark-defaults.conf) and a caller's (extra_conf) both survive
     # alongside the code-cache defaults; the caller's value is last so
     # e.g. its own -XX:ReservedCodeCacheSize wins
     conf[_JAVA_OPTS_KEY] = _merge_java_options(
-        _spark_defaults_java_options(),
+        _spark_defaults(_JAVA_OPTS_KEY),
         DEFAULT_CONF[_JAVA_OPTS_KEY],
         (extra_conf or {}).get(_JAVA_OPTS_KEY),
     )

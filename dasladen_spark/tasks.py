@@ -964,25 +964,22 @@ def run_sample(ctx: TaskContext, task: dict) -> None:
             )
         )
         # w feeds TWO consumers (the percentile threshold and the keep
-        # filter) — persisted so the whole DSIR scoring pipeline runs
-        # once instead of once per consumer; w is doc-count-sized
-        # (id + two numbers)
-        w = dsir_weights(tagged, "_t", id_col="_did", text_col="_txt").persist()
-        try:
-            keep_fraction = float(task.get("keep_fraction", 0.25))
-            thr = w.agg(
-                F.percentile(
-                    "weight_per_token", F.lit(1.0 - keep_fraction)
-                ).alias("thr")
-            )
-            keep = (
-                w.crossJoin(F.broadcast(thr))
-                .filter(F.col("weight_per_token") >= F.col("thr"))
-                .select(F.col("_did").alias(id_field), "weight_per_token")
-            )
-            _write(ctx, task, df.join(keep, id_field))
-        finally:
-            w.unpersist()
+        # filter); exchange reuse already runs the DSIR pipeline's
+        # shuffles once for both. Not persisted: a cached plan keeps its
+        # shuffles at spark.sql.shuffle.partitions uncoalesced (this
+        # session leaves canChangeCachedPlanOutputPartitioning false),
+        # while AQE coalesces the uncached ones
+        w = dsir_weights(tagged, "_t", id_col="_did", text_col="_txt")
+        keep_fraction = float(task.get("keep_fraction", 0.25))
+        thr = w.agg(
+            F.percentile("weight_per_token", F.lit(1.0 - keep_fraction)).alias("thr")
+        )
+        keep = (
+            w.crossJoin(F.broadcast(thr))
+            .filter(F.col("weight_per_token") >= F.col("thr"))
+            .select(F.col("_did").alias(id_field), "weight_per_token")
+        )
+        _write(ctx, task, df.join(keep, id_field))
         ctx.log(f"task {task.get('name')}: sample written (dsir)")
         return
     if method == "coreset":

@@ -1,8 +1,11 @@
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's code, whichever copy of the repository runs the tests
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from dasladen_spark.session import get_spark
 

@@ -34,9 +34,6 @@ def test_every_query_has_callable():
 
 @pytest.mark.parametrize("name", SPOT)
 def test_spot_query_matches_oracle(spark, sf_dir, duck, name):
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.check_oracles import compare
 
     sdf = QUERIES[name](spark, sf_dir).toPandas()

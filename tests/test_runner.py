@@ -368,6 +368,7 @@ def test_cli_single_task_end_to_end(tmp_path):
     write the output file (catches packaging/arg/import regressions
     no in-process test can)."""
     import json
+    import os
     import subprocess
     import sys
 
@@ -390,7 +391,7 @@ def test_cli_single_task_end_to_end(tmp_path):
     r = subprocess.run(
         [sys.executable, "-m", "dasladen_spark.runner.cli", "-task", str(tf),
          "-capture", str(tmp_path / "capture")],
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         capture_output=True,
         text=True,
         timeout=300,

@@ -11,7 +11,7 @@ from dasladen_spark.session import (
     DEFAULT_CONF,
     _JAVA_OPTS_KEY,
     _merge_java_options,
-    _spark_defaults_java_options,
+    _spark_defaults,
 )
 
 CACHE_FLAGS = DEFAULT_CONF[_JAVA_OPTS_KEY]
@@ -47,7 +47,7 @@ def test_spark_defaults_file_is_read(tmp_path, monkeypatch):
         "spark.driver.extraJavaOptions  -XX:+UseZGC -Dagent=x\n"
     )
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
-    assert _spark_defaults_java_options() == "-XX:+UseZGC -Dagent=x"
+    assert _spark_defaults(_JAVA_OPTS_KEY) == "-XX:+UseZGC -Dagent=x"
 
 
 def test_spark_defaults_last_occurrence_wins(tmp_path, monkeypatch):
@@ -57,12 +57,12 @@ def test_spark_defaults_last_occurrence_wins(tmp_path, monkeypatch):
     )
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
     # last wins (Spark properties semantics) and '=' stays in values
-    assert _spark_defaults_java_options() == "-Dfresh=1 -Dsize=a=b"
+    assert _spark_defaults(_JAVA_OPTS_KEY) == "-Dfresh=1 -Dsize=a=b"
 
 
 def test_spark_defaults_missing_file_is_empty(tmp_path, monkeypatch):
     monkeypatch.setenv("SPARK_CONF_DIR", str(tmp_path))
-    assert _spark_defaults_java_options() == ""
+    assert _spark_defaults(_JAVA_OPTS_KEY) == ""
 
 
 def _size_bytes(value: str) -> int:

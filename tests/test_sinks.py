@@ -69,12 +69,13 @@ def test_gen_sf_preserves_schemas_fks_and_identity(tmp_path, monkeypatch):
     schemas byte-for-byte, referential integrity across replicas,
     key density, and identity-name uniqueness (round-11: duplicated
     names silently merged name-keyed rollups and exploded ER blocks)."""
+    import os
     import sys
 
     import duckdb
     import pyarrow.parquet as pq
 
-    sys.path.insert(0, "/root/repo/tools")
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
     import gen_sf
 
     monkeypatch.setattr(gen_sf, "SRC", "/root/testdata/sf0.001")

@@ -110,9 +110,6 @@ def test_er_clusters_are_transitive(spark, tmp_path):
     the min-key representative, even though A→C is distance 2; an
     unmatched name in its own block yields no cluster row. The DuckDB
     recursive-CTE oracle must agree on the same planted fixture."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.check_oracles import compare
 
     rows = [

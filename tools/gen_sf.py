@@ -32,7 +32,7 @@ pyarrow end-to-end: output schemas are byte-identical to the driver's
 exactly like the driver's dirs.
 
 Usage: python tools/gen_sf.py [out_dir] [multiplier]
-       (default /root/repo/.localdata/sf1, 10)
+       (default .localdata/sf1 in this checkout, 10)
 """
 
 from __future__ import annotations
@@ -174,7 +174,9 @@ def _replica(
 
 
 def main() -> None:
-    out_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.localdata/sf1"
+    out_dir = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".localdata", "sf1"
+    )
     mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
     os.makedirs(out_dir, exist_ok=True)
     tables = {

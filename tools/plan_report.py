@@ -10,10 +10,12 @@ Usage: python tools/plan_report.py [sf_dir]
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from dasladen_spark.session import get_spark  # noqa: E402
 
@@ -114,7 +116,7 @@ def main() -> None:
             f" {a['scan_cols']} | {a['pushdown']} |"
         )
     lines.append("")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     print("\n".join(lines))
     spark.stop()

@@ -69,9 +69,11 @@ def quality_score(text: Column) -> Column:
     len_term = F.greatest(
         F.lit(0.0), F.lit(1.0) - (avg_tok_len - F.lit(5.0)) * (avg_tok_len - F.lit(5.0)) / F.lit(25.0)
     )
-    n_distinct_tok = F.size(F.array_distinct(F.split(F.trim(text), r"\s+"))).cast(
-        "double"
-    )
+    # distinct \S+ runs, the oracle's spelling: splitting a blank text
+    # yields [""], which would count one token where there is none
+    n_distinct_tok = F.size(
+        F.array_distinct(F.regexp_extract_all(text, F.lit(r"\S+"), F.lit(0)))
+    ).cast("double")
     distinct_ratio = n_distinct_tok / safe_tok
     return F.round(
         F.lit(0.5) * alpha_ratio + F.lit(0.25) * len_term + F.lit(0.25) * distinct_ratio,

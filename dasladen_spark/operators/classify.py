@@ -14,11 +14,11 @@ Spark-first shape:
   fits, co-keyed shuffle otherwise) → per-doc log-likelihood sums.
   The join touches distinct (doc, token) pairs, not occurrences.
 
-Determinism discipline (same as plans/llm3): each per-token
+Determinism discipline (same as plans/text): each per-token
 log-likelihood is ONE double expression rounded to 12 decimals;
 per-doc sums accumulate in DECIMAL(38,18), so the scores are
 bit-identical under any partitioning — and exactly reproducible by
-the DuckDB oracle in plans/llm6.
+the DuckDB oracle in plans/text.
 
 Beyond-reference operator (the reference delegates all query power
 to an RDBMS, /root/reference/dasladen/task.py:94-107).

@@ -17,7 +17,7 @@ are pure-BIGINT argmins with lowest-index tie-breaks, and centroid
 updates are ``Σ zx / (n·Q)`` — one float division from exact
 integers. Every assignment and every centroid is therefore a pure
 function of the corpus that the DuckDB oracle re-derives bit-for-bit
-(plans/llm._kmeans_ctes) — this replaced the round-8 numpy argmin
+(plans/shared.kmeans_ctes) — this replaced the round-8 numpy argmin
 pandas UDF whose float sums were order-dependent at the last bit
 (rows-only then; exact now). A scalar sequential replica is also
 asserted equal in tests/test_operators.py.

@@ -221,7 +221,7 @@ def portable_md5_int(col, hex_chars: int = 8) -> F.Column:
     ``CAST(('0x' || substr(md5(x), 1, <hex_chars>)) AS BIGINT)``.
     The single definition both signature families hash with — a
     change here must change the dedup_minhash_lsh / dedup_simhash
-    oracles in plans/llm.py in lockstep."""
+    oracles in plans/dedup.py in lockstep."""
     return F.conv(F.substring(F.md5(col), 1, hex_chars), 16, 10).cast("bigint")
 
 
@@ -549,7 +549,7 @@ def ngram_jaccard_pairs(
 # any shared run of ≥ k+w-1 tokens is GUARANTEED to surface a shared
 # fingerprint — the guarantee plagiarism / license-contamination
 # audits need. Defaults shared with the dedup_winnowing query and its
-# DuckDB oracle (plans/llm8).
+# DuckDB oracle (plans/dedup).
 
 WINNOW_K = 4  #: shingle width in tokens
 WINNOW_W = 4  #: winnowing window in hashes

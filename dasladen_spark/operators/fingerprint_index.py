@@ -1,6 +1,6 @@
 """Materialized fingerprint index — incremental dedup against history.
 
-The exact-dedup operators (operators/dedup.exact_dedup, plans/llm) all
+The exact-dedup operators (operators/dedup.exact_dedup, plans/dedup) all
 assume the WHOLE corpus is in the frame being deduplicated. That is the
 wrong shape for a production intake pipeline: the history is ~100 TB
 and only a small daily batch arrives. Re-shuffling the full history on

@@ -75,7 +75,7 @@ def heavy_hitters_exact(
         # per merge is charged against >= k2+1 counters, so total
         # undercount <= n_p/(k2+1) — the survival bound the
         # certificate below relies on (it tests the LOOSER n/k2).
-        # ~6-8x the row-loop variant (tools/mg_microbench.py).
+        # ~6-8x the retired row-loop variant (history/MGBENCH_r11.json).
         counters = pd.Series(dtype="int64")
         n_rows = 0
         evicted = False

@@ -21,7 +21,7 @@ DISCRETE decision is first quantized onto an integer lattice
 integer comparisons with explicit lowest-index tie-breaks, and the
 whole fit → encode → ADC-shortlist pipeline is a pure function of
 the corpus that an independent engine (the DuckDB oracle,
-plans/llm6._pq_oracle) reproduces EXACTLY:
+plans/vectors._pq_oracle) reproduces EXACTLY:
 
 - normalize: ``xn = v / max(sqrt(S/Q), 1e-12)`` with
   ``S = Σ floor(v_i² · Q + 0.5)`` (BIGINT — order-free); the only
@@ -390,7 +390,7 @@ def lattice_lloyd_fit(
         # md5-threshold membership (not the xxhash fast path): the
         # SAME predicate spells in ANSI SQL, so the sampled fit is
         # replayable bit-for-bit by the DuckDB oracle
-        # (plans/llm6._pq_oracle fit_fraction)
+        # (plans/vectors._pq_oracle fit_fraction)
         base = base.filter(
             portable_sample_filter(F.col("_id"), fit_fraction, salt=f"{salt}-fit")
         )

@@ -1,7 +1,7 @@
 """Mergeable distinct-count / overlap sketches as reusable operators.
 
 Round 8 proved the estimator math bit-for-bit inside two plan-level
-queries (plans/llm12.q_hll_portable_rollup, text_kmv_gram_overlap);
+queries (plans/sketches.q_hll_portable_rollup, text_kmv_gram_overlap);
 this module promotes it to the operator surface a 100 TB pipeline
 actually calls: build-sketch / merge-sketch / estimate, each a plain
 DataFrame → DataFrame function, plus the ``sketch`` task kind

@@ -1,32 +1,21 @@
 """Query plan library.
 
 Importing this package populates the global query registry with every
-implemented query/operator (one entry per SURVEY.md §2 line). The
-driver contract (``__spark_entry__.py``) reads ``QUERIES`` and
-``ORACLES`` from here.
+implemented query/operator, one module per domain. The driver contract
+(``__spark_entry__.py``) reads ``QUERIES`` and ``ORACLES`` from here.
 """
 
 from dasladen_spark.plans.registry import ORACLES, QUERIES, query  # noqa: F401
 
 # populate the registry
-from dasladen_spark.plans import relational  # noqa: F401,E402
-from dasladen_spark.plans import relational2  # noqa: F401,E402
-from dasladen_spark.plans import relational3  # noqa: F401,E402
-from dasladen_spark.plans import relational4  # noqa: F401,E402
-from dasladen_spark.plans import relational5  # noqa: F401,E402
-from dasladen_spark.plans import relational6  # noqa: F401,E402
-from dasladen_spark.plans import relational7  # noqa: F401,E402
-from dasladen_spark.plans import relational8  # noqa: F401,E402
-from dasladen_spark.plans import llm  # noqa: F401,E402
-from dasladen_spark.plans import llm2  # noqa: F401,E402
-from dasladen_spark.plans import llm3  # noqa: F401,E402
-from dasladen_spark.plans import llm4  # noqa: F401,E402
-from dasladen_spark.plans import llm5  # noqa: F401,E402
-from dasladen_spark.plans import llm6  # noqa: F401,E402
-from dasladen_spark.plans import llm7  # noqa: F401,E402
-from dasladen_spark.plans import llm8  # noqa: F401,E402
-from dasladen_spark.plans import llm9  # noqa: F401,E402
-from dasladen_spark.plans import llm10  # noqa: F401,E402
-from dasladen_spark.plans import llm11  # noqa: F401,E402
-from dasladen_spark.plans import llm12  # noqa: F401,E402
+from dasladen_spark.plans import tpch  # noqa: F401,E402
+from dasladen_spark.plans import sql  # noqa: F401,E402
+from dasladen_spark.plans import windows  # noqa: F401,E402
+from dasladen_spark.plans import analytics  # noqa: F401,E402
+from dasladen_spark.plans import sketches  # noqa: F401,E402
+from dasladen_spark.plans import graph  # noqa: F401,E402
+from dasladen_spark.plans import dedup  # noqa: F401,E402
+from dasladen_spark.plans import vectors  # noqa: F401,E402
+from dasladen_spark.plans import text  # noqa: F401,E402
+from dasladen_spark.plans import curation  # noqa: F401,E402
 from dasladen_spark.plans import transforms_parity  # noqa: F401,E402

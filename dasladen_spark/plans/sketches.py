@@ -1,12 +1,9 @@
-"""LLM-pipeline queries, part 12 — embedding-space curation.
+"""Mergeable sketches and distinct-count rollups: bitmap, HLL, KMV
+and quantile sketches built per partition key and merged, plus
+approximate and exact heavy hitters.
 
-Beyond-reference operators (the reference delegates all query power
-to the RDBMS — SURVEY §2.8): semantic decontamination (the
-paraphrase-robust complement to the n-gram family in llm2/llm6/llm10)
-and greedy k-center coreset selection (embedding-space data pruning).
-Both are exact-oracle queries: every float they rank or threshold on
-is a deterministic left-fold, identical bit-for-bit across Spark and
-DuckDB (see functions/vectors).
+Each sketch is replayed in DuckDB from the same md5-derived hashes, so
+the merged estimates are compared exactly, not within a tolerance.
 """
 
 from __future__ import annotations
@@ -17,248 +14,213 @@ from pyspark.sql import functions as F
 from dasladen_spark.plans.registry import query
 from dasladen_spark.session import load_table as _t
 
-_SEM_TAU = 0.35  # inside the fixture's max-cosine range (p90 ≈ 0.347)
 
-_COS = (
-    "list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2]))"
-    " / (sqrt(list_sum(list_transform({a}, x -> x * x)))"
-    " * sqrt(list_sum(list_transform({b}, x -> x * x))))"
-)
+@query("q_approx_sketches")  # sketch values are impl-specific — rows-only
+def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mergeable sketch aggregates — the 100 TB substitutes for their
+    exact cousins: HLL++ approx_count_distinct (vs COUNT DISTINCT's
+    two-level shuffle) and KLL-style approx_percentile (vs full-sort
+    percentiles). Values are algorithm-specific, so the driver runs
+    the rows-only check; tests/test_operators.py asserts the error
+    bound against the exact answers."""
+    l = _t(spark, sf_dir, "lineitem")
+    return (
+        l.groupBy("l_returnflag")
+        .agg(
+            F.approx_count_distinct("l_orderkey", rsd=0.02).alias("approx_orders"),
+            F.percentile_approx("l_extendedprice", 0.5, 10000).alias("approx_median"),
+        )
+        .orderBy("l_returnflag")
+    )
+
+
+# ----------------------------------- mergeable exact percentiles
 
 
 @query(
-    "decontaminate_semantic",
-    oracle=f"""
-    WITH b AS (
-      SELECT vec_id AS bid, embedding::DOUBLE[] AS bv,
-             sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                          x -> x * x))) AS bn
-      FROM embeddings WHERE vec_id % 11 = 0 AND vec_id < 500
-    ), t AS (
-      SELECT vec_id, embedding::DOUBLE[] AS tv,
-             sqrt(list_sum(list_transform(embedding::DOUBLE[],
-                                          x -> x * x))) AS tn
-      FROM embeddings WHERE NOT (vec_id % 11 = 0 AND vec_id < 500)
-    ), s AS (
-      -- denom guard mirrors the Spark operator (a zero vector scores
-      -- 0.0, never NULL/NaN) so degenerate embeddings in a future
-      -- fixture cannot diverge the engines
-      SELECT t.vec_id, b.bid,
-             CASE WHEN t.tn * b.bn = 0 THEN 0.0
-                  ELSE list_sum(list_transform(list_zip(t.tv, b.bv),
-                                               p -> p[1] * p[2]))
-                       / (t.tn * b.bn)
-             END AS c
-      FROM t CROSS JOIN b
-    ), r AS (
-      SELECT vec_id, bid, c,
-             ROW_NUMBER() OVER (PARTITION BY vec_id
-                                ORDER BY c DESC, bid) AS rn
-      FROM s
+    "q_quantile_mergeable_rollup",
+    oracle="""
+    WITH c AS (
+      SELECT CAST(date_trunc('week', ts) AS TIMESTAMP) AS week,
+             CAST(round(value * 100) AS BIGINT) AS cents
+      FROM events
     )
-    SELECT vec_id, bid AS nearest_bench_id, c AS max_cosine
-    FROM r WHERE rn = 1 AND c >= CAST({_SEM_TAU} AS DOUBLE)
+    SELECT week,
+           CAST(COUNT(*) AS BIGINT) AS n,
+           ROUND(quantile_cont(cents, 0.5) / 100.0, 6) AS p50,
+           ROUND(quantile_cont(cents, 0.95) / 100.0, 6) AS p95
+    FROM c GROUP BY week ORDER BY week
     """,
 )
-def decontaminate_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding-space benchmark decontamination: flag every training
-    vector whose cosine to SOME held-out benchmark vector reaches
-    {_SEM_TAU} — catches the paraphrased eval question that
-    decontaminate_ngrams' exact 8-gram match misses.
+def q_quantile_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT weekly p50/p95 of event values from MERGEABLE per-day
+    value histograms — the quantile sibling of the bitmap distinct
+    rollup: per-day (value → count) partials are what you persist at
+    100 TB; coarser grains merge by adding counts, never by
+    re-scanning events; and the percentile itself is computed
+    DISTRIBUTED — a week-keyed cumulative window over the histogram
+    plus conditional aggregates pick and interpolate the bracketing
+    values, so no task ever sees a week's raw values, only its
+    distinct-value histogram. (Values are canonicalized to cents so
+    the histogram is exact; quantile_cont over the same cents is the
+    oracle.)"""
+    from pyspark.sql import Window
 
-    The benchmark slice is FIXED-SIZE (vec_id % 11 = 0 AND vec_id <
-    500 — the same 46 vectors at every sf): real eval suites don't
-    grow with the training corpus, and a bench side proportional to
-    the corpus would make the pair stream quadratic at scale. With it
-    fixed, cost is a single linear corpus scan per probe batch.
-
-    Scale shape: benchmark side broadcast, corpus scanned once, the
-    only corpus-keyed exchange is the partially-aggregated per-vector
-    max (operators/decontaminate.semantic_contamination)."""
-    from dasladen_spark.operators.decontaminate import (
-        semantic_contamination,
-    )
-
-    e = _t(spark, sf_dir, "embeddings")
-    is_bench = (F.col("vec_id") % 11 == 0) & (F.col("vec_id") < 500)
-    return semantic_contamination(
-        e.filter(~is_bench),
-        e.filter(is_bench),
-        threshold=_SEM_TAU,
-    )
-
-
-# ---------------------------------------- ANN-prefiltered decontamination
-
-_SEM_ANN_TABLES = 48  #: 48 tables: candidate parity with the exact
-#: path on the fixture at τ=0.35 (verified at sf0.001/0.01;
-#: production τ ≥ 0.8 needs far fewer — low thresholds are the hard
-#: LSH regime)
-#: bucket width is DATA-ADAPTIVE (least b in [4, 8] with n/2^b ≤ 500,
-#: operators/dedup.auto_lsh_bits): 4 bits through sf0.1 (geometry
-#: identical to round 11 at every sf the driver grades), wider as the
-#: corpus grows so the bucket-collision candidate stream stays
-#: LINEAR in n — the fixed 4-bit geometry measured 30× cost for 10×
-#: rows at sf1. Both engines derive b from the same COUNT(*).
-_SEM_ANN_BITS = 4  # lo clamp
-_SEM_ANN_BITS_MAX = 8  # hi clamp (bounds the seeded plane prefix)
-_SEM_ANN_TARGET = 500  # target bucket occupancy
-
-
-def _semantic_ann_oracle() -> str:
-    """The LSH candidate set replayed EXACTLY in SQL — possible
-    because bucket membership is quantized-integer (operators/dedup
-    hyperplane_table_buckets: sign of Σ floor(x·c·1e6 + 0.5), integer
-    sums commute): the oracle derives the same COUNT(*)-stepped
-    bucket width b, computes the same 48·b plane dots (a prefix of
-    the fixed seeded stream), packs the same b-bit buckets, joins
-    candidates on (table, bucket), and exact-rescores the survivors
-    with the same guarded cosine — the MinHash playbook applied to
-    the hyperplane family, now with data-adaptive geometry."""
-    from dasladen_spark.operators.dedup import (
-        auto_lsh_bits_sql,
-        hyperplane_buckets_oracle_cte,
-    )
-
-    norm = "sqrt(list_sum(list_transform({v}, x -> x * x)))"
-    tn, bn = norm.format(v="te.v"), norm.format(v="be.v")
-    cte = hyperplane_buckets_oracle_cte(
-        _SEM_ANN_TABLES,
-        _SEM_ANN_BITS_MAX,
-        64,
-        bits_sql=auto_lsh_bits_sql(
-            "SELECT COUNT(*) FROM embeddings",
-            target_bucket=_SEM_ANN_TARGET,
-            lo=_SEM_ANN_BITS,
-            hi=_SEM_ANN_BITS_MAX,
-        ),
-    )
-    return f"""
-    WITH e AS MATERIALIZED (
-      SELECT vec_id, embedding::DOUBLE[] AS v,
-             (vec_id % 11 = 0 AND vec_id < 500) AS is_b
-      FROM embeddings
-    ), {cte},
-    cand AS MATERIALIZED (
-      SELECT DISTINCT a.vec_id AS tid, b.vec_id AS bid
-      FROM buckets a
-      JOIN buckets b ON a.t = b.t AND a.bkt = b.bkt
-      JOIN e ea ON ea.vec_id = a.vec_id
-      JOIN e eb ON eb.vec_id = b.vec_id
-      WHERE NOT ea.is_b AND eb.is_b
-    ), s AS (
-      SELECT c.tid AS vec_id, c.bid,
-             CASE WHEN {tn} * {bn} = 0 THEN 0.0
-                  ELSE list_sum(list_transform(list_zip(te.v, be.v),
-                                               q -> q[1] * q[2]))
-                       / ({tn} * {bn})
-             END AS c
-      FROM cand c
-      JOIN e te ON te.vec_id = c.tid
-      JOIN e be ON be.vec_id = c.bid
-    ), r AS (
-      SELECT vec_id, bid, c,
-             ROW_NUMBER() OVER (PARTITION BY vec_id
-                                ORDER BY c DESC, bid) AS rn
-      FROM s
-    )
-    SELECT vec_id, bid AS nearest_bench_id, c AS max_cosine
-    FROM r WHERE rn = 1 AND c >= CAST({_SEM_TAU} AS DOUBLE)
-    """
-
-
-@query("decontaminate_semantic_ann", oracle=_semantic_ann_oracle())
-def decontaminate_semantic_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """decontaminate_semantic's at-scale shape: the same flags, but
-    the |train|·|bench| pair stream is prefiltered through the shared
-    random-hyperplane kernel — only pairs sharing a (table, bucket)
-    are exact-rescored. With a realistic 100k-question eval suite the
-    exact BroadcastNestedLoopJoin multiplies the corpus scan 2000×;
-    this path bounds the rescore to bucket collisions. EXACT oracle:
-    the quantized-integer bucket hash replays bit-for-bit in DuckDB
-    (see _semantic_ann_oracle), so even the approximate candidate set
-    is verified, not just spot-checked — at the fixture geometry the
-    output additionally EQUALS the exact path's
-    (tests/test_operators parity test)."""
-    from dasladen_spark.operators.decontaminate import (
-        semantic_contamination,
-    )
-    from dasladen_spark.operators.dedup import auto_lsh_bits
-
-    e = _t(spark, sf_dir, "embeddings")
-    is_bench = (F.col("vec_id") % 11 == 0) & (F.col("vec_id") < 500)
-    return semantic_contamination(
-        e.filter(~is_bench),
-        e.filter(is_bench),
-        threshold=_SEM_TAU,
-        method="ann",
-        num_tables=_SEM_ANN_TABLES,
-        # same COUNT(*)-stepped width the oracle derives in SQL
-        bits_per_table=auto_lsh_bits(
-            e.count(),
-            target_bucket=_SEM_ANN_TARGET,
-            lo=_SEM_ANN_BITS,
-            hi=_SEM_ANN_BITS_MAX,
-        ),
-    )
-
-
-_CORESET_K = 8
-
-
-def _kcenter_oracle(k: int) -> str:
-    """Unrolled greedy k-center: round i's distance table is round
-    i-1's with a least() against the newest pick. Every round is AS
-    MATERIALIZED — without it DuckDB re-inlines each round into the
-    next and the plan goes exponential (the kcore/pagerank lesson)."""
-    d2 = (
-        "list_sum(list_transform(list_zip({a}, {b}),"
-        " q -> (q[1] - q[2]) * (q[1] - q[2])))"
-    )
-    parts = [
-        "WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v"
-        " FROM embeddings)",
-        "c0 AS MATERIALIZED (SELECT vec_id, v FROM e ORDER BY vec_id"
-        " LIMIT 1)",
-        "d1 AS MATERIALIZED (SELECT e.vec_id, e.v, "
-        + d2.format(a="e.v", b="c.v")
-        + " AS d2 FROM e, c0 c)",
-    ]
-    for i in range(1, k):
-        parts.append(
-            f"p{i} AS MATERIALIZED (SELECT vec_id, v, d2 FROM d{i}"
-            f" ORDER BY d2 DESC, vec_id LIMIT 1)"
+    e = _t(spark, sf_dir, "events")
+    daily = (
+        e.select(
+            F.date_trunc("week", "ts").alias("week"),
+            F.date_trunc("day", "ts").alias("day"),
+            F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
-        if i < k - 1:
-            parts.append(
-                f"d{i + 1} AS MATERIALIZED (SELECT d.vec_id, d.v,"
-                f" least(d.d2, " + d2.format(a="d.v", b="p.v") + ") AS d2"
-                f" FROM d{i} d, p{i} p)"
-            )
-    selects = [
-        "SELECT CAST(0 AS INTEGER) AS pick_order, vec_id,"
-        " CAST(NULL AS DOUBLE) AS d2 FROM c0"
-    ] + [
-        f"SELECT CAST({i} AS INTEGER), vec_id, d2 FROM p{i}"
-        for i in range(1, k)
-    ]
-    return ",\n".join(parts) + "\n" + "\nUNION ALL ".join(selects)
-
-
-@query("sample_coreset_kcenter", oracle=_kcenter_oracle(_CORESET_K))
-def sample_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center coreset over the embedding corpus: 8 picks
-    that COVER the space (maximize the minimum pairwise distance)
-    rather than sample it — the standard seed for data pruning and
-    diverse eval-set selection. Exact-oracle despite being iterative:
-    the squared-distance fold is deterministic, so the full greedy
-    trajectory replays in the unrolled SQL (operators/sampling
-    kcenter_coreset; k bounded driver collects of ONE row each)."""
-    from dasladen_spark.operators.sampling import kcenter_coreset
-
-    return kcenter_coreset(
-        _t(spark, sf_dir, "embeddings"), k=_CORESET_K
+        .groupBy("week", "day", "cents")
+        .agg(F.count(F.lit(1)).alias("n"))
     )
+    # the day→week merge: counts ADD (the mergeability property)
+    hist = daily.groupBy("week", "cents").agg(F.sum("n").alias("n"))
+    w = Window.partitionBy("week").orderBy("cents")
+    hist = hist.withColumn("cum", F.sum("n").over(w))
+    tot = hist.groupBy("week").agg(F.sum("n").alias("tot"))
+    h = hist.join(tot, "week")
+
+    def quantile(q: float):
+        pos = (F.col("tot") - 1) * F.lit(q)
+        lo = F.floor(pos)
+        frac = pos - lo
+        v_lo = F.min(F.when(F.col("cum") > lo, F.col("cents")))
+        v_hi = F.min(F.when(F.col("cum") > lo + 1, F.col("cents")))
+        # top rank: lo+1 may exceed the last index — fall back to v_lo
+        interp = v_lo + (F.coalesce(v_hi, v_lo) - v_lo) * F.first(frac)
+        return F.round(interp / 100.0, 6)
+
+    return (
+        h.groupBy("week")
+        .agg(
+            F.first("tot").cast("bigint").alias("n"),
+            quantile(0.5).alias("p50"),
+            quantile(0.95).alias("p95"),
+        )
+        .select(F.col("week").cast("timestamp").alias("week"), "n", "p50", "p95")
+        .orderBy("week")
+    )
+
+
+# ------------------------------------- mergeable distinct rollups
+
+
+@query(
+    "q_bitmap_distinct_rollup",
+    oracle="""
+    SELECT CAST(date_trunc('week', ts) AS DATE) AS week,
+           COUNT(DISTINCT user_id) AS distinct_users
+    FROM events GROUP BY 1
+    """,
+)
+def q_bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EXACT weekly distinct users via mergeable per-day bitmaps —
+    the incremental spelling of COUNT(DISTINCT): each day is
+    aggregated once into (bucket → bitmap) partials; coarser grains
+    (week here; month/all-time identically) are bitmap_or merges of
+    the partials, never a rescan of the raw events. At 100 TB the
+    daily partials are what you persist; the weekly rollup touches
+    |days × buckets| rows. Values are exact, so the DuckDB
+    COUNT(DISTINCT) oracle matches bit-for-bit."""
+    e = _t(spark, sf_dir, "events")
+    daily = (
+        e.select(
+            F.date_trunc("week", "ts").cast("date").alias("week"),
+            F.date_trunc("day", "ts").alias("day"),
+            F.bitmap_bucket_number("user_id").alias("bucket"),
+            F.bitmap_bit_position("user_id").alias("pos"),
+        )
+        .groupBy("week", "day", "bucket")
+        .agg(F.bitmap_construct_agg("pos").alias("bm"))
+    )
+    weekly = daily.groupBy("week", "bucket").agg(
+        F.bitmap_or_agg("bm").alias("bm")
+    )
+    return (
+        weekly.groupBy("week")
+        .agg(F.sum(F.bitmap_count("bm")).alias("distinct_users"))
+        .select(
+            # timestamp, not date: the comparator renders DuckDB DATE
+            # as a pandas Timestamp
+            F.col("week").cast("timestamp").alias("week"),
+            "distinct_users",
+        )
+        .orderBy("week")
+    )
+
+
+@query("q_hll_mergeable_rollup")  # sketch estimates are impl-specific —
+# rows-only; tests/test_operators.py::test_hll_rollup_error_bounds
+# asserts every weekly estimate within 5% of the exact bitmap answer
+def q_hll_mergeable_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Weekly distinct users via Datasketches HLL — the
+    APPROXIMATE sibling of q_bitmap_distinct_rollup for when even the
+    bitmaps are too big (user space in the billions): per-day sketches
+    (hll_sketch_agg) are a few KB each regardless of cardinality, and
+    the weekly rollup is hll_union_agg over them. Same
+    never-rescan-history shape, bounded error instead of exact."""
+    e = _t(spark, sf_dir, "events")
+    daily = (
+        e.select(
+            F.date_trunc("week", "ts").cast("date").alias("week"),
+            F.date_trunc("day", "ts").alias("day"),
+            "user_id",
+        )
+        .groupBy("week", "day")
+        .agg(F.hll_sketch_agg("user_id").alias("sk"))
+    )
+    return (
+        daily.groupBy("week")
+        .agg(
+            F.hll_sketch_estimate(F.hll_union_agg("sk")).alias(
+                "approx_distinct_users"
+            )
+        )
+        .select(
+            F.col("week").cast("timestamp").alias("week"),
+            "approx_distinct_users",
+        )
+        .orderBy("week")
+    )
+
+
+# ---------------------------------------------- heavy hitters
+
+
+@query(
+    "text_heavy_hitter_terms",
+    oracle="""
+    WITH t AS (
+      SELECT unnest(regexp_extract_all(lower(text), '[a-z0-9]+')) AS tok
+      FROM documents
+    )
+    SELECT tok, COUNT(*) AS freq FROM t
+    GROUP BY tok ORDER BY freq DESC, tok LIMIT 20
+    """,
+)
+def text_heavy_hitter_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 corpus terms WITHOUT shuffling the vocabulary: per-
+    partition Misra-Gries candidate summaries (bounded memory, one
+    pass) → broadcast-semi-join exact recount → self-certifying
+    exactness check (operators/frequency). The naive groupBy-count
+    shuffles one row per distinct term — the full vocabulary at
+    100 TB; this plan shuffles O(partitions × k·slack) candidates,
+    and the DuckDB oracle proves the certified result IS the exact
+    answer."""
+    from dasladen_spark.operators.frequency import heavy_hitters_exact
+
+    d = _t(spark, sf_dir, "documents")
+    toks = d.select(
+        F.explode(
+            F.regexp_extract_all(
+                F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0)
+            )
+        ).alias("tok")
+    )
+    return heavy_hitters_exact(toks, "tok", k=20, slack=8)
 
 
 # -------------------------------------------------- portable HLL rollup

@@ -1,16 +1,14 @@
-"""Relational query library, part 3: the remaining TPC-H query
-shapes, adapted to the fixture schema (no partsupp / commitdate /
-shipmode columns — each query keeps the *plan shape* of its TPC-H
-counterpart on the columns that exist).
+"""TPC-H query shapes over the fixture schema.
 
-Same exact-hash discipline as relational.py: SUMs over doubles go
-through DECIMAL, averages are decimal-sum / count, top-k orders carry
-a unique-key tiebreak. The reference delegates all of this to its
-backing RDBMS (/root/reference/dasladen/task.py:94-107,180); here
-Spark SQL is that engine.
+The fixture has no partsupp, commitdate or shipmode columns, so each
+query keeps the *plan shape* of its TPC-H counterpart on the columns
+that exist. The reference pushes this SQL to its backing RDBMS
+(``dasladen/task.py``); here Spark SQL is that engine.
 
-Scale notes are per-query docstrings: which joins broadcast, where
-the shuffles are, and what changes at 100 TB.
+Exact-hash discipline (see the registry docstring): SUMs over doubles
+go through DECIMAL, averages are decimal sum / count, and top-k orders
+carry a unique-key tiebreak. Scale notes (which joins broadcast, where
+the shuffles are) are in each query's docstring.
 """
 
 from __future__ import annotations
@@ -19,13 +17,339 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dasladen_spark.plans.registry import query
-from dasladen_spark.plans.relational import (
-    _SQL_DISC_PRICE,
-    _dec,
-    _disc_price,
-    _ts,
-)
+from dasladen_spark.plans.shared import DISC_PRICE_SQL, dec, disc_price
 from dasladen_spark.session import load_table as _t
+
+
+def _ts(s: str):
+    return F.lit(s).cast("timestamp_ntz")
+
+
+def _charge():
+    return (
+        F.col("l_extendedprice")
+        * (F.lit(1.0) - F.col("l_discount"))
+        * (F.lit(1.0) + F.col("l_tax"))
+    ).cast("decimal(18,6)")
+
+
+_SQL_CHARGE = (
+    "CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax) AS DECIMAL(18,6))"
+)
+
+
+# --------------------------------------------------------------- scans
+
+
+@query(
+    "scan_filter_project",
+    oracle="""
+    SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
+    FROM lineitem
+    WHERE l_quantity > 45 AND l_returnflag = 'R'
+    """,
+)
+def scan_filter_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Filter + projection — must push down to the parquet scan
+    (PushedFilters + 4-column ReadSchema in .explain)."""
+    return (
+        _t(spark, sf_dir, "lineitem")
+        .filter((F.col("l_quantity") > 45) & (F.col("l_returnflag") == "R"))
+        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice")
+    )
+
+
+# ---------------------------------------------------------- aggregates
+
+
+@query(
+    "q1_pricing_summary",
+    oracle=f"""
+    SELECT l_returnflag, l_linestatus,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS sum_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DECIMAL(38,4)) AS sum_base_price,
+           CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS sum_disc_price,
+           CAST(SUM({_SQL_CHARGE}) AS DECIMAL(38,6)) AS sum_charge,
+           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_qty,
+           CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE) / COUNT(*) AS avg_price,
+           COUNT(*) AS count_order
+    FROM lineitem
+    WHERE l_shipdate <= TIMESTAMP '2000-09-02'
+    GROUP BY l_returnflag, l_linestatus
+    """,
+)
+def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q1 shape: scan + partial/final hash aggregate (map-side
+    combine is automatic; 6 groups → tiny shuffle)."""
+    l = _t(spark, sf_dir, "lineitem").filter(
+        F.col("l_shipdate") <= _ts("2000-09-02")
+    )
+    return l.groupBy("l_returnflag", "l_linestatus").agg(
+        F.sum(dec("l_quantity")).cast("decimal(38,4)").alias("sum_qty"),
+        F.sum(dec("l_extendedprice")).cast("decimal(38,4)").alias("sum_base_price"),
+        F.sum(disc_price()).cast("decimal(38,6)").alias("sum_disc_price"),
+        F.sum(_charge()).cast("decimal(38,6)").alias("sum_charge"),
+        (F.sum(dec("l_quantity")).cast("double") / F.count(F.lit(1))).alias("avg_qty"),
+        (F.sum(dec("l_extendedprice")).cast("double") / F.count(F.lit(1))).alias(
+            "avg_price"
+        ),
+        F.count(F.lit(1)).alias("count_order"),
+    )
+
+
+# --------------------------------------------------------------- joins
+
+
+@query(
+    "q3_shipping_priority",
+    oracle=f"""
+    SELECT o_orderkey,
+           CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS revenue,
+           o_orderdate, o_orderpriority
+    FROM customer
+    JOIN orders ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    WHERE c_mktsegment = 'BUILDING'
+      AND o_orderdate < TIMESTAMP '1998-03-15'
+      AND l_shipdate > TIMESTAMP '1998-03-15'
+    GROUP BY o_orderkey, o_orderdate, o_orderpriority
+    ORDER BY revenue DESC, o_orderkey
+    LIMIT 10
+    """,
+)
+def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q3 shape: selective dim filter first, fact join second,
+    top-k with deterministic tiebreak. Catalyst broadcasts the
+    filtered customer side under the 64 MB threshold."""
+    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderdate") < _ts("1998-03-15"))
+    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > _ts("1998-03-15"))
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
+        .agg(F.sum(disc_price()).cast("decimal(38,6)").alias("revenue"))
+        .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
+        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
+        .limit(10)
+    )
+
+
+@query(
+    "q5_local_supplier_volume",
+    oracle=f"""
+    SELECT n_name,
+           CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS revenue
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+    JOIN nation   ON s_nationkey = n_nationkey
+    JOIN region   ON n_regionkey = r_regionkey
+    WHERE r_name = 'ASIA'
+      AND o_orderdate >= TIMESTAMP '1996-01-01'
+      AND o_orderdate <  TIMESTAMP '1997-01-01'
+    GROUP BY n_name
+    """,
+)
+def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q5 shape: 6-way join; all dims broadcast, lineitem never
+    shuffles until the final 25-group aggregate."""
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= _ts("1996-01-01"))
+        & (F.col("o_orderdate") < _ts("1997-01-01"))
+    )
+    l = _t(spark, sf_dir, "lineitem")
+    s = _t(spark, sf_dir, "supplier")
+    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    r = F.broadcast(_t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA"))
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
+        .join(c, (o.o_custkey == c.c_custkey) & (c.c_nationkey == s.s_nationkey))
+        .join(n, s.s_nationkey == n.n_nationkey)
+        .join(r, n.n_regionkey == r.r_regionkey)
+        .groupBy("n_name")
+        .agg(F.sum(disc_price()).cast("decimal(38,6)").alias("revenue"))
+    )
+
+
+@query(
+    "q10_returned_items",
+    oracle=f"""
+    SELECT c_custkey, c_name,
+           CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS revenue,
+           c_acctbal, n_name
+    FROM customer
+    JOIN orders   ON c_custkey = o_custkey
+    JOIN lineitem ON l_orderkey = o_orderkey
+    JOIN nation   ON c_nationkey = n_nationkey
+    WHERE o_orderdate >= TIMESTAMP '1997-10-01'
+      AND o_orderdate <  TIMESTAMP '1998-01-01'
+      AND l_returnflag = 'R'
+    GROUP BY c_custkey, c_name, c_acctbal, n_name
+    ORDER BY revenue DESC, c_custkey
+    LIMIT 20
+    """,
+)
+def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q10 shape: returned-item revenue per customer, top 20."""
+    c = _t(spark, sf_dir, "customer")
+    o = _t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= _ts("1997-10-01"))
+        & (F.col("o_orderdate") < _ts("1998-01-01"))
+    )
+    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = F.broadcast(_t(spark, sf_dir, "nation"))
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .join(n, c.c_nationkey == n.n_nationkey)
+        .groupBy("c_custkey", "c_name", "c_acctbal", "n_name")
+        .agg(F.sum(disc_price()).cast("decimal(38,6)").alias("revenue"))
+        .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
+        .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
+        .limit(20)
+    )
+
+
+@query(
+    "q15_top_supplier",
+    oracle=f"""
+    WITH rev AS (
+      SELECT l_suppkey,
+             CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS total_revenue
+      FROM lineitem
+      WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        AND l_shipdate <  TIMESTAMP '1997-04-01'
+      GROUP BY l_suppkey
+    )
+    SELECT s_suppkey, s_name, total_revenue
+    FROM supplier JOIN rev ON s_suppkey = l_suppkey
+    WHERE total_revenue = (SELECT MAX(total_revenue) FROM rev)
+    ORDER BY s_suppkey
+    """,
+)
+def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q15 shape: aggregate subquery + scalar-max filter.
+    Decimal revenue makes the equality join against MAX exact."""
+    l = _t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= _ts("1997-01-01"))
+        & (F.col("l_shipdate") < _ts("1997-04-01"))
+    )
+    rev = l.groupBy("l_suppkey").agg(
+        F.sum(disc_price()).cast("decimal(38,6)").alias("total_revenue")
+    )
+    mx = rev.agg(F.max("total_revenue").alias("__mx"))
+    s = _t(spark, sf_dir, "supplier")
+    return (
+        rev.join(F.broadcast(mx), rev.total_revenue == F.col("__mx"))
+        .join(s, rev.l_suppkey == s.s_suppkey)
+        .select("s_suppkey", "s_name", "total_revenue")
+        .orderBy("s_suppkey")
+    )
+
+
+@query(
+    "q6_forecast_revenue",
+    oracle=f"""
+    SELECT CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
+                AS DECIMAL(38,6)) AS revenue,
+           COUNT(*) AS n_items
+    FROM lineitem
+    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+      AND l_shipdate <  TIMESTAMP '1998-01-01'
+      AND l_discount >= 0.03 AND l_discount <= 0.07
+      AND l_quantity < 24
+    """,
+)
+def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q6 shape: pure pushed-down filter + global aggregate —
+    zero shuffles beyond the single-row partial-agg exchange."""
+    l = _t(spark, sf_dir, "lineitem").filter(
+        (F.col("l_shipdate") >= _ts("1997-01-01"))
+        & (F.col("l_shipdate") < _ts("1998-01-01"))
+        & (F.col("l_discount") >= 0.03)
+        & (F.col("l_discount") <= 0.07)
+        & (F.col("l_quantity") < 24)
+    )
+    return l.agg(
+        F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(18,6)"))
+        .cast("decimal(38,6)")
+        .alias("revenue"),
+        F.count(F.lit(1)).alias("n_items"),
+    )
+
+
+@query(
+    "q4_order_priority",
+    oracle="""
+    SELECT o_orderpriority, COUNT(*) AS order_count
+    FROM orders
+    WHERE o_orderdate >= TIMESTAMP '1997-01-01'
+      AND o_orderdate <  TIMESTAMP '1997-04-01'
+      AND EXISTS (SELECT 1 FROM lineitem
+                  WHERE l_orderkey = o_orderkey
+                    AND l_shipdate > o_orderdate + INTERVAL 60 DAY)
+    GROUP BY o_orderpriority
+    """,
+)
+def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q4 shape: EXISTS with a correlated range condition →
+    left-semi join with a residual predicate."""
+    o = _t(spark, sf_dir, "orders").filter(
+        (F.col("o_orderdate") >= _ts("1997-01-01"))
+        & (F.col("o_orderdate") < _ts("1997-04-01"))
+    )
+    l = _t(spark, sf_dir, "lineitem")
+    slow = o.join(
+        l,
+        on=[
+            o.o_orderkey == l.l_orderkey,
+            l.l_shipdate > F.col("o_orderdate") + F.expr("INTERVAL 60 DAY"),
+        ],
+        how="left_semi",
+    )
+    return slow.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("order_count"))
+
+
+@query(
+    "q18_large_orders",
+    oracle="""
+    WITH big AS (
+      SELECT l_orderkey, CAST(SUM(CAST(l_quantity AS DECIMAL(18,4)))
+                              AS DECIMAL(38,4)) AS total_qty
+      FROM lineitem GROUP BY l_orderkey
+      HAVING SUM(CAST(l_quantity AS DECIMAL(18,4))) > 250
+    )
+    SELECT c_custkey, c_name, o_orderkey, o_totalprice, total_qty
+    FROM big
+    JOIN orders   ON o_orderkey = l_orderkey
+    JOIN customer ON c_custkey = o_custkey
+    ORDER BY o_totalprice DESC, o_orderkey
+    LIMIT 50
+    """,
+)
+def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TPC-H Q18 shape: HAVING aggregate feeding a join, then top-k.
+    The aggregate runs FIRST (shrinks lineitem to qualifying orders)
+    so the join inputs are minimal — the at-scale ordering."""
+    l = _t(spark, sf_dir, "lineitem")
+    big = (
+        l.groupBy("l_orderkey")
+        .agg(F.sum(dec("l_quantity")).cast("decimal(38,4)").alias("total_qty"))
+        .filter(F.col("total_qty") > 250)
+    )
+    o = _t(spark, sf_dir, "orders")
+    c = _t(spark, sf_dir, "customer")
+    return (
+        big.join(o, big.l_orderkey == o.o_orderkey)
+        .join(c, o.o_custkey == c.c_custkey)
+        .select("c_custkey", "c_name", "o_orderkey", "o_totalprice", "total_qty")
+        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
+        .limit(50)
+    )
 
 
 @query(
@@ -33,7 +357,7 @@ from dasladen_spark.session import load_table as _t
     oracle=f"""
     SELECT sn.n_name AS supp_nation, cn.n_name AS cust_nation,
            year(l_shipdate) AS l_year,
-           CAST(SUM({_SQL_DISC_PRICE}) AS DECIMAL(38,6)) AS revenue
+           CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS revenue
     FROM lineitem
     JOIN orders   ON l_orderkey = o_orderkey
     JOIN customer ON o_custkey = c_custkey
@@ -83,7 +407,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cust_nation",
             F.year("l_shipdate").alias("l_year"),
         )
-        .agg(F.sum(_disc_price()).cast("decimal(38,6)").alias("revenue"))
+        .agg(F.sum(disc_price()).cast("decimal(38,6)").alias("revenue"))
     )
 
 
@@ -96,7 +420,7 @@ def q7_nation_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
              / CAST(SUM(volume) AS DOUBLE) AS mkt_share
     FROM (
       SELECT year(o_orderdate) AS o_year,
-             {_SQL_DISC_PRICE} AS volume,
+             {DISC_PRICE_SQL} AS volume,
              sn.n_name AS nat
       FROM lineitem
       JOIN orders    ON l_orderkey = o_orderkey
@@ -147,7 +471,7 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
         .select(
             F.year("o_orderdate").alias("o_year"),
-            _disc_price().alias("volume"),
+            disc_price().alias("volume"),
             "nat",
         )
     )
@@ -235,9 +559,9 @@ def q13_custdist(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q14_promo_revenue",
     oracle=f"""
-    SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {_SQL_DISC_PRICE}
+    SELECT 100.0 * CAST(SUM(CASE WHEN p_type = 'PROMO' THEN {DISC_PRICE_SQL}
                                  ELSE CAST(0 AS DECIMAL(18,6)) END) AS DOUBLE)
-           / CAST(SUM({_SQL_DISC_PRICE}) AS DOUBLE) AS promo_revenue
+           / CAST(SUM({DISC_PRICE_SQL}) AS DOUBLE) AS promo_revenue
     FROM lineitem JOIN part ON l_partkey = p_partkey
     WHERE l_shipdate >= TIMESTAMP '1997-03-01'
       AND l_shipdate <  TIMESTAMP '1997-04-01'
@@ -259,9 +583,9 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             (
                 F.lit(100.0)
                 * F.sum(
-                    F.when(F.col("p_type") == "PROMO", _disc_price()).otherwise(zero)
+                    F.when(F.col("p_type") == "PROMO", disc_price()).otherwise(zero)
                 ).cast("double")
-                / F.sum(_disc_price()).cast("double")
+                / F.sum(disc_price()).cast("double")
             ).alias("promo_revenue")
         )
     )
@@ -320,7 +644,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_q = l.groupBy(F.col("l_partkey").alias("a_partkey")).agg(
         (
             F.lit(0.5)
-            * (F.sum(_dec("l_quantity")).cast("double") / F.count(F.lit(1)))
+            * (F.sum(dec("l_quantity")).cast("double") / F.count(F.lit(1)))
         ).alias("qty_thresh")
     )
     return (
@@ -328,7 +652,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(avg_q, F.col("p_partkey") == F.col("a_partkey"))
         .filter(F.col("l_quantity") < F.col("qty_thresh"))
         .agg(
-            (F.sum(_dec("l_extendedprice")).cast("double") / F.lit(7.0)).alias(
+            (F.sum(dec("l_extendedprice")).cast("double") / F.lit(7.0)).alias(
                 "avg_yearly"
             )
         )
@@ -338,7 +662,7 @@ def q17_small_qty_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "q19_or_predicates",
     oracle=f"""
-    SELECT CAST(SUM({_SQL_DISC_PRICE}) AS DECIMAL(38,6)) AS revenue
+    SELECT CAST(SUM({DISC_PRICE_SQL}) AS DECIMAL(38,6)) AS revenue
     FROM lineitem JOIN part ON p_partkey = l_partkey
     WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 5
            AND l_quantity BETWEEN 1 AND 11)
@@ -372,7 +696,7 @@ def q19_or_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         l.join(F.broadcast(p), l.l_partkey == p.p_partkey)
         .filter(cond)
-        .agg(F.sum(_disc_price()).cast("decimal(38,6)").alias("revenue"))
+        .agg(F.sum(disc_price()).cast("decimal(38,6)").alias("revenue"))
     )
 
 
@@ -403,7 +727,7 @@ def q20_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     excess = (
         l.groupBy("l_suppkey", "l_partkey")
-        .agg(F.sum(_dec("l_quantity")).cast("double").alias("qty"))
+        .agg(F.sum(dec("l_quantity")).cast("double").alias("qty"))
         .filter(F.col("qty") > 60)
         .select("l_suppkey")
     )
@@ -444,7 +768,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_bal = (
         c.filter(F.col("c_acctbal") > 0.0)
         .agg(
-            (F.sum(_dec("c_acctbal")).cast("double") / F.count(F.lit(1))).alias(
+            (F.sum(dec("c_acctbal")).cast("double") / F.count(F.lit(1))).alias(
                 "__avg_bal"
             )
         )
@@ -461,7 +785,7 @@ def q22_idle_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("cohort")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(_dec("c_acctbal")).cast("decimal(38,4)").alias("totacctbal"),
+            F.sum(dec("c_acctbal")).cast("decimal(38,4)").alias("totacctbal"),
         )
     )
 
@@ -506,604 +830,6 @@ def q2_min_balance_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .drop("rn")
-    )
-
-
-@query(
-    "q_percentiles",
-    oracle="""
-    SELECT o_orderpriority,
-           quantile_cont(o_totalprice, 0.5) AS p50,
-           quantile_cont(o_totalprice, 0.95) AS p95,
-           quantile_cont(o_totalprice, 0.99) AS p99
-    FROM orders GROUP BY o_orderpriority
-    """,
-)
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact linear-interpolation percentiles per group (Spark
-    `percentile` ≡ DuckDB `quantile_cont`, bit-identical on doubles).
-    Exact percentiles need the group's values together — one shuffle
-    on the group key; for percentiles *of huge groups* at 100 TB the
-    approx_percentile sketch (mergeable, no sort) is the scale path —
-    see q_approx_sketches."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.expr("percentile(o_totalprice, 0.5)").alias("p50"),
-            F.expr("percentile(o_totalprice, 0.95)").alias("p95"),
-            F.expr("percentile(o_totalprice, 0.99)").alias("p99"),
-        )
-    )
-
-
-@query(
-    "q_histogram",
-    oracle="""
-    SELECT CAST(floor(o_totalprice / 50000.0) AS BIGINT) AS bucket,
-           COUNT(*) AS n,
-           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,4))) AS DECIMAL(38,4))
-             AS total
-    FROM orders GROUP BY 1
-    """,
-)
-def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram via floor binning — the single-shuffle
-    binned aggregate behind every distribution dashboard."""
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy(
-            F.floor(F.col("o_totalprice") / F.lit(50000.0)).alias("bucket")
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec("o_totalprice")).cast("decimal(38,4)").alias("total"),
-        )
-    )
-
-
-@query("q_approx_sketches")  # sketch values are impl-specific — rows-only
-def q_approx_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mergeable sketch aggregates — the 100 TB substitutes for their
-    exact cousins: HLL++ approx_count_distinct (vs COUNT DISTINCT's
-    two-level shuffle) and KLL-style approx_percentile (vs full-sort
-    percentiles). Values are algorithm-specific, so the driver runs
-    the rows-only check; tests/test_operators.py asserts the error
-    bound against the exact answers."""
-    l = _t(spark, sf_dir, "lineitem")
-    return (
-        l.groupBy("l_returnflag")
-        .agg(
-            F.approx_count_distinct("l_orderkey", rsd=0.02).alias("approx_orders"),
-            F.percentile_approx("l_extendedprice", 0.5, 10000).alias("approx_median"),
-        )
-        .orderBy("l_returnflag")
-    )
-
-
-@query(
-    "q_funnel",
-    oracle="""
-    WITH stage1 AS (
-      SELECT user_id, MIN(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY user_id
-    ), stage2 AS (
-      SELECT e.user_id, MIN(e.ts) AS t2
-      FROM events e JOIN stage1 s ON e.user_id = s.user_id
-      WHERE e.event_type = 'click' AND e.ts > s.t1
-      GROUP BY e.user_id
-    ), stage3 AS (
-      SELECT e.user_id, MIN(e.ts) AS t3
-      FROM events e JOIN stage2 s ON e.user_id = s.user_id
-      WHERE e.event_type = 'purchase' AND e.ts > s.t2
-      GROUP BY e.user_id
-    )
-    SELECT (SELECT COUNT(*) FROM stage1) AS n_view,
-           (SELECT COUNT(*) FROM stage2) AS n_view_click,
-           (SELECT COUNT(*) FROM stage3) AS n_view_click_purchase
-    """,
-)
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered conversion funnel (view → click → purchase): each
-    stage is a per-user MIN over events after the previous stage's
-    timestamp. Three key-partitioned aggregates on the same user_id
-    key — under AQE the shuffles reuse one partitioning, and no
-    per-user event list is ever collected (the naive
-    collect_list+UDF funnel OOMs on power users at 100 TB).
-
-    s1/s2 persist: each feeds BOTH the next stage's join and its own
-    funnel count, and without the pin the plan re-derives them per
-    consumer — 6 events FileScans in one plan (r12 sweep; the view
-    filter alone scanned 3×). Both frames are user-keyed MINs — ≤
-    |users| narrow rows at any event volume, the bounded-cache class
-    (guide §5), and the saved passes are over the FACT table."""
-    ev = _t(spark, sf_dir, "events")
-    s1 = (
-        ev.filter(F.col("event_type") == "view")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-        .persist()
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-        .persist()
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    return (
-        s1.agg(F.count(F.lit(1)).alias("n_view"))
-        .crossJoin(s2.agg(F.count(F.lit(1)).alias("n_view_click")))
-        .crossJoin(
-            s3.agg(F.count(F.lit(1)).alias("n_view_click_purchase"))
-        )
-    )
-
-
-@query(
-    "q_retention_cohorts",
-    oracle="""
-    WITH firsts AS (
-      SELECT user_id, date_trunc('week', MIN(ts)) AS cohort_week
-      FROM events GROUP BY user_id
-    ), activity AS (
-      SELECT DISTINCT e.user_id, f.cohort_week,
-             datediff('week', f.cohort_week, date_trunc('week', e.ts)) AS week_n
-      FROM events e JOIN firsts f ON e.user_id = f.user_id
-    )
-    SELECT cohort_week, week_n, COUNT(*) AS n_active
-    FROM activity
-    WHERE week_n <= 4
-    GROUP BY cohort_week, week_n
-    """,
-)
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly retention cohorts: users bucketed by first-seen week,
-    counted in each later week they return. Shuffles: one per-user
-    MIN, one distinct on (user, cohort, week) — both on the user_id
-    key."""
-    ev = _t(spark, sf_dir, "events")
-    firsts = ev.groupBy("user_id").agg(
-        F.date_trunc("week", F.min("ts")).alias("cohort_week")
-    )
-    activity = (
-        ev.join(firsts, "user_id")
-        .select(
-            "user_id",
-            "cohort_week",
-            (
-                F.datediff(F.date_trunc("week", F.col("ts")), F.col("cohort_week"))
-                / 7
-            )
-            .cast("long")
-            .alias("week_n"),
-        )
-        .distinct()
-    )
-    return (
-        activity.filter(F.col("week_n") <= 4)
-        .groupBy("cohort_week", "week_n")
-        .agg(F.count(F.lit(1)).alias("n_active"))
-    )
-
-
-@query(
-    "q_merge_upsert",
-    oracle="""
-    WITH updates AS (
-      SELECT o_orderkey, o_custkey, o_orderstatus,
-             o_totalprice * 1.1 AS o_totalprice, o_orderdate,
-             '1-URGENT' AS o_orderpriority, 2 AS v
-      FROM orders WHERE o_orderkey % 100 = 0
-    ), base AS (
-      SELECT *, 1 AS v FROM orders
-    ), unioned AS (
-      SELECT *, 0 AS src FROM base
-      UNION ALL SELECT *, 1 AS src FROM updates
-    ), ranked AS (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY o_orderkey
-                                   ORDER BY v DESC, src DESC) AS rn
-      FROM unioned
-    )
-    SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-           o_orderdate, o_orderpriority, v
-    FROM ranked WHERE rn = 1
-    """,
-)
-def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Versioned last-writer-wins upsert of a derived updates batch
-    into the orders snapshot (operators/merge.py): one key shuffle,
-    idempotent under replay. The updates batch is synthesized from
-    the fixture (every 100th order re-priced) so the oracle can
-    reproduce it."""
-    from dasladen_spark.operators.merge import merge_upsert
-
-    o = _t(spark, sf_dir, "orders").withColumn("v", F.lit(1))
-    updates = (
-        _t(spark, sf_dir, "orders")
-        .filter(F.col("o_orderkey") % 100 == 0)
-        .withColumn("o_totalprice", F.col("o_totalprice") * 1.1)
-        .withColumn("o_orderpriority", F.lit("1-URGENT"))
-        .withColumn("v", F.lit(2))
-    )
-    return merge_upsert(o, updates, "o_orderkey", version_col="v")
-
-
-@query(
-    "q_skew_salted_join",
-    oracle="""
-    SELECT p_brand, COUNT(*) AS n,
-           CAST(SUM(CAST(l_quantity AS DECIMAL(18,4))) AS DECIMAL(38,4))
-             AS total_qty
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_brand
-    """,
-)
-def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The salted-join rewrite (operators/skew.py) must be
-    result-identical to the plain equi-join — proven here against the
-    plain-join oracle. 8-way salt on the fact side, dim replicated
-    8×; the shape that survives a single monster key no AQE split
-    can fix."""
-    from dasladen_spark.operators.skew import salted_join
-
-    l = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
-    p = _t(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("l_partkey"), "p_brand"
-    )
-    return (
-        salted_join(l, p, "l_partkey", salt=8)
-        .groupBy("p_brand")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(_dec("l_quantity")).cast("decimal(38,4)").alias("total_qty"),
-        )
-    )
-
-
-@query(
-    "q_json_agg",
-    oracle="""
-    SELECT event_type,
-           CAST(SUM(CAST(json_extract_string(props, '$.k') AS INT)) AS BIGINT)
-             AS sum_k,
-           COUNT(json_extract_string(props, '$.missing')) AS n_missing_key
-    FROM events
-    GROUP BY event_type
-    """,
-)
-def q_json_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate over JSON-extracted fields (semi-structured props →
-    typed aggregation; missing paths count as NULL on both engines).
-    Extraction runs inside the scan projection — no intermediate
-    materialized JSON table."""
-    ev = _t(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.sum(F.get_json_object("props", "$.k").cast("int"))
-        .cast("bigint")
-        .alias("sum_k"),
-        F.count(F.get_json_object("props", "$.missing")).alias("n_missing_key"),
-    )
-
-
-@query(
-    "q_array_ops",
-    oracle="""
-    WITH per_cust AS (
-      SELECT o_custkey,
-             list_sort(list(o_totalprice)) AS totals
-      FROM orders GROUP BY o_custkey
-    )
-    SELECT o_custkey,
-           len(totals) AS n_orders,
-           totals[1] AS smallest,
-           totals[-1] AS largest,
-           totals[1:3] AS smallest3
-    FROM per_cust
-    """,
-)
-def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array construction + manipulation per group: sorted
-    collect_list, element access, slicing — the nested-type surface
-    (one shuffle on the group key; arrays stay columnar end-to-end)."""
-    per = (
-        _t(spark, sf_dir, "orders")
-        .groupBy("o_custkey")
-        .agg(F.array_sort(F.collect_list("o_totalprice")).alias("totals"))
-    )
-    return per.select(
-        "o_custkey",
-        F.size("totals").alias("n_orders"),
-        F.col("totals")[0].alias("smallest"),
-        F.element_at("totals", -1).alias("largest"),
-        F.slice("totals", 1, 3).alias("smallest3"),
-    )
-
-
-@query(
-    "q_tumbling_window",
-    oracle="""
-    SELECT time_bucket(INTERVAL 10 MINUTE, ts) AS win_start,
-           event_type, COUNT(*) AS n,
-           CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DECIMAL(38,6)) AS total
-    FROM events GROUP BY 1, 2
-    """,
-)
-def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 10-minute windows in batch mode — the same `window()`
-    expression the streaming path uses (windowed_event_counts), here
-    proven equivalent to DuckDB time_bucket. One shuffle on
-    (window, type)."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(F.window("ts", "10 minutes").alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("decimal(38,6)")
-            .alias("total"),
-        )
-        .select(F.col("w.start").alias("win_start"), "event_type", "n", "total")
-    )
-
-
-@query(
-    "q_session_window",
-    oracle="""
-    WITH flagged AS (
-      SELECT user_id, ts,
-             CASE WHEN ts - LAG(ts) OVER (PARTITION BY user_id ORDER BY ts)
-                       > INTERVAL 30 MINUTE
-                  OR LAG(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
-                  THEN 1 ELSE 0 END AS new_session
-      FROM events
-    ), numbered AS (
-      SELECT user_id, ts,
-             SUM(new_session) OVER (PARTITION BY user_id ORDER BY ts
-                                    ROWS UNBOUNDED PRECEDING) AS session_n
-      FROM flagged
-    )
-    SELECT user_id, MIN(ts) AS session_start, MAX(ts) AS session_last,
-           COUNT(*) AS n_events
-    FROM numbered GROUP BY user_id, session_n
-    """,
-)
-def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark's built-in `session_window` (30-min gap) verified
-    against the first-principles gaps-and-islands SQL — the same
-    expression the streaming sessionizer uses, so its batch/stream
-    parity is oracle-checked, not assumed."""
-    ev = _t(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.session_window("ts", "30 minutes").alias("sw"), F.col("user_id")
-        )
-        .agg(
-            F.min("ts").alias("session_start"),
-            F.max("ts").alias("session_last"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-        .select("user_id", "session_start", "session_last", "n_events")
-    )
-
-
-@query(
-    "q_fuzzy_name_match",
-    oracle="""
-    SELECT c.c_custkey AS key_a, c2.c_custkey AS key_b,
-           levenshtein(c.c_name, c2.c_name) AS dist
-    FROM customer c JOIN customer c2
-      ON c.c_custkey < c2.c_custkey
-     AND substr(c.c_name, 1, length(c.c_name) - 2)
-         = substr(c2.c_name, 1, length(c2.c_name) - 2)
-    WHERE levenshtein(c.c_name, c2.c_name) <= 1
-    """,
-)
-def q_fuzzy_name_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Edit-distance entity matching with a blocking key: candidates
-    share everything but their last two characters, then levenshtein
-    scores within the block (a full cross product is quadratic death
-    at any scale) — the standard blocking+scoring record-linkage
-    shape.
-
-    The blocking key choice IS the scale property: it must bound the
-    block size by construction. A fixed short prefix fails on data
-    like these names ('Customer#...'), where a common prefix
-    degenerates every row into ONE block and the join goes quadratic
-    (observed at sf0.1: 15k names → 112M levenshtein pairs). The
-    all-but-last-2 key caps blocks at 100 candidates whatever the
-    table size, so candidate count grows linearly with rows. The
-    stream side of the broadcast join is repartitioned first — a
-    dimension-sized table scans as one task, which would serialize
-    every block's pair expansion × levenshtein on a single core."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    blk = F.expr("substring(c_name, 1, length(c_name) - 2)")
-    a = c.repartition(spark.sparkContext.defaultParallelism).select(
-        F.col("c_custkey").alias("key_a"),
-        F.col("c_name").alias("name_a"),
-        blk.alias("blk"),
-    )
-    b = c.select(
-        F.col("c_custkey").alias("key_b"),
-        F.col("c_name").alias("name_b"),
-        blk.alias("blk"),
-    )
-    return (
-        a.join(b, on=[a.blk == b.blk, F.col("key_a") < F.col("key_b")])
-        .select(
-            "key_a",
-            "key_b",
-            F.levenshtein("name_a", "name_b").alias("dist"),
-        )
-        .filter(F.col("dist") <= 1)
-    )
-
-
-@query(
-    "q_window_navigation",
-    oracle="""
-    SELECT o_orderkey, o_custkey,
-           FIRST_VALUE(o_totalprice) OVER w AS first_price,
-           NTH_VALUE(o_totalprice, 2) OVER w AS second_price,
-           LEAD(o_totalprice, 1, -1.0) OVER w2 AS next_price,
-           LAG(o_totalprice, 2) OVER w2 AS prev2_price
-    FROM orders
-    WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING),
-           w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-    """,
-)
-def q_window_navigation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Window navigation functions (first/nth/lead-with-default/lag)
-    over a deterministic per-customer order — one shuffle on the
-    partition key serves all four."""
-    o = _t(spark, sf_dir, "orders")
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    # lead/lag are frame-less by definition (they address rows by
-    # offset, not frame) — same partitioning, so still one shuffle
-    w2 = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.first("o_totalprice").over(w).alias("first_price"),
-        F.nth_value("o_totalprice", 2).over(w).alias("second_price"),
-        F.lead("o_totalprice", 1, -1.0).over(w2).alias("next_price"),
-        F.lag("o_totalprice", 2).over(w2).alias("prev2_price"),
-    )
-
-
-@query(
-    "q_datetime_breadth",
-    oracle="""
-    SELECT o_orderkey,
-           CAST(o_orderdate + INTERVAL 90 DAY AS TIMESTAMP) AS due_date,
-           CAST(date_trunc('month', o_orderdate) AS TIMESTAMP) AS month_start,
-           CAST(last_day(o_orderdate) AS TIMESTAMP) AS month_end,
-           dayofweek(o_orderdate) + 1 AS dow,
-           CAST(datediff('day', o_orderdate,
-                         TIMESTAMP '2000-01-01') AS INT) AS days_to_y2k,
-           strftime(o_orderdate, '%Y-%m') AS ym
-    FROM orders
-    """,
-)
-def q_datetime_breadth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Datetime function surface: interval arithmetic, truncation,
-    month boundaries, weekday numbering (Spark Sunday=1 vs DuckDB
-    Sunday=0 — aligned in the oracle),
-    date differences, formatting."""
-    o = _t(spark, sf_dir, "orders")
-    return o.select(
-        "o_orderkey",
-        (F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")).alias("due_date"),
-        F.date_trunc("month", "o_orderdate").alias("month_start"),
-        F.last_day("o_orderdate").cast("timestamp_ntz").alias("month_end"),
-        F.dayofweek("o_orderdate").alias("dow"),
-        F.datediff(F.lit("2000-01-01").cast("timestamp_ntz"), F.col("o_orderdate"))
-        .cast("int")
-        .alias("days_to_y2k"),
-        F.date_format("o_orderdate", "yyyy-MM").alias("ym"),
-    )
-
-
-@query(
-    "q_cdc_diff",
-    oracle="""
-    WITH new_snap AS (
-      SELECT o_orderkey,
-             CASE WHEN o_orderkey % 100 = 0 THEN o_totalprice * 1.1
-                  ELSE o_totalprice END AS o_totalprice
-      FROM orders WHERE o_orderkey % 7 <> 0
-    ), old_snap AS (
-      SELECT o_orderkey, o_totalprice FROM orders
-    )
-    SELECT COALESCE(n.o_orderkey, o.o_orderkey) AS o_orderkey,
-           CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-                WHEN n.o_orderkey IS NULL THEN 'delete'
-                WHEN n.o_totalprice IS DISTINCT FROM o.o_totalprice
-                  THEN 'update' END AS change_type
-    FROM new_snap n FULL OUTER JOIN old_snap o USING (o_orderkey)
-    WHERE CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-               WHEN n.o_orderkey IS NULL THEN 'delete'
-               WHEN n.o_totalprice IS DISTINCT FROM o.o_totalprice
-                 THEN 'update' END IS NOT NULL
-    """,
-)
-def q_cdc_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Change-data-capture between snapshots (operators/merge.py
-    snapshot_diff): the new snapshot drops every 7th order (deletes)
-    and re-prices every 100th (updates); the oracle recomputes the
-    same diff with a full-outer join."""
-    from dasladen_spark.operators.merge import snapshot_diff
-
-    old = _t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    new = (
-        old.filter(F.col("o_orderkey") % 7 != 0)
-        .withColumn(
-            "o_totalprice",
-            F.when(
-                F.col("o_orderkey") % 100 == 0, F.col("o_totalprice") * 1.1
-            ).otherwise(F.col("o_totalprice")),
-        )
-    )
-    return snapshot_diff(old, new, "o_orderkey").select(
-        "o_orderkey", "change_type"
-    )
-
-
-@query(
-    "q_interval_overlap",
-    oracle="""
-    WITH iv AS (
-      -- FLOOR matches Spark's unix_timestamp truncation; bare
-      -- epoch() keeps the fractional second on timestamp[ns] input,
-      -- which flips boundary pairs of the overlap predicate (bit at
-      -- sf1: one pair exactly on a truncated-equality boundary)
-      SELECT user_id AS k, CAST(FLOOR(epoch(ts)) AS BIGINT) AS s,
-             CAST(FLOOR(epoch(ts)) AS BIGINT) + (event_id % 604800) AS e,
-             event_id
-      FROM events WHERE event_id % 3 = 0
-    )
-    SELECT a.k, a.event_id AS eid_a, b.event_id AS eid_b
-    FROM iv a JOIN iv b
-      ON a.k = b.k AND a.event_id < b.event_id
-     AND a.s <= b.e AND b.s <= a.e
-    """,
-)
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping interval pairs via grid binning
-    (operators/intervals.py): equi-join on (key, bin) + exact filter,
-    instead of the per-key nested loop the naive predicate join
-    plans. The oracle runs the naive form — identical pairs."""
-    from dasladen_spark.operators.intervals import interval_join
-
-    ev = _t(spark, sf_dir, "events").filter(F.col("event_id") % 3 == 0)
-    iv = ev.select(
-        F.col("user_id").alias("k"),
-        F.unix_timestamp("ts").alias("start"),
-        (F.unix_timestamp("ts") + F.col("event_id") % 604800).alias("end"),
-        "event_id",
-    )
-    out = interval_join(
-        iv.withColumnRenamed("event_id", "eid"),
-        iv.withColumnRenamed("event_id", "eid"),
-        "k",
-        bin_width=86400,
-    )
-    return (
-        out.filter(F.col("eid_a") < F.col("eid_b"))
-        .select("k", "eid_a", "eid_b")
     )
 
 

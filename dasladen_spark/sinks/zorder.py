@@ -8,7 +8,7 @@ the full domain; interleaving the bits of TWO columns' rank buckets
 (the Morton / z-order curve, the layout behind Delta's OPTIMIZE
 ZORDER) keeps BOTH per-file ranges small, so selective predicates on
 either column — or both — skip most files. ``write_zordered`` is the
-writer; ``plans.relational8.q_zorder_locality`` is the oracle-checked
+writer; ``plans.sql.q_zorder_locality`` is the oracle-checked
 audit of the same interleave (``zvalue``) and bucket arithmetic; the pyarrow-footer test in
 ``tests/test_zorder.py`` proves the bbox shrink against a
 single-column sort.

@@ -1,6 +1,6 @@
 """Streaming corpus intake — quality-gated document ingestion.
 
-The batch corpus-cleanup pipeline (plans/llm.py text_corpus_cleanup)
+The batch corpus-cleanup pipeline (plans/text.py text_corpus_cleanup)
 assumes the corpus already landed. This is the front door: documents
 arrive continuously (crawler drops, vendor deliveries), each batch is
 scored with functions/text's quality_score, token_count and

@@ -388,10 +388,10 @@ def test_kmv_overlap_not_full_sketch_is_exact(spark, sf_dir, monkeypatch):
     intersection (effective theta = full hash space, union = merged
     size) — not an extrapolation, and never zero rows (the
     under-filled union rank bug)."""
-    import dasladen_spark.plans.llm12 as llm12
+    import dasladen_spark.plans.sketches as sketches
 
-    monkeypatch.setattr(llm12, "_KMV_K", 1 << 20)
-    row = llm12.text_kmv_gram_overlap(spark, sf_dir).collect()
+    monkeypatch.setattr(sketches, "_KMV_K", 1 << 20)
+    row = sketches.text_kmv_gram_overlap(spark, sf_dir).collect()
     assert len(row) == 1
     r = row[0]
     assert r["est_union"] == float(r["exact_union"])

@@ -1124,7 +1124,7 @@ def test_duplicated_span_coverage_planted(spark):
     20-token docs sharing one contiguous 10-token run must each report
     exactly 10 covered tokens (the 8-gram intervals union back to the
     run), and an unrelated doc reports zero."""
-    from dasladen_spark.plans.llm4 import duplicated_span_coverage
+    from dasladen_spark.operators.dedup import duplicated_span_coverage
 
     shared = " ".join(f"w{i}" for i in range(5, 15))
     doc_a = " ".join(f"w{i}" for i in range(1, 21))
@@ -1778,7 +1778,7 @@ def test_triangle_estimate_tiers_and_identity_at_p1():
     """The Doulion tier table: p=1 through every driver-graded sf
     (estimate == exact census), stepping down only decades above;
     scale factors are the exact integer p^-3."""
-    from dasladen_spark.plans.llm6 import _tri_tier
+    from dasladen_spark.plans.graph import _tri_tier
 
     assert _tri_tier(600) == ("zzzzzzzz", 1)          # sf0.001-ish
     assert _tri_tier(600_000) == ("zzzzzzzz", 1)      # sf0.1

@@ -5,7 +5,9 @@ self-contained and fast)."""
 import duckdb
 import pytest
 
+from dasladen_spark.functions.text import fingerprint, quality_score
 from dasladen_spark.plans import ORACLES, QUERIES
+from dasladen_spark.plans.shared import FP_SQL, QUALITY_SQL
 from dasladen_spark.session import TABLES
 
 SPOT = [
@@ -27,7 +29,9 @@ def duck(sf_dir):
 
 
 def test_every_query_has_callable():
-    assert len(QUERIES) >= 40
+    # 276 queries, 271 of them with a DuckDB oracle (5 are rows-only)
+    assert len(QUERIES) == 276
+    assert len(ORACLES) == 271
     for name in ORACLES:
         assert name in QUERIES
 
@@ -47,15 +51,18 @@ def test_rows_only_queries_run(spark, sf_dir):
         assert n >= 0
 
 
-def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark):
-    """llm4's oracle fingerprint must agree with
-    functions.text.fingerprint on punctuated / multi-space text — a
+@pytest.mark.parametrize(
+    "column_fn, spelling",
+    [(fingerprint, FP_SQL), (quality_score, QUALITY_SQL)],
+    ids=["fingerprint", "quality_score"],
+)
+def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark, column_fn, spelling):
+    """Each oracle spelling in plans/shared must agree with its
+    functions.text Column on punctuated / multi-space / blank text — a
     doubled-backslash spelling once made the oracle's whitespace
-    collapse a no-op, vacuously green on bare lowercase fixtures."""
+    collapse a no-op, and a blank document once scored 0.25 in Spark
+    against 0.0 in DuckDB, both vacuously green on the fixtures."""
     from pyspark.sql import functions as F
-
-    from dasladen_spark.functions.text import fingerprint
-    from dasladen_spark.plans.llm4 import _FP_SQL
 
     texts = [
         "Hello,  world",
@@ -63,6 +70,10 @@ def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark):
         "MiXeD CaSe -- dashes & amps",
         "trailing spaces   ",
         "unicode é accents…",
+        "",
+        "   ",
+        "1234 5678",
+        "!!! ???",
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id BIGINT, text STRING"
@@ -70,7 +81,7 @@ def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark):
     got = {
         r["doc_id"]: r["fp"]
         for r in df.select(
-            "doc_id", fingerprint(F.col("text")).alias("fp")
+            "doc_id", column_fn(F.col("text")).alias("fp")
         ).collect()
     }
     con = duckdb.connect()
@@ -81,7 +92,7 @@ def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark):
     want = {
         r[0]: r[1]
         for r in con.execute(
-            f"SELECT doc_id, {_FP_SQL.format(t='text')} FROM docs"
+            f"SELECT doc_id, {spelling.format(t='text')} FROM docs"
         ).fetchall()
     }
     assert got == want
@@ -147,7 +158,7 @@ def test_lm_perplexity_survives_short_docs(spark, tmp_path):
     builder: Spark's sequence(2, n) DESCENDS for n < 2 and element_at
     then throws — the guard short-circuits them to no bigrams, same
     as the oracle's generate_series semantics."""
-    from dasladen_spark.plans.llm7 import text_lm_perplexity
+    from dasladen_spark.plans.text import text_lm_perplexity
 
     import hashlib
 

@@ -2309,7 +2309,7 @@ def test_pipeline_corpus_e2e_artifacts(spark, tmp_path):
     payload + one metadata sidecar per packed doc."""
     import tarfile
 
-    from dasladen_spark.plans.llm4 import run_corpus_pipeline
+    from dasladen_spark.plans.curation import run_corpus_pipeline
 
     work = tmp_path / "w"
     got = run_corpus_pipeline(spark, "/root/testdata/sf0.001", str(work))

@@ -11,7 +11,9 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from dasladen_spark.plans.llm8 import _WIN_K, _WIN_W, _winnow_fps
+from dasladen_spark.operators.dedup import WINNOW_K as _WIN_K
+from dasladen_spark.operators.dedup import WINNOW_W as _WIN_W
+from dasladen_spark.operators.dedup import winnow_fps_expr as _winnow_fps
 from dasladen_spark.plans.registry import ORACLES, QUERIES
 
 
@@ -79,7 +81,7 @@ def test_winnowing_real_document_lengths_density_and_linearity(spark):
             "doc_id LONG, text STRING",
         )
 
-    from dasladen_spark.plans.llm8 import winnow_fingerprints
+    from dasladen_spark.operators.dedup import winnow_fingerprints
 
     # density at a real length (one doc is enough — the ratio is per-doc)
     n_tok = 5000

@@ -36,6 +36,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dasladen_spark.sinks.commit import replace_dir
+
 
 def resolve_env(value: Any) -> Any:
     """'$env.VAR' → os.environ['VAR'] (taskdriver.py:49-54)."""
@@ -202,12 +204,12 @@ class Connection:
                 writer.option("truncate", "true").mode("overwrite").save()
             else:
                 writer.mode("append").save()
+        elif self.driver == "parquet" and truncate:
+            replace_dir(spark, self.table_path(table), df.write.parquet)
         elif self.driver == "parquet":
-            mode = "overwrite" if truncate else "append"
-            df.write.mode(mode).parquet(self.table_path(table))
+            df.write.mode("append").parquet(self.table_path(table))
         else:  # spark catalog
-            mode = "overwrite" if truncate else "append"
-            df.write.mode(mode).saveAsTable(table)
+            df.write.mode("overwrite" if truncate else "append").saveAsTable(table)
 
 
 class ConnectionRegistry:

@@ -32,11 +32,10 @@ def tokens_col(text_col: str = "text") -> Column:
 
 
 def token_count(text: Column) -> Column:
-    """Whitespace token count (empty/blank text → 0)."""
-    trimmed = F.trim(text)
-    return F.when(trimmed == "", F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))
-    )
+    """Whitespace token count: the number of non-whitespace runs, as
+    the oracles' ``len(regexp_extract_all(text, '\\S+'))`` counts
+    them (empty/blank text → 0)."""
+    return F.size(F.regexp_extract_all(text, F.lit(r"\S+"), F.lit(0)))
 
 
 def normalize_text(text: Column) -> Column:

@@ -28,6 +28,10 @@ def parse_to_int(value, default: int = 0) -> int:
         return default
 
 
+#: the task spec keys whose ``connection`` a task may name
+_CONNECTION_KEYS = ("source", "target", "bench", "train", "queries")
+
+
 class Runner:
     """Wraps one parsed task file (taskrun.py:22-55)."""
 
@@ -77,17 +81,25 @@ class TaskRunner:
     def run(self) -> None:
         items = self.runner.config.get("tasks", [])
         kinds = ["nop" if item.get("disabled") else item.get("type") for item in items]
+        defined = {c["name"] for c in self.runner.config.get("connections") or []}
+        # an unknown task type (reference parity: task.py:599 raises
+        # NotImplementedError) or connection name fails loudly — and
+        # before the first task runs, so a typo'd pipeline neither
+        # skips a stage nor leaves the stages before it written
         for item, task_type in zip(items, kinds):
             if task_type not in TASK_TYPES:
-                # reference parity: an unknown task type fails loudly
-                # (task.py:599 raises NotImplementedError) — and before
-                # the first task runs, so a typo'd pipeline neither
-                # skips a stage nor leaves the stages before it written
                 raise ValueError(
                     f"task {item.get('name')!r}: unknown type"
                     f" {task_type!r}; available:"
                     f" {', '.join(sorted(TASK_TYPES))}"
                 )
+            for key in () if task_type == "nop" else _CONNECTION_KEYS:
+                name = (item.get(key) or {}).get("connection")
+                if name is not None and name not in defined:
+                    raise ValueError(
+                        f"task {item.get('name')!r}: {key} names unknown"
+                        f" connection {name!r}"
+                    )
         for item, task_type in zip(items, kinds):
             fn = TASK_TYPES[task_type]
             t0 = time.time()

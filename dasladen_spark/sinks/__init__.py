@@ -1,4 +1,3 @@
 """Sink writers (SURVEY §2.2): CSV (truncate/append, single-file
-compat), JDBC/parquet via connections."""
-
-from dasladen_spark.sinks.csv import write_csv  # noqa: F401
+compat), JDBC/parquet via connections; every file sink a task reaches
+commits through ``sinks.commit``."""

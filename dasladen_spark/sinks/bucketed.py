@@ -35,10 +35,6 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)
-
-
 def compact_bucketed(
     spark: SparkSession,
     table: str,

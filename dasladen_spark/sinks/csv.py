@@ -5,10 +5,13 @@ header.
 
 Two modes:
 - single_file=True (default, reference parity): coalesce(1) into a
-  temp dir, then move/concatenate into the target path. Right for
-  operational exports; documented as non-scalable.
+  stage beside the target (sinks/commit), then rename or append the
+  part file onto the target path. Right for operational exports;
+  documented as non-scalable.
 - single_file=False (scale mode): a normal partitioned
   `df.write.csv` directory — what a 100 TB result actually needs.
+  Truncate replaces the directory through sinks/commit; append moves
+  the stage's part files into it.
 """
 
 from __future__ import annotations
@@ -16,19 +19,11 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import tempfile
 from typing import Callable
 
 from pyspark.sql import DataFrame
 
-
-def _spark_csv_options(delimiter: str, encoding: str, header: bool) -> dict:
-    return {
-        "header": str(header).lower(),
-        "sep": delimiter,
-        "encoding": encoding,
-        "emptyValue": "",
-    }
+from dasladen_spark.sinks.commit import rename, replace_dir, staged
 
 
 def write_csv(
@@ -40,41 +35,35 @@ def write_csv(
     single_file: bool = True,
     keep: Callable[[], bool] | None = None,
 ) -> None:
-    """Write ``df`` to ``path``. In single-file mode ``keep``, when
-    given, is asked after the Spark job and before the file moves into
-    place; if it returns False the output is discarded and ``path``
-    is left untouched."""
-    if not single_file:
-        (
-            df.write.mode("overwrite" if truncate else "append")
-            .options(**_spark_csv_options(delimiter, encoding, truncate))
-            .csv(path)
-        )
-        return
+    """Write ``df`` to ``path`` through a stage beside it. ``keep``,
+    when given, is asked after the Spark job and before the output
+    moves into place; if it returns False the output is discarded and
+    ``path`` is left untouched."""
+    # header only on truncate — append parity (task.py:202)
+    options = dict(
+        header=str(truncate).lower(), sep=delimiter, encoding=encoding, emptyValue=""
+    )
 
-    tmp = tempfile.mkdtemp(prefix="dasladen_csv_")
-    try:
-        # header only on truncate — append parity (task.py:202)
-        (
-            df.coalesce(1)
-            .write.mode("overwrite")
-            .options(**_spark_csv_options(delimiter, encoding, truncate))
-            .csv(tmp)
-        )
+    def write(stage: str) -> None:
+        (df.coalesce(1) if single_file else df).write.options(**options).csv(stage)
+
+    if not single_file and truncate:
+        replace_dir(df.sparkSession, path, write, keep)
+        return
+    with staged(df.sparkSession, path) as (fs, target, stage):
+        write(stage.toString())
         if keep is not None and not keep():
             return
-        parts = sorted(glob.glob(os.path.join(tmp, "part-*")))
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+        if not single_file:
+            Path = df.sparkSession._jvm.org.apache.hadoop.fs.Path
+            fs.mkdirs(target)
+            for part in fs.globStatus(Path(stage, "part-*")):
+                rename(fs, part.getPath(), Path(target, part.getPath().getName()))
+            return
+        # one task, one part file, with the header even when empty
+        (part,) = glob.glob(os.path.join(stage.toString(), "part-*"))
         if truncate or not os.path.exists(path):
-            if parts:
-                shutil.move(parts[0], path)
-            else:  # empty result still writes the header on truncate
-                with open(path, "w", encoding=encoding) as f:
-                    f.write(delimiter.join(df.columns) + "\n")
+            os.replace(part, path)
         else:
-            with open(path, "ab") as out:
-                for p in parts:
-                    with open(p, "rb") as src:
-                        shutil.copyfileobj(src, out)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            with open(path, "ab") as out, open(part, "rb") as src:
+                shutil.copyfileobj(src, out)

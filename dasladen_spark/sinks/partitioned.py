@@ -16,6 +16,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dasladen_spark.sinks.commit import replace_dir
+
 
 def write_partitioned(
     df: DataFrame,
@@ -45,50 +47,26 @@ def compact(
     AQE advisory partition size uses; exact file sizes depend on
     encoding but land within ~2× of target, which is what matters
     (footer-open overhead is amortized either way)."""
-    total = 0
-    for root, _dirs, files in os.walk(path):
-        total += sum(
-            os.path.getsize(os.path.join(root, f))
+
+    def parquet_files() -> list[str]:
+        return [
+            os.path.join(root, f)
+            for root, _dirs, files in os.walk(path)
             for f in files
             if f.endswith(".parquet")
-        )
+        ]
+
+    total = sum(os.path.getsize(f) for f in parquet_files())
     n_files = max(1, round(total / (target_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    tmp = path.rstrip("/") + ".compact.tmp"
     if partition_cols:
-        cols = (
-            [partition_cols]
-            if isinstance(partition_cols, str)
-            else list(partition_cols)
-        )
-        (
-            df.repartition(n_files, *[F.col(c) for c in cols])
-            .write.mode("overwrite")
-            .partitionBy(*cols)
-            .parquet(tmp)
-        )
+        cols = [partition_cols] if isinstance(partition_cols, str) else partition_cols
+        w = df.repartition(n_files, *cols).write.partitionBy(*cols)
     else:
-        df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    # tmp is fully materialized before the original is touched; the
-    # swap is two renames with the original parked at .bak, so a crash
-    # at ANY point leaves a complete copy readable (at path or .bak) —
-    # an rmtree-then-rename window would lose the canonical path
-    import shutil
-
-    bak = path.rstrip("/") + ".compact.bak"
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    os.rename(path, bak)
-    try:
-        os.rename(tmp, path)
-    except BaseException:
-        os.rename(bak, path)  # roll the original back into place
-        raise
-    shutil.rmtree(bak)
-    written = 0
-    for root, _dirs, files in os.walk(path):
-        written += sum(1 for f in files if f.endswith(".parquet"))
-    return written
+        w = df.repartition(n_files).write
+    # the stage is fully written before path is touched (sinks/commit)
+    replace_dir(spark, path, w.parquet)
+    return len(parquet_files())
 
 
 def write_sorted(

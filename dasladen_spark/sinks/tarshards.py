@@ -58,21 +58,16 @@ def write_tar_shards(
     the task attempt and atomically renames: concurrent attempts of
     the same shard (Spark speculation, a zombie first attempt on a
     shared FS) can never interleave writes into one file — last
-    complete attempt wins the rename, leftover attempt tmps are
-    swept at the next export. Rows stream straight from the sorted
+    complete attempt wins the rename. ``path`` should be a fresh
+    directory: the tar task sink writes into a stage and swaps it in
+    (sinks/commit), so last run's shards and dead attempts' tmps go
+    with the replaced target. Rows stream straight from the sorted
     shuffle into the tar (sortWithinPartitions groups each shard's
     rows key-ordered), so task memory is O(one row), not O(shard).
     Keys must be non-null (the task fails with a pointed error
     otherwise); duplicate keys write duplicate member names, which
     WebDataset loaders treat as one sample — dedupe upstream."""
     os.makedirs(path, exist_ok=True)
-    # a re-export with fewer shards (or different data) must not leave
-    # last run's files — or dead attempts' tmps — mixed in
-    for f in os.listdir(path):
-        if f.startswith("shard-") and (
-            f.endswith(".tar") or ".tar.tmp" in f
-        ):
-            os.remove(os.path.join(path, f))
     meta_cols = list(meta_cols or [])
     shard = (
         F.conv(
@@ -99,12 +94,7 @@ def write_tar_shards(
     def write_partition(it):
         import uuid
 
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        attempt = (
-            str(ctx.taskAttemptId()) if ctx is not None else uuid.uuid4().hex
-        )
+        attempt = uuid.uuid4().hex
         tf = None
         cur = tmp = final = None
 
@@ -154,8 +144,7 @@ def write_tar_shards(
             publish()
         finally:
             # failed attempt: drop the half-written tmp so it cannot
-            # be confused for live output (the sweep above also
-            # catches tmps orphaned by a hard kill)
+            # be confused for live output
             if tf is not None:
                 tf.close()
                 if tmp and os.path.exists(tmp):

@@ -9,9 +9,9 @@ never do.
 
 The emptiness short-circuit keeps the reference's semantics
 (task.py:181 etc.) without a second read of the source (fix per
-SURVEY §4.8): the default single-file csv sink checks after its
-write, and only when the write wrote nothing does `isEmpty()` peek
-at one partition; db and multi-file csv sinks peek before writing.
+SURVEY §4.8): a csv sink checks after its write, and only when the
+write wrote nothing does `isEmpty()` peek at one partition; the db
+sink peeks before writing.
 
 Non-data tasks (zip/unzip/download/ftp/py-exec/custom) stay
 driver-side Python, as in the reference — they are control-plane.
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dasladen_spark.connections import ConnectionRegistry
 from dasladen_spark.metrics import group_stages
+from dasladen_spark.sinks.commit import replace_dir
 from dasladen_spark.sinks.csv import write_csv
 from dasladen_spark.sources.csv import read_csv
 from dasladen_spark.sources.parquet import read_parquet
@@ -137,11 +138,18 @@ def _write_sink(
     kind: str,
     keep: Callable[[], bool] | None = None,
 ) -> None:
-    """Write ``df`` to ``task["target"]`` as format ``kind``; ``keep``
-    goes to the single-file csv sink (see ``write_csv``)."""
+    """Write ``df`` to ``task["target"]`` as format ``kind``. A truncate
+    write to a file target lands beside it and replaces it only once
+    finished (sinks/commit); ``keep`` goes to the csv sink (see
+    ``write_csv``)."""
     tgt = task["target"]
     truncate = bool(tgt.get("truncate", False))
     mode = "overwrite" if truncate else "append"
+    if kind == "db":
+        ctx.connections.get(tgt["connection"]).write_table(
+            df, ctx.spark, tgt["table"], truncate=truncate, schema=tgt.get("schema")
+        )
+        return
     if kind == "csv":
         write_csv(
             df,
@@ -152,17 +160,9 @@ def _write_sink(
             single_file=bool(tgt.get("single_file", True)),
             keep=keep,
         )
-    elif kind == "db":
-        conn = ctx.connections.get(tgt["connection"])
-        conn.write_table(
-            df,
-            ctx.spark,
-            tgt["table"],
-            truncate=truncate,
-            schema=tgt.get("schema"),
-        )
-    elif kind == "json":
-        df.write.mode(mode).json(_tgt_path(ctx, tgt))
+        return
+    if kind == "json":
+        write = df.write.mode(mode).json
     elif kind == "parquet" and tgt.get("zorder"):
         # two-column Morton-clustered layout (sinks/zorder) — file-level
         # min/max skipping on BOTH columns
@@ -176,34 +176,38 @@ def _write_sink(
             )
         from dasladen_spark.sinks.zorder import write_zordered
 
-        write_zordered(
-            df,
-            _tgt_path(ctx, tgt),
-            tuple(tgt["zorder"]),
-            n_files=int(tgt.get("n_files", 8)),
-            mode=mode,
-        )
+        def write(stage: str) -> None:
+            cols, n_files = tuple(tgt["zorder"]), int(tgt.get("n_files", 8))
+            write_zordered(df, stage, cols, n_files=n_files, mode=mode)
+
     elif kind in ("parquet", "orc"):
         w = df.write.mode(mode)
         if tgt.get("partition_by"):
             w = w.partitionBy(*tgt["partition_by"])
-        w.format(kind).save(_tgt_path(ctx, tgt))
+        write = w.format(kind).save
     elif kind == "tar":
         # WebDataset-style shard export (sinks/tarshards) — the
-        # training-loader layout, reachable from task files
+        # training-loader layout, reachable from task files; an
+        # export always replaces its target
         from dasladen_spark.sinks.tarshards import write_tar_shards
 
-        write_tar_shards(
-            df,
-            _tgt_path(ctx, tgt),
-            n_shards=int(tgt.get("n_shards", 8)),
-            key_col=tgt.get("key_field", "key"),
-            payload_col=tgt.get("payload_field", "payload"),
-            ext=tgt.get("ext", "bin"),
-            meta_cols=tgt.get("meta_fields"),
-        )
+        def write(stage: str) -> None:
+            write_tar_shards(
+                df,
+                stage,
+                n_shards=int(tgt.get("n_shards", 8)),
+                key_col=tgt.get("key_field", "key"),
+                payload_col=tgt.get("payload_field", "payload"),
+                ext=tgt.get("ext", "bin"),
+                meta_cols=tgt.get("meta_fields"),
+            )
+
     else:
         raise ValueError(f"unknown sink kind {kind!r}")
+    if truncate or kind == "tar":
+        replace_dir(ctx.spark, _tgt_path(ctx, tgt), write)
+    else:  # append keeps Spark's own per-job commit
+        write(_tgt_path(ctx, tgt))
 
 
 # Every runner but run_etl names the spec key it reads (source, train,
@@ -305,13 +309,13 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     stage must find its input even when an upstream filter
     legitimately empties the stream (round-11's sf1 gate died with
     PATH_NOT_FOUND when the skip swallowed a mid-pipeline stage's
-    input). The default single-file csv sink writes into a temp dir
-    before moving the file into place, so it asks after its job: a
-    write that wrote rows keeps its output at no cost, and only one
-    that wrote none (or ran a module transform) probes the source
-    with ``isEmpty()``. The db and multi-file csv sinks cannot undo a
-    write (a JDBC overwrite truncates before its job starts), so they
-    probe first.
+    input). Two rules decide the skip:
+    - csv writes into a stage beside its target, so it asks after
+      its job: a write that wrote rows keeps its output at no cost,
+      and only one that wrote none (or ran a module transform)
+      probes the source with ``isEmpty()``;
+    - db probes first, because a JDBC truncate runs before its job
+      starts and cannot be staged.
 
     Progress meter parity (ref task.py:197-202: petl logs every
     10,000 rows into the per-task log): a driver-side poller sums the
@@ -323,8 +327,7 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     src_kind, sink_kind = task["type"].split("-")
     df = _read_source(ctx, task, src_kind)
     name = task.get("name")
-    deferred = sink_kind == "csv" and bool(task["target"].get("single_file", True))
-    if sink_kind in ("csv", "db") and not deferred and df.isEmpty():
+    if sink_kind == "db" and df.isEmpty():
         ctx.log(f"task {name}: empty source, skipping write")
         return
     out = _transformed(ctx, task, df)
@@ -367,7 +370,7 @@ def run_etl(ctx: TaskContext, task: dict) -> None:
     poller = threading.Thread(target=poll, daemon=True)
     poller.start()
     try:
-        _write_sink(ctx, task, out, sink_kind, keep=keep if deferred else None)
+        _write_sink(ctx, task, out, sink_kind, keep=keep)
     finally:
         sc.setLocalProperty(_JOB_GROUP, caller_group)
         stop.set()

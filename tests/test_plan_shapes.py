@@ -108,7 +108,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from dasladen_spark.session import load_table
-    from dasladen_spark.sinks.bucketed import read_table, write_bucketed
+    from dasladen_spark.sinks.bucketed import write_bucketed
 
     spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
     for t in ("b_lineitem", "b_orders"):
@@ -120,7 +120,7 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
     write_bucketed(l, "b_lineitem", "l_orderkey", 8, sort_cols="l_orderkey")
     write_bucketed(o, "b_orders", "o_orderkey", 8, sort_cols="o_orderkey")
 
-    bl, bo = read_table(spark, "b_lineitem"), read_table(spark, "b_orders")
+    bl, bo = spark.table("b_lineitem"), spark.table("b_orders")
     # disable broadcast so the tiny test tables take the same SMJ
     # path a 100 TB fact-fact join would
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -195,23 +195,22 @@ def test_compact_crash_between_renames_keeps_data_readable(
     """Kill the swap between rename-to-backup and rename-into-place:
     the canonical path must still hold the complete original data
     (rolled back), never a missing/partial dataset."""
-    import os as _os
-
     from dasladen_spark.session import load_table
+    from dasladen_spark.sinks import commit
     from dasladen_spark.sinks.partitioned import compact
 
     out = str(tmp_path / "frag2")
     load_table(spark, SF, "orders").repartition(16).write.parquet(out)
     rows_before = spark.read.parquet(out).count()
 
-    real_rename = _os.rename
+    real_rename = commit.rename
 
-    def failing_rename(src, dst):
-        if src.endswith(".compact.tmp"):
+    def failing_rename(fs, src, dst):
+        if ".stage-" in src.getName():
             raise OSError("simulated crash mid-swap")
-        return real_rename(src, dst)
+        return real_rename(fs, src, dst)
 
-    monkeypatch.setattr(_os, "rename", failing_rename)
+    monkeypatch.setattr(commit, "rename", failing_rename)
     with pytest.raises(OSError, match="simulated crash"):
         compact(spark, out, target_mb=128)
     monkeypatch.undo()

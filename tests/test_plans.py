@@ -5,7 +5,7 @@ self-contained and fast)."""
 import duckdb
 import pytest
 
-from dasladen_spark.functions.text import fingerprint, quality_score
+from dasladen_spark.functions.text import fingerprint, quality_score, token_count
 from dasladen_spark.plans import ORACLES, QUERIES
 from dasladen_spark.plans.shared import FP_SQL, QUALITY_SQL
 from dasladen_spark.session import TABLES
@@ -53,15 +53,20 @@ def test_rows_only_queries_run(spark, sf_dir):
 
 @pytest.mark.parametrize(
     "column_fn, spelling",
-    [(fingerprint, FP_SQL), (quality_score, QUALITY_SQL)],
-    ids=["fingerprint", "quality_score"],
+    [
+        (fingerprint, FP_SQL),
+        (quality_score, QUALITY_SQL),
+        (token_count, r"len(regexp_extract_all({t}, '\S+'))"),
+    ],
+    ids=["fingerprint", "quality_score", "token_count"],
 )
 def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark, column_fn, spelling):
     """Each oracle spelling in plans/shared must agree with its
     functions.text Column on punctuated / multi-space / blank text — a
     doubled-backslash spelling once made the oracle's whitespace
     collapse a no-op, and a blank document once scored 0.25 in Spark
-    against 0.0 in DuckDB, both vacuously green on the fixtures."""
+    against 0.0 in DuckDB, and a leading tab or newline once counted
+    an empty token in Spark; all were vacuously green on the fixtures."""
     from pyspark.sql import functions as F
 
     texts = [
@@ -74,6 +79,9 @@ def test_fingerprint_oracle_matches_spark_on_punctuated_text(spark, column_fn, s
         "   ",
         "1234 5678",
         "!!! ???",
+        "\tfoo bar",
+        "\nfoo",
+        "foo\n",
     ]
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id BIGINT, text STRING"

@@ -1,6 +1,7 @@
 """End-to-end task tests: JSON task file → DataFrame plan → sink,
 covering the ETL matrix + control-plane tasks (SURVEY §2.5)."""
 
+import hashlib
 import json
 import os
 import tarfile
@@ -401,11 +402,26 @@ def _derby(name):
     }
 
 
-@pytest.mark.parametrize("truncate", [True, False])
-def test_empty_source_leaves_existing_target_byte_identical(spark, workdir, truncate):
+@pytest.mark.parametrize(
+    "truncate, single_file",
+    [
+        pytest.param(True, True, id="True"),
+        pytest.param(False, True, id="False"),
+        pytest.param(True, False, id="multi_file-True"),
+        pytest.param(False, False, id="multi_file-False"),
+    ],
+)
+def test_empty_source_leaves_existing_target_byte_identical(
+    spark, workdir, truncate, single_file
+):
     write_csv_file(workdir / "input" / "src.csv", [])
     out = workdir / "output" / "out.csv"
-    out.write_bytes(b"id;name;qty\r\n9;old;1\n")
+    if single_file:
+        out.write_bytes(b"id;name;qty\r\n9;old;1\n")
+    else:
+        out.mkdir()
+        (out / "part-00000-old.csv").write_bytes(b"id;name;qty\r\n9;old;1\n")
+    before = _snapshot(out)
     logged: list[str] = []
     TaskRunner(
         spark,
@@ -416,7 +432,11 @@ def test_empty_source_leaves_existing_target_byte_identical(spark, workdir, trun
                         "name": "t",
                         "type": "csv-csv",
                         "source": {"file": "src.csv"},
-                        "target": {"file": "out.csv", "truncate": truncate},
+                        "target": {
+                            "file": "out.csv",
+                            "truncate": truncate,
+                            "single_file": single_file,
+                        },
                     }
                 ]
             }
@@ -425,7 +445,8 @@ def test_empty_source_leaves_existing_target_byte_identical(spark, workdir, trun
         output_path=str(workdir / "output"),
         log=logged.append,
     ).run()
-    assert out.read_bytes() == b"id;name;qty\r\n9;old;1\n"
+    assert _snapshot(out) == before
+    assert _hidden(workdir / "output") == []
     assert "task t: empty source, skipping write" in logged
     assert not any("wrote" in m for m in logged)
 
@@ -509,12 +530,21 @@ def _next_job_id(spark) -> int:
     return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
 
 
-@pytest.mark.parametrize("shape", ["csv-csv", "csv-parquet", "parquet-csv", "db-csv"])
-def test_etl_task_launches_one_spark_job(spark, workdir, shape):
+@pytest.mark.parametrize(
+    "shape, single_file",
+    [
+        pytest.param("csv-csv", True, id="csv-csv"),
+        pytest.param("csv-parquet", True, id="csv-parquet"),
+        pytest.param("parquet-csv", True, id="parquet-csv"),
+        pytest.param("db-csv", True, id="db-csv"),
+        pytest.param("csv-csv", False, id="csv-csv-multi_file"),
+    ],
+)
+def test_etl_task_launches_one_spark_job(spark, workdir, shape, single_file):
     """The write is the task's only job: the csv header and the parquet
     footer are read on the driver, a jdbc schema comes from the
-    database, and the single-file csv sink probes for an empty source
-    only when its write wrote nothing."""
+    database, and either csv layout probes for an empty source only
+    when its write wrote nothing."""
     from dasladen_spark.connections import Connection
 
     write_csv_file(workdir / "input" / "src.csv", [(1, "a", 3), (2, "b", 4)])
@@ -535,7 +565,11 @@ def test_etl_task_launches_one_spark_job(spark, workdir, shape):
         "name": "t",
         "type": shape,
         "source": source,
-        "target": {"file": f"out.{sink_kind}", "truncate": True},
+        "target": {
+            "file": f"out.{sink_kind}",
+            "truncate": True,
+            "single_file": single_file,
+        },
     }
     before = _next_job_id(spark)
     run_tasks(spark, workdir, {"connections": [derby], "tasks": [task]})
@@ -578,6 +612,130 @@ def test_empty_stage_still_feeds_chained_pipeline(spark, workdir):
         assert df.count() == 0
     # the terminal csv sink keeps the reference's empty-skip
     assert not (workdir / "output" / "out.csv").exists()
+
+
+def _snapshot(path) -> dict:
+    """Every file under ``path`` (a file or a folder): relative name →
+    md5 of its bytes."""
+    files = [path] if path.is_file() else [p for p in path.rglob("*") if p.is_file()]
+    return {
+        str(f.relative_to(path)): hashlib.md5(f.read_bytes()).hexdigest() for f in files
+    }
+
+
+def _hidden(folder) -> list:
+    """Hidden entries of ``folder``: what a staged write leaves behind."""
+    return sorted(n for n in os.listdir(folder) if n.startswith("."))
+
+
+#: a filter that keeps every row of the 20-row source of the
+#: fault-injection tests below, and one whose job fails mid-write
+_KEEP_ALL = "{qty} >= 0"
+_FAIL = "assert_true({qty} < 10) IS NULL"
+
+
+def _qty_source(spark, workdir, name="src.parquet", null_id=False):
+    rows = [(None if null_id and i == 15 else i, i, f"v{i}", i % 3) for i in range(20)]
+    spark.createDataFrame(
+        rows, "id BIGINT, qty BIGINT, v STRING, grp INT"
+    ).write.parquet(str(workdir / "input" / name))
+
+
+def test_failed_stage_leaves_earlier_stages_and_its_own_output_intact(spark, workdir):
+    """A chained file re-run whose middle stage fails mid-write: the
+    stage before it is rewritten whole, the failed stage's previous
+    output is byte-identical, no stage is left beside any target, and
+    a fixed re-run succeeds."""
+    _qty_source(spark, workdir)
+    out = workdir / "output"
+
+    def chain(check):
+        tasks, source = [], {"file": "src.parquet"}
+        for name in ("s1", "s2", "s3"):
+            tasks.append(
+                {
+                    "name": name,
+                    "type": "parquet-parquet",
+                    "source": source,
+                    "target": {"file": f"{name}.parquet", "truncate": True},
+                }
+            )
+            source = {"file": f"{name}.parquet", "folder": str(out)}
+        tasks[1]["transform"] = {"filter": check}
+        return {"tasks": tasks}
+
+    run_tasks(spark, workdir, chain(_KEEP_ALL))
+    before = {n: _snapshot(out / n) for n in ("s2.parquet", "s3.parquet")}
+    assert all(before.values())
+    with pytest.raises(Exception, match="is not true"):
+        run_tasks(spark, workdir, chain(_FAIL))
+    assert spark.read.parquet(str(out / "s1.parquet")).count() == 20
+    assert {n: _snapshot(out / n) for n in before} == before
+    assert _hidden(out) == []
+    run_tasks(spark, workdir, chain("{qty} < 10"))
+    assert spark.read.parquet(str(out / "s3.parquet")).count() == 10
+    assert _hidden(out) == []
+
+
+#: per sink: task type, target, and the task keys of a re-run whose
+#: job fails
+FAILING_REWRITES = {
+    "json": ("parquet-json", {"file": "out.json"}, {"transform": {"filter": _FAIL}}),
+    "partition_by": (
+        "parquet-parquet",
+        {"file": "out.parquet", "partition_by": ["grp"]},
+        {"transform": {"filter": _FAIL}},
+    ),
+    "zorder": (
+        "parquet-parquet",
+        {"file": "out.parquet", "zorder": ["id", "qty"], "n_files": 2},
+        {"transform": {"filter": _FAIL}},
+    ),
+    "tar": (
+        "parquet-tar",
+        {"file": "shards", "n_shards": 2, "key_field": "id", "payload_field": "v"},
+        {"source": {"file": "nullkey.parquet"}},
+    ),
+    "db_parquet": (
+        "parquet-db",
+        {"connection": "lake", "table": "out"},
+        {"transform": {"filter": _FAIL}},
+    ),
+}
+
+
+@pytest.mark.parametrize("sink", list(FAILING_REWRITES))
+def test_failed_rewrite_leaves_the_target_byte_identical(spark, workdir, sink):
+    """Each staged file sink: a re-run whose job fails leaves the
+    previous output byte-identical and no stage beside it, and a
+    fixed re-run replaces it."""
+    _qty_source(spark, workdir)
+    _qty_source(spark, workdir, "nullkey.parquet", null_id=True)
+    out = workdir / "output"
+    kind, target, failing = FAILING_REWRITES[sink]
+    task = {
+        "name": "t",
+        "type": kind,
+        "source": {"file": "src.parquet"},
+        "target": {**target, "truncate": True},
+        "transform": {"filter": _KEEP_ALL},
+    }
+    config = {
+        "connections": [{"name": "lake", "driver": "parquet", "path": str(out)}],
+        "tasks": [task],
+    }
+    run_tasks(spark, workdir, config)
+    path = out / target.get("file", "out.parquet")
+    before = _snapshot(path)
+    assert before
+    with pytest.raises(Exception, match="is not true|non-null keys"):
+        run_tasks(spark, workdir, {**config, "tasks": [{**task, **failing}]})
+    assert _snapshot(path) == before
+    assert _hidden(out) == []
+    task["transform"] = {"filter": "{qty} < 10"}
+    run_tasks(spark, workdir, config)
+    assert _snapshot(path) != before
+    assert _hidden(out) == []
 
 
 def test_db_csv_via_parquet_connection(spark, workdir, sf_dir):
@@ -2414,6 +2572,31 @@ def test_unknown_task_type_fails_before_the_first_task_runs(spark, workdir):
     ]
     with pytest.raises(ValueError, match="task 'third': unknown type 'csv-cvs'"):
         run_tasks(spark, workdir, {"tasks": tasks})
+    assert not (workdir / "output" / "first.csv").exists()
+
+
+def test_unknown_connection_fails_before_the_first_task_runs(spark, workdir):
+    """A connection name the file does not define, in the LAST task,
+    stops the file before any task has written anything."""
+    write_csv_file(workdir / "input" / "src.csv", [(1, "a", 1)])
+    tasks = [
+        {
+            "name": "first",
+            "type": "csv-csv",
+            "source": {"file": "src.csv"},
+            "target": {"file": "first.csv", "truncate": True},
+        },
+        {
+            "name": "last",
+            "type": "csv-db",
+            "source": {"file": "src.csv"},
+            "target": {"connection": "derbyy", "table": "t", "truncate": True},
+        },
+    ]
+    with pytest.raises(
+        ValueError, match="task 'last': target names unknown connection 'derbyy'"
+    ):
+        run_tasks(spark, workdir, {"connections": [_derby("badconn")], "tasks": tasks})
     assert not (workdir / "output" / "first.csv").exists()
 
 

@@ -35,8 +35,6 @@ an RDBMS, /root/reference/dasladen/task.py:94-107).
 
 from __future__ import annotations
 
-import os
-import shutil
 import weakref
 
 import numpy as np
@@ -54,9 +52,9 @@ from dasladen_spark.operators.similarity import (
     with_cells,
 )
 from dasladen_spark.operators.snapshot import (
-    publish_pointer,
+    drop_orphans,
+    ensure,
     resolve_snapshot,
-    snapshot_name,
 )
 from dasladen_spark.sinks.bucketed import write_bucketed
 
@@ -105,20 +103,6 @@ def _index_centroids(spark: SparkSession, table: str) -> np.ndarray:
     return c["cent"]
 
 
-def _drop_orphan_location(spark: SparkSession, name: str) -> None:
-    """A managed-table dir can outlive its catalog entry (crashed
-    session, fresh derby metastore over an old warehouse dir);
-    saveAsTable then refuses even in overwrite mode. Local-filesystem
-    cleanup only — a production catalog owns its locations."""
-    if spark.catalog.tableExists(name):
-        return
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    if wh.startswith("file:"):
-        p = os.path.join(wh[len("file:"):], name.lower())
-        if os.path.exists(p):
-            shutil.rmtree(p)
-
-
 def build_ann_index(
     corpus: DataFrame,
     table: str,
@@ -143,7 +127,7 @@ def build_ann_index(
     amortized over every subsequent query batch.
 
     ``tag`` identifies the corpus snapshot the index was built from
-    (e.g. its path); ``ensure_ann_index`` uses it to skip rebuilds.
+    (e.g. its path); ``ensure_ann_index`` hashes it into the name.
     ``n_buckets`` sizes the layout for the huge-query-batch SMJ path:
     one bucket of postings should fit an executor core's memory.
 
@@ -157,8 +141,7 @@ def build_ann_index(
     parquet table + joins."""
     spark = corpus.sparkSession
     refresh_ann_index_cache(spark, table)
-    for suffix in ("", "_meta", "_centroids", "_pqbooks"):
-        _drop_orphan_location(spark, table + suffix)
+    drop_orphans(spark, table, ("", "_meta", "_centroids", "_pqbooks"))
     c = _spread(
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
@@ -336,15 +319,16 @@ def append_to_ann_index(
 #: hash_version column) was the numpy-matmul pandas UDF, whose sign
 #: bits can differ from the quantized sum near zero. An index whose
 #: stored version differs from the code's is stale BY CONSTRUCTION
-#: (probe keys would be hashed differently than its postings), so
-#: ensure_ann_index rebuilds it.
+#: (probe keys would be hashed differently than its postings); the
+#: version is part of ensure_ann_index's identity, so a new version
+#: names a new index.
 _HASH_VERSION = 3
 
 #: every geometry knob a build can take, with build_ann_index's
-#: defaults — ensure_ann_index compares ALL of them against the
-#: persisted _meta row so no parameter change can silently serve a
-#: stale index (any kwarg differing from the stored value rebuilds).
-#: hash_version is not a caller knob but joins the comparison so a
+#: defaults — ensure_ann_index hashes every relevant one into the
+#: index's physical name, so no parameter change can silently serve a
+#: stale index (any kwarg differing from the default names another).
+#: hash_version is not a caller knob but joins the identity so a
 #: code upgrade invalidates old indexes.
 _GEOMETRY_DEFAULTS = {
     "method": "lsh",
@@ -361,9 +345,7 @@ _GEOMETRY_DEFAULTS = {
     "hash_version": _HASH_VERSION,
     # not a caller knob: the PQ encode kernel's algorithm version
     # (operators/pq.PQ_VERSION) — indexes whose stored codes came from
-    # an older kernel rebuild on first ensure (round 8's numpy argmax
-    # encode is version 1 and its meta lacks the field entirely, so
-    # .get() yields None != PQ_VERSION)
+    # an older kernel are never reused: the version joins the identity
     "pq_version": PQ_VERSION,
     # same discipline for the IVF cell-assignment kernel
     # (operators/similarity.IVF_VERSION)
@@ -375,10 +357,10 @@ def _relevant_geometry(kwargs: dict) -> set[str]:
     """The geometry knobs that actually shape an index built with
     these kwargs: method/dim/n_buckets/compress always; LSH hashes
     care about num_tables/bits_per_table, IVF about
-    n_centroids/lloyd_iters, PQ compression about pq_*. Comparing
+    n_centroids/lloyd_iters, PQ compression about pq_*. Hashing
     only these means passing an IRRELEVANT knob (pq_m with
     compress='none', n_centroids with method='lsh') that happens to
-    differ from the stored default never triggers a pointless full
+    differ from the default never triggers a pointless full
     rebuild."""
     method = kwargs.get("method", _GEOMETRY_DEFAULTS["method"])
     compress = kwargs.get("compress", _GEOMETRY_DEFAULTS["compress"])
@@ -414,22 +396,19 @@ def ensure_ann_index(corpus: DataFrame, table: str, tag: str, **kwargs) -> str:
     Callers should prefer the returned physical name; resolution via
     the pointer serves the task-file surface where build and search
     are separate task invocations."""
-    spark = corpus.sparkSession
-    phys = snapshot_name(
+    return ensure(
+        corpus.sparkSession,
         table,
-        tag,
-        *(
-            f"{p}={kwargs.get(p, _GEOMETRY_DEFAULTS[p])}"
-            for p in sorted(_relevant_geometry(kwargs))
+        (
+            tag,
+            *(
+                f"{p}={kwargs.get(p, _GEOMETRY_DEFAULTS[p])}"
+                for p in sorted(_relevant_geometry(kwargs))
+            ),
         ),
+        ("", "_meta"),
+        lambda phys: build_ann_index(corpus, phys, tag=tag, **kwargs),
     )
-    if not (
-        spark.catalog.tableExists(phys)
-        and spark.catalog.tableExists(f"{phys}_meta")
-    ):
-        build_ann_index(corpus, phys, tag=tag, **kwargs)
-    publish_pointer(spark, table, phys)
-    return phys
 
 
 def _probe_schema(queries: DataFrame, query_id: str, rest: str):

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dasladen_spark.functions.text import tokens_col
+from dasladen_spark.operators.snapshot import ensure
 
 
 def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -104,20 +105,9 @@ def ensure_nb_model(
     model tables instead of re-deriving the lazy model per plan
     branch — round-5's 24-scan text_nb_quality_score plan collapses
     to single digits."""
-    from dasladen_spark.operators.ann_index import _drop_orphan_location
-    from dasladen_spark.operators.snapshot import (
-        publish_pointer,
-        snapshot_name,
-    )
-
     spark = labeled.sparkSession
-    phys = snapshot_name(table, tag)
-    if not all(
-        spark.catalog.tableExists(f"{phys}{sfx}")
-        for sfx in ("_tok", "_lab", "_meta")
-    ):
-        for sfx in ("_tok", "_lab", "_meta"):
-            _drop_orphan_location(spark, phys + sfx)
+
+    def build(phys: str) -> None:
         token_counts, label_stats = nb_train(
             labeled, id_col=id_col, text_col=text_col, label_col=label_col
         )
@@ -126,8 +116,8 @@ def ensure_nb_model(
         spark.createDataFrame([(tag,)], "tag STRING").write.mode(
             "overwrite"
         ).saveAsTable(f"{phys}_meta")
-    publish_pointer(spark, table, phys)
-    return phys
+
+    return ensure(spark, table, (tag,), ("_tok", "_lab", "_meta"), build)
 
 
 def nb_score(

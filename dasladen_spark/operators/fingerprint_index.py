@@ -31,7 +31,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dasladen_spark.functions.text import fingerprint
-from dasladen_spark.operators.ann_index import _drop_orphan_location
+from dasladen_spark.operators.snapshot import (
+    drop_orphans,
+    ensure,
+    resolve_snapshot,
+)
 from dasladen_spark.sinks.bucketed import write_bucketed
 
 
@@ -60,8 +64,7 @@ def _write_index(fps: DataFrame, table: str, n_buckets: int, tag: str) -> None:
     """Write the distinct ``fp`` values of ``fps`` as a fresh index
     table, plus its ``{table}_meta`` row."""
     spark = fps.sparkSession
-    for suffix in ("", "_meta"):
-        _drop_orphan_location(spark, table + suffix)
+    drop_orphans(spark, table, ("", "_meta"))
     fps = (
         fps.select("fp")
         .distinct()
@@ -86,22 +89,13 @@ def ensure_fingerprint_index(
     share a warehouse. Returns the physical name and publishes the
     ``{table}_ptr`` pointer so later tasks can probe/append by the
     logical name."""
-    from dasladen_spark.operators.snapshot import (
-        publish_pointer,
-        snapshot_name,
+    return ensure(
+        history.sparkSession,
+        table,
+        (tag, f"n_buckets={kwargs.get('n_buckets', 16)}"),
+        ("", "_meta"),
+        lambda phys: build_fingerprint_index(history, phys, tag=tag, **kwargs),
     )
-
-    spark = history.sparkSession
-    phys = snapshot_name(
-        table, tag, f"n_buckets={kwargs.get('n_buckets', 16)}"
-    )
-    if not (
-        spark.catalog.tableExists(phys)
-        and spark.catalog.tableExists(f"{phys}_meta")
-    ):
-        build_fingerprint_index(history, phys, tag=tag, **kwargs)
-    publish_pointer(spark, table, phys)
-    return phys
 
 
 def novel_against_index(
@@ -136,8 +130,6 @@ def _index_fps(
 ) -> DataFrame:
     """The index's ``fp`` column, as of ``before_batch`` if given,
     hinted to the sort-merge join that reads the buckets in place."""
-    from dasladen_spark.operators.snapshot import resolve_snapshot
-
     hist = spark.table(resolve_snapshot(spark, table))
     if before_batch is not None:
         hist = hist.filter(F.col("batch_id") < before_batch)
@@ -155,8 +147,6 @@ def append_to_index(
     spec is fixed at create time); periodic compaction of many small
     per-batch files is the same maintenance any streaming bucketed
     sink needs."""
-    from dasladen_spark.operators.snapshot import resolve_snapshot
-
     table = resolve_snapshot(spark, table)
     n_buckets = spark.table(f"{table}_meta").collect()[0]["n_buckets"]
     rows = (
@@ -283,5 +273,6 @@ def compact_fingerprint_index(spark: SparkSession, table: str) -> None:
     sinks/bucketed.compact_bucketed for the swap semantics)."""
     from dasladen_spark.sinks.bucketed import compact_bucketed
 
+    table = resolve_snapshot(spark, table)
     n_buckets = spark.table(f"{table}_meta").collect()[0]["n_buckets"]
     compact_bucketed(spark, table, "fp", n_buckets, sort_cols="fp")

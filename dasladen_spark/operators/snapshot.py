@@ -22,8 +22,13 @@ task-file surface: build in one task, append/search in a later one).
 On a production catalog (Hive/Glue/Unity) the same layout gives
 lock-free snapshot isolation: builders create new names, the pointer
 flip is one atomic catalog op, readers mid-scan keep their resolved
-physical table. Stale snapshots are dropped by ordinary retention
-(``drop_snapshots`` below).
+physical table. Nothing here drops an old snapshot; retention is an
+explicit ``DROP TABLE`` of its family, like VACUUM.
+
+``ensure`` is the one lifecycle every build-once family goes through
+(fingerprint index, ANN index, NB model, bigram LM, PQ drift index):
+name the family, reuse it when complete, else clear leftover
+warehouse directories, build, and publish the pointer.
 
 Beyond-reference infrastructure (the reference has no materialized
 state at all — every run recomputes, /root/reference/dasladen/task.py).
@@ -32,21 +37,20 @@ state at all — every run recomputes, /root/reference/dasladen/task.py).
 from __future__ import annotations
 
 import hashlib
+import os
+import shutil
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
 
-def snapshot_suffix(*identity) -> str:
-    """8-hex-char digest of everything that defines the physical
-    content: the corpus tag plus every relevant build parameter.
+def snapshot_name(base: str, *identity) -> str:
+    """Physical table name for ``base`` built from ``identity``: an
+    8-hex-char digest of everything that defines the physical
+    content, the corpus tag plus every relevant build parameter.
     Callers pass the parts; ordering is significant (keep it fixed)."""
     blob = "\x1f".join(str(p) for p in identity)
-    return hashlib.md5(blob.encode("utf-8")).hexdigest()[:8]
-
-
-def snapshot_name(base: str, *identity) -> str:
-    """Physical table name for ``base`` built from ``identity``."""
-    return f"{base}__{snapshot_suffix(*identity)}"
+    return f"{base}__{hashlib.md5(blob.encode('utf-8')).hexdigest()[:8]}"
 
 
 def publish_pointer(spark: SparkSession, base: str, physical: str) -> None:
@@ -71,17 +75,47 @@ def resolve_snapshot(spark: SparkSession, name: str) -> str:
     return name
 
 
-def drop_snapshots(spark: SparkSession, base: str, keep: str | None = None):
-    """Retention: drop every ``{base}__*`` family table except the
-    ``keep`` snapshot (and its suffixed siblings). Returns the dropped
-    table names. Explicit maintenance — nothing calls this implicitly,
-    exactly like VACUUM."""
-    dropped = []
-    prefix = base + "__"
-    for t in spark.catalog.listTables():
-        if t.name.startswith(prefix) and not (
-            keep and t.name.startswith(keep)
-        ):
-            spark.sql(f"DROP TABLE IF EXISTS {t.name}")
-            dropped.append(t.name)
-    return dropped
+def drop_orphans(spark: SparkSession, name: str, tables) -> None:
+    """Remove the warehouse directory of each ``name + suffix`` in
+    ``tables`` that has no catalog entry. A managed-table dir can
+    outlive its catalog entry (crashed session, fresh in-memory
+    catalog over an old warehouse dir); saveAsTable then refuses even
+    in overwrite mode. Local-filesystem cleanup only — a production
+    catalog owns its locations."""
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    if not wh.startswith("file:"):
+        return
+    for sfx in tables:
+        p = os.path.join(wh[len("file:"):], (name + sfx).lower())
+        if os.path.exists(p) and not spark.catalog.tableExists(name + sfx):
+            shutil.rmtree(p)
+
+
+def build_once(
+    spark: SparkSession, name: str, tables, build: Callable[[str], None]
+) -> None:
+    """Build the family at ``name`` unless it is complete: every
+    ``name + suffix`` in ``tables`` exists. ``build(name)`` must write
+    the last table of ``tables`` last, so a build that died midway
+    leaves the family incomplete and the next call rebuilds it."""
+    if all(spark.catalog.tableExists(name + sfx) for sfx in tables):
+        return
+    drop_orphans(spark, name, tables)
+    build(name)
+
+
+def ensure(
+    spark: SparkSession,
+    base: str,
+    identity,
+    tables,
+    build: Callable[[str], None],
+) -> str:
+    """The build-once lifecycle: the family for ``identity`` lives at
+    ``snapshot_name(base, *identity)``; it is built there unless
+    complete (``build_once``), the ``{base}_ptr`` pointer is published
+    at it, and its physical name is returned."""
+    phys = snapshot_name(base, *identity)
+    build_once(spark, phys, tables, build)
+    publish_pointer(spark, base, phys)
+    return phys

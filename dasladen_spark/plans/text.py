@@ -1505,14 +1505,13 @@ _LM_CE_CTE = f"""
 """
 
 
-def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, is_test, bg) bigram stream — the shared front end of
-    the LM model build and the scoring side (md5 hash split; see the
-    oracle comment: doc_id %% 5 correlates with the fixture's source
-    assignment)."""
+def _lm_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, is_test, toks): each document's word tokens and its
+    side of the md5 hash split (see the oracle comment: doc_id %% 5
+    correlates with the fixture's source assignment)."""
     from dasladen_spark.operators.sampling import portable_sample_filter
 
-    tk = _t(spark, sf_dir, "documents").select(
+    return _t(spark, sf_dir, "documents").select(
         "doc_id",
         portable_sample_filter(F.col("doc_id"), 0.2, salt="lm").alias(
             "is_test"
@@ -1521,7 +1520,12 @@ def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0)
         ).alias("toks"),
     )
-    return tk.select(
+
+
+def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, is_test, bg) bigram stream — the shared front end of
+    the LM model build and the scoring side."""
+    return _lm_tokens(spark, sf_dir).select(
         "doc_id",
         "is_test",
         "toks",
@@ -1541,50 +1545,31 @@ def _lm_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.col("bg").isNotNull()).drop("toks")
 
 
-def _ensure_lm_model(spark: SparkSession, sf_dir: str) -> None:
-    """Train-once for the bigram LM: materialize lm_model_bg
-    (bg, c2), lm_model_prev (prev, c1 — DERIVED from the bigram
-    table, no second corpus pass), and lm_model_voc (1-row train
-    vocab size) as tagged catalog tables, skipped when the tag
-    (= corpus path) matches — the same idempotent pattern as
-    classify.ensure_nb_model / ann_index.ensure_ann_index."""
-    from dasladen_spark.operators.ann_index import _drop_orphan_location
-    from dasladen_spark.operators.sampling import portable_sample_filter
-
-    tables = ("lm_model_bg", "lm_model_prev", "lm_model_voc")
-    if spark.catalog.tableExists("lm_model_meta") and all(
-        spark.catalog.tableExists(t) for t in tables
-    ):
-        if (
-            spark.table("lm_model_meta").collect()[0]["tag"] == sf_dir
-        ):
-            return
-    for t in (*tables, "lm_model_meta"):
-        _drop_orphan_location(spark, t)
+def _build_lm_model(spark: SparkSession, sf_dir: str, phys: str) -> None:
+    """Train the bigram LM into the ``phys`` family: ``{phys}_bg``
+    (bg, c2), ``{phys}_prev`` (prev, c1 — DERIVED from the bigram
+    table, no second corpus pass), ``{phys}_voc`` (1-row train vocab
+    size), then ``{phys}_meta`` last (its one row names the corpus;
+    nothing reads it)."""
     train_bg = _lm_bigrams(spark, sf_dir).filter(~F.col("is_test"))
     cnt2 = train_bg.groupBy("bg").agg(F.count(F.lit(1)).alias("c2"))
-    cnt2.write.mode("overwrite").saveAsTable("lm_model_bg")
+    cnt2.write.mode("overwrite").saveAsTable(f"{phys}_bg")
     # prefix totals fold FROM the materialized bigram table: the
     # prefix count is by construction the sum of its bigram counts
-    spark.table("lm_model_bg").select(
+    spark.table(f"{phys}_bg").select(
         F.split_part(F.col("bg"), F.lit(_BG_SEP), F.lit(1)).alias("prev"),
         "c2",
     ).groupBy("prev").agg(F.sum("c2").alias("c1")).write.mode(
         "overwrite"
-    ).saveAsTable("lm_model_prev")
-    d = _t(spark, sf_dir, "documents")
-    d.filter(~portable_sample_filter(F.col("doc_id"), 0.2, salt="lm")).select(
-        F.explode(
-            F.regexp_extract_all(
-                F.lower(F.col("text")), F.lit("[a-z0-9]+"), F.lit(0)
-            )
-        ).alias("tok")
+    ).saveAsTable(f"{phys}_prev")
+    _lm_tokens(spark, sf_dir).filter(~F.col("is_test")).select(
+        F.explode("toks").alias("tok")
     ).agg(F.count_distinct("tok").alias("v")).write.mode(
         "overwrite"
-    ).saveAsTable("lm_model_voc")
-    spark.createDataFrame([(sf_dir,)], "tag STRING").write.mode(
+    ).saveAsTable(f"{phys}_voc")
+    spark.createDataFrame([(sf_dir,)], "source STRING").write.mode(
         "overwrite"
-    ).saveAsTable("lm_model_meta")
+    ).saveAsTable(f"{phys}_meta")
 
 
 @query(
@@ -1604,20 +1589,28 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: bigrams are built JVM-side from the token array
     (one transform, no position self-join); the model is TRAIN-ONCE
-    — ``_ensure_lm_model`` materializes the bigram counts, the
+    — ``_build_lm_model`` materializes the bigram counts, the
     prefix counts (derived from the bigram table, not a second
-    corpus pass), and the vocab size as tagged catalog tables (the
-    ensure_nb_model pattern), so each scoring action reads the test
-    slice once plus two model tables instead of re-tokenizing the
-    corpus per plan branch. The model joins shuffle-side — a
+    corpus pass), and the vocab size as one build-once family per
+    corpus (operators/snapshot.ensure), so each scoring action reads
+    the test slice once plus two model tables instead of re-tokenizing
+    the corpus per plan branch. The model joins shuffle-side — a
     corpus-scale vocabulary never broadcasts; scoring joins distinct
     (doc, bigram) occurrence rows only. DECIMAL accumulation + the
     VARCHAR widening keeps every score bit-identical to the DuckDB
     replay."""
-    _ensure_lm_model(spark, sf_dir)
-    cnt2 = spark.table("lm_model_bg")
-    cnt1 = spark.table("lm_model_prev")
-    voc = spark.table("lm_model_voc")
+    from dasladen_spark.operators.snapshot import ensure
+
+    model = ensure(
+        spark,
+        "lm_model",
+        (sf_dir,),
+        ("_bg", "_prev", "_voc", "_meta"),
+        lambda phys: _build_lm_model(spark, sf_dir, phys),
+    )
+    cnt2 = spark.table(f"{model}_bg")
+    cnt1 = spark.table(f"{model}_prev")
+    voc = spark.table(f"{model}_voc")
     occ = (
         _lm_bigrams(spark, sf_dir)
         .filter(F.col("is_test"))

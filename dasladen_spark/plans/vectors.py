@@ -1237,50 +1237,39 @@ def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full-corpus exact baseline, so the pq_indexed_post_append row
     # exposes how much recall the append path gives up vs the
     # full-build pq_indexed row; a widening gap after many appends is
-    # the signal to recompact/refit. Rebuilt whenever the state
-    # marker doesn't match the corpus, so replays never stack
-    # duplicate appends.
+    # the signal to recompact/refit. The ``_state`` marker is written
+    # after the append, so a build that died between the two is
+    # rebuilt, never read or appended to twice.
     from dasladen_spark.operators.ann_index import (
-        _drop_orphan_location,
         append_to_ann_index,
         build_ann_index,
     )
-
     from dasladen_spark.operators.pq import PQ_VERSION
-    from dasladen_spark.operators.snapshot import snapshot_name
+    from dasladen_spark.operators.snapshot import ensure
 
     # the kernel version joins the identity so a PQ-encode upgrade
-    # rebuilds the drift index instead of serving stale codes;
-    # the snapshot hash in the NAME keeps concurrent runs over
-    # different corpora from destroying each other's drift index
-    # (same scheme as ensure_ann_index)
+    # rebuilds the drift index instead of serving stale codes
     want = f"{sf_dir}:70+30:v{PQ_VERSION}"
-    drift_tbl = snapshot_name("ann_idx_pq_drift", want)
-    marker = drift_tbl + "_state"
-    fresh = (
-        spark.catalog.tableExists(marker)
-        # the marker alone isn't enough: a warehouse cleanup can drop
-        # the index tables while the marker survives (the orphan-
-        # location class ensure_ann_index also defends against)
-        and spark.catalog.tableExists(drift_tbl)
-        and spark.catalog.tableExists(f"{drift_tbl}_meta")
-        and spark.table(marker).collect()[0]["tag"] == want
-    )
-    if not fresh:
-        _drop_orphan_location(spark, marker)
+
+    def build_drift(phys: str) -> None:
         build_ann_index(
             emb.filter(F.col("vec_id") % 10 < 7),
-            drift_tbl,
+            phys,
             tag=sf_dir + ":70",
             dim=64,
             compress="pq",
         )
         append_to_ann_index(
-            spark, drift_tbl, emb.filter(F.col("vec_id") % 10 >= 7)
+            spark, phys, emb.filter(F.col("vec_id") % 10 >= 7)
         )
-        spark.createDataFrame([(want,)], "tag STRING").write.mode(
+        spark.createDataFrame([(want,)], "source STRING").write.mode(
             "overwrite"
-        ).saveAsTable(marker)
+        ).saveAsTable(f"{phys}_state")
+
+    drift_tbl = ensure(
+        spark, "ann_idx_pq_drift", (want,), ("", "_meta", "_state"),
+        build_drift,
+    )
     approx = {
         "lsh": lsh_cosine_topk(q, emb, k=5, dim=64),
         "ivf": ivf_cosine_topk(q, emb, k=5, n_centroids=16, n_probe=4),

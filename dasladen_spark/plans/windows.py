@@ -1177,9 +1177,9 @@ _DAILY_SQL = """d AS (
 
 
 def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(day, weekday, x): events per calendar day, persisted and
-    materialised."""
-    d = (
+    """(day, weekday, x): events per calendar day. Lazy: a query's
+    consumers of it share the aggregate's exchange through reuse."""
+    return (
         _t(spark, sf_dir, "events")
         .groupBy(
             F.date_trunc("day", F.col("ts")).cast("date").alias("day"),
@@ -1188,10 +1188,7 @@ def _daily_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("weekday"),
         )
         .agg(F.count(F.lit(1)).alias("x"))
-        .persist()
     )
-    d.count()
-    return d
 
 
 @query(

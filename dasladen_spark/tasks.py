@@ -600,8 +600,10 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
     what the streaming dedup intake runs per micro-batch."""
     from dasladen_spark.operators.dedup import WINNOW_MIN_SHARED
     from dasladen_spark.operators.fingerprint_index import (
+        build_fingerprint_index,
         dedup_against_index,
     )
+    from dasladen_spark.operators.snapshot import build_once, resolve_snapshot
 
     df = _read_transformed(ctx, task)
     text_field = task.get("text_field", "text")
@@ -617,7 +619,20 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
         raise ValueError(f"unknown dedup method {method!r}")
     index = task.get("index")
     if index:
-        _ensure_fingerprint_index(ctx, task, index, text_field)
+        # cold start: a missing index, or one whose build died before
+        # its meta table, is built empty (else append_to_index dies
+        # after the sink already ran) — at the physical name its
+        # pointer names, else at ``index`` itself
+        build_once(
+            ctx.spark,
+            resolve_snapshot(ctx.spark, index),
+            ("", "_meta"),
+            lambda t: build_fingerprint_index(
+                ctx.spark.createDataFrame([], f"{text_field} STRING"), t,
+                text_col=text_field,
+                n_buckets=int(task.get("n_buckets", 16)), tag="cold-start",
+            ),
+        )
     n_out = dedup_against_index(
         df,
         index,
@@ -631,28 +646,6 @@ def run_dedup(ctx: TaskContext, task: dict) -> None:
     )
     arm = " (winnowing)" if method == "winnowing" else ""
     ctx.log(f"task {task.get('name')}: {n_out} novel rows out{arm}")
-
-
-def _ensure_fingerprint_index(
-    ctx: TaskContext, task: dict, index: str, text_field: str
-) -> None:
-    """Cold-start a missing fingerprint index table empty. The meta
-    table is checked too: a build that crashed between the postings
-    write and the meta write must rebuild, or append_to_index dies
-    after the sink already ran."""
-    from dasladen_spark.operators.fingerprint_index import (
-        build_fingerprint_index,
-    )
-
-    if not (
-        ctx.spark.catalog.tableExists(index)
-        and ctx.spark.catalog.tableExists(f"{index}_meta")
-    ):
-        empty = ctx.spark.createDataFrame([], f"{text_field} STRING")
-        build_fingerprint_index(
-            empty, index, text_col=text_field,
-            n_buckets=int(task.get("n_buckets", 16)), tag="cold-start",
-        )
 
 
 def _run_dedup_semantic(

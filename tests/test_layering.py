@@ -91,3 +91,33 @@ def test_plan_modules_are_domains_importing_only_the_commons():
         if hit.split()[-1] not in PLAN_COMMONS
     ]
     assert offenders == []
+
+
+#: the build-once lifecycle's steps, spelled only in operators/snapshot
+LIFECYCLE_CALLS = ("snapshot_name", "publish_pointer")
+
+
+def test_build_once_lifecycle_lives_in_snapshot():
+    """Every index and model family is named, published and cleaned
+    through ``operators/snapshot.ensure``: no other library or plan
+    module names a snapshot, publishes a pointer or imports the
+    orphan-location helper."""
+    offenders = []
+    for p in sorted(PKG.rglob("*.py")):
+        if p == PKG / "operators" / "snapshot.py":
+            continue
+        for node in ast.walk(ast.parse(p.read_text(encoding="utf-8"))):
+            if isinstance(node, ast.Call):
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(
+                    f, "attr", None
+                )
+                if name in LIFECYCLE_CALLS:
+                    offenders.append(f"{p.name}:{node.lineno} {name}(")
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                offenders += [
+                    f"{p.name}:{node.lineno} import {a.name}"
+                    for a in node.names
+                    if a.name.split(".")[-1] == "_drop_orphan_location"
+                ]
+    assert offenders == []

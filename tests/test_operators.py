@@ -1494,6 +1494,146 @@ def test_compact_fingerprint_index_one_file_per_bucket(spark):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def _drop_family(spark, phys, tables):
+    for sfx in tables:
+        spark.sql(f"DROP TABLE IF EXISTS {phys}{sfx}")
+
+
+def test_compact_fingerprint_index_resolves_the_pointer(spark):
+    """An index built by ensure_fingerprint_index lives at a physical
+    snapshot name; compacting it by its logical name must follow the
+    ``{table}_ptr`` pointer, as append and search do."""
+    from dasladen_spark.operators.fingerprint_index import (
+        append_to_index,
+        compact_fingerprint_index,
+        ensure_fingerprint_index,
+        novel_against_index,
+    )
+
+    hist = spark.createDataFrame(
+        [(i, f"history doc {i}") for i in range(10)], ["doc_id", "text"]
+    )
+    phys = ensure_fingerprint_index(hist, "t_cmp_ptr", tag="cmp", n_buckets=4)
+    batch = spark.createDataFrame(
+        [(100, "history doc 1"), (101, "fresh doc")], ["doc_id", "text"]
+    )
+    novel = novel_against_index(spark, "t_cmp_ptr", batch)
+    append_to_index(spark, "t_cmp_ptr", novel, batch_id=1)
+    rows_before = sorted(tuple(r) for r in spark.table(phys).collect())
+
+    compact_fingerprint_index(spark, "t_cmp_ptr")
+
+    assert not spark.catalog.tableExists("t_cmp_ptr")
+    assert sorted(tuple(r) for r in spark.table(phys).collect()) == rows_before
+    assert novel_against_index(spark, "t_cmp_ptr", batch).count() == 0
+    _drop_family(spark, phys, ("", "_meta"))
+
+
+def _fp_family(spark, tmp_path):
+    from dasladen_spark.operators.fingerprint_index import (
+        ensure_fingerprint_index,
+        novel_against_index,
+    )
+
+    hist = spark.createDataFrame(
+        [(1, "alpha doc"), (2, "beta doc")], ["doc_id", "text"]
+    )
+    batch = spark.createDataFrame(
+        [(10, "ALPHA   doc!"), (11, "gamma doc")], ["doc_id", "text"]
+    )
+
+    def check():
+        phys = ensure_fingerprint_index(
+            hist, "t_orphan_fp", tag="orphan", n_buckets=4
+        )
+        novel = novel_against_index(spark, phys, batch).collect()
+        assert [r["doc_id"] for r in novel] == [11]
+        return phys
+
+    return ("t_orphan_fp", ("orphan", "n_buckets=4")), ("", "_meta"), check
+
+
+def _nb_family(spark, tmp_path):
+    from dasladen_spark.operators.classify import ensure_nb_model, nb_train
+
+    labeled = spark.createDataFrame(
+        [(1, "free prize now", "spam"), (2, "meeting agenda", "ham"),
+         (3, "free agenda", "ham")],
+        ["doc_id", "text", "label"],
+    )
+
+    def check():
+        phys = ensure_nb_model(labeled, "t_orphan_nb", tag="orphan")
+        want = nb_train(labeled)[0].collect()
+        got = spark.table(f"{phys}_tok").collect()
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+        assert spark.table(f"{phys}_lab").count() == 2
+        return phys
+
+    return ("t_orphan_nb", ("orphan",)), ("_tok", "_lab", "_meta"), check
+
+
+def _lm_family(spark, tmp_path):
+    import hashlib
+
+    from dasladen_spark.plans.text import text_lm_perplexity
+
+    def is_test(i):  # the md5 hash split text_lm_perplexity uses
+        return hashlib.md5(f"lm{i}".encode()).hexdigest()[:8] < "33333333"
+
+    test_id = next(i for i in range(100) if is_test(i))
+    train = [i for i in range(100) if not is_test(i)][:2]
+    spark.createDataFrame(
+        [(test_id, "alpha beta gamma"), (train[0], "alpha beta gamma"),
+         (train[1], "beta gamma alpha")],
+        "doc_id LONG, text STRING",
+    ).write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
+
+    def check():
+        from dasladen_spark.operators.snapshot import resolve_snapshot
+
+        rows = text_lm_perplexity(spark, str(tmp_path)).collect()
+        assert [(r["doc_id"], r["n_bigrams"]) for r in rows] == [(test_id, 2)]
+        phys = resolve_snapshot(spark, "lm_model")
+        bg = {r["bg"]: r["c2"] for r in spark.table(f"{phys}_bg").collect()}
+        assert bg == {"alpha beta": 1, "beta gamma": 2, "gamma alpha": 1}
+        return phys
+
+    return (
+        ("lm_model", (str(tmp_path),)),
+        ("_bg", "_prev", "_voc", "_meta"),
+        check,
+    )
+
+
+@pytest.mark.parametrize("family", [_fp_family, _nb_family, _lm_family],
+                         ids=["fingerprint_index", "nb_model", "lm_model"])
+def test_ensure_recovers_from_an_orphan_location(spark, tmp_path, family):
+    """A warehouse directory left under a family table's name with no
+    catalog entry (a crashed session, a fresh catalog over an old
+    warehouse) would make saveAsTable refuse; the ensure call clears
+    it, builds the family and answers correctly."""
+    import os
+
+    from dasladen_spark.operators.snapshot import snapshot_name
+
+    (base, identity), tables, check = family(spark, tmp_path)
+    phys = snapshot_name(base, *identity)
+    _drop_family(spark, phys, tables)
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    assert wh.startswith("file:")
+    orphan = os.path.join(wh[len("file:"):], (phys + tables[0]).lower())
+    os.makedirs(orphan, exist_ok=True)
+    leftover = os.path.join(orphan, "part-00000-leftover.parquet")
+    with open(leftover, "wb") as f:
+        f.write(b"not a parquet file")
+
+    assert check() == phys
+    assert not os.path.exists(leftover)
+    assert all(spark.catalog.tableExists(phys + sfx) for sfx in tables)
+    _drop_family(spark, phys, tables)
+
+
 def test_compact_ann_index_preserves_search(spark, sf_dir):
     """ANN posting compaction: append then compact; postings content
     and search results identical, bucket layout kept."""

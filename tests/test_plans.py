@@ -194,3 +194,57 @@ def test_lm_perplexity_survives_short_docs(spark, tmp_path):
     # token-less test docs simply have no bigram rows; the real doc does
     assert test_ids[0] not in got and test_ids[1] not in got
     assert got[test_ids[2]] == 4
+    _drop_lm_family(spark, str(tmp_path))
+
+
+LM_TABLES = ("_bg", "_prev", "_voc", "_meta")
+
+
+def _drop_lm_family(spark, sf_dir):
+    from dasladen_spark.operators.snapshot import snapshot_name
+
+    for sfx in LM_TABLES:
+        spark.sql(
+            f"DROP TABLE IF EXISTS {snapshot_name('lm_model', sf_dir)}{sfx}"
+        )
+
+
+def test_lm_model_is_one_family_per_corpus(spark, sf_dir, monkeypatch):
+    """Two corpora build two bigram-LM families side by side: scoring
+    the sf0.01 corpus leaves the sf0.001 family's rows and part files
+    untouched (the same-name overwrite deleted them under a concurrent
+    reader), and scoring sf0.001 again reuses its family."""
+    import os
+
+    import dasladen_spark.plans.text as text
+    from dasladen_spark.operators.snapshot import snapshot_name
+
+    other = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for d in (sf_dir, other):
+        _drop_lm_family(spark, d)
+    built = []
+    build = text._build_lm_model
+
+    def spy(spark_, sf_dir_, phys):
+        built.append(phys)
+        build(spark_, sf_dir_, phys)
+
+    monkeypatch.setattr(text, "_build_lm_model", spy)
+    fam = snapshot_name("lm_model", sf_dir)
+
+    def state():
+        return {
+            sfx: (
+                sorted(map(tuple, spark.table(fam + sfx).collect())),
+                sorted(spark.table(fam + sfx).inputFiles()),
+            )
+            for sfx in LM_TABLES
+        }
+
+    first = text.text_lm_perplexity(spark, sf_dir).collect()
+    before = state()
+    text.text_lm_perplexity(spark, other).collect()
+    assert state() == before
+    assert text.text_lm_perplexity(spark, sf_dir).collect() == first
+    assert built == [fam, snapshot_name("lm_model", other)]
+    _drop_lm_family(spark, other)

@@ -1235,6 +1235,47 @@ def test_dedup_task_incremental_across_runs(spark, workdir):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
+def test_dedup_task_cold_start_follows_the_index_pointer(spark, workdir):
+    """A dedup task pointed at an index that ensure_fingerprint_index
+    built (a physical snapshot plus the ``{index}_ptr`` pointer) must
+    dedup against that snapshot, not cold-start a stray empty index
+    under the logical name beside it."""
+    from dasladen_spark.operators.fingerprint_index import (
+        ensure_fingerprint_index,
+    )
+
+    hist = spark.createDataFrame(
+        [(1, "alpha doc"), (2, "beta doc")], "doc_id BIGINT, text STRING"
+    )
+    phys = ensure_fingerprint_index(hist, "t_task_ptr_idx", tag="hist")
+    with open(workdir / "input" / "d.json", "w", encoding="utf-8") as f:
+        for r in ({"doc_id": 10, "text": "beta doc"},
+                  {"doc_id": 11, "text": "gamma doc"}):
+            f.write(json.dumps(r) + "\n")
+    task = {
+        "name": "dd",
+        "type": "dedup",
+        "index": "t_task_ptr_idx",
+        "id_field": "doc_id",
+        "source": {
+            "kind": "json",
+            "file": "d.json",
+            "schema": "doc_id BIGINT, text STRING",
+        },
+        "target": {"kind": "parquet", "file": "novel.parquet", "truncate": True},
+    }
+    run_tasks(spark, workdir, {"tasks": [task]})
+    got = {
+        r["doc_id"]
+        for r in spark.read.parquet(str(workdir / "output" / "novel.parquet")).collect()
+    }
+    assert got == {11}  # the history doc is dropped
+    assert not spark.catalog.tableExists("t_task_ptr_idx")
+    assert not spark.catalog.tableExists("t_task_ptr_idx_meta")
+    for t in (phys, f"{phys}_meta"):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
 def test_classify_task_trains_and_scores(spark, workdir):
     """'classify' task: train NB on a labeled source, score another
     source, write (id, pred, score) — the task-file spelling of the

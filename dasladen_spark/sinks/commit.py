@@ -8,12 +8,17 @@ target as it was and its stage deleted. Renames go through Hadoop's
 ``FileSystem`` for the target's path, so the same code serves local
 folders and any other scheme a task folder names.
 
+Every file sink and every streaming snapshot (streaming/matview)
+commits this way. A snapshot carries its applied-batch marker inside
+the committed folder, so data and marker move in the same rename.
+
 JDBC and catalog tables are not staged: a JDBC truncate runs before
 its job, and a catalog table is replaced through the catalog.
 """
 
 from __future__ import annotations
 
+import re
 import uuid
 from contextlib import contextmanager
 from typing import Callable
@@ -32,6 +37,27 @@ def rename(fs, src, dst) -> None:
     """Rename the Hadoop path ``src`` to ``dst`` on ``fs``, or raise."""
     if not fs.rename(src, dst):
         raise OSError(f"cannot rename {src.toString()} to {dst.toString()}")
+
+
+def recover(spark: SparkSession, path: str) -> None:
+    """Finish what a killed swap of ``path`` left behind: when the
+    target is missing, rename its parked ``.old-`` sibling back, then
+    delete every other hidden stage or old sibling of it. Assumes one
+    writer per target: a concurrent writer's stage would be deleted."""
+    target = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+    name = target.getName()
+    # the name comes from a task file, so escape the glob's own syntax
+    pattern = spark._jvm.org.apache.hadoop.fs.Path(
+        target.getParent(),
+        "." + re.sub(r"([\\{}\[\]*?,])", r"\\\1", name) + ".{old,stage}-*",
+    )
+    siblings = [st.getPath() for st in fs.globStatus(pattern) or []]
+    parked = [p for p in siblings if p.getName().startswith(f".{name}.old-")]
+    if parked and not fs.exists(target):
+        rename(fs, parked[0], target)  # a swap killed between its renames
+    for p in siblings:  # the one renamed back is no longer there
+        fs.delete(p, True)
 
 
 @contextmanager
@@ -61,8 +87,11 @@ def replace_dir(
 
     The old target is parked beside the stage while the stage is
     renamed into place, then deleted; if that rename fails, the old
-    target is renamed back first. A process killed between the two
-    renames leaves the old target at its hidden ``.old-`` sibling."""
+    target is renamed back first. A process killed anywhere in the
+    swap leaves siblings that the next ``replace_dir`` of the same
+    path puts right first (``recover``), as long as one writer at a
+    time replaces ``path``."""
+    recover(spark, path)
     with staged(spark, path) as (fs, target, stage):
         write(stage.toString())
         if keep is not None and not keep():

@@ -14,18 +14,11 @@ for recompute.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from dasladen_spark.operators.ranking import rank_per_query
 from dasladen_spark.operators.similarity import cosine_topk
-from dasladen_spark.streaming.ingest import drain_foreach_batch
-from dasladen_spark.streaming.matview import (
-    _commit_snapshot,
-    _last_applied,
-    _recover_snapshot,
-)
+from dasladen_spark.streaming.matview import maintain_snapshot
 
 
 def merge_topk(
@@ -56,15 +49,10 @@ def run_incremental_topk(
 ) -> None:
     """Maintain per-query top-k cosine neighbors over a stream of
     corpus vectors, parquet-snapshotted per batch (exactly-once and
-    crash-safe via the incremental matview's write-aside swap and
-    applied-batch marker)."""
-    spark = stream.sparkSession
-    marker = snapshot_path + ".last_batch"
+    crash-safe through the incremental matview's staged snapshot,
+    which carries its applied-batch marker)."""
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_snapshot(snapshot_path)
-        if batch_id <= _last_applied(marker):
-            return
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         scores = cosine_topk(
             queries,
             batch_df,
@@ -75,13 +63,6 @@ def run_incremental_topk(
             corpus_vec=vec_col,
             exclude_self=True,
         )
-        prev = (
-            spark.read.parquet(snapshot_path)
-            if os.path.exists(snapshot_path)
-            else None
-        )
-        merged = merge_topk(prev, scores, k)
-        merged.write.mode("overwrite").parquet(snapshot_path + ".tmp")
-        _commit_snapshot(snapshot_path, marker, batch_id)
+        return merge_topk(prev, scores, k)
 
-    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()
+    maintain_snapshot(stream, snapshot_path, checkpoint, merge)

@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame
 
 from dasladen_spark.operators.fingerprint_index import dedup_against_index
 from dasladen_spark.streaming.ingest import drain_foreach_batch
-from dasladen_spark.streaming.matview import _last_applied
 
 
 def run_streaming_dedup_intake(
@@ -134,7 +133,17 @@ def _sync_index(
             return
         apply(batch_df, batch_id)
         orig.catalog.refreshTable(index_table)
-        with open(marker, "w") as fh:
+        # a sibling then a rename: a kill mid-write leaves the old
+        # marker, never an empty one that no restart could parse
+        with open(marker + ".tmp", "w") as fh:
             fh.write(str(batch_id))
+        os.replace(marker + ".tmp", marker)
 
     return drain_foreach_batch(stream, sink, checkpoint)
+
+
+def _last_applied(marker: str) -> int:
+    if os.path.exists(marker):
+        with open(marker) as fh:
+            return int(fh.read().strip())
+    return -1

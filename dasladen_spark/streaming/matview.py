@@ -6,11 +6,15 @@ per key covering everything ingested so far.
 
 Exactly-once: foreachBatch can REPLAY a batch after a crash between
 the snapshot write and the checkpoint commit; an additive combine
-would double-count it. The sink therefore records the last applied
-batch id next to the snapshot and skips batches it has already
-applied — the standard idempotent-foreachBatch pattern. On a
-transactional format (Delta/Iceberg) the txn id in MERGE plays this
-role; the dataflow is unchanged.
+would double-count it. Each committed snapshot therefore carries the
+id of the last batch it applied, in a ``_last_batch`` file inside its
+own folder (Spark's listing skips names starting with ``_``), and a
+batch at or below that id is skipped — the standard
+idempotent-foreachBatch pattern. Data and marker are written into one
+stage and swapped in by one rename through sinks/commit, whose
+recovery step puts a killed swap right before the next batch reads
+the marker. On a transactional format (Delta/Iceberg) the txn id in
+MERGE plays this role; the dataflow is unchanged.
 
 At 100 TB the full snapshot rewrite is the cost driver; swapping the
 parquet read/write for a Delta MERGE turns it into a file-level
@@ -19,92 +23,52 @@ upsert, keeping everything else.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
+from contextlib import closing
+from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from dasladen_spark.sinks.commit import recover, replace_dir
 from dasladen_spark.streaming.ingest import drain_foreach_batch
 
-
-def _last_applied(marker: str) -> int:
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            return int(fh.read().strip())
-    return -1
+#: the applied-batch marker's name inside a committed snapshot
+_MARKER = "_last_batch"
 
 
-#: bak-dir sentinel file recording "the pre-batch state was NO
-#: snapshot" — without it, a first-batch crash between the tmp rename
-#: and the marker write leaves nothing to roll back, and the replay
-#: would merge the batch into its own committed-but-unmarked output
-#: (double-counting every additive aggregate)
-_NO_PREV = "_EMPTY_BASELINE"
+def maintain_snapshot(
+    stream: DataFrame,
+    snapshot_path: str,
+    checkpoint: str,
+    merge: Callable[[DataFrame | None, DataFrame], DataFrame],
+) -> None:
+    """Drain ``stream`` into the parquet snapshot at ``snapshot_path``,
+    replacing it per batch with ``merge(previous snapshot or None,
+    batch)`` plus the batch's marker; a replayed batch is skipped."""
+    spark = stream.sparkSession
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    snapshot = Path(snapshot_path)
+    marker = Path(snapshot, _MARKER)
+    fs = snapshot.getFileSystem(spark._jsc.hadoopConfiguration())
 
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        recover(spark, snapshot_path)  # a killed swap may have parked the marker
+        if fs.exists(marker):
+            with closing(fs.open(marker)) as applied:
+                if batch_id <= applied.readLong():
+                    return  # replay of an already-applied batch
+        prev = spark.read.parquet(snapshot_path) if fs.exists(snapshot) else None
+        merged = merge(prev, batch_df)
 
-def _recover_snapshot(snapshot_path: str) -> None:
-    """Roll back a crash mid-swap. A lingering ``.bak.<b>`` dir means
-    the commit for batch b either finished everything but its cleanup
-    (marker >= b: drop the bak) or died before the marker advanced
-    (marker < b: the live snapshot may be missing or an unmarked new
-    version — restore the bak so the replay merges against the exact
-    pre-batch state; a ``_NO_PREV`` sentinel bak restores "no
-    snapshot"). A lingering ``.tmp`` is always pre-commit junk.
+        def write(stage: str) -> None:
+            # the stage is fully written while prev is still readable
+            merged.write.parquet(stage)
+            with closing(fs.create(Path(stage, _MARKER))) as out:
+                out.writeLong(batch_id)
 
-    Renames are atomic on a posix filesystem; on an object store the
-    same invariant comes from a transactional table format (see module
-    docstring) — the dataflow is unchanged."""
-    marker_val = _last_applied(snapshot_path + ".last_batch")
-    for bak in glob.glob(glob.escape(snapshot_path) + ".bak.*"):
-        b = int(bak.rsplit(".", 1)[1])
-        if marker_val >= b:
-            shutil.rmtree(bak)
-        else:
-            if os.path.exists(snapshot_path):
-                shutil.rmtree(snapshot_path)
-            if os.path.exists(os.path.join(bak, _NO_PREV)):
-                shutil.rmtree(bak)  # pre-batch state: no snapshot
-            else:
-                os.rename(bak, snapshot_path)
-    tmp = snapshot_path + ".tmp"
-    if os.path.exists(tmp):
-        shutil.rmtree(tmp)
+        replace_dir(spark, snapshot_path, write)
 
-
-def _commit_snapshot(snapshot_path: str, marker: str, batch_id: int) -> None:
-    """Atomically promote ``snapshot_path + ".tmp"``: park the live
-    snapshot at ``.bak.<batch>``, rename tmp into place, advance the
-    marker, then drop the bak. A crash at ANY point leaves a complete
-    copy readable and `_recover_snapshot` can tell (via the bak's batch
-    id vs the marker) whether to roll forward or back — an
-    overwrite-in-place window would lose keys on replay."""
-    tmp = snapshot_path + ".tmp"
-    bak = f"{snapshot_path}.bak.{batch_id}"
-    if os.path.exists(bak):
-        shutil.rmtree(bak)
-    had_prev = os.path.exists(snapshot_path)
-    if had_prev:
-        os.rename(snapshot_path, bak)
-    else:
-        # sentinel bak: even the FIRST batch must leave a rollback
-        # record, or a crash before the marker write replays the
-        # batch into its own output (see _NO_PREV)
-        os.makedirs(bak)
-        with open(os.path.join(bak, _NO_PREV), "w"):
-            pass
-    try:
-        os.rename(tmp, snapshot_path)
-    except BaseException:
-        if had_prev:
-            os.rename(bak, snapshot_path)  # roll the original back
-        else:
-            shutil.rmtree(bak)
-        raise
-    with open(marker, "w") as fh:
-        fh.write(str(batch_id))
-    shutil.rmtree(bak)
+    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()
 
 
 def run_incremental_matview(
@@ -126,37 +90,21 @@ def run_incremental_matview(
     Merging batch aggregates (not raw rows) keeps the shuffle to the
     batch's key set; the result equals a full batch recompute."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    spark = stream.sparkSession
-    marker = snapshot_path + ".last_batch"
     combine_fn = {c: (combine or {}).get(c, "sum") for c in agg_exprs}
 
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_snapshot(snapshot_path)
-        if batch_id <= _last_applied(marker):
-            return  # replay of an already-applied batch
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         batch_agg = batch_df.groupBy(*keys).agg(
             *[F.expr(e).alias(c) for c, e in agg_exprs.items()]
         )
-        if os.path.exists(snapshot_path):
-            prev = spark.read.parquet(snapshot_path)
-            combined = (
-                prev.unionByName(batch_agg)
-                .groupBy(*keys)
-                .agg(
-                    *[
-                        F.expr(f"{combine_fn[c]}({c})").alias(c)
-                        for c in agg_exprs
-                    ]
-                )
-            )
-        else:
-            combined = batch_agg
-        # write-aside (tmp is fully materialized while the live
-        # snapshot is still being read) then two atomic renames
-        combined.write.mode("overwrite").parquet(snapshot_path + ".tmp")
-        _commit_snapshot(snapshot_path, marker, batch_id)
+        if prev is None:
+            return batch_agg
+        return (
+            prev.unionByName(batch_agg)
+            .groupBy(*keys)
+            .agg(*[F.expr(f"{combine_fn[c]}({c})").alias(c) for c in agg_exprs])
+        )
 
-    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()
+    maintain_snapshot(stream, snapshot_path, checkpoint, merge)
 
 
 def run_streaming_upsert(
@@ -176,35 +124,21 @@ def run_streaming_upsert(
     batch ∪ snapshot keys. On a transactional table format the union+
     window collapses to MERGE WHEN MATCHED — dataflow unchanged."""
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    spark = stream.sparkSession
-    marker = snapshot_path + ".last_batch"
 
-    from pyspark.sql import Window
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_snapshot(snapshot_path)
-        if batch_id <= _last_applied(marker):
-            return
+    def merge(prev: DataFrame | None, batch_df: DataFrame) -> DataFrame:
         # collapse the batch itself first (a key may change twice in
         # one batch); __src=1 marks incoming rows so they beat equal
         # versions already in the snapshot
-        incoming = batch_df.withColumn("__src", F.lit(1))
-        if os.path.exists(snapshot_path):
-            prev = spark.read.parquet(snapshot_path).withColumn(
-                "__src", F.lit(0)
-            )
-            merged = prev.unionByName(incoming)
-        else:
-            merged = incoming
+        merged = batch_df.withColumn("__src", F.lit(1))
+        if prev is not None:
+            merged = prev.withColumn("__src", F.lit(0)).unionByName(merged)
         w = Window.partitionBy(*keys).orderBy(
             F.col(version_col).desc(), F.col("__src").desc()
         )
-        latest = (
+        return (
             merged.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
             .drop("__rn", "__src")
         )
-        latest.write.mode("overwrite").parquet(snapshot_path + ".tmp")
-        _commit_snapshot(snapshot_path, marker, batch_id)
 
-    drain_foreach_batch(stream, sink, checkpoint).awaitTermination()
+    maintain_snapshot(stream, snapshot_path, checkpoint, merge)

@@ -5,9 +5,10 @@ The NB model (operators/classify) is two additive tables: per-
 (token, label) occurrence counts and per-label document counts. Both
 are exactly the shape run_incremental_matview maintains — per-key
 sum-combinable aggregates merged batch-by-batch into a crash-safe
-parquet snapshot (write-aside + bak-swap + applied-batch marker, see
-streaming/matview). So a labeled intake stream keeps the model
-current at per-batch cost O(|batch tokens|), and
+parquet snapshot (staged and swapped in through sinks/commit with its
+applied-batch marker inside, see streaming/matview). So a labeled
+intake stream keeps the model current at per-batch cost
+O(|batch tokens|), and
 ``nb_model_from_snapshots`` rehydrates (token_counts, label_stats)
 frames that score EXACTLY like a from-scratch nb_train over
 everything the stream has delivered — proven by the batch-parity

@@ -4,8 +4,8 @@ The quantile-normalization mapping (operators/scoring) is derived
 entirely from the (group, score) COUNT table — an additive aggregate.
 So the streaming story needs no new state machinery: micro-batches
 fold their counts into the crash-safe incremental matview snapshot
-(streaming/matview — write-aside swap, applied-batch marker, replay
-idempotent), and the mapping rebuilds exactly from the snapshot at
+(streaming/matview — a staged swap that carries its applied-batch
+marker, replay idempotent), and the mapping rebuilds exactly from the snapshot at
 read time. A normalization built this way equals a from-scratch
 build over every row ever delivered — the same additive-sketch
 design as the NB model sync (streaming/modelsync) and the fingerprint
@@ -37,7 +37,7 @@ def run_streaming_score_counts(
     queries and the intake gate use (functions/text.quality_score);
     NULL-text or NULL-group rows are dropped here for the same reason
     the batch operator drops them — they must not enter the CDFs.
-    Replay-safe via the matview's applied-batch marker."""
+    Replay-safe via the applied-batch marker inside the matview snapshot."""
     from dasladen_spark.operators.scoring import _check_names
 
     # fail BEFORE any state accumulates: a reserved group name ('c'

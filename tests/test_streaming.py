@@ -337,85 +337,92 @@ def test_streaming_upsert_last_write_wins_and_replay_safe(spark, tmp_path):
     assert got2 == got
 
 
-def test_matview_snapshot_swap_recovers_from_crash(tmp_path):
-    """The snapshot swap must be crash-safe at every point: (a) died
-    after parking the live snapshot at .bak.<b> but before tmp moved
-    in (marker < b) → recovery restores the exact pre-batch snapshot
-    so the replay merges against the right state; (b) died after the
-    marker advanced but before bak cleanup (marker >= b) → recovery
-    drops the bak and keeps the new snapshot; stale .tmp always goes."""
-    import glob
+def test_matview_snapshot_swap_recovers_from_crash(spark, tmp_path, monkeypatch):
+    """The snapshot swap must be crash-safe at every point. Each batch
+    below is killed inside the sinks/commit swap (a kill never rolls
+    the parked copy back), then the stream restarts from its
+    checkpoint and replays the batch: (c) the FIRST batch killed after
+    its stage rename is not applied twice; (a) a batch killed after
+    parking the live snapshot but before the stage moved in merges,
+    once, against the exact pre-batch snapshot; (b) a batch killed
+    after the rename but before the old copy is deleted keeps the new
+    snapshot and loses the sibling; a stale stage always goes."""
     import os
 
-    from dasladen_spark.streaming.matview import (
-        _commit_snapshot,
-        _last_applied,
-        _recover_snapshot,
-    )
+    from pyspark.errors.exceptions.captured import StreamingQueryException
 
-    snap = str(tmp_path / "snap")
-    marker = snap + ".last_batch"
+    from dasladen_spark.sinks import commit
+    from dasladen_spark.streaming.matview import run_incremental_matview
 
-    def write_dir(path, tag):
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "part.txt"), "w") as fh:
-            fh.write(tag)
+    src = tmp_path / "src"
+    src.mkdir()
+    snap, ck = tmp_path / "snap", str(tmp_path / "ck")
+    real_rename = commit.rename
 
-    def read_tag(path):
-        with open(os.path.join(path, "part.txt")) as fh:
-            return fh.read()
+    def killed(at):
+        def rename(fs, frm, to):
+            if ".old-" in frm.getName():  # the rollback a kill never runs
+                raise OSError("killed")
+            if ".stage-" in frm.getName() and at == "before":
+                raise OSError("killed")
+            real_rename(fs, frm, to)
+            if ".stage-" in frm.getName() and at == "after":
+                raise OSError("killed")
 
-    # (a) crash between snapshot→bak and tmp→snapshot: live missing
-    write_dir(snap + ".bak.5", "v4")
-    write_dir(snap + ".tmp", "v5-partial")
-    with open(marker, "w") as fh:
-        fh.write("4")
-    _recover_snapshot(snap)
-    assert read_tag(snap) == "v4"  # pre-batch state restored
-    assert not os.path.exists(snap + ".bak.5")
-    assert not os.path.exists(snap + ".tmp")
+        return rename
 
-    # (b) crash after marker write, before bak cleanup: roll forward
-    write_dir(snap + ".bak.5", "v4")
-    write_dir(snap, "v5")
-    with open(marker, "w") as fh:
-        fh.write("5")
-    _recover_snapshot(snap)
-    assert read_tag(snap) == "v5"
-    assert not os.path.exists(snap + ".bak.5")
+    def drain(at=None):
+        stream = (
+            spark.readStream.schema("k STRING, v BIGINT")
+            .option("sep", ";")
+            .option("header", True)
+            .option("maxFilesPerTrigger", 1)
+            .csv(str(src))
+        )
+        if at:
+            monkeypatch.setattr(commit, "rename", killed(at))
+        try:
+            run_incremental_matview(
+                stream, str(snap), ck, "k", {"n": "count(1)", "total": "sum(v)"}
+            )
+        finally:
+            monkeypatch.setattr(commit, "rename", real_rename)
 
-    # a clean commit promotes tmp, advances the marker, leaves no debris
-    write_dir(snap + ".tmp", "v6")
-    _commit_snapshot(snap, marker, 6)
-    assert read_tag(snap) == "v6"
-    assert _last_applied(marker) == 6
-    assert not glob.glob(snap + ".bak.*")
-    assert not os.path.exists(snap + ".tmp")
+    def view():
+        rows = spark.read.parquet(str(snap)).collect()
+        return {r["k"]: (r["n"], r["total"]) for r in rows}
 
-    # (c) FIRST-batch crash between the tmp rename and the marker
-    # write: there is no prior snapshot to park, so the commit must
-    # leave a sentinel bak — recovery rolls back to "no snapshot" and
-    # the replay applies batch 0 exactly once instead of merging it
-    # into its own committed-but-unmarked output
-    import shutil
+    def siblings(role=""):
+        names = os.listdir(tmp_path)
+        return sorted(n for n in names if n.startswith(f".snap.{role}"))
 
-    shutil.rmtree(snap)
-    os.remove(marker)
-    from dasladen_spark.streaming.matview import _NO_PREV
+    # (c) first batch killed after its rename: the replay is skipped
+    (src / "b0.csv").write_text("k;v\na;1\na;2\nb;10\n")
+    with pytest.raises(StreamingQueryException, match="killed"):
+        drain("after")
+    assert view() == {"a": (2, 3), "b": (1, 10)}
+    drain()
+    assert view() == {"a": (2, 3), "b": (1, 10)}
 
-    write_dir(snap, "v0")            # batch 0 output already promoted
-    os.makedirs(snap + ".bak.0")     # the sentinel the commit left
-    with open(os.path.join(snap + ".bak.0", _NO_PREV), "w"):
-        pass                          # ...but the marker never advanced
-    _recover_snapshot(snap)
-    assert not os.path.exists(snap)  # rolled back to empty baseline
-    assert not glob.glob(snap + ".bak.*")
+    # (a) killed after parking, before the stage rename: the live
+    # snapshot is missing, the pre-batch copy parked beside it
+    (src / "b1.csv").write_text("k;v\na;4\nc;100\n")
+    with pytest.raises(StreamingQueryException, match="killed"):
+        drain("before")
+    assert not snap.exists() and len(siblings("old-")) == 1
+    (tmp_path / ".snap.stage-0123abcd").mkdir()  # a kill's stale stage
+    drain()
+    assert view() == {"a": (3, 7), "b": (1, 10), "c": (1, 100)}
+    assert siblings() == []
 
-    # and a real first-batch commit cleans up its sentinel
-    write_dir(snap + ".tmp", "v0")
-    _commit_snapshot(snap, marker, 0)
-    assert read_tag(snap) == "v0"
-    assert not glob.glob(snap + ".bak.*")
+    # (b) killed after the rename, before the old copy is deleted
+    (src / "b2.csv").write_text("k;v\nb;5\n")
+    with pytest.raises(StreamingQueryException, match="killed"):
+        drain("after")
+    assert len(siblings("old-")) == 1
+    drain()
+    assert view() == {"a": (3, 7), "b": (2, 15), "c": (1, 100)}
+    assert siblings() == []
 
 
 def test_incremental_topk_equals_batch_recompute(spark, tmp_path, sf_dir):
@@ -822,6 +829,62 @@ def test_streaming_dedup_intake_maintains_index(spark, tmp_path):
     assert fresh.count() == 0
     for t in ("t_stream_fpidx", "t_stream_fpidx_meta"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def test_intake_marker_keeps_its_value_when_its_write_fails(
+    spark, tmp_path, monkeypatch
+):
+    """The intake's applied-batch marker is replaced, never truncated:
+    a marker write that fails keeps the previous value readable and
+    fails the query, and a restart then applies the batch."""
+    import json
+    import os
+
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from dasladen_spark.operators.fingerprint_index import build_fingerprint_index
+    from dasladen_spark.streaming import indexsync
+    from dasladen_spark.streaming.intake import stream_document_folder
+
+    spark.sql("DROP TABLE IF EXISTS t_marker_idx")
+    spark.sql("DROP TABLE IF EXISTS t_marker_idx_meta")
+    build_fingerprint_index(
+        spark.createDataFrame([(100, "history doc")], ["doc_id", "text"]),
+        "t_marker_idx",
+        n_buckets=2,
+        tag="h0",
+    )
+    src, acc, ck = tmp_path / "drops", str(tmp_path / "accept"), str(tmp_path / "ck")
+    src.mkdir()
+    marker = os.path.join(acc, "_last_batch")
+
+    def drain(name, doc_id):
+        doc = {"doc_id": doc_id, "text": f"doc {name}", "lang": "en", "source": "s"}
+        (src / f"{name}.jsonl").write_text(json.dumps(doc))
+        stream = stream_document_folder(spark, str(src))
+        indexsync.run_streaming_dedup_intake(
+            stream, "t_marker_idx", acc, ck
+        ).awaitTermination(120)
+
+    drain("a", 1)
+    assert indexsync._last_applied(marker) == 0
+    real_replace = os.replace
+
+    def failing_replace(src_, dst, *args, **kwargs):
+        if str(dst) == marker:
+            raise OSError("simulated marker write failure")
+        return real_replace(src_, dst, *args, **kwargs)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(StreamingQueryException, match="simulated marker"):
+        drain("b", 2)
+    monkeypatch.undo()
+    assert indexsync._last_applied(marker) == 0
+    drain("c", 3)
+    assert indexsync._last_applied(marker) == 2
+    assert {r["doc_id"] for r in spark.read.parquet(acc).collect()} == {1, 2, 3}
+    spark.sql("DROP TABLE IF EXISTS t_marker_idx")
+    spark.sql("DROP TABLE IF EXISTS t_marker_idx_meta")
 
 
 def test_streaming_winnowed_intake_near_dup_across_batches(spark, tmp_path):

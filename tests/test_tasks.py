@@ -738,6 +738,29 @@ def test_failed_rewrite_leaves_the_target_byte_identical(spark, workdir, sink):
     assert _hidden(out) == []
 
 
+def test_truncate_write_recovers_a_killed_swap(spark, workdir):
+    """A swap killed between its two renames left the target missing
+    and the prior output parked at a hidden ``.old-`` sibling, beside a
+    stale stage: the next truncate write of the target restores and
+    replaces it, and no sibling is left."""
+    _qty_source(spark, workdir)
+    out = workdir / "output"
+    task = {
+        "name": "t",
+        "type": "parquet-parquet",
+        "source": {"file": "src.parquet"},
+        "target": {"file": "out.parquet", "truncate": True},
+        "transform": {"filter": _KEEP_ALL},
+    }
+    run_tasks(spark, workdir, {"tasks": [task]})
+    os.rename(out / "out.parquet", out / f".out.parquet.old-{uuid.uuid4().hex}")
+    (out / f".out.parquet.stage-{uuid.uuid4().hex}").mkdir()
+    task["transform"] = {"filter": "{qty} < 10"}
+    run_tasks(spark, workdir, {"tasks": [task]})
+    assert spark.read.parquet(str(out / "out.parquet")).count() == 10
+    assert _hidden(out) == []
+
+
 def test_db_csv_via_parquet_connection(spark, workdir, sf_dir):
     """db-* tasks with the parquet lakehouse driver: Spark SQL is the
     backing engine (reference pushes SQL text to an RDBMS)."""

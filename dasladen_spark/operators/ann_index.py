@@ -4,10 +4,13 @@ The approximate searchers in operators/similarity.py re-derive their
 bucket/cell assignments for EVERY query batch: at 100 TB that is a
 full corpus signature pass plus a key shuffle, repeated per batch.
 This module pays that cost once. ``build_ann_index`` persists the
-posting lists as a parquet table BUCKETED by the probe key
-(sinks/bucketed.write_bucketed); ``search_ann_index`` probes it with
-a broadcast hash join — at query time the corpus side's executed
-plan has NO Exchange and NO Python UDF (asserted in
+posting lists (similarity.lsh_postings / ivf_postings, optionally
+PQ-encoded) as a parquet table BUCKETED by the probe key
+(sinks/bucketed.write_bucketed); ``search_ann_index`` runs
+similarity.probe_topk — the probe, score and rank code every
+query-time searcher runs too — over the table's scan: a broadcast
+hash join, so at query time the corpus side's executed plan has NO
+Exchange and NO Python UDF (asserted in
 tests/test_plan_shapes.py::test_indexed_ann_search_has_no_corpus_side_shuffle);
 the only rows that ever shuffle are the matched candidates for the
 per-query top-k window.
@@ -41,15 +44,14 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dasladen_spark.functions.vectors import cosine_sim_carried, l2_norm
-from dasladen_spark.operators.dedup import _spread, hyperplane_table_buckets
+from dasladen_spark.operators.dedup import _spread
 from dasladen_spark.operators.pq import PQ_VERSION
-from dasladen_spark.operators.ranking import rank_per_query
 from dasladen_spark.operators.similarity import (
     IVF_VERSION,
     fit_ivf_centroids,
-    probe_cells_driver,
-    with_cells,
+    ivf_postings,
+    lsh_postings,
+    probe_topk,
 )
 from dasladen_spark.operators.snapshot import (
     drop_orphans,
@@ -149,27 +151,10 @@ def build_ann_index(
         "neighbor_id",
     )
     if method == "lsh":
-        postings = hyperplane_table_buckets(
-            c, "cv", num_tables, bits_per_table, dim
-        ).select(
-            (F.col("t").cast("bigint") * (1 << bits_per_table) + F.col("bkt"))
-            .alias("probe"),
-            "neighbor_id",
-            "cv",
-            # the vector's norm, folded ONCE at build time: search
-            # scores candidates with carried norms (one interpreted
-            # fold per pair instead of three, bit-identical cosines —
-            # functions/vectors.cosine_sim_carried)
-            l2_norm(F.col("cv")).alias("cnorm"),
-        )
+        postings = lsh_postings(c, num_tables, bits_per_table, dim)
     elif method == "ivf":
         cent = fit_ivf_centroids(c, n_centroids, lloyd_iters)
-        postings = with_cells(c, cent, "cv").select(
-            F.col("cell").cast("bigint").alias("probe"),
-            "neighbor_id",
-            "cv",
-            l2_norm(F.col("cv")).alias("cnorm"),
-        )
+        postings = ivf_postings(c, cent)
         spark.createDataFrame(
             [(i, [float(x) for x in row]) for i, row in enumerate(cent)],
             "cell INT, centroid ARRAY<DOUBLE>",
@@ -240,25 +225,11 @@ def _postings_for(
     path: new corpus rows join the index without a rebuild."""
     meta = _index_meta(spark, table)
     if meta["method"] == "lsh":
-        post = hyperplane_table_buckets(
-            vecs, "cv", meta["num_tables"], meta["bits_per_table"], meta["dim"]
-        ).select(
-            (
-                F.col("t").cast("bigint") * (1 << meta["bits_per_table"])
-                + F.col("bkt")
-            ).alias("probe"),
-            "neighbor_id",
-            "cv",
-            l2_norm(F.col("cv")).alias("cnorm"),
+        post = lsh_postings(
+            vecs, meta["num_tables"], meta["bits_per_table"], meta["dim"]
         )
     else:
-        cent = _index_centroids(spark, table)
-        post = with_cells(vecs, cent, "cv").select(
-            F.col("cell").cast("bigint").alias("probe"),
-            "neighbor_id",
-            "cv",
-            l2_norm(F.col("cv")).alias("cnorm"),
-        )
+        post = ivf_postings(vecs, _index_centroids(spark, table))
     if "compress" in meta.asDict() and meta["compress"] == "pq":
         from dasladen_spark.operators.pq import with_codes
 
@@ -411,31 +382,6 @@ def ensure_ann_index(corpus: DataFrame, table: str, tag: str, **kwargs) -> str:
     )
 
 
-def _probe_schema(queries: DataFrame, query_id: str, rest: str):
-    """Schema for the driver-computed broadcast probe frame, with the
-    query-id field typed from the caller's query frame (string /
-    int / long ids all round-trip; a hard-coded ``long`` raised on
-    non-integer ids)."""
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    name, typ = rest.split()
-    rest_type = {"bigint": LongType(), "int": IntegerType()}[typ]
-    # query_id stays nullable: the shuffle path tolerates a NULL id
-    # (it just never matches the equi-join), so the broadcast probe
-    # must not raise on one inside createDataFrame either
-    return StructType(
-        [
-            StructField("query_id", queries.schema[query_id].dataType, True),
-            StructField(name, rest_type, False),
-        ]
-    )
-
-
 def search_ann_index(
     spark: SparkSession,
     table: str,
@@ -476,111 +422,26 @@ def search_ann_index(
     if compress == "pq" and corpus is None:
         raise ValueError("pq-compressed index needs the source corpus "
                          "frame for the exact re-rank")
-    from dasladen_spark.operators.pq import lattice_denom
-
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("qv"),
-        # folded once per query; the candidate scoring carries it
-        # against the index's build-time cnorm
-        l2_norm(F.col(query_vec)).alias("_qn"),
-    )
-    # ONE collect of the (small by contract) query batch feeds every
-    # driver-side derivation — LSH probe keys, IVF probe cells, and
-    # the PQ LUT normalization — instead of a separate Spark job each
-    q_collected = q.withColumn(
-        "_ld", lattice_denom(F.col("qv"))
-    ).collect()
-    qn_rows = [
-        (r["query_id"], [x / r["_ld"] for x in r["qv"]])
-        for r in q_collected
-    ]
-    if meta["method"] == "lsh":
-        from dasladen_spark.operators.dedup import hyperplane_probes_driver
-
-        # hash the batch driver-side (bit-identical to the kernel —
-        # see hyperplane_probes_driver) instead of paying the
-        # kernel's two-stage aggregate DAG per search
-        probe_pairs = hyperplane_probes_driver(
-            [(r["query_id"], list(r["qv"])) for r in q_collected],
-            meta["num_tables"],
-            meta["bits_per_table"],
-            meta["dim"],
-        )
-        probes = q.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    probe_pairs,
-                    _probe_schema(queries, query_id, "probe bigint"),
-                )
-            ),
-            "query_id",
-        ).select("query_id", "qv", "_qn", "probe")
-    else:
-        cent = _index_centroids(spark, table)
-        probes = q.join(
-            F.broadcast(
-                spark.createDataFrame(
-                    probe_cells_driver(cent, qn_rows, n_probe),
-                    _probe_schema(queries, query_id, "cell int"),
-                )
-            ),
-            "query_id",
-        ).select(
-            "query_id",
-            "qv",
-            "_qn",
-            F.col("cell").cast("bigint").alias("probe"),
-        )
-    cand = (
-        spark.table(table)
-        .join(F.broadcast(probes), on="probe")
-        .dropDuplicates(["query_id", "neighbor_id"])
-    )
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    if compress == "pq":
-        from dasladen_spark.operators.pq import (
-            adc_score_expr,
-            exact_rerank,
-            query_lut,
-        )
-
-        if not qn_rows:
-            return spark.createDataFrame(
-                [], "query_id long, rank int, neighbor_id long, cosine double"
-            )
-        books = _load_pq_books(spark, table)
-        q_ids, lut = query_lut(books, qn_rows)
-        short = rank_per_query(
-            cand.select(
-                "query_id",
-                "neighbor_id",
-                adc_score_expr(q_ids, lut, "query_id", "codes").alias("adc"),
-            ),
-            "adc",
-            k * rerank_mult,
-            rank_col="arank",
-        ).select("query_id", "neighbor_id")
-        return exact_rerank(
-            short,
-            queries,
-            corpus,
-            k,
-            query_id=query_id,
-            query_vec=query_vec,
-            id_col=corpus_id or query_id,
-            vec_col=corpus_vec or query_vec,
-        )
-    scored = cand.select(
-        "query_id",
-        "neighbor_id",
-        cosine_sim_carried(
-            F.col("qv"), F.col("cv"), F.col("_qn"), F.col("cnorm")
-        ).alias("cosine"),
-    )
-    return rank_per_query(scored, "cosine", k).select(
-        "query_id", "rank", "neighbor_id", "cosine"
+    return probe_topk(
+        spark.table(table),
+        queries,
+        k,
+        query_id,
+        query_vec,
+        meta["num_tables"],
+        meta["bits_per_table"],
+        meta["dim"],
+        cent=(
+            None if meta["method"] == "lsh"
+            else _index_centroids(spark, table)
+        ),
+        n_probe=n_probe,
+        books=_load_pq_books(spark, table) if compress == "pq" else None,
+        corpus=corpus,
+        corpus_id=corpus_id or query_id,
+        corpus_vec=corpus_vec or query_vec,
+        rerank_mult=rerank_mult,
+        exclude_self=exclude_self,
     )
 
 

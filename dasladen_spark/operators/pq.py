@@ -58,12 +58,15 @@ Plan shape (the part that survives a 1000-executor scale-up):
   ever reach the driver.
 - encode: one projection over the corpus (m·ksub integer folds per
   row), emitting (id, codes tinyint-sized ints). No shuffle.
-- search: ADC scores are a generated per-query expression column
-  over the CODES (not the vectors); the per-query top-k window sees
-  |Q| × |corpus| candidate rows pre-filtered by nothing but the
-  code scan — the same bounded-candidate shape as
-  operators/ranking.topk_per_group once a bucketed index
-  (operators/ann_index) prunes the corpus side.
+- search: similarity.probe_topk, the one probe path of every ANN
+  searcher. The ADC score is one generated CASE over the query batch
+  (:func:`adc_score_expr`, one :func:`_adc_chain_sql` per query)
+  evaluated on the CODES of each candidate (not the vectors); the
+  query-time search (:func:`pq_topk_reranked`) is the flat posting
+  projection — one cell, so the per-query top-k window sees
+  |Q| × |corpus| candidate rows — and a bucketed index
+  (operators/ann_index) prunes the corpus side to the probed
+  buckets.
 
 Beyond-reference operator (the reference delegates all query power
 to an RDBMS, /root/reference/dasladen/task.py:94-107).
@@ -120,8 +123,9 @@ def lattice_denom(vec: Column | str) -> Column:
 def collect_normalized(
     df: DataFrame, id_col: str, vec_col: str
 ) -> list[tuple]:
-    """Collected ``[(id, xn)]`` for a SMALL frame (seeds, query
-    batches): the denominator comes from :func:`lattice_denom` on the
+    """Collected ``[(id, v, xn)]`` for a SMALL frame (seeds, query
+    batches): the raw vector as doubles and its lattice-normalized
+    form. The denominator comes from :func:`lattice_denom` on the
     JVM, the division happens driver-side — Python float division is
     the same correctly-rounded IEEE op, so the values are bit-equal
     to any engine-side spelling."""
@@ -131,7 +135,7 @@ def collect_normalized(
         lattice_denom(F.col(vec_col)).alias("_d"),
     ).collect()
     return [
-        (r["_id"], [x / r["_d"] for x in r["_v"]]) for r in rows
+        (r["_id"], r["_v"], [x / r["_d"] for x in r["_v"]]) for r in rows
     ]
 
 
@@ -402,7 +406,9 @@ def lattice_lloyd_fit(
             F.md5(F.concat(F.lit(salt), F.col("_id").cast("string")))
         ).limit(k)
         if normalize:
-            cent = [xn for _sid, xn in collect_normalized(seeds, "_id", "_v")]
+            cent = [
+                xn for _sid, _v, xn in collect_normalized(seeds, "_id", "_v")
+            ]
         else:
             cent = [[float(x) for x in r["_v"]] for r in seeds.collect()]
         if len(cent) < k:
@@ -487,15 +493,6 @@ def pq_encode(
     )
 
 
-def normalized_query_rows(
-    queries: DataFrame, query_id: str = "vec_id", query_vec: str = "embedding"
-):
-    """Collected [(query_id, qn)] with the denominator from the SAME
-    JVM fold the corpus encode uses (:func:`lattice_denom`) — keeps
-    driver-built LUTs bit-aligned with corpus-side codes."""
-    return collect_normalized(queries, query_id, query_vec)
-
-
 def query_lut(books, qn_rows) -> tuple[list, list]:
     """(query ids, LUT[q][j][c] = qn_sub_j · books[j][c]) for
     normalized query rows — sequential left-assoc dot (w = t₀; w += tᵢ),
@@ -534,11 +531,6 @@ def _adc_chain_sql(lut_q: list[list[float]], codes_col: str) -> str:
         f" element_at(`{codes_col}`, {j + 1}) + 1)"
         for j in range(len(lut_q))
     )
-
-
-def _adc_chain(lut_q: list[list[float]], codes_col: str) -> Column:
-    """Column form of :func:`_adc_chain_sql` (one JVM-side parse)."""
-    return F.expr(_adc_chain_sql(lut_q, codes_col))
 
 
 def _require_int_id(qid) -> int:
@@ -585,57 +577,6 @@ def adc_score_expr(
         for qid, lut_q in zip(q_ids, lut)
     )
     return F.expr(f"CASE {branches} END")
-
-
-def pq_adc_topk(
-    queries: DataFrame,
-    codes: DataFrame,
-    books: np.ndarray,
-    k: int = 5,
-    query_id: str = "vec_id",
-    query_vec: str = "embedding",
-    exclude_self: bool = True,
-) -> DataFrame:
-    """Approximate top-k by asymmetric distance: queries stay exact,
-    corpus rows are reconstructed implicitly through the LUT.
-
-    Contract: ``query_id`` values must be integers (BIGINT) — each id
-    is baked into the generated ``stack()`` literal as ``{id}L``.
-    Non-integer ids raise here rather than mis-typing the output.
-
-    The query batch is collect()ed (queries are the small side by
-    construction — the same contract as similarity.cosine_topk); the
-    code scan gets one generated score column per query (an
-    element_at chain over LUT literals — no join, no Python), stacked
-    to (query_id, neighbor_id, adc_score) rows feeding the per-query
-    top-k window."""
-    qn_rows = normalized_query_rows(queries, query_id, query_vec)
-    if not qn_rows:
-        return codes.sparkSession.createDataFrame(
-            [], "query_id long, rank int, neighbor_id long, adc_score double"
-        )
-    q_ids, lut = query_lut(books, qn_rows)
-    score_cols = [
-        _adc_chain(lut[i], "codes").alias(f"_s{i}") for i in range(len(q_ids))
-    ]
-    scored = codes.select("neighbor_id", "codes", *score_cols)
-    stack = ",".join(
-        f"{_require_int_id(qid)}L, _s{i}" for i, qid in enumerate(q_ids)
-    )
-    cand = scored.select(
-        "neighbor_id",
-        F.expr(
-            f"stack({len(q_ids)}, {stack}) as (query_id, adc_score)"
-        ),
-    ).select("query_id", "neighbor_id", "adc_score")
-    if exclude_self:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    return rank_per_query(cand, "adc_score", k).select(
-        "query_id",
-        "rank",
-        "neighbor_id",
-        F.round("adc_score", 6).alias("adc_score"),
-    )
 
 
 def exact_rerank(
@@ -700,22 +641,34 @@ def pq_topk_reranked(
     error then only matters below the shortlist boundary, so recall
     recovers most of the gap to exact search at a fraction of the
     I/O. Output schema matches the other ANN paths:
-    (query_id, rank, neighbor_id, cosine)."""
-    short = pq_adc_topk(
+    (query_id, rank, neighbor_id, cosine).
+
+    The search is similarity.probe_topk over the flat posting
+    projection ``(probe, neighbor_id, codes)``: one cell holding every
+    code, so it is IVF with a single centroid and every query probes
+    cell 0."""
+    from dasladen_spark.operators.similarity import probe_topk
+
+    m, _ksub, dsub = np.shape(books)
+    return probe_topk(
+        codes.select(
+            # a zero the optimizer cannot fold (it folds a literal and
+            # hash * 0): a constant key is pushed into the probe side
+            # as a filter, leaving a nested-loop join instead of the
+            # broadcast hash join
+            (F.xxhash64("neighbor_id") % 1).alias("probe"),
+            "neighbor_id",
+            "codes",
+        ),
         queries,
-        codes,
-        books,
-        k=k * rerank_mult,
-        query_id=query_id,
-        query_vec=query_vec,
-    ).select("query_id", "neighbor_id")
-    return exact_rerank(
-        short,
-        queries,
-        corpus,
         k,
-        query_id=query_id,
-        query_vec=query_vec,
-        id_col=id_col,
-        vec_col=vec_col,
+        query_id,
+        query_vec,
+        cent=np.zeros((1, m * dsub)),
+        books=books,
+        corpus=corpus,
+        corpus_id=id_col,
+        corpus_vec=vec_col,
+        rerank_mult=rerank_mult,
+        unique_postings=True,
     )

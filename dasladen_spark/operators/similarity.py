@@ -6,17 +6,60 @@
   one pass over the corpus: the right baseline.
 - lsh_cosine_topk: random-hyperplane bucketing — each query probes
   only its own buckets, trading recall for a corpus-fraction scan.
+- ivf_cosine_topk: inverted-file cells — each query scores only its
+  ``n_probe`` nearest cells' members.
+
+One probe path: every approximate search — lsh_cosine_topk's
+small-batch arm, ivf_cosine_topk, pq.pq_topk_reranked and
+ann_index.search_ann_index — is :func:`probe_topk` over a posting
+projection ``(probe, neighbor_id, cv, cnorm)`` or ``(probe,
+neighbor_id, codes)``. A materialized index is that projection
+written once (:func:`lsh_postings`, :func:`ivf_postings`); a
+query-time search builds the same projection from the corpus and
+never writes it. probe_topk collects the query batch once, hashes
+its probes on the driver, broadcasts them onto the postings, scores
+and ranks — so a change to probing, scoring or ranking lands in one
+place for every searcher.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from dasladen_spark.functions.vectors import cosine_sim_carried, l2_norm
-from dasladen_spark.operators.dedup import _spread, hyperplane_table_buckets
+from dasladen_spark.operators.dedup import (
+    _spread,
+    hyperplane_probes_driver,
+    hyperplane_table_buckets,
+)
+from dasladen_spark.operators.pq import (
+    PQ_QUANT,
+    _lat,
+    _zc_lit,
+    adc_score_expr,
+    collect_normalized,
+    exact_rerank,
+    lattice_denom,
+    lattice_lloyd_fit,
+    query_lut,
+)
 from dasladen_spark.operators.ranking import rank_per_query
+
+#: the largest query batch lsh_cosine_topk searches through
+#: probe_topk's driver-side probes; a larger batch takes the
+#: kernel-shuffle arm
+_BROADCAST_CAP = 1024
 
 
 def cosine_topk(
@@ -78,8 +121,6 @@ def lsh_cosine_topk(
     num_tables: int = 16,
     bits_per_table: int = 4,
     exclude_self: bool = True,
-    broadcast_queries: bool | None = None,
-    broadcast_cap: int = 1024,
 ) -> DataFrame:
     """Approximate top-k: candidates must share a random-hyperplane
     bucket with the query in at least one table. The corpus is
@@ -92,58 +133,42 @@ def lsh_cosine_topk(
     with the report: more tables -> recall, more bits -> smaller
     buckets (fewer candidates per probe).
 
-    ``broadcast_queries`` (default: auto-probe with a bounded fetch,
-    the scoring.py localize pattern): a query batch of ≤
-    ``broadcast_cap`` rows is collected, hashed driver-side
-    (dedup.hyperplane_probes_driver — asserted bit-identical to the
-    kernel), and BROADCAST onto the corpus posting stream. That turns
-    the (t, bkt) join into a BroadcastHashJoin: at 100 TB the corpus
-    postings never shuffle (the kernel's own map-side-complete
-    exchange is the only corpus Exchange), and the candidate set —
-    and therefore the result — is row-identical to the shuffle path.
-    Pass False to force the symmetric shuffle join (the right shape
-    when the "query" side IS a corpus, e.g. all-pairs near-dup), or
-    True to assert smallness (raises past the cap instead of silently
-    degrading)."""
+    A query batch of at most ``_BROADCAST_CAP`` rows (observed by a
+    bounded fetch, the scoring.py localize pattern) is searched by
+    :func:`probe_topk` over the :func:`lsh_postings` of the corpus —
+    the same probe, score and rank code as a materialized index
+    (operators/ann_index), so the corpus postings never shuffle and
+    the result is row-identical to the kernel-shuffle arm below,
+    which serves larger batches (e.g. all-pairs near-dup, where the
+    "query" side IS a corpus)."""
     qid_type = queries.schema[query_id].dataType
     cid_type = corpus.schema[corpus_id].dataType
-    head = None
-    if broadcast_queries is None or broadcast_queries:
-        # bounded fetch, reused as the broadcast rebuild (never a
-        # count probe + second collect): limit(cap+1) caps what can
-        # reach the driver even on a corpus-sized mistake
-        head = (
-            queries.select(
-                F.col(query_id).alias("_qid"),
-                F.col(query_vec).cast("array<double>").alias("_qv"),
-            )
-            .limit(broadcast_cap + 1)
-            .collect()
+    # bounded fetch, reused as the query frame of the probe path (never
+    # a count probe + second scan): limit(cap+1) caps what can reach
+    # the driver even on a corpus-sized mistake
+    qsel = queries.select(
+        F.col(query_id).alias("query_id"),
+        F.col(query_vec).cast("array<double>").alias("qv"),
+    )
+    head = qsel.limit(_BROADCAST_CAP + 1).collect()
+    if len(head) <= _BROADCAST_CAP:
+        c = _spread(
+            corpus.select(
+                F.col(corpus_id).alias("neighbor_id"),
+                F.col(corpus_vec).alias("cv"),
+            ),
+            "neighbor_id",
         )
-        if len(head) > broadcast_cap:
-            if broadcast_queries:
-                raise ValueError(
-                    f"lsh_cosine_topk: query batch exceeds"
-                    f" broadcast_cap={broadcast_cap} rows —"
-                    " broadcast_queries=True asserts a small batch;"
-                    " pass broadcast_queries=False for corpus-sized"
-                    " query sides"
-                )
-            head = None  # auto mode: fall through to the shuffle join
-    if head is not None:
-        return _lsh_topk_broadcast(
-            queries.sparkSession,
-            head,
-            corpus,
+        return probe_topk(
+            lsh_postings(c, num_tables, bits_per_table, dim),
+            _local_frame(queries.sparkSession, head, qsel.schema),
             k,
-            corpus_id,
-            corpus_vec,
-            dim,
+            "query_id",
+            "qv",
             num_tables,
             bits_per_table,
-            exclude_self,
-            qid_type,
-            cid_type,
+            dim,
+            exclude_self=exclude_self,
         )
     # ONE kernel pass over queries ∪ corpus (the side tag joins the
     # group key): half the signature-pipeline stages and half the
@@ -213,116 +238,31 @@ def lsh_cosine_topk(
     )
 
 
-def _lsh_topk_broadcast(
-    spark,
-    head,
-    corpus: DataFrame,
-    k: int,
-    corpus_id: str,
-    corpus_vec: str,
-    dim: int,
-    num_tables: int,
-    bits_per_table: int,
-    exclude_self: bool,
-    qid_type,
-    cid_type,
+def lsh_postings(
+    c: DataFrame, num_tables: int, bits_per_table: int, dim: int
 ) -> DataFrame:
-    """Small-query-batch LSH top-k: driver-side probes broadcast onto
-    the corpus posting stream (see lsh_cosine_topk's
-    ``broadcast_queries``). Candidate set is bit-identical to the
-    shuffle path — hyperplane_probes_driver shares the plane family,
-    quantum, and sign packing with the kernel (asserted by
-    test_hyperplane_driver_probes_match_kernel), and the cosine is
-    the same carried-norm fold over the same doubles (collect →
-    createDataFrame round-trips IEEE doubles exactly)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from dasladen_spark.operators.dedup import hyperplane_probes_driver
-
-    # first occurrence wins on duplicate query ids (degenerate input;
-    # the shuffle path's dropDuplicates keeps an arbitrary one).
-    # Null/empty vectors are skipped — the kernel's posexplode emits
-    # zero rows for them, so they produce no buckets on that path
-    # either.
-    rows, seen = [], set()
-    for r in head:
-        if r["_qid"] not in seen and r["_qv"]:
-            seen.add(r["_qid"])
-            rows.append((r["_qid"], list(r["_qv"])))
-    if not rows:
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [
-                    StructField("query_id", qid_type),
-                    StructField("rank", IntegerType()),
-                    StructField("neighbor_id", cid_type),
-                    StructField("cosine", DoubleType()),
-                ]
-            ),
-        )
-    mask = (1 << bits_per_table) - 1
-    probes = spark.createDataFrame(
-        [
-            (qid, p >> bits_per_table, p & mask)
-            for qid, p in hyperplane_probes_driver(
-                rows, num_tables, bits_per_table, dim
-            )
-        ],
-        StructType(
-            [
-                StructField("query_id", qid_type, False),
-                StructField("t", IntegerType(), False),
-                StructField("bkt", LongType(), False),
-            ]
-        ),
-    )
-    # norms fold Spark-side over the exact same doubles the kernel
-    # path would carry — bit-identical cosines
-    qv = spark.createDataFrame(
-        rows,
-        StructType(
-            [
-                StructField("query_id", qid_type, False),
-                StructField("qv", ArrayType(DoubleType())),
-            ]
-        ),
-    ).select("query_id", "qv", l2_norm(F.col("qv")).alias("_qn"))
-    c = hyperplane_table_buckets(
-        _spread(
-            corpus.select(
-                F.col(corpus_id).alias("neighbor_id"),
-                l2_norm(F.col(corpus_vec)).alias("_cn"),
-                F.col(corpus_vec).cast("array<double>").alias("cv"),
-            ),
+    """(probe, neighbor_id, cv, cnorm) — one posting row per hash table
+    for a (neighbor_id, cv) frame, the packed probe key
+    ``t·2^bits + bkt`` of :func:`dedup.hyperplane_table_buckets` (one
+    BIGINT, so an index buckets on a single column). ``cnorm`` folds
+    once per ROW before the kernel and rides through it, so candidate
+    scoring carries it (functions/vectors.cosine_sim_carried)."""
+    return hyperplane_table_buckets(
+        c.select(
             "neighbor_id",
+            l2_norm(F.col("cv")).alias("cnorm"),
+            F.col("cv").cast("array<double>").alias("cv"),
         ),
         "cv",
         num_tables,
         bits_per_table,
         dim,
-    )
-    cand = c.join(F.broadcast(probes), on=["t", "bkt"]).dropDuplicates(
-        ["query_id", "neighbor_id"]
-    )
-    if exclude_self and qid_type == cid_type:
-        cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
-    scored = cand.join(F.broadcast(qv), "query_id").select(
-        "query_id",
+    ).select(
+        (F.col("t").cast("bigint") * (1 << bits_per_table) + F.col("bkt"))
+        .alias("probe"),
         "neighbor_id",
-        cosine_sim_carried(
-            F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")
-        ).alias("cosine"),
-    )
-    return rank_per_query(scored, "cosine", k).select(
-        "query_id", "rank", "neighbor_id", "cosine"
+        "cv",
+        "cnorm",
     )
 
 
@@ -346,8 +286,6 @@ def lattice_zx_frame(
     rides as an ``array_repeat`` ARGUMENT (never inside a lambda
     body), so no optimizer rewrite can multiply the fold per element
     (the lattice_denom O(dim²) trap)."""
-    from dasladen_spark.operators.pq import PQ_QUANT, lattice_denom
-
     ids = [F.col(c) if isinstance(c, str) else c for c in id_cols]
     v = df.select(
         *ids, F.col(vec_col).cast("array<double>").alias("_av")
@@ -377,8 +315,6 @@ def cell_dist_array(zc: list) -> "F.Column":
     methods), so unlike the flat per-position chain this never
     degrades whole-stage codegen at dim=64, and unlike the
     posexplode/hash-aggregate shape it needs NO exchange at all."""
-    from dasladen_spark.operators.pq import _zc_lit
-
     return F.array(
         *[
             F.expr(
@@ -432,8 +368,6 @@ def assign_cells(
     ``normalize=False`` assigns in RAW coordinate space
     (``zx = floor(x·Q + 0.5)``, the ``x/1.0`` division is exact) —
     the k-means flavor (operators/clustering)."""
-    from dasladen_spark.operators.pq import _lat
-
     cm = np.asarray(cent_mat, np.float64)
     zc = [[_lat(v) for v in row] for row in cm]
     zxf = lattice_zx_frame(
@@ -470,8 +404,6 @@ def with_cells(
     the only corpus shuffle left in an IVF build is the cell-keyed
     one the inverted lists genuinely need. ``id_col`` is kept for
     signature compatibility (uniqueness no longer required)."""
-    from dasladen_spark.operators.pq import _lat
-
     cm = np.asarray(cent_mat, np.float64)
     zc = [[_lat(v) for v in row] for row in cm]
     zxf = lattice_zx_frame(df, list(df.columns), vec_col, normalize=True)
@@ -498,8 +430,6 @@ def probe_cells_driver(
     lowest cell id), computed driver-side from the collected
     normalized query batch (queries are the small side by
     construction). Pure-integer math, so the oracle replays it."""
-    from dasladen_spark.operators.pq import _lat
-
     zc = [[_lat(v) for v in row] for row in np.asarray(cent_mat, np.float64)]
     out = []
     for qid, qn in qn_rows:
@@ -511,6 +441,19 @@ def probe_cells_driver(
         d.sort()
         out.extend((qid, c) for _d, c in d[:n_probe])
     return out
+
+
+def ivf_postings(c: DataFrame, cent: np.ndarray) -> DataFrame:
+    """(probe, neighbor_id, cv, cnorm) — one posting row per vector of
+    a (neighbor_id, cv) frame, keyed by its nearest ``cent`` cell
+    (:func:`with_cells`), with the vector's norm folded once for
+    carried-norm scoring."""
+    return with_cells(c, cent, "cv").select(
+        F.col("cell").cast("bigint").alias("probe"),
+        "neighbor_id",
+        "cv",
+        l2_norm(F.col("cv")).alias("cnorm"),
+    )
 
 
 def nearest_cell_sums(
@@ -526,8 +469,6 @@ def nearest_cell_sums(
     k × dim partials per task on the wire, and no task ever
     materializes a whole cell (collect_list would — quadratic when one
     cell owns most of the corpus). Returns ``[(cell, pos, Σ zx, n)]``."""
-    from dasladen_spark.operators.pq import _lat
-
     zc = [[_lat(v) for v in row] for row in cent]
     stats = (
         lattice_zx_frame(base, [], "_v", normalize=normalize)
@@ -555,8 +496,6 @@ def fit_ivf_centroids(
     centroids — like the PQ codebooks — are a pure function of the
     corpus that the SQL oracle re-derives bit-for-bit. Only
     n_centroids × dim floats ever reach the driver."""
-    from dasladen_spark.operators.pq import lattice_lloyd_fit
-
     cent = lattice_lloyd_fit(
         c, "neighbor_id", "cv", n_centroids, lloyd_iters, "ivf-seed",
         fit_fraction, normalize=True, lloyd_round=nearest_cell_sums,
@@ -590,9 +529,10 @@ def ivf_cosine_topk(
       across query batches, materialize them once with
       operators/ann_index.build_ann_index(method="ivf") — the
       bucketed-table form of this exact dataflow.
-    - search: queries explode to n_probe cells, equi-join on cell id
-      (a key shuffle over n_probe/n_centroids of the corpus), exact
-      cosine re-rank, per-query top-k window.
+    - search: :func:`probe_topk` over the :func:`ivf_postings` of the
+      corpus — the query batch's n_probe cells broadcast onto the
+      lists, exact carried-norm cosine, per-query top-k window: the
+      probe, score and rank code of the materialized index.
     """
     c = _spread(
         corpus.select(
@@ -600,38 +540,178 @@ def ivf_cosine_topk(
         ),
         "neighbor_id",
     )
-    # per-row norms fold before the cell join; the pair scoring below
-    # carries them (bit-identical, 3× fewer interpreted folds)
+    cent = fit_ivf_centroids(c, n_centroids, lloyd_iters)
+    return probe_topk(
+        ivf_postings(c, cent),
+        queries,
+        k,
+        query_id,
+        query_vec,
+        cent=cent,
+        n_probe=n_probe,
+        exclude_self=exclude_self,
+        unique_postings=True,
+    )
+
+
+def _probe_schema(queries: DataFrame, query_id: str, rest: str):
+    """Schema for the driver-computed broadcast probe frame, with the
+    query-id field typed from the caller's query frame (string /
+    int / long ids all round-trip; a hard-coded ``long`` raised on
+    non-integer ids)."""
+    name, typ = rest.split()
+    rest_type = {"bigint": LongType(), "int": IntegerType()}[typ]
+    # query_id stays nullable: the shuffle path tolerates a NULL id
+    # (it just never matches the equi-join), so the broadcast probe
+    # must not raise on one inside createDataFrame either
+    return StructType(
+        [
+            StructField("query_id", queries.schema[query_id].dataType, True),
+            StructField(name, rest_type, False),
+        ]
+    )
+
+
+def _local_frame(spark, rows: list, schema: StructType) -> DataFrame:
+    """A driver-built row list as a LocalRelation (through an Arrow
+    table): downstream it is pure JVM, where ``createDataFrame(rows)``
+    is a Python-RDD-backed frame whose every scan pays a Python worker
+    round trip (~0.3 s measured per probe broadcast)."""
+    return spark.createDataFrame(
+        pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows],
+            schema=to_arrow_schema(schema),
+        ),
+        schema,
+    )
+
+
+def probe_topk(
+    postings: DataFrame,
+    queries: DataFrame,
+    k: int,
+    query_id: str = "vec_id",
+    query_vec: str = "embedding",
+    num_tables: int = 16,
+    bits_per_table: int = 4,
+    dim: int = 64,
+    cent: np.ndarray | None = None,
+    n_probe: int = 1,
+    books: np.ndarray | None = None,
+    corpus: DataFrame | None = None,
+    corpus_id: str = "vec_id",
+    corpus_vec: str = "embedding",
+    rerank_mult: int = 8,
+    exclude_self: bool = True,
+    unique_postings: bool = False,
+) -> DataFrame:
+    """Top-k per query over a posting projection — the query side of
+    every ANN searcher. ``postings`` is ``(probe, neighbor_id, cv,
+    cnorm)``, or ``(probe, neighbor_id, codes)`` with ``books``: the
+    rows operators/ann_index.build_ann_index writes, or the same
+    projection built from a corpus and never written
+    (:func:`lsh_postings`, :func:`ivf_postings`, the flat PQ scan).
+
+    ONE collect of the (small by contract) query batch through
+    pq.collect_normalized feeds every driver-side derivation: probe
+    keys hashed by dedup.hyperplane_probes_driver with the LSH geometry
+    (``num_tables``, ``bits_per_table``, ``dim``) when ``cent`` is
+    None, else each query's ``n_probe`` nearest ``cent`` cells
+    (:func:`probe_cells_driver`), and the PQ lookup tables. The probes,
+    joined to the query vectors, BROADCAST onto the postings — the
+    corpus side never shuffles — then (query_id, neighbor_id) pairs
+    dedup (LSH tables and replayed index appends repeat a pair; a
+    projection with ONE posting per neighbor — :func:`ivf_postings`,
+    the flat PQ scan — passes ``unique_postings`` and skips that
+    shuffle of every candidate), self matches drop, and candidates
+    score by carried-norm cosine, or by an ADC shortlist of
+    ``k × rerank_mult`` that pq.exact_rerank scores exactly against
+    ``corpus``. Output: (query_id, rank, neighbor_id, cosine), ties
+    broken by neighbor id.
+
+    Degenerate queries keep lsh_cosine_topk's kernel rules: a NULL or
+    empty vector probes nothing (the kernel's posexplode emits no row
+    for it), so its query returns no rows; every row of a repeated
+    query id probes, and the pair dedup, where it runs, keeps one of
+    their scores; and self-exclusion applies only when the query and
+    neighbor ids share a type — differing types are differing
+    keyspaces, and a cross-type ``!=`` would coerce (a non-numeric
+    string casts to NULL against a bigint and drops EVERY
+    candidate)."""
+    spark = queries.sparkSession
+    qid_type = queries.schema[query_id].dataType
+    cid_type = postings.schema["neighbor_id"].dataType
+    rows = collect_normalized(
+        queries.filter(F.size(F.col(query_vec)) > 0), query_id, query_vec
+    )
+    if not rows:
+        return _local_frame(
+            spark,
+            [],
+            StructType(
+                [
+                    StructField("query_id", qid_type),
+                    StructField("rank", IntegerType()),
+                    StructField("neighbor_id", cid_type),
+                    StructField("cosine", DoubleType()),
+                ]
+            ),
+        )
+    if cent is None:
+        pairs = hyperplane_probes_driver(
+            [(qid, v) for qid, v, _xn in rows], num_tables, bits_per_table, dim
+        )
+    else:
+        pairs = probe_cells_driver(
+            cent, [(qid, xn) for qid, _v, xn in rows], n_probe
+        )
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("qv"),
+        # folded once per query; the candidate scoring carries it
+        # against the postings' cnorm
         l2_norm(F.col(query_vec)).alias("_qn"),
     )
-
-    cent = fit_ivf_centroids(c, n_centroids, lloyd_iters)
-    lists = with_cells(c, cent, "cv").withColumn("_cn", l2_norm(F.col("cv")))
-
-    from dasladen_spark.operators.pq import normalized_query_rows
-
-    qn_rows = normalized_query_rows(queries, query_id, query_vec)
-    spark = queries.sparkSession
     probed = q.join(
         F.broadcast(
-            spark.createDataFrame(
-                probe_cells_driver(cent, qn_rows, n_probe),
-                "query_id long, cell int",
+            _local_frame(
+                spark, pairs, _probe_schema(queries, query_id, "probe bigint")
             )
         ),
         "query_id",
-    )
-    cand = probed.join(lists, on="cell")
-    if exclude_self:
+    ).select("query_id", "qv", "_qn", "probe")
+    cand = postings.join(F.broadcast(probed), on="probe")
+    if not unique_postings:
+        cand = cand.dropDuplicates(["query_id", "neighbor_id"])
+    if exclude_self and qid_type == cid_type:
         cand = cand.filter(F.col("query_id") != F.col("neighbor_id"))
+    if books is not None:
+        q_ids, lut = query_lut(books, [(qid, xn) for qid, _v, xn in rows])
+        short = rank_per_query(
+            cand.select(
+                "query_id",
+                "neighbor_id",
+                adc_score_expr(q_ids, lut, "query_id", "codes").alias("adc"),
+            ),
+            "adc",
+            k * rerank_mult,
+            rank_col="arank",
+        ).select("query_id", "neighbor_id")
+        return exact_rerank(
+            short,
+            queries,
+            corpus,
+            k,
+            query_id=query_id,
+            query_vec=query_vec,
+            id_col=corpus_id,
+            vec_col=corpus_vec,
+        )
     scored = cand.select(
         "query_id",
         "neighbor_id",
         cosine_sim_carried(
-            F.col("qv"), F.col("cv"), F.col("_qn"), F.col("_cn")
+            F.col("qv"), F.col("cv"), F.col("_qn"), F.col("cnorm")
         ).alias("cosine"),
     )
     return rank_per_query(scored, "cosine", k).select(

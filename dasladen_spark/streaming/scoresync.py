@@ -64,10 +64,11 @@ def normalization_mapping(
     (group, quality, c, nq), broadcastable onto any corpus. Exactly
     equals quantile_normalize_map over the union of all delivered
     batches (counts are additive; the mapping is a pure function of
-    the counts)."""
-    import os
-
-    if not os.path.exists(snapshot_path):
+    the counts). ``snapshot_path`` may name any Hadoop scheme — it is
+    checked through its own ``FileSystem``, as the matview writes it."""
+    snapshot = spark._jvm.org.apache.hadoop.fs.Path(snapshot_path)
+    fs = snapshot.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(snapshot):
         raise FileNotFoundError(
             f"no score-count snapshot at {snapshot_path!r} — no batch has"
             " committed yet (run_streaming_score_counts must drain at"

@@ -121,3 +121,31 @@ def test_build_once_lifecycle_lives_in_snapshot():
                     if a.name.split(".")[-1] == "_drop_orphan_location"
                 ]
     assert offenders == []
+
+
+#: the driver-side query derivations of the ANN searchers
+QUERY_PROBES = ("hyperplane_probes_driver", "probe_cells_driver", "query_lut")
+
+
+def test_query_probes_live_in_one_place():
+    """Every LSH / IVF / PQ search, query-time or indexed, runs
+    ``operators/similarity.probe_topk``: no other function in the
+    library or the plans hashes query probes, picks probe cells or
+    builds a PQ lookup table."""
+    calls = []
+    for p in sorted(PKG.rglob("*.py")):
+        tree = ast.parse(p.read_text(encoding="utf-8"))
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.Call):
+                    f = node.func
+                    name = f.id if isinstance(f, ast.Name) else getattr(
+                        f, "attr", None
+                    )
+                    if name in QUERY_PROBES:
+                        calls.append((p.name, fn.name, name))
+    offenders = [c for c in calls if c[:2] != ("similarity.py", "probe_topk")]
+    assert offenders == []
+    assert sorted(c[2] for c in calls) == sorted(QUERY_PROBES)

@@ -1232,6 +1232,49 @@ def test_indexed_lsh_search_matches_unindexed(spark, sf_dir):
     assert got == want
 
 
+def test_ann_searches_skip_null_and_empty_query_vectors(spark, sf_dir):
+    """A query row whose vector is NULL or empty probes nothing: the
+    query-time LSH and IVF searches and the indexed LSH and IVF
+    searches all return no rows for it and, for the other queries,
+    exactly the rows they return without it."""
+    from dasladen_spark.operators.ann_index import (
+        build_ann_index,
+        search_ann_index,
+    )
+    from dasladen_spark.operators.similarity import (
+        ivf_cosine_topk,
+        lsh_cosine_topk,
+    )
+    from dasladen_spark.session import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    build_ann_index(emb, "t_ann_null_lsh", tag="t")
+    build_ann_index(emb, "t_ann_null_ivf", method="ivf", tag="t")
+    q = emb.filter(F.col("vec_id") < 4).select(
+        "vec_id",
+        F.when(F.col("vec_id") == 1, F.lit(None))
+        .when(F.col("vec_id") == 3, F.array().cast("array<float>"))
+        .otherwise(F.col("embedding"))
+        .alias("embedding"),
+    )
+    good = emb.filter(F.col("vec_id").isin(0, 2))
+    searches = {
+        "lsh": lambda qs: lsh_cosine_topk(qs, emb, k=3),
+        "ivf": lambda qs: ivf_cosine_topk(qs, emb, k=3),
+        "indexed_lsh": lambda qs: search_ann_index(
+            spark, "t_ann_null_lsh", qs, k=3
+        ),
+        "indexed_ivf": lambda qs: search_ann_index(
+            spark, "t_ann_null_ivf", qs, k=3
+        ),
+    }
+    for name, search in searches.items():
+        got = sorted(map(tuple, search(q).collect()))
+        want = sorted(map(tuple, search(good).collect()))
+        assert {r[0] for r in got} == {0, 2}, name
+        assert got == want, name
+
+
 def test_indexed_ivf_search_recall_floor(spark, sf_dir):
     """IVF index probes only n_probe cells, so assert a recall floor
     against the exact baseline rather than equality (Lloyd means are
@@ -2380,7 +2423,7 @@ def test_probe_schema_preserves_query_id_type(spark):
     query frame — string ids survive where a hard-coded LONG raised."""
     from pyspark.sql.types import LongType, StringType
 
-    from dasladen_spark.operators.ann_index import _probe_schema
+    from dasladen_spark.operators.similarity import _probe_schema
 
     qs = spark.createDataFrame(
         [("doc-1", [0.1] * 4)], "vec_id string, embedding array<double>"
@@ -2572,7 +2615,7 @@ def test_probe_schema_query_id_nullable(spark):
     """ADVICE r10: a NULL query id must not raise inside the broadcast
     probe's createDataFrame — the shuffle path tolerates nulls (they
     simply never equi-join), so the schemas must agree."""
-    from dasladen_spark.operators.ann_index import _probe_schema
+    from dasladen_spark.operators.similarity import _probe_schema
 
     q = spark.createDataFrame([(1, [0.1])], "vec_id bigint, embedding array<double>")
     sch = _probe_schema(q, "vec_id", "probe bigint")

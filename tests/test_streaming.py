@@ -1639,6 +1639,29 @@ def test_streaming_score_counts_mapping_equals_batch(spark, tmp_path):
     assert got.c.sum() == 5  # exactly the 5 real docs; NULL text out
 
 
+def test_normalization_mapping_reads_a_file_uri_snapshot(spark, tmp_path):
+    """The score-count snapshot is found through its path's Hadoop
+    FileSystem: a ``file://`` URI to an existing snapshot reads the
+    same mapping as the plain path, and a URI to a missing one still
+    raises FileNotFoundError."""
+    from dasladen_spark.streaming.scoresync import normalization_mapping
+
+    snap = tmp_path / "score_counts"
+    spark.createDataFrame(
+        [("src0", 0.25, 2), ("src0", 0.5, 1), ("src1", 0.5, 3)],
+        "source STRING, quality DOUBLE, c BIGINT",
+    ).write.parquet(str(snap))
+
+    def mapping(path):
+        return sorted(map(tuple, normalization_mapping(spark, path).collect()))
+
+    want = mapping(str(snap))
+    assert len(want) == 3
+    assert mapping(snap.as_uri()) == want
+    with pytest.raises(FileNotFoundError):
+        normalization_mapping(spark, (tmp_path / "missing").as_uri())
+
+
 def test_decontaminate_gate_semantic_batch_parity(spark, tmp_path):
     """Semantic decontamination gate: a doc within `threshold`
     cosine of a benchmark vector quarantines at ingestion with
